@@ -735,12 +735,12 @@ _WIKI_PRELUDE = (
     # production-parity parse mirror (functions/wiki.py): LAST title
     # match, ALL text bodies, '[['/']]' stripped from each link
     "parsed AS (SELECT coalesce(list_extract("
-    "regexp_extract_all(trim(line), '<title>(.*?)</title>', 1), -1), '') AS url, "
+    "regexp_extract_all(trim(line, ' '), '<title>(.*?)</title>', 1), -1), '') AS url, "
     "list_transform(flatten(list_transform("
-    "regexp_extract_all(trim(line), '<text(.*?)</text>', 1), "
+    "regexp_extract_all(trim(line, ' '), '<text(.*?)</text>', 1), "
     r"b -> regexp_extract_all(b, '\[\[(.*?)\]\]', 1))), "
     "x -> replace(replace(x, '[[', ''), ']]', '')) AS outlinks "
-    "FROM lines WHERE trim(line) <> ''), "
+    "FROM lines WHERE trim(line, ' ') <> ''), "
     "pg AS (SELECT * FROM parsed WHERE url <> '')"
 )
 
@@ -3639,8 +3639,8 @@ def _q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     newly-reached vertices against the once-deduped edge table.
     Directed edges are distinct'd BEFORE the bidir union (half the
     dedup shuffle bytes; the direction sets are disjoint on the
-    bipartite graph, so the union is ALREADY simple — dedupe=False
-    skips the operator's own redundant dedup shuffle entirely).
+    bipartite graph, so the union is ALREADY simple — the simple edge
+    set the operator expects).
     Oracle: unrolled MATERIALIZED frontier CTEs."""
     # r17 (§2.4): repartition on the distinct keys BEFORE the distinct —
     # the aggregation reuses the exchange (no second shuffle) and the
@@ -3656,7 +3656,7 @@ def _q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     bidir = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    return graph.bfs_distances(bidir, _BFS_SOURCES, n_rounds=6, dedupe=False)
+    return graph.bfs_distances(bidir, _BFS_SOURCES, n_rounds=6)
 
 
 def _q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3822,7 +3822,7 @@ def _q_source_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (half the dedup bytes; direction sets are disjoint on the o-/p-
     # prefixed bipartite graph so the union is already simple), with
     # the repartition-before-distinct move so the dedup hash work runs
-    # at full width, then skip the operator's own dedup shuffle.
+    # at full width — the simple edges the operator expects.
     e = (
         _bipartite_edges(spark, sf_dir)
         .repartition(spark.sparkContext.defaultParallelism, "src", "dst")
@@ -3831,9 +3831,7 @@ def _q_source_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     bidir = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    return graph.source_centrality(
-        bidir, _CENTRALITY_SOURCES, n_rounds=4, dedupe=False
-    )
+    return graph.source_centrality(bidir, _CENTRALITY_SOURCES, n_rounds=4)
 
 
 def _q_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3888,119 +3886,6 @@ def _q_semdedup_truncated(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_iters=2,
         keep_rule="centroid_far",
     )
-
-
-# --- r17 REGISTRATION PREP: wrappers for the round-16-continuation staged
-# cohort. Deliberately NOT in queries()/oracle_sql() yet — the r16 window
-# is exactly full and new entries must enter AT the window front to get a
-# same-round certificate (README §Registry capacity). Their correctness
-# gate until then is tests/test_staged_ops5.py (sf0.001 + sf0.01 parity).
-# r17: move these into the dicts with oracles.hybrid_rrf_search_sql(
-# SEARCH_TERMS, 0, 50, 10), oracles.blocklist_hits_sql(_BLOCKLIST_TERMS,
-# max_hit_ratio=0.05), oracles.encoding_qa_sql(), and
-# oracles.source_manifest_sql() (x2 — the streaming twin shares it).
-
-_BLOCKLIST_TERMS = ["spark", "error", "the"]
-
-
-def _q_hybrid_rrf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocal-rank fusion of the BM25 and cosine-top-k branches
-    (similarity.hybrid_rrf_search, Cormack et al. 2009): each branch
-    ends in a TakeOrderedAndProject of n=50 rows, so ranks, the
-    full-outer fuse, and the final top-10 run on <= 100 rows at any
-    corpus size. Ranks assign over the round(6)-certified branch
-    scores with id tiebreaks — cross-engine exact."""
-    cat = Catalog(spark, sf_dir)
-    return similarity.hybrid_rrf_search(
-        cat.documents, cat.embeddings, SEARCH_TERMS, query_vec_id=0, n=50, k=10
-    )
-
-
-def _q_blocklist_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4 bad-words policy stage (textstats.blocklist_hits): exact
-    whole-token matching against a plan-literal wordlist, zero
-    shuffle; flagged compares the round(6) hit ratio on both engines.
-    Wired as clean_corpus(blocklist=...)."""
-    return textstats.blocklist_hits(
-        Catalog(spark, sf_dir).documents, _BLOCKLIST_TERMS, max_hit_ratio=0.05
-    )
-
-
-def _q_encoding_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-tokenizer encoding health (textstats.encoding_qa): U+FFFD /
-    C0-control / mojibake-digraph counts by literal substring
-    arithmetic, code-point-exact across engines, zero shuffle. Wired
-    as clean_corpus(encoding_gate=...)."""
-    return textstats.encoding_qa(Catalog(spark, sf_dir).documents)
-
-
-def _q_source_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source dataset manifest (dedup.source_manifest): the
-    order-independent additive mod-2^60 multiset hash of exact-dedup
-    content fingerprints — one map-side-combined groupBy, exact
-    decimal(38,0) partial sums."""
-    return dedup.source_manifest(Catalog(spark, sf_dir).documents)
-
-
-def _q_manifest_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot drift over two source_manifest frames (dedup.
-    manifest_drift): old = docs with doc_id % 7 <> 0, new = the full
-    corpus — sources holding %7 ids report changed; one that happens
-    to hold none would legitimately report unchanged. A full-outer
-    join of two |sources|-row aggregates, all-integer outputs.
-    Oracle: oracles.manifest_drift_sql()."""
-    docs = Catalog(spark, sf_dir).documents
-    return dedup.manifest_drift(
-        dedup.source_manifest(docs.filter(F.col("doc_id") % 7 != 0)),
-        dedup.source_manifest(docs),
-    )
-
-
-def _q_streaming_contamination_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Live benchmark decontamination (streaming.
-    streaming_contamination_probe): the full documents stream probed
-    against the doc_id%20 bench subset's static shingle table —
-    flagged docs only, bench docs self-contaminated at ratio 1.0.
-    Stateless per the probe family (broadcast stream-static inner
-    join; final per-doc count bounded by contamination incidence).
-    Oracle: oracles.streaming_contamination_probe_sql()."""
-    from pagerank_mapreduce_implementation_spark.streaming import (
-        read_table_stream,
-        run_to_memory,
-        streaming_contamination_probe,
-    )
-
-    bench = Catalog(spark, sf_dir).documents.filter(F.col("doc_id") % 20 == 0)
-    name = f"_stream_contam_{next(_STREAM_SEQ)}"
-    run_to_memory(
-        streaming_contamination_probe(
-            read_table_stream(spark, sf_dir, "documents"), bench
-        ),
-        name,
-        "complete",
-    )
-    return spark.table(name)
-
-
-def _q_streaming_source_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of source_manifest: every manifest component is
-    a commutative-monoid aggregate, so complete-mode state is one row
-    per source; the mod-2^60 projects AFTER the incremental agg and
-    the emitted frame equals the batch operator bit-for-bit (the same
-    source_manifest_sql oracle certifies both)."""
-    from pagerank_mapreduce_implementation_spark.streaming import (
-        read_table_stream,
-        run_to_memory,
-        streaming_source_manifest,
-    )
-
-    name = f"_stream_manifest_{next(_STREAM_SEQ)}"
-    run_to_memory(
-        streaming_source_manifest(read_table_stream(spark, sf_dir, "documents")),
-        name,
-        "complete",
-    )
-    return spark.table(name)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -4493,7 +4378,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "incremental_dedup": (
             "WITH fp AS (SELECT doc_id, lang, source, "
-            "md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g')))) AS fingerprint "
+            "md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) AS fingerprint "
             "FROM documents), "
             "seen AS (SELECT DISTINCT fingerprint FROM fp WHERE doc_id < 250), "
             "batch AS (SELECT * FROM fp WHERE doc_id >= 250), "
@@ -4900,7 +4785,7 @@ def oracle_sql() -> dict[str, str]:
         # group is arrival-order-dependent in a stream, the fingerprint
         # set is not
         "streaming_exact_dedup": (
-            "SELECT DISTINCT md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g')))) "
+            "SELECT DISTINCT md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) "
             "AS fingerprint FROM documents"
         ),
         # horizon > event-time span => no state expiry => exact DISTINCT
@@ -5242,7 +5127,7 @@ def oracle_sql() -> dict[str, str]:
         # streaming probe's exact batch composition
         "streaming_bloom_probe": (
             "WITH fp AS (SELECT doc_id, source, md5(lower(trim("
-            r"regexp_replace(text, '[[:space:]]+', ' ', 'g')))) AS item "
+            r"regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) AS item "
             "FROM documents), "
             "cells AS (SELECT ('0x' || substr(md5('bloom:' || h || ':' "
             "|| item), 1, 15))::UBIGINT::BIGINT % 1024 AS p "
@@ -5268,7 +5153,7 @@ def oracle_sql() -> dict[str, str]:
         # all-bits-present verdict; build half = src0..src9
         "bloom_probe": (
             "WITH fp AS (SELECT source, md5(lower(trim("
-            r"regexp_replace(text, '[[:space:]]+', ' ', 'g')))) AS item "
+            r"regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) AS item "
             "FROM documents), "
             "cells AS (SELECT ('0x' || substr(md5('bloom:' || h || ':' "
             "|| item), 1, 15))::UBIGINT::BIGINT % 1024 AS p "

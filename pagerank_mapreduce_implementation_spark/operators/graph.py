@@ -38,20 +38,15 @@ Scale design (100 TB posture):
   automatic via HashAggregateExec — the reference shipped the full
   shuffle volume (no combiner, SURVEY.md §4).
 - the rank vector (2 cols x |V|) is orders of magnitude smaller than
-  the edge table; lineage is truncated by the IterationDriver.
+  the edge table; lineage is truncated by the loop scope.
 
-Cache-lifecycle discipline (round-15 decision, after the r14 advice on
-ks_drift/margin_matches): SINGLE-SHOT report operators wrap their
-persist in try/finally so an exception on the one consuming action
-cannot leak the cache. The ITERATIVE loops (this module's rank/
-frontier loops; ``text.bpe_train``'s checkpoint ladder) deliberately
-do NOT blanket-wrap: their lifecycle is interleaved with the rounds
-(per-round checkpoint handoffs unpersist the previous round's pin
-mid-loop; broadcast-gate branches pin/release different frames), a
-single finally cannot express it, and an exception mid-loop aborts the
-whole job in every caller (bench/driver/programs use bounded
-sessions). Revisit only if a long-lived-session caller starts invoking
-these loops under exception-recovery semantics.
+Cache-lifecycle discipline: every loop runs in one
+``plans.iterative.LoopScope``, which persists its inputs, truncates its
+state (local checkpoints, reliable ones under ``reliable_dir``) and on
+exit, exception included, releases every cache and every checkpoint the
+returned frame does not read — the reference's (i-2)th-directory GC
+(PageRank.java:222-228) in one place. A result is materialized or reads
+only the scope's checkpoints; ``util.release_result`` frees it.
 """
 
 from __future__ import annotations
@@ -59,9 +54,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pagerank_mapreduce_implementation_spark.plans.iterative import IterationDriver
+from pagerank_mapreduce_implementation_spark.plans.iterative import (
+    MATERIALIZE_EVERY,
+    LoopScope,
+)
 
 DAMPING = 0.85
+
+# broadcast a BFS frontier / accumulated-state side (or any loop's
+# vertex-sized vector) only while its EXACT materialized row count stays
+# under this (~10-20 MB of string vertex ids — inside the default
+# 10 MB-ish executor comfort zone); beyond it the joins degrade to
+# shuffles, still bounded by the frontier ball / vertex count
+_BFS_BROADCAST_ROWS = 500_000
 
 # Loop-width target: ~2 MB of pruned-scan estimate (~250k (src,dst)
 # rows) per loop partition — coarse enough that 10x-repeated stage
@@ -69,6 +74,11 @@ DAMPING = 0.85
 # growing graph; the shuffle-partition cap takes over long before
 # cluster scale.
 _LOOP_PARTITION_BYTES = 2 * 1024 * 1024
+
+
+def _shuffle_width(spark) -> int:
+    """``spark.sql.shuffle.partitions``: the width of explicit repartitions."""
+    return int(spark.conf.get("spark.sql.shuffle.partitions"))
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
@@ -140,7 +150,7 @@ def pagerank(
     n_iters: int = 10,
     mode: str = "reference",
     damping: float = DAMPING,
-    materialize_every: int = 2,
+    materialize_every: int = MATERIALIZE_EVERY,
     num_partitions: int | None = None,
     vertices: DataFrame | None = None,
     seed_count: int | None = None,
@@ -187,6 +197,8 @@ def pagerank(
     """
     if mode not in ("reference", "textbook"):
         raise ValueError(f"unknown mode {mode!r}")
+    if tol is not None and tol <= 0:
+        raise ValueError(f"tol ({tol}) must be positive")
     spark = edges.sparkSession
 
     # Static per-iteration join input: one row per edge occurrence with
@@ -211,7 +223,7 @@ def pagerank(
     # partitions re-joined 10x), =false coalesces 600k rows to ONE
     # task (serializing the scatter join).
     if num_partitions is None:
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        cap = _shuffle_width(spark)
         est_bytes = _plan_size_bytes(edges)
         if est_bytes is None:
             # Private stats surface unavailable (Spark internals moved):
@@ -221,264 +233,253 @@ def pagerank(
             num_partitions = cap
         else:
             num_partitions = max(1, min(cap, 1 + est_bytes // _LOOP_PARTITION_BYTES))
-    if weight_col is not None:
-        # weighted scatter: out_degree becomes sum(w) per src; a source
-        # whose weights sum to 0 scatters nothing — filtered here, so it
-        # behaves exactly like an edgeless (dangling) source and leaves
-        # the DEFAULT vertex set (pass ``vertices`` to keep it).
-        part = edges.select(
-            "src", "dst", F.col(weight_col).cast("double").alias("__w")
-        ).repartition(num_partitions, "src")
-        deg = part.groupBy("src").agg(F.sum("__w").alias("out_degree"))
-        links = part.join(deg, "src").filter(F.col("out_degree") != 0.0).persist()
-    else:
-        # no persist on the pre-join side: deg and the join both read
-        # the SAME repartition exchange, and shuffle-stage reuse already
-        # computes it once inside the single materializing job below
-        part = edges.repartition(num_partitions, "src")
-        deg = part.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
-        links = part.join(deg, "src").persist()
-    derived_vertices = vertices is None
-    if vertices is None:
-        # ONE materializing job for the persisted links AND the vertex
-        # count (the former links.count() + vertices.count() pair paid
-        # two passes): n = distinct scatter sources == the loop's
-        # vertex count. O5 count-all + O9 scalar broadcast (a literal).
-        n = int(
-            links.agg(F.count_distinct("src").alias("nv")).first()["nv"]
-        )
-        vertices = links.select(F.col("src").alias("url")).distinct()
-        vertices = vertices.coalesce(num_partitions).persist()
-    else:
-        links.count()
-        vertices = vertices.select("url").distinct()
-        # keep the tiny vertex vector at the loop width (pinned or derived)
-        vertices = vertices.coalesce(num_partitions).persist()
-        n = vertices.count()
-    if n == 0:
-        links.unpersist()
-        vertices.unpersist()
-        return spark.createDataFrame([], "url string, rank double")
-
-    # Personalization: align the reset vector to the vertex set once
-    # (absent urls -> 0) and persist it at loop width. Seeding from the
-    # reset vector is the standard personalized-PageRank start.
-    use_reset = reset is not None
-    rvec = None
-    if use_reset:
-        # sanitize like ``vertices``: duplicate urls in the caller's
-        # reset vector would otherwise duplicate vertex rows and double
-        # their seed/teleport mass silently — aggregate the mass per
-        # url instead (duplicates legitimately arise from un-deduped
-        # seed lists; summing preserves total teleport probability)
-        reset_clean = reset.groupBy("url").agg(
-            F.sum(F.col("reset").cast("double")).alias("reset")
-        )
-        rvec = (
-            vertices.join(reset_clean, "url", "left")
-            .select("url", F.coalesce("reset", F.lit(0.0)).alias("reset"))
-            .coalesce(num_partitions)
-            .persist()
-        )
-        ranks = rvec.select("url", F.col("reset").alias("rank"))
-    else:
-        ranks = vertices.select(
-            "url",
-            F.lit(1.0 / (seed_count if seed_count is not None else n)).alias("rank"),
-        )
-
-    # Textbook mode: the set of dangling vertices is STATIC — compute it
-    # once from the persisted links table (vertices minus scatter
-    # sources) instead of anti-joining against deg inside the loop,
-    # whose lineage would re-shuffle the full edge table every
-    # iteration. When the set is EMPTY (every vertex scatters — always
-    # true when vertices derive from links), the whole dangling branch
-    # is skipped: the mass is exactly 0.0 every iteration, and dropping
-    # the +0.0 terms is bit-identical while saving a second reference
-    # to the lazy rank chain per step (measured ~2s of 7s at sf0.1).
-    dangling_vs = None
-    if mode == "textbook":
-        dangling_vs = vertices.join(
-            links.select(F.col("src").alias("url")), "url", "left_anti"
-        ).persist()
-        if dangling_vs.count() == 0:
-            dangling_vs.unpersist()
-            dangling_vs = None
-
-    # O14/O17 without a second join: a zero-contribution row tagged
-    # ``own=1`` per vertex rides the SAME shuffle as the contributions.
-    # After groupBy(url): red links have max(own)=0 -> dropped; vertices
-    # with no inbound keep sum=0 -> rank (1-d). One shuffle per
-    # iteration instead of shuffle+join (the reference's tagged-union
-    # repartition join, PageRank.java:472-473,509-517, done Spark-side).
-    # With a reset vector the per-vertex teleport weight rides the
-    # zero-contribution rows (max() over the group recovers it after
-    # the shuffle) — personalization costs NO extra join or exchange.
-    if use_reset:
-        zero = rvec.select(
-            "url", F.lit(0.0).alias("contrib"), F.lit(1).alias("own"), "reset"
-        )
-    else:
-        zero = vertices.select(
-            "url", F.lit(0.0).alias("contrib"), F.lit(1).alias("own")
-        )
-
-    scatter = (
-        (F.col("rank") * F.col("__w") / F.col("out_degree"))
-        if weight_col is not None
-        else (F.col("rank") / F.col("out_degree"))
-    )
-
-    # r17, the hits/lpa/bfs "driver-adaptive join strategy" move applied
-    # here too: the iterated rank vector is a checkpointed frame and
-    # carries NO stats, so the planner can't see it is vertex-sized and
-    # falls back to shuffling it against the links partitioning every
-    # iteration. The exact vertex count n is already in hand — while it
-    # is broadcastable, hint the rank side into the scatter join (zero
-    # rank-vector shuffle per iteration); past the threshold the hint
-    # drops away and the co-partitioned join takes over unchanged.
-    small_ranks = n <= _BFS_BROADCAST_ROWS
-
-    def _rvec(v: DataFrame) -> DataFrame:
-        return F.broadcast(v) if small_ranks else v
-
-    # Uniform seed value (non-reset modes): iteration 1's rank vector
-    # is this CONSTANT, so its scatter join folds to a literal.
-    seed_rank = 1.0 / (seed_count if seed_count is not None else n)
-
-    def step(ranks: DataFrame, _i: int) -> DataFrame:
-        # O13 scatter: contribution = rank(src)/out_degree(src) per edge
-        # occurrence (rank*w/sum_w when weighted). links is
-        # pre-partitioned on src; the rank vector arrives
-        # hash-partitioned on url from the previous groupBy, so this
-        # join re-shuffles at most the small rank side (or AQE
-        # broadcasts it when it fits).
-        contrib_cols = [
-            F.col("dst").alias("url"),
-            scatter.alias("contrib"),
-            F.lit(0).alias("own"),
-        ]
-        if use_reset:
-            contrib_cols.append(F.lit(None).cast("double").alias("reset"))
-        # IterationDriver indexes iterations 1-based (range(1, n+1))
-        if _i == 1 and not use_reset and derived_vertices:
-            # First-iteration fusion: every rank is the SAME 1/N seed —
-            # substituting the literal for the join is bit-identical
-            # (identical double arithmetic) and saves the loop's first
-            # rank-side shuffle entirely. Only valid when the vertex set
-            # derives from links (src-set == vertex-set by construction);
-            # an explicit smaller ``vertices`` legitimately FILTERS
-            # scatter sources through this join, which a literal cannot.
-            contribs = links.withColumn("rank", F.lit(seed_rank)).select(
-                *contrib_cols
+    with LoopScope(reliable_dir) as scope:
+        if weight_col is not None:
+            # weighted scatter: out_degree becomes sum(w) per src; a source
+            # whose weights sum to 0 scatters nothing — filtered here, so it
+            # behaves exactly like an edgeless (dangling) source and leaves
+            # the DEFAULT vertex set (pass ``vertices`` to keep it).
+            part = edges.select(
+                "src", "dst", F.col(weight_col).cast("double").alias("__w")
+            ).repartition(num_partitions, "src")
+            deg = part.groupBy("src").agg(F.sum("__w").alias("out_degree"))
+            links = scope.persist(
+                part.join(deg, "src").filter(F.col("out_degree") != 0.0)
             )
         else:
-            contribs = links.join(
-                _rvec(ranks.withColumnRenamed("url", "src")), "src"
-            ).select(*contrib_cols)
-        # O15 gather: map-side partial agg, final agg on url.
-        aggs = [F.sum("contrib").alias("contrib_sum"), F.max("own").alias("own")]
-        if use_reset:
-            aggs.append(F.max("reset").alias("reset"))
-        sums = contribs.unionByName(zero).groupBy("url").agg(*aggs)
-        if mode == "reference":
-            # personalized reference teleport (1-d)*N*reset(u): the
-            # uniform vector reset=1/N reproduces the flat 0.15 constant
-            const = (
-                F.lit((1.0 - damping) * n) * F.col("reset")
-                if use_reset
-                else F.lit(1.0 - damping)
+            # no persist on the pre-join side: deg and the join both read
+            # the SAME repartition exchange, and shuffle-stage reuse already
+            # computes it once inside the single materializing job below
+            part = edges.repartition(num_partitions, "src")
+            deg = part.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
+            links = scope.persist(part.join(deg, "src"))
+        derived_vertices = vertices is None
+        if vertices is None:
+            # ONE materializing job for the persisted links AND the vertex
+            # count (the former links.count() + vertices.count() pair paid
+            # two passes): n = distinct scatter sources == the loop's
+            # vertex count. O5 count-all + O9 scalar broadcast (a literal).
+            n = int(
+                links.agg(F.count_distinct("src").alias("nv")).first()["nv"]
             )
-            return sums.filter(F.col("own") == 1).select(
+            vertices = links.select(F.col("src").alias("url")).distinct()
+            vertices = scope.persist(vertices.coalesce(num_partitions))
+        else:
+            links.count()
+            vertices = vertices.select("url").distinct()
+            # keep the tiny vertex vector at the loop width (pinned or derived)
+            vertices = scope.persist(vertices.coalesce(num_partitions))
+            n = vertices.count()
+        if n == 0:
+            return spark.createDataFrame([], "url string, rank double")
+
+        # Personalization: align the reset vector to the vertex set once
+        # (absent urls -> 0) and persist it at loop width. Seeding from the
+        # reset vector is the standard personalized-PageRank start.
+        use_reset = reset is not None
+        if use_reset:
+            # sanitize like ``vertices``: duplicate urls in the caller's
+            # reset vector would otherwise duplicate vertex rows and double
+            # their seed/teleport mass silently — aggregate the mass per
+            # url instead (duplicates legitimately arise from un-deduped
+            # seed lists; summing preserves total teleport probability)
+            reset_clean = reset.groupBy("url").agg(
+                F.sum(F.col("reset").cast("double")).alias("reset")
+            )
+            rvec = scope.persist(
+                vertices.join(reset_clean, "url", "left")
+                .select("url", F.coalesce("reset", F.lit(0.0)).alias("reset"))
+                .coalesce(num_partitions)
+            )
+            ranks = rvec.select("url", F.col("reset").alias("rank"))
+        else:
+            ranks = vertices.select(
                 "url",
-                (const + F.lit(damping) * F.col("contrib_sum")).alias("rank"),
+                F.lit(1.0 / (seed_count if seed_count is not None else n)).alias("rank"),
             )
-        # textbook: redistribute dangling mass, normalize constant by N.
-        # The mass is a broadcast 1-row aggregate (scalar subquery), NOT
-        # a driver-side collect — a collect would force a full
-        # recomputation of the lazy rank chain every iteration.
-        if dangling_vs is None:
-            # no dangling vertices: mass is exactly 0.0 — drop the +0.0
-            # terms (bit-identical) and, crucially, the step's SECOND
-            # reference to the lazy rank chain.
-            if use_reset:
-                new_rank = F.lit(1.0 - damping) * F.col("reset") + F.lit(
-                    damping
-                ) * F.col("contrib_sum")
-            else:
-                new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * F.col(
-                    "contrib_sum"
-                )
-            return sums.filter(F.col("own") == 1).select(
-                "url", new_rank.alias("rank")
+
+        # Textbook mode: the set of dangling vertices is STATIC — compute it
+        # once from the persisted links table (vertices minus scatter
+        # sources) instead of anti-joining against deg inside the loop,
+        # whose lineage would re-shuffle the full edge table every
+        # iteration. When the set is EMPTY (every vertex scatters — always
+        # true when vertices derive from links), the whole dangling branch
+        # is skipped: the mass is exactly 0.0 every iteration, and dropping
+        # the +0.0 terms is bit-identical while saving a second reference
+        # to the lazy rank chain per step (measured ~2s of 7s at sf0.1).
+        dangling_vs = None
+        if mode == "textbook":
+            dangling_vs = scope.persist(
+                vertices.join(links.select(F.col("src").alias("url")), "url", "left_anti")
             )
-        dangling = (
-            ranks.join(dangling_vs, "url", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass"))
-        )
+            if dangling_vs.count() == 0:
+                dangling_vs = None
+
+        # O14/O17 without a second join: a zero-contribution row tagged
+        # ``own=1`` per vertex rides the SAME shuffle as the contributions.
+        # After groupBy(url): red links have max(own)=0 -> dropped; vertices
+        # with no inbound keep sum=0 -> rank (1-d). One shuffle per
+        # iteration instead of shuffle+join (the reference's tagged-union
+        # repartition join, PageRank.java:472-473,509-517, done Spark-side).
+        # With a reset vector the per-vertex teleport weight rides the
+        # zero-contribution rows (max() over the group recovers it after
+        # the shuffle) — personalization costs NO extra join or exchange.
         if use_reset:
-            # standard personalized PageRank: teleport AND dangling
-            # mass land on vertices in reset-vector proportion
-            new_rank = F.lit(1.0 - damping) * F.col("reset") + F.lit(damping) * (
-                F.col("contrib_sum") + F.col("dangling_mass") * F.col("reset")
+            zero = rvec.select(
+                "url", F.lit(0.0).alias("contrib"), F.lit(1).alias("own"), "reset"
             )
         else:
-            new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
-                F.col("contrib_sum") + F.col("dangling_mass") / n
+            zero = vertices.select(
+                "url", F.lit(0.0).alias("contrib"), F.lit(1).alias("own")
             )
-        return (
-            sums.filter(F.col("own") == 1)
-            .crossJoin(F.broadcast(dangling))
-            .select("url", new_rank.alias("rank"))
+
+        scatter = (
+            (F.col("rank") * F.col("__w") / F.col("out_degree"))
+            if weight_col is not None
+            else (F.col("rank") / F.col("out_degree"))
         )
 
-    # textbook mode references ranks twice per step (contribs +
-    # dangling); the dangling branch recomputes at most
-    # materialize_every-1 lazy iterations, which A/B-measures cheaper
-    # than eagerly materializing every step (8.6s -> 6.4s at sf0.1).
-    # reliable_dir switches the lineage truncation from executor-local
-    # checkpoint blocks to RELIABLE checkpoints in that directory —
-    # the preemptible-cluster mode: a lost executor replays from the
-    # persisted state, not from iteration 0 (tests/test_pagerank.py
-    # pins value parity + on-disk checkpoint files).
-    driver = IterationDriver(
-        materialize_every=materialize_every, reliable_dir=reliable_dir
-    )
-    # tol: opt-in L1-convergence early exit — n_iters becomes a CAP.
-    # Reference parity callers leave it None (PageRank.java:190
-    # hard-codes 10 iterations; the registered queries and their
-    # unrolled-CTE oracles depend on the exact count). With it, the
-    # driver materializes every iteration (both states are needed) and
-    # pays one vertex-sized join + a 1-row aggregate per check — worth
-    # it at 100 TB where a converged loop otherwise burns full
-    # scatter/gather rounds doing nothing. The iterated vectors are
-    # support-only but share the SAME key set every round (every
-    # vertex keeps its own=1 row), so the inner join is total.
-    converged = None
-    if tol is not None:
-        if tol <= 0:
-            raise ValueError(f"tol ({tol}) must be positive")
+        # r17, the hits/lpa/bfs "driver-adaptive join strategy" move applied
+        # here too: the iterated rank vector is a checkpointed frame and
+        # carries NO stats, so the planner can't see it is vertex-sized and
+        # falls back to shuffling it against the links partitioning every
+        # iteration. The exact vertex count n is already in hand — while it
+        # is broadcastable, hint the rank side into the scatter join (zero
+        # rank-vector shuffle per iteration); past the threshold the hint
+        # drops away and the co-partitioned join takes over unchanged.
+        small_ranks = n <= _BFS_BROADCAST_ROWS
 
-        def converged(prev: DataFrame, cur: DataFrame) -> bool:
-            row = (
-                prev.select("url", F.col("rank").alias("__prev"))
-                .join(cur, "url")
-                .agg(F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("d"))
-                .first()
+        def _rvec(v: DataFrame) -> DataFrame:
+            return F.broadcast(v) if small_ranks else v
+
+        # Uniform seed value (non-reset modes): iteration 1's rank vector
+        # is this CONSTANT, so its scatter join folds to a literal.
+        seed_rank = 1.0 / (seed_count if seed_count is not None else n)
+
+        def step(ranks: DataFrame, _i: int) -> DataFrame:
+            # O13 scatter: contribution = rank(src)/out_degree(src) per edge
+            # occurrence (rank*w/sum_w when weighted). links is
+            # pre-partitioned on src; the rank vector arrives
+            # hash-partitioned on url from the previous groupBy, so this
+            # join re-shuffles at most the small rank side (or AQE
+            # broadcasts it when it fits).
+            contrib_cols = [
+                F.col("dst").alias("url"),
+                scatter.alias("contrib"),
+                F.lit(0).alias("own"),
+            ]
+            if use_reset:
+                contrib_cols.append(F.lit(None).cast("double").alias("reset"))
+            # LoopScope.iterate indexes iterations 1-based (range(1, n+1))
+            if _i == 1 and not use_reset and derived_vertices:
+                # First-iteration fusion: every rank is the SAME 1/N seed —
+                # substituting the literal for the join is bit-identical
+                # (identical double arithmetic) and saves the loop's first
+                # rank-side shuffle entirely. Only valid when the vertex set
+                # derives from links (src-set == vertex-set by construction);
+                # an explicit smaller ``vertices`` legitimately FILTERS
+                # scatter sources through this join, which a literal cannot.
+                contribs = links.withColumn("rank", F.lit(seed_rank)).select(
+                    *contrib_cols
+                )
+            else:
+                contribs = links.join(
+                    _rvec(ranks.withColumnRenamed("url", "src")), "src"
+                ).select(*contrib_cols)
+            # O15 gather: map-side partial agg, final agg on url.
+            aggs = [F.sum("contrib").alias("contrib_sum"), F.max("own").alias("own")]
+            if use_reset:
+                aggs.append(F.max("reset").alias("reset"))
+            sums = contribs.unionByName(zero).groupBy("url").agg(*aggs)
+            if mode == "reference":
+                # personalized reference teleport (1-d)*N*reset(u): the
+                # uniform vector reset=1/N reproduces the flat 0.15 constant
+                const = (
+                    F.lit((1.0 - damping) * n) * F.col("reset")
+                    if use_reset
+                    else F.lit(1.0 - damping)
+                )
+                return sums.filter(F.col("own") == 1).select(
+                    "url",
+                    (const + F.lit(damping) * F.col("contrib_sum")).alias("rank"),
+                )
+            # textbook: redistribute dangling mass, normalize constant by N.
+            # The mass is a broadcast 1-row aggregate (scalar subquery), NOT
+            # a driver-side collect — a collect would force a full
+            # recomputation of the lazy rank chain every iteration.
+            if dangling_vs is None:
+                # no dangling vertices: mass is exactly 0.0 — drop the +0.0
+                # terms (bit-identical) and, crucially, the step's SECOND
+                # reference to the lazy rank chain.
+                if use_reset:
+                    new_rank = F.lit(1.0 - damping) * F.col("reset") + F.lit(
+                        damping
+                    ) * F.col("contrib_sum")
+                else:
+                    new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * F.col(
+                        "contrib_sum"
+                    )
+                return sums.filter(F.col("own") == 1).select(
+                    "url", new_rank.alias("rank")
+                )
+            dangling = (
+                ranks.join(dangling_vs, "url", "left_semi")
+                .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling_mass"))
             )
-            return row["d"] is not None and float(row["d"]) < tol
+            if use_reset:
+                # standard personalized PageRank: teleport AND dangling
+                # mass land on vertices in reset-vector proportion
+                new_rank = F.lit(1.0 - damping) * F.col("reset") + F.lit(damping) * (
+                    F.col("contrib_sum") + F.col("dangling_mass") * F.col("reset")
+                )
+            else:
+                new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+                    F.col("contrib_sum") + F.col("dangling_mass") / n
+                )
+            return (
+                sums.filter(F.col("own") == 1)
+                .crossJoin(F.broadcast(dangling))
+                .select("url", new_rank.alias("rank"))
+            )
 
-    result = driver.run(ranks, step, n_iters, converged=converged)
-    # Result is materialized (localCheckpoint at the final boundary) —
-    # the static tables can be dropped (reference GC'd intermediate
-    # dirs the same way, PageRank.java:222-228,308-327).
-    links.unpersist()
-    vertices.unpersist()
-    if rvec is not None:
-        rvec.unpersist()
-    if dangling_vs is not None:
-        dangling_vs.unpersist()
-    return result
+        # textbook mode references ranks twice per step (contribs +
+        # dangling); the dangling branch recomputes at most
+        # materialize_every-1 lazy iterations, which A/B-measures cheaper
+        # than eagerly materializing every step (8.6s -> 6.4s at sf0.1).
+        # reliable_dir switches the lineage truncation from executor-local
+        # checkpoint blocks to RELIABLE checkpoints in that directory —
+        # the preemptible-cluster mode: a lost executor replays from the
+        # persisted state, not from iteration 0 (tests/test_pagerank.py
+        # pins value parity + on-disk checkpoint files).
+        # tol: opt-in L1-convergence early exit — n_iters becomes a CAP.
+        # Reference parity callers leave it None (PageRank.java:190
+        # hard-codes 10 iterations; the registered queries and their
+        # unrolled-CTE oracles depend on the exact count). With it, the
+        # loop materializes every iteration (both states are needed) and
+        # pays one vertex-sized join + a 1-row aggregate per check — worth
+        # it at 100 TB where a converged loop otherwise burns full
+        # scatter/gather rounds doing nothing. The iterated vectors are
+        # support-only but share the SAME key set every round (every
+        # vertex keeps its own=1 row), so the inner join is total.
+        converged = None
+        if tol is not None:
+            def converged(prev: DataFrame, cur: DataFrame) -> bool:
+                row = (
+                    prev.select("url", F.col("rank").alias("__prev"))
+                    .join(cur, "url")
+                    .agg(F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("d"))
+                    .first()
+                )
+                return row["d"] is not None and float(row["d"]) < tol
+
+        # The result is the final boundary's checkpoint; the scope drops
+        # the static tables and every earlier checkpoint on exit (the
+        # reference GC'd intermediate dirs the same way,
+        # PageRank.java:222-228,308-327).
+        result = scope.iterate(
+            ranks, step, n_iters, materialize_every, converged=converged
+        )
+        return scope.keep(result)
 
 
 def edges_from_pages(pages: DataFrame) -> DataFrame:
@@ -524,7 +525,7 @@ def connected_components(
     iteration sends every vertex's current label across both edge
     directions and keeps the minimum — one join + one groupBy-min
     shuffle per iteration, converging in O(diameter) rounds. The loop
-    reuses IterationDriver's convergence path: it stops as soon as an
+    reuses ``LoopScope.iterate``'s convergence path: it stops as soon as an
     iteration changes no label (an anti-join count on the materialized
     state, the same move as the reference's chained-job success gate).
     Right for DUP-CLUSTER graphs (near-dup pairs from minhash/simhash/
@@ -538,6 +539,9 @@ def connected_components(
     dozen rounds where label propagation needs diameter rounds). Same
     shuffle primitives (groupBy-min + join), strictly fewer rounds on
     long-chain graphs; both algorithms return identical labels.
+
+    A graph that does not converge within ``max_iters`` raises
+    ``RuntimeError`` and leaves nothing pinned.
     """
     if algorithm == "star":
         return _cc_star(edges, src_col, dst_col, max_iters)
@@ -548,24 +552,6 @@ def connected_components(
     ).unionByName(
         edges.select(F.col(dst_col).alias("u"), F.col(src_col).alias("v"))
     )
-    bidir = bidir.repartition("u").persist()
-    labels = (
-        bidir.select(F.col("u").alias("vertex"))
-        .distinct()
-        .select("vertex", F.col("vertex").alias("component"))
-    )
-
-    def step(lbl: DataFrame, _i: int) -> DataFrame:
-        msgs = (
-            bidir.join(lbl.withColumnRenamed("vertex", "u"), "u")
-            .select(F.col("v").alias("vertex"), "component")
-        )
-        return (
-            msgs.unionByName(lbl)
-            .groupBy("vertex")
-            .agg(F.min("component").alias("component"))
-        )
-
     fixed = {"converged": False}
 
     def converged(prev: DataFrame, cur: DataFrame) -> bool:
@@ -580,18 +566,35 @@ def connected_components(
         fixed["converged"] = ok
         return ok
 
-    driver = IterationDriver(materialize_every=1, reliable_dir=reliable_dir)
-    out = driver.run(labels, step, max_iters, converged=converged)
-    bidir.unpersist()
-    if not fixed["converged"]:
-        # returning unconverged labels would silently split one true
-        # component into several (a >max_iters-diameter chain) — fail
-        # loudly instead; the caller raises max_iters
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iters} "
-            "iterations — the graph diameter exceeds max_iters; raise it"
+    with LoopScope(reliable_dir) as scope:
+        bidir = scope.persist(bidir.repartition("u"))
+        labels = (
+            bidir.select(F.col("u").alias("vertex"))
+            .distinct()
+            .select("vertex", F.col("vertex").alias("component"))
         )
-    return out
+
+        def step(lbl: DataFrame, _i: int) -> DataFrame:
+            msgs = (
+                bidir.join(lbl.withColumnRenamed("vertex", "u"), "u")
+                .select(F.col("v").alias("vertex"), "component")
+            )
+            return (
+                msgs.unionByName(lbl)
+                .groupBy("vertex")
+                .agg(F.min("component").alias("component"))
+            )
+
+        out = scope.iterate(labels, step, max_iters, converged=converged)
+        if not fixed["converged"]:
+            # returning unconverged labels would silently split one true
+            # component into several (a >max_iters-diameter chain) — fail
+            # loudly instead; the caller raises max_iters
+            raise RuntimeError(
+                f"connected_components did not converge within {max_iters} "
+                "iterations — the graph diameter exceeds max_iters; raise it"
+            )
+        return scope.keep(out)
 
 
 def _cc_star(
@@ -621,84 +624,75 @@ def _cc_star(
     fall out of the final edge list; component minima themselves and
     never-appearing (isolated) inputs label as self.
     """
-    e = (
-        edges.select(
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
-            F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-        )
-        .filter(F.col("hi") != F.col("lo"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # original vertex universe — self-loop-only / isolated vertices must
-    # still label as themselves in the output
-    vertices = (
-        edges.select(F.col(src_col).alias("vertex"))
-        .unionByName(edges.select(F.col(dst_col).alias("vertex")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    converged = False
-    e_count = e.count()
-    for _ in range(max_iters):
-        # large-star over the symmetrized neighborhood
-        bidir = e.select(F.col("hi").alias("u"), F.col("lo").alias("v")).unionByName(
-            e.select(F.col("lo").alias("u"), F.col("hi").alias("v"))
-        )
-        mins = bidir.groupBy("u").agg(F.min("v").alias("mv"))
-        # m = min(N ∪ {u}); edges (v, m) for v > u — m <= u < v keeps
-        # the canonical orientation for free
-        large = (
-            bidir.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(
-                F.col("v").alias("hi"),
-                F.least(F.col("u"), F.col("mv")).alias("lo"),
+    with LoopScope() as scope:
+        e = scope.truncate(
+            edges.select(
+                F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
+                F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
             )
-            .distinct()
-        )
-        # small-star over the canonical (smaller-neighbor) lists
-        mins2 = large.groupBy("hi").agg(F.min("lo").alias("mv"))
-        joined = large.join(mins2, "hi")
-        e_new = (
-            joined.filter(F.col("lo") != F.col("mv"))
-            .select(F.col("lo").alias("hi"), F.col("mv").alias("lo"))
-            .unionByName(mins2.select("hi", F.col("mv").alias("lo")))
             .filter(F.col("hi") != F.col("lo"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        # exact fixed-point check on the two materialized sets (counts
-        # carried in python — equal counts is the cheap necessary
-        # condition that gates the anti-join confirmation)
-        e_new_count = e_new.count()
-        if e_new_count == e_count and e_new.join(
-            e, ["hi", "lo"], "left_anti"
-        ).isEmpty():
-            e = e_new
-            converged = True
-            break
-        e, e_count = e_new, e_new_count
-    if not converged:
-        raise RuntimeError(
-            f"connected_components(star) did not converge within {max_iters} "
-            "rounds — raise max_iters (expected O(log^2 n) rounds)"
+        # original vertex universe — self-loop-only / isolated vertices
+        # must still label as themselves in the output
+        vertices = scope.truncate(
+            edges.select(F.col(src_col).alias("vertex"))
+            .unionByName(edges.select(F.col(dst_col).alias("vertex")))
+            .distinct()
         )
-    member_labels = e.select(
-        F.col("hi").alias("vertex"), F.col("lo").alias("component")
-    ).distinct()
-    centers = vertices.join(member_labels, "vertex", "left_anti").select(
-        "vertex", F.col("vertex").alias("component")
-    )
-    return member_labels.unionByName(centers)
+        e_count = e.count()
+        for _ in range(max_iters):
+            # large-star over the symmetrized neighborhood
+            bidir = e.select(
+                F.col("hi").alias("u"), F.col("lo").alias("v")
+            ).unionByName(e.select(F.col("lo").alias("u"), F.col("hi").alias("v")))
+            mins = bidir.groupBy("u").agg(F.min("v").alias("mv"))
+            # m = min(N ∪ {u}); edges (v, m) for v > u — m <= u < v keeps
+            # the canonical orientation for free
+            large = (
+                bidir.join(mins, "u")
+                .filter(F.col("v") > F.col("u"))
+                .select(
+                    F.col("v").alias("hi"),
+                    F.least(F.col("u"), F.col("mv")).alias("lo"),
+                )
+                .distinct()
+            )
+            # small-star over the canonical (smaller-neighbor) lists
+            mins2 = large.groupBy("hi").agg(F.min("lo").alias("mv"))
+            joined = large.join(mins2, "hi")
+            e_new = scope.truncate(
+                joined.filter(F.col("lo") != F.col("mv"))
+                .select(F.col("lo").alias("hi"), F.col("mv").alias("lo"))
+                .unionByName(mins2.select("hi", F.col("mv").alias("lo")))
+                .filter(F.col("hi") != F.col("lo"))
+                .distinct()
+            )
+            # exact fixed-point check on the two materialized sets (counts
+            # carried in python — equal counts is the cheap necessary
+            # condition that gates the anti-join confirmation)
+            e_new_count = e_new.count()
+            fixed = e_new_count == e_count and e_new.join(
+                e, ["hi", "lo"], "left_anti"
+            ).isEmpty()
+            e, e_count = e_new, e_new_count
+            if fixed:
+                break
+        else:
+            raise RuntimeError(
+                f"connected_components(star) did not converge within {max_iters} "
+                "rounds — raise max_iters (expected O(log^2 n) rounds)"
+            )
+        member_labels = e.select(
+            F.col("hi").alias("vertex"), F.col("lo").alias("component")
+        ).distinct()
+        centers = vertices.join(member_labels, "vertex", "left_anti").select(
+            "vertex", F.col("vertex").alias("component")
+        )
+        return scope.keep(member_labels.unionByName(centers))
 
 
-def hits(
-    edges: DataFrame,
-    n_iters: int = 10,
-    materialize_every: int = 2,
-    num_partitions: int | None = None,
-) -> DataFrame:
+def hits(edges: DataFrame, n_iters: int = 10) -> DataFrame:
     """Kleinberg's HITS over ``(src, dst)`` edges: ``(url, hub,
     authority)`` after ``n_iters`` full iterations (the natural
     companion to the reference's PageRank — authority flows along
@@ -730,7 +724,7 @@ def hits(
     normalization deferred to one final normalize — which makes the
     loop barrier-free and chainable exactly like ``pagerank``. To keep
     magnitudes bounded (raw scores grow by up to the edge count per
-    half-step), each ``materialize_every``-cadence ``localCheckpoint``
+    half-step), each checkpoint (every second iteration, and the last)
     rescales the hub vector to unit L2 via a 1-row aggregate over the
     just-cached blocks folded to a plan-time literal (the
     seed/dangling-mass literal pattern) — identity-preserving, and a
@@ -752,117 +746,85 @@ def hits(
     groupBys, map-side partial agg), probing the two cached edge
     copies. Measured 62 s → ~6 s for 10 iterations at sf0.1.
     """
-    spark = edges.sparkSession
-    nparts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    e = edges.select("src", "dst").persist()  # ONE source scan
-    vertices = (
-        e.select(F.col("src").alias("url"))
-        .union(e.select(F.col("dst").alias("url")))
-        .distinct()
-        .persist()
-    )
-    # driver-adaptive join strategy on the EXACT vertex count (the
-    # bfs_distances move): score vectors are vertex-sized, so while
-    # |V| is broadcastable each half-step joins the cached edge copy
-    # against a broadcast vector — no edge repartition copies, no
-    # per-iteration edge sort (the SMJ the stats-less checkpointed
-    # vectors otherwise force). Past the threshold, fall back to the
-    # two partitioned edge copies so iterations re-shuffle only the
-    # vertex-sized vectors. The vertices distinct is needed for the
-    # final zero-fill anyway — counting the persisted frame is free.
-    small = vertices.count() <= _BFS_BROADCAST_ROWS
-    if small:
-        links_src = links_dst = e
-    else:
-        links_src = e.repartition(nparts, "src").persist()
-        links_dst = e.repartition(nparts, "dst").persist()
-
-    def _vec(v: DataFrame) -> DataFrame:
-        return F.broadcast(v) if small else v
-
-    if n_iters < 1:
-        out = vertices.select(
-            "url", F.lit(1.0).alias("hub"), F.lit(0.0).alias("authority")
+    with LoopScope() as scope:
+        e = scope.persist(edges.select("src", "dst"))  # ONE source scan
+        vertices = scope.persist(
+            e.select(F.col("src").alias("url"))
+            .union(e.select(F.col("dst").alias("url")))
+            .distinct()
         )
-        # cut the lazy output free of EVERY cache this function pinned
-        # (round-12 advice: vertices and the repartitioned edge copies
-        # leaked here), mirroring the main-path cleanup below
-        out = out.localCheckpoint(eager=True)
-        vertices.unpersist()
-        if not small:
-            links_src.unpersist()
-            links_dst.unpersist()
-        e.unpersist()
-        return out
-
-    def unit(vec: DataFrame, col: str) -> DataFrame:
-        """Scale a MATERIALIZED support vector to unit L2 — the norm is
-        a 1-row aggregate over cached blocks folded to a literal."""
-        nrm = vec.agg(F.sqrt(F.sum(F.col(col) * F.col(col)))).first()[0]
-        if nrm and nrm > 0:
-            return vec.select(
-                "url", (F.col(col) / F.lit(float(nrm))).alias(col)
-            )
-        return vec.select("url", F.lit(0.0).alias(col))
-
-    every = max(1, materialize_every)
-    hub: DataFrame | None = None
-    auth: DataFrame | None = None
-    prev_ckpt: DataFrame | None = None
-    for i in range(1, n_iters + 1):
-        if i == 1:
-            contribs = links_src.withColumn("hub", F.lit(1.0))
+        # driver-adaptive join strategy on the EXACT vertex count (the
+        # bfs_distances move): score vectors are vertex-sized, so while
+        # |V| is broadcastable each half-step joins the cached edge copy
+        # against a broadcast vector — no edge repartition copies, no
+        # per-iteration edge sort (the SMJ the stats-less checkpointed
+        # vectors otherwise force). Past the threshold, fall back to the
+        # two partitioned edge copies so iterations re-shuffle only the
+        # vertex-sized vectors. The vertices distinct is needed for the
+        # final zero-fill anyway — counting the persisted frame is free.
+        small = vertices.count() <= _BFS_BROADCAST_ROWS
+        if small:
+            links_src = links_dst = e
         else:
-            contribs = links_src.join(
-                _vec(hub.withColumnRenamed("url", "src")), "src"
+            nparts = _shuffle_width(edges.sparkSession)
+            links_src = scope.persist(e.repartition(nparts, "src"))
+            links_dst = scope.persist(e.repartition(nparts, "dst"))
+
+        def _vec(v: DataFrame) -> DataFrame:
+            return F.broadcast(v) if small else v
+
+        if n_iters < 1:
+            return vertices.select(
+                "url", F.lit(1.0).alias("hub"), F.lit(0.0).alias("authority")
+            ).localCheckpoint(eager=True)
+
+        def unit(vec: DataFrame, col: str) -> DataFrame:
+            """Scale a MATERIALIZED support vector to unit L2 — the norm
+            is a 1-row aggregate over cached blocks folded to a literal."""
+            nrm = vec.agg(F.sqrt(F.sum(F.col(col) * F.col(col)))).first()[0]
+            if nrm and nrm > 0:
+                return vec.select(
+                    "url", (F.col(col) / F.lit(float(nrm))).alias(col)
+                )
+            return vec.select("url", F.lit(0.0).alias(col))
+
+        hub: DataFrame | None = None
+        auth: DataFrame | None = None
+        for i in range(1, n_iters + 1):
+            if i == 1:
+                contribs = links_src.withColumn("hub", F.lit(1.0))
+            else:
+                contribs = links_src.join(
+                    _vec(hub.withColumnRenamed("url", "src")), "src"
+                )
+            a = contribs.groupBy(F.col("dst").alias("url")).agg(
+                F.sum("hub").alias("authority")
             )
-        a = contribs.groupBy(F.col("dst").alias("url")).agg(
-            F.sum("hub").alias("authority")
+            if i == n_iters:
+                a = auth = scope.truncate(a)
+            hub = (
+                links_dst.join(_vec(a.withColumnRenamed("url", "dst")), "dst")
+                .groupBy(F.col("src").alias("url"))
+                .agg(F.sum("authority").alias("hub"))
+            )
+            if i % MATERIALIZE_EVERY == 0 or i == n_iters:
+                hub = unit(scope.truncate(hub), "hub")
+        # materialized, so the scope may drop every cache and checkpoint
+        # the zero-fill join reads
+        return (
+            vertices.join(unit(auth, "authority"), "url", "left")
+            .join(hub, "url", "left")
+            .select(
+                "url",
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+            )
+            .localCheckpoint(eager=True)
         )
-        if i == n_iters:
-            a = a.localCheckpoint(eager=True)
-            auth = a
-        hub = (
-            links_dst.join(_vec(a.withColumnRenamed("url", "dst")), "dst")
-            .groupBy(F.col("src").alias("url"))
-            .agg(F.sum("authority").alias("hub"))
-        )
-        if i % every == 0 or i == n_iters:
-            hub = hub.localCheckpoint(eager=True)
-            if prev_ckpt is not None:
-                # dead once the new checkpoint exists — the reference's
-                # (i-2)th-directory GC (PageRank.java:222-228)
-                prev_ckpt.unpersist()
-            prev_ckpt = hub
-            hub = unit(hub, "hub")
-    out = (
-        vertices.join(unit(auth, "authority"), "url", "left")
-        .join(hub, "url", "left")
-        .select(
-            "url",
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
-        )
-    )
-    # materialize before releasing the caches the zero-fill join reads
-    # (vertices/e are lazy inputs of `out`; the bfs/kcore contract)
-    out = out.localCheckpoint(eager=True)
-    e.unpersist()
-    vertices.unpersist()
-    if not small:
-        links_src.unpersist()
-        links_dst.unpersist()
-    return out
 
 
 def label_propagation(
-    edges: DataFrame,
-    n_rounds: int = 5,
-    materialize_every: int = 2,
-    num_partitions: int | None = None,
-    reliable_dir: str | None = None,
+    edges: DataFrame, n_rounds: int = 5, reliable_dir: str | None = None
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007) made fully
     deterministic → ``(url, label)`` community assignments after
@@ -891,56 +853,52 @@ def label_propagation(
     broadcast threshold the label vector broadcasts into both joins
     and edges stay un-repartitioned; past it the edge table is
     shuffled ONCE onto src and iterations re-shuffle only the
-    vertex-sized vector. Lineage truncates on the shared
-    ``IterationDriver`` cadence.
+    vertex-sized vector. Lineage truncates every second round on the
+    shared ``LoopScope.iterate``.
     """
     if n_rounds < 0:
         raise ValueError(f"n_rounds ({n_rounds}) must be non-negative")
-    spark = edges.sparkSession
-    nparts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    e = edges.select("src", "dst").persist()
-    vertices = (
-        e.select(F.col("src").alias("url"))
-        .union(e.select(F.col("dst").alias("url")))
-        .distinct()
-        .persist()
-    )
-    small = vertices.count() <= _BFS_BROADCAST_ROWS
-    if not small:
-        e2 = e.repartition(nparts, "src").persist()
-        e.unpersist()
-        e = e2
-
-    def _vec(v: DataFrame) -> DataFrame:
-        return F.broadcast(v) if small else v
-
-    labels = vertices.select("url", F.col("url").alias("label"))
-
-    def step(lbl: DataFrame, _i: int) -> DataFrame:
-        votes = (
-            e.join(_vec(lbl.withColumnRenamed("url", "src")), "src")
-            .groupBy(F.col("dst").alias("url"), "label")
-            .agg(F.count(F.lit(1)).alias("c"))
+    with LoopScope(reliable_dir) as scope:
+        e = scope.persist(edges.select("src", "dst"))
+        vertices = scope.persist(
+            e.select(F.col("src").alias("url"))
+            .union(e.select(F.col("dst").alias("url")))
+            .distinct()
         )
-        winners = votes.groupBy("url").agg(
-            F.min_by("label", F.struct((-F.col("c")).alias("nc"), "label")).alias(
-                "new_label"
+        small = vertices.count() <= _BFS_BROADCAST_ROWS
+        if not small:
+            # release the first edge cache before the src-partitioned
+            # copy fills on first use (it rescans the source), so only
+            # one edge table is ever cached
+            wide = scope.persist(
+                e.repartition(_shuffle_width(edges.sparkSession), "src")
             )
-        )
-        return (
-            lbl.join(_vec(winners), "url", "left")
-            .select("url", F.coalesce("new_label", "label").alias("label"))
-        )
+            e.unpersist()
+            e = wide
 
-    driver = IterationDriver(
-        materialize_every=materialize_every, reliable_dir=reliable_dir
-    )
-    out = driver.run(labels, step, n_rounds)
-    e.unpersist()
-    vertices.unpersist()
-    return out
+        def _vec(v: DataFrame) -> DataFrame:
+            return F.broadcast(v) if small else v
+
+        labels = vertices.select("url", F.col("url").alias("label"))
+
+        def step(lbl: DataFrame, _i: int) -> DataFrame:
+            votes = (
+                e.join(_vec(lbl.withColumnRenamed("url", "src")), "src")
+                .groupBy(F.col("dst").alias("url"), "label")
+                .agg(F.count(F.lit(1)).alias("c"))
+            )
+            winners = votes.groupBy("url").agg(
+                F.min_by(
+                    "label", F.struct((-F.col("c")).alias("nc"), "label")
+                ).alias("new_label")
+            )
+            return (
+                lbl.join(_vec(winners), "url", "left")
+                .select("url", F.coalesce("new_label", "label").alias("label"))
+            )
+
+        out = scope.iterate(labels, step, n_rounds)
+        return scope.keep(out)
 
 
 def triangle_counts(
@@ -1004,156 +962,139 @@ def triangle_counts(
     pass's degree subtree — for compositions (clustering coefficients)
     that would otherwise re-aggregate the canonical edges.
 
-    ``canon`` (the ``bfs_distances(dedupe=False)`` pattern): a
+    ``canon`` (the ``bfs_distances`` pattern): a
     prebuilt CALLER-PERSISTED ``(cu, cv)`` canonical simple edge set —
     compositions that also need the canonical edges (degrees in
     ``clustering_coefficients``) pass it so the raw edge table is
     scanned and distinct'd ONCE, not once per consumer; ownership
     (persist/unpersist) stays with the caller.
     """
-    spark = edges.sparkSession
-    nparts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    owns_canon = canon is None
-    canon_str = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("cu"), F.greatest("src", "dst").alias("cv")
-        )
-        .distinct()
-        .persist()
-    ) if owns_canon else canon.select("cu", "cv")
-    # dense-long vertex dim; the id assignment is arbitrary but must
-    # be STABLE across its uses, hence the eager materialization
-    vdim = (
-        canon_str.select(F.col("cu").alias("url"))
-        .union(canon_str.select(F.col("cv").alias("url")))
-        .distinct()
-        .withColumn("vid", F.monotonically_increasing_id())
-        .localCheckpoint(eager=True)
-    )
-    dim = F.broadcast(vdim) if broadcast_adj else vdim
-    canon = (
-        canon_str.join(dim.select(F.col("url").alias("cu"), F.col("vid").alias("u")), "cu")
-        .join(dim.select(F.col("url").alias("cv"), F.col("vid").alias("v")), "cv")
-        .select("u", "v")
-    )
-    deg = (
-        canon.select(F.col("u").alias("x"))
-        .unionByName(canon.select(F.col("v").alias("x")))
-        .groupBy("x")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    dd = F.broadcast(deg) if broadcast_adj else deg
-    with_deg = (
-        canon.join(dd.withColumnRenamed("x", "u").withColumnRenamed("d", "du"), "u")
-        .join(dd.withColumnRenamed("x", "v").withColumnRenamed("d", "dv"), "v")
-    )
-    u_first = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = with_deg.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-    ).repartition(nparts, "a").persist()
-    adj = oriented.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
-    if broadcast_adj:
-        adj = F.broadcast(adj)
-    closed = (
-        oriented.join(adj, "a")
-        .join(
-            adj.select(F.col("a").alias("b"), F.col("nbrs").alias("nbrs_b")),
-            "b",
-        )
-        .select(
-            "a",
-            "b",
-            F.array_intersect("nbrs", "nbrs_b").alias("cs"),
-        )
-        .filter(F.size("cs") > 0)
-    )
-    # ONE-pass credit assignment (r17, guide §2.3/§2.4): each closed
-    # row credits apex ``a`` and mid ``b`` with size(cs) and every
-    # closing vertex with 1, all through a single explode + one
-    # map-side-combined sum. The previous shape — three aggregate
-    # consumers (two edge-keyed sums + the explode count) over a
-    # PERSISTED ``closed`` — cached ~30M array elements (~256 MB at
-    # sf0.1) only to read them three times, and AQE launched the three
-    # consumers as concurrent jobs that serialized on populating the
-    # same cache blocks (measured: three overlapping ~4.8 s jobs, the
-    # whole-query dominator). Credit sums are identical by construction
-    # (same per-row terms, one union-of-terms instead of a union of
-    # three partial aggregates); with a single consumer the cache — and
-    # its population race — disappears.
-    credits = closed.select(
-        F.explode(
-            F.concat(
-                F.array(
-                    F.struct(
-                        F.col("a").alias("x"),
-                        F.size("cs").cast("long").alias("t"),
-                    ),
-                    F.struct(
-                        F.col("b").alias("x"),
-                        F.size("cs").cast("long").alias("t"),
-                    ),
-                ),
-                F.transform(
-                    "cs",
-                    lambda c: F.struct(
-                        c.alias("x"), F.lit(1).cast("long").alias("t")
-                    ),
-                ),
+    nparts = num_partitions or _shuffle_width(edges.sparkSession)
+    with LoopScope() as scope:
+        if canon is None:
+            canon_str = scope.persist(
+                edges.filter(F.col("src") != F.col("dst"))
+                .select(
+                    F.least("src", "dst").alias("cu"), F.greatest("src", "dst").alias("cv")
+                )
+                .distinct()
             )
-        ).alias("ct")
-    ).select(F.col("ct.x").alias("x"), F.col("ct.t").alias("t"))
-    per_vertex = credits.groupBy("x").agg(F.sum("t").alias("t"))
-    out = vdim.join(per_vertex.withColumnRenamed("x", "vid"), "vid", "left")
-    if with_degree:
-        # canonical-simple-graph degree per vertex, reused from the
-        # orientation pass's ``deg`` subtree (vid space) — saves the
-        # caller (clustering_coefficients) a second string-keyed
-        # aggregation over the canonical edges plus a vertex join
-        dv = deg.withColumnRenamed("x", "vid")
-        out = out.join(
-            F.broadcast(dv) if broadcast_adj else dv, "vid", "left"
-        ).select(
-            "url",
-            F.coalesce("t", F.lit(0)).cast("long").alias("triangles"),
-            F.coalesce("d", F.lit(0)).cast("long").alias("degree"),
+        else:
+            canon_str = canon.select("cu", "cv")
+        # dense-long vertex dim; the id assignment is arbitrary but must
+        # be STABLE across its uses, hence the eager materialization
+        vdim = scope.truncate(
+            canon_str.select(F.col("cu").alias("url"))
+            .union(canon_str.select(F.col("cv").alias("url")))
+            .distinct()
+            .withColumn("vid", F.monotonically_increasing_id())
         )
-    else:
-        out = out.select(
-            "url", F.coalesce("t", F.lit(0)).cast("long").alias("triangles")
+        dim = F.broadcast(vdim) if broadcast_adj else vdim
+        canon = (
+            canon_str.join(dim.select(F.col("url").alias("cu"), F.col("vid").alias("u")), "cu")
+            .join(dim.select(F.col("url").alias("cv"), F.col("vid").alias("v")), "cv")
+            .select("u", "v")
         )
-    # materialize before releasing the cached inputs the plan reads
-    out = out.localCheckpoint(eager=True)
-    oriented.unpersist()
-    if owns_canon:
-        canon_str.unpersist()
-    from pagerank_mapreduce_implementation_spark import util
-
-    util.release_result(vdim)
-    return out
-
-
-# broadcast a BFS frontier / accumulated-state side only while its
-# EXACT materialized row count stays under this (~10-20 MB of string
-# vertex ids — inside the default 10 MB-ish executor comfort zone);
-# beyond it the round's joins degrade to shuffles, still bounded by
-# the frontier ball
-_BFS_BROADCAST_ROWS = 500_000
+        deg = (
+            canon.select(F.col("u").alias("x"))
+            .unionByName(canon.select(F.col("v").alias("x")))
+            .groupBy("x")
+            .agg(F.count(F.lit(1)).alias("d"))
+        )
+        dd = F.broadcast(deg) if broadcast_adj else deg
+        with_deg = (
+            canon.join(dd.withColumnRenamed("x", "u").withColumnRenamed("d", "du"), "u")
+            .join(dd.withColumnRenamed("x", "v").withColumnRenamed("d", "dv"), "v")
+        )
+        u_first = (F.col("du") < F.col("dv")) | (
+            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
+        )
+        oriented = scope.persist(
+            with_deg.select(
+                F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+                F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
+            ).repartition(nparts, "a")
+        )
+        adj = oriented.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
+        if broadcast_adj:
+            adj = F.broadcast(adj)
+        closed = (
+            oriented.join(adj, "a")
+            .join(
+                adj.select(F.col("a").alias("b"), F.col("nbrs").alias("nbrs_b")),
+                "b",
+            )
+            .select(
+                "a",
+                "b",
+                F.array_intersect("nbrs", "nbrs_b").alias("cs"),
+            )
+            .filter(F.size("cs") > 0)
+        )
+        # ONE-pass credit assignment (r17, guide §2.3/§2.4): each closed
+        # row credits apex ``a`` and mid ``b`` with size(cs) and every
+        # closing vertex with 1, all through a single explode + one
+        # map-side-combined sum. The previous shape — three aggregate
+        # consumers (two edge-keyed sums + the explode count) over a
+        # PERSISTED ``closed`` — cached ~30M array elements (~256 MB at
+        # sf0.1) only to read them three times, and AQE launched the three
+        # consumers as concurrent jobs that serialized on populating the
+        # same cache blocks (measured: three overlapping ~4.8 s jobs, the
+        # whole-query dominator). Credit sums are identical by construction
+        # (same per-row terms, one union-of-terms instead of a union of
+        # three partial aggregates); with a single consumer the cache — and
+        # its population race — disappears.
+        credits = closed.select(
+            F.explode(
+                F.concat(
+                    F.array(
+                        F.struct(
+                            F.col("a").alias("x"),
+                            F.size("cs").cast("long").alias("t"),
+                        ),
+                        F.struct(
+                            F.col("b").alias("x"),
+                            F.size("cs").cast("long").alias("t"),
+                        ),
+                    ),
+                    F.transform(
+                        "cs",
+                        lambda c: F.struct(
+                            c.alias("x"), F.lit(1).cast("long").alias("t")
+                        ),
+                    ),
+                )
+            ).alias("ct")
+        ).select(F.col("ct.x").alias("x"), F.col("ct.t").alias("t"))
+        per_vertex = credits.groupBy("x").agg(F.sum("t").alias("t"))
+        out = vdim.join(per_vertex.withColumnRenamed("x", "vid"), "vid", "left")
+        if with_degree:
+            # canonical-simple-graph degree per vertex, reused from the
+            # orientation pass's ``deg`` subtree (vid space) — saves the
+            # caller (clustering_coefficients) a second string-keyed
+            # aggregation over the canonical edges plus a vertex join
+            dv = deg.withColumnRenamed("x", "vid")
+            out = out.join(
+                F.broadcast(dv) if broadcast_adj else dv, "vid", "left"
+            ).select(
+                "url",
+                F.coalesce("t", F.lit(0)).cast("long").alias("triangles"),
+                F.coalesce("d", F.lit(0)).cast("long").alias("degree"),
+            )
+        else:
+            out = out.select(
+                "url", F.coalesce("t", F.lit(0)).cast("long").alias("triangles")
+            )
+        # materialized, so the scope may drop the caches and the vertex
+        # dim checkpoint the plan reads
+        return out.localCheckpoint(eager=True)
 
 
 def bfs_distances(
     edges: DataFrame,
     sources: list[str],
     n_rounds: int = 6,
-    materialize_every: int = 2,
-    num_partitions: int | None = None,
     reliable_dir: str | None = None,
-    dedupe: bool = True,
 ) -> DataFrame:
     """Multi-source BFS hop distances → ``(url, dist)`` for every
     vertex reachable from ``sources`` within ``n_rounds`` directed
@@ -1174,17 +1115,18 @@ def bfs_distances(
     per-round cost tracks the frontier ball, not the vertex count.
 
     Scale shape (r11 verdict item 6 rework): reachability ignores edge
-    multiplicity, so edges are DEDUPED up front (the raw bipartite
-    input carries ~10x duplicate edges at every sf — every frontier
-    join then scans the 10x smaller simple graph) and persisted once.
-    State is kept as per-round LAYERS, each eagerly truncated: the
-    frontier is literally last round's layer (no filter over the
-    growing table), the accumulated distance table is a union of
-    materialized increments (each vertex is materialized once total,
-    vs. re-materializing the whole table every ``materialize_every``
-    rounds), and an EMPTY layer proves the fixpoint — expansion is
-    frontier-only, so all later layers are empty too — and exits
-    early, output-identical.
+    multiplicity, so the caller passes SIMPLE edges (the registered
+    query distincts its bipartite union once — the raw input carries
+    ~10x duplicate edges at every sf, and every frontier join then
+    scans the 10x smaller simple graph); duplicate edges give the same
+    output, only slower. The edges are persisted once. State is kept as
+    per-round LAYERS, each eagerly truncated: the frontier is literally
+    last round's layer (no filter over the growing table), the
+    accumulated distance table is a union of materialized increments
+    (each vertex is materialized once total), and an EMPTY layer proves
+    the fixpoint — expansion is frontier-only, so all later layers are
+    empty too — and exits early, output-identical. The loop is shared
+    with ``source_centrality`` (``_layered_frontier``).
 
     Join strategy is driver-adaptive on EXACT layer counts (each layer
     is already materialized, so its count is a free in-memory job, and
@@ -1196,67 +1138,67 @@ def bfs_distances(
     anti-join (zero edge movement per round); past the threshold the
     hints drop away and the joins degrade to shuffles, still
     frontier-ball-bounded. sf0.1 A/B, warm: 6.4 s (SMJ rounds) ->
-    4.3 s. ``materialize_every``/``num_partitions`` are retained for
-    API compatibility; layers are always truncated (they are the
-    increments themselves) and edge partitioning is left to the
-    planner.
+    4.3 s. The result is materialized; the layer checkpoints are
+    released before returning.
     """
+    with LoopScope(reliable_dir) as scope:
+        dist = _layered_frontier(scope, edges, sources, n_rounds, keyed=False)
+        return dist.localCheckpoint(eager=True)
+
+
+def _layered_frontier(
+    scope: LoopScope,
+    edges: DataFrame,
+    sources: list[str],
+    n_rounds: int,
+    keyed: bool,
+) -> DataFrame:
+    """The layered frontier loop of ``bfs_distances`` and
+    ``source_centrality``: ``(url, dist)`` — or ``(source, url, dist)``
+    when ``keyed``, one independent expansion per source under the
+    composite key — as a lazy union of the per-round layer checkpoints
+    ``scope`` made."""
     if n_rounds < 0:
         raise ValueError(f"n_rounds ({n_rounds}) must be non-negative")
     if not sources:
         raise ValueError("sources must be non-empty")
-    spark = edges.sparkSession
-    # dedupe=False skips the simple-graph shuffle for callers that
-    # already hold distinct edges (source_centrality dedupes ONCE and
-    # shares the persisted copy across its pivots) — output-identical
-    # either way, reachability ignores multiplicity
-    e = edges.select("src", "dst")
-    if dedupe:
-        e = e.distinct()
-    e = e.persist()
-
-    def _trunc(df: DataFrame) -> DataFrame:
-        if reliable_dir:
-            df.sparkSession.sparkContext.setCheckpointDir(reliable_dir)
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    layer = _trunc(
-        spark.createDataFrame([(s,) for s in sorted(set(sources))], ["url"])
-        .select("url", F.lit(0).cast("int").alias("dist"))
+    seeds = sorted(set(sources))
+    keys = ["source"] if keyed else []
+    e = scope.persist(edges.select("src", "dst"))
+    layer = scope.truncate(
+        edges.sparkSession.createDataFrame(
+            [(s, s) if keyed else (s,) for s in seeds], [*keys, "url"]
+        ).select(*keys, "url", F.lit(0).cast("int").alias("dist"))
     )
     dist = layer
-    n_layer = n_dist = len(set(sources))
+    n_layer = n_dist = len(seeds)
     for rnd in range(1, n_rounds + 1):
-        frontier = layer.select(F.col("url").alias("src"))
+        frontier = layer.select(*keys, F.col("url").alias("src"))
         if n_layer <= _BFS_BROADCAST_ROWS:
             frontier = F.broadcast(frontier)
         seen = F.broadcast(dist) if n_dist <= _BFS_BROADCAST_ROWS else dist
         # distinct BEFORE the anti-join: the expansion is frontier x
         # degree rows, the distinct'd candidate set is vertex-bounded
         # — measured 6.5 s vs 11 s at sf0.1 for the swapped order
-        layer = _trunc(
+        layer = scope.truncate(
             e.join(frontier, "src")
-            .select(F.col("dst").alias("url"))
+            .select(*keys, F.col("dst").alias("url"))
             .distinct()
-            .join(seen, "url", "left_anti")
-            .select("url", F.lit(rnd).cast("int").alias("dist"))
+            .join(seen, [*keys, "url"], "left_anti")
+            .select(*keys, "url", F.lit(rnd).cast("int").alias("dist"))
         )
         n_layer = layer.count()
         if n_layer == 0:
             break
         dist = dist.unionByName(layer)
         n_dist += n_layer
-    out = dist.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    return dist
 
 
 def kcore(
     edges: DataFrame,
     k: int = 3,
     n_rounds: int = 5,
-    materialize_every: int = 2,
     reliable_dir: str | None = None,
 ) -> DataFrame:
     """k-core peeling over the UNDIRECTED simple graph underlying
@@ -1316,30 +1258,25 @@ def kcore(
             .agg(F.count(F.lit(1)).alias("degree"))
         )
 
-    def _trunc(df: DataFrame) -> DataFrame:
-        if reliable_dir:
-            df.sparkSession.sparkContext.setCheckpointDir(reliable_dir)
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
-
-    ed, deg = canon, None
-    for _rnd in range(1, n_rounds + 1):
-        deg = _trunc(degrees(ed))
-        drop = deg.filter(F.col("degree") < k).select("url")
-        if drop.isEmpty():
-            break
-        ed = _trunc(
-            ed.join(drop.withColumnRenamed("url", "u"), "u", "left_anti")
-            .join(drop.withColumnRenamed("url", "v"), "v", "left_anti")
-            .select("u", "v")
-        )
-        deg = None  # stale once a peel landed
-    if deg is None:
-        # n_rounds == 0, or the budget ran out mid-cascade
-        deg = degrees(ed)
-    out = deg.select("url", F.col("degree").cast("long").alias("degree"))
-    out = out.localCheckpoint(eager=True)
-    return out
+    with LoopScope(reliable_dir) as scope:
+        ed, deg = canon, None
+        for _rnd in range(1, n_rounds + 1):
+            deg = scope.truncate(degrees(ed))
+            drop = deg.filter(F.col("degree") < k).select("url")
+            if drop.isEmpty():
+                break
+            ed = scope.truncate(
+                ed.join(drop.withColumnRenamed("url", "u"), "u", "left_anti")
+                .join(drop.withColumnRenamed("url", "v"), "v", "left_anti")
+                .select("u", "v")
+            )
+            deg = None  # stale once a peel landed
+        if deg is None:
+            # n_rounds == 0, or the budget ran out mid-cascade
+            deg = degrees(ed)
+        return deg.select(
+            "url", F.col("degree").cast("long").alias("degree")
+        ).localCheckpoint(eager=True)
 
 
 def sssp_weighted(
@@ -1347,8 +1284,6 @@ def sssp_weighted(
     sources: list[str],
     n_rounds: int = 4,
     weight_col: str = "w",
-    materialize_every: int = 2,
-    num_partitions: int | None = None,
     reliable_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source weighted shortest paths → ``(url, dist)`` =
@@ -1371,51 +1306,45 @@ def sssp_weighted(
     round costs one state-sized co-partitioned join + one dst-keyed
     ``min`` with map-side partial aggregation + one vertex-bounded
     full-outer merge expressed as ``least`` over a left-right
-    coalesce. State is one row per reached vertex.
+    coalesce. State is one row per reached vertex, truncated every
+    second round.
     """
     if n_rounds < 0:
         raise ValueError(f"n_rounds ({n_rounds}) must be non-negative")
     if not sources:
         raise ValueError("sources must be non-empty")
     spark = edges.sparkSession
-    nparts = num_partitions or int(
-        spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    e = (
-        edges.select("src", "dst", F.col(weight_col).cast("double").alias("__w"))
-        .repartition(nparts, "src")
-        .persist()
-    )
     dist0 = (
         spark.createDataFrame([(s,) for s in sorted(set(sources))], ["url"])
         .select("url", F.lit(0.0).alias("dist"))
     )
-
-    def step(dist: DataFrame, _rnd: int) -> DataFrame:
-        relaxed = (
-            e.join(dist.withColumnRenamed("url", "src"), "src")
-            .groupBy(F.col("dst").alias("url"))
-            .agg(F.min(F.col("dist") + F.col("__w")).alias("__nd"))
+    with LoopScope(reliable_dir) as scope:
+        e = scope.persist(
+            edges.select("src", "dst", F.col(weight_col).cast("double").alias("__w"))
+            .repartition(_shuffle_width(spark), "src")
         )
-        return (
-            dist.join(relaxed, "url", "full_outer")
-            .select(
-                "url",
-                F.least(
-                    F.coalesce("dist", F.col("__nd")),
-                    F.coalesce("__nd", F.col("dist")),
-                ).alias("dist"),
+
+        def step(dist: DataFrame, _rnd: int) -> DataFrame:
+            relaxed = (
+                e.join(dist.withColumnRenamed("url", "src"), "src")
+                .groupBy(F.col("dst").alias("url"))
+                .agg(F.min(F.col("dist") + F.col("__w")).alias("__nd"))
             )
-        )
+            return (
+                dist.join(relaxed, "url", "full_outer")
+                .select(
+                    "url",
+                    F.least(
+                        F.coalesce("dist", F.col("__nd")),
+                        F.coalesce("__nd", F.col("dist")),
+                    ).alias("dist"),
+                )
+            )
 
-    driver = IterationDriver(
-        materialize_every=materialize_every, reliable_dir=reliable_dir
-    )
-    out = driver.run(dist0, step, n_rounds)
-    out = out.select("url", F.round("dist", 6).alias("dist"))
-    out = out.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+        out = scope.iterate(dist0, step, n_rounds)
+        return out.select("url", F.round("dist", 6).alias("dist")).localCheckpoint(
+            eager=True
+        )
 
 
 def clustering_coefficients(edges: DataFrame, round_digits: int = 6) -> DataFrame:
@@ -1540,10 +1469,7 @@ def bipartite_projection(
     # (profiled: a 10-task 3.2 s expansion stage writing the 154 MB
     # pair shuffle; the join's exchange is replaced by this one, not
     # added). A/B min-of-3 warm at sf0.1: 5.26 -> 2.82 s.
-    nparts = int(
-        edges.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    ded = ded.repartition(nparts, "dst").persist()
+    ded = ded.repartition(_shuffle_width(edges.sparkSession), "dst").persist()
     a = ded.select(F.col("dst").alias("__r"), F.col("src").alias("a"))
     b = ded.select(F.col("dst").alias("__r"), F.col("src").alias("b"))
     out = (
@@ -1562,12 +1488,7 @@ def bipartite_projection(
 
 
 def source_centrality(
-    edges: DataFrame,
-    sources: list[str],
-    n_rounds: int = 6,
-    materialize_every: int = 2,
-    num_partitions: int | None = None,
-    dedupe: bool = True,
+    edges: DataFrame, sources: list[str], n_rounds: int = 6
 ) -> DataFrame:
     """Closeness/harmonic centrality of chosen vertices — one row per
     source: ``(source, n_reached, harmonic, closeness)`` where over
@@ -1591,73 +1512,42 @@ def source_centrality(
     independent under the composite key, so the layered loop is
     output-identical to per-pivot runs while the edge table is
     scanned once per ROUND instead of once per round per pivot
-    (p pivots: p x n_rounds joins -> n_rounds). The simple-graph
-    dedup happens once; layer/state broadcasts gate on exact counts
-    (the ``bfs_distances`` contract); a pivot reaching nothing still
-    reports an explicit zero row via the seeds dim.
+    (p pivots: p x n_rounds joins -> n_rounds). The loop is
+    ``bfs_distances``' own (``_layered_frontier``, keyed by source):
+    the caller passes simple edges, layer/state broadcasts gate on
+    exact counts; a pivot reaching nothing still reports an explicit
+    zero row via the seeds dim. The result is a lazy projection over
+    the layer checkpoints (``util.release_result`` frees them).
     """
-    if not sources:
-        raise ValueError("sources must be non-empty")
-    if n_rounds < 0:
-        raise ValueError(f"n_rounds ({n_rounds}) must be non-negative")
     spark = edges.sparkSession
-    # dedupe=False: caller already holds simple edges (the
-    # bfs_distances contract — reachability ignores multiplicity, so
-    # output is identical either way)
-    simple = edges.select("src", "dst")
-    if dedupe:
-        simple = simple.distinct()
-    simple = simple.persist()
-    seeds = sorted(set(sources))
-    layer = spark.createDataFrame(
-        [(s, s) for s in seeds], ["source", "url"]
-    ).select("source", "url", F.lit(0).cast("int").alias("dist"))
-    layer = layer.localCheckpoint(eager=True)
-    dist = layer
-    n_layer = n_dist = len(seeds)
-    for rnd in range(1, n_rounds + 1):
-        frontier = layer.select("source", F.col("url").alias("src"))
-        if n_layer <= _BFS_BROADCAST_ROWS:
-            frontier = F.broadcast(frontier)
-        seen = F.broadcast(dist) if n_dist <= _BFS_BROADCAST_ROWS else dist
-        layer = (
-            simple.join(frontier, "src")
-            .select("source", F.col("dst").alias("url"))
-            .distinct()
-            .join(seen, ["source", "url"], "left_anti")
-            .select("source", "url", F.lit(rnd).cast("int").alias("dist"))
-        ).localCheckpoint(eager=True)
-        n_layer = layer.count()
-        if n_layer == 0:
-            break
-        dist = dist.unionByName(layer)
-        n_dist += n_layer
-    simple.unpersist()
-    agg = (
-        dist.filter(F.col("dist") > 0)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("__n"),
-            F.sum("dist").alias("__sd"),
-            F.sum(
-                (F.lit(1.0) / F.col("dist").cast("double")).cast(
-                    "decimal(18,12)"
-                )
-            ).alias("__h"),
+    with LoopScope() as scope:
+        dist = _layered_frontier(scope, edges, sources, n_rounds, keyed=True)
+        agg = (
+            dist.filter(F.col("dist") > 0)
+            .groupBy("source")
+            .agg(
+                F.count(F.lit(1)).alias("__n"),
+                F.sum("dist").alias("__sd"),
+                F.sum(
+                    (F.lit(1.0) / F.col("dist").cast("double")).cast(
+                        "decimal(18,12)"
+                    )
+                ).alias("__h"),
+            )
         )
-    )
-    srcs = spark.createDataFrame([(s,) for s in seeds], ["source"])
-    return srcs.join(F.broadcast(agg), "source", "left").select(
-        "source",
-        F.coalesce(F.col("__n"), F.lit(0)).cast("long").alias("n_reached"),
-        F.round(
-            F.coalesce(F.col("__h"), F.lit(0)).cast("double"), 6
-        ).alias("harmonic"),
-        F.round(
-            F.when(
-                F.col("__n") > 0,
-                F.col("__n").cast("double") / F.col("__sd").cast("double"),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("closeness"),
-    )
+        srcs = spark.createDataFrame([(s,) for s in sorted(set(sources))], ["source"])
+        out = srcs.join(F.broadcast(agg), "source", "left").select(
+            "source",
+            F.coalesce(F.col("__n"), F.lit(0)).cast("long").alias("n_reached"),
+            F.round(
+                F.coalesce(F.col("__h"), F.lit(0)).cast("double"), 6
+            ).alias("harmonic"),
+            F.round(
+                F.when(
+                    F.col("__n") > 0,
+                    F.col("__n").cast("double") / F.col("__sd").cast("double"),
+                ).otherwise(F.lit(0.0)),
+                6,
+            ).alias("closeness"),
+        )
+        return scope.keep(out)

@@ -182,7 +182,7 @@ def exact_dedup_sql() -> str:
         "SELECT doc_id, fingerprint, "
         "min(doc_id) OVER (PARTITION BY fingerprint) AS keeper, "
         "CAST(doc_id <> min(doc_id) OVER (PARTITION BY fingerprint) AS INT) AS is_dup "
-        "FROM (SELECT doc_id, md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g')))) "
+        "FROM (SELECT doc_id, md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) "
         "AS fingerprint FROM documents)"
     )
 
@@ -265,7 +265,7 @@ def normalize_text_sql(source: str = "documents") -> str:
         f"FROM {source}), "
         "c AS (SELECT doc_id, text, trim(regexp_replace(regexp_replace("
         f"regexp_replace(t, '{strip}', '', 'g'), "
-        r"'[^\S\n]+', ' ', 'g'), ' *\n *', chr(10), 'g')) "
+        r"'[^\S\n]+', ' ', 'g'), ' *\n *', chr(10), 'g'), ' ') "
         "AS clean_text FROM n) "
         "SELECT doc_id, clean_text, "
         "CAST(clean_text <> text AS INT) AS changed FROM c"
@@ -1424,14 +1424,14 @@ def gopher_rules_sql(
     return (
         r"WITH t AS (SELECT doc_id, text, "
         r"list_filter(regexp_split_to_array(text, '[[:space:]]+'), w -> w <> '') AS toks, "
-        r"list_filter(regexp_split_to_array(text, '\n'), ln -> trim(ln) <> '') AS lines "
+        r"list_filter(regexp_split_to_array(text, '\n'), ln -> trim(ln, ' ') <> '') AS lines "
         "FROM documents), "
         "m AS (SELECT doc_id, len(toks) AS n_words, len(lines) AS n_lines, "
         "coalesce(list_sum(list_transform(toks, w -> length(w))), 0) AS word_chars, "
         "len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS alpha_words, "
         f"len(list_intersect(list_transform(toks, w -> lower(w)), [{stop}])) AS stop_hits, "
-        "len(list_filter(lines, ln -> regexp_matches(trim(ln), '^([-*•])'))) AS bullet_lines, "
-        r"len(list_filter(lines, ln -> regexp_matches(trim(ln), '\.\.\.$'))) AS ellipsis_lines, "
+        "len(list_filter(lines, ln -> regexp_matches(trim(ln, ' '), '^([-*•])'))) AS bullet_lines, "
+        r"len(list_filter(lines, ln -> regexp_matches(trim(ln, ' '), '\.\.\.$'))) AS ellipsis_lines, "
         "length(text) - length(replace(text, '#', '')) AS hashes, "
         "(length(text) - length(replace(text, '...', ''))) // 3 AS ellipses "
         "FROM t), "
@@ -1453,7 +1453,7 @@ def gopher_rules_sql(
 def line_dedup_sql() -> str:
     """Mirror of dedup.line_dedup over the 10-tokens-per-line staging
     of ``documents`` (the registry query's shape): identical chunking,
-    md5(lower(trim(line))) keys, keep-first by (doc_id, idx) via a
+    md5(lower(trim(line, ' '))) keys, keep-first by (doc_id, idx) via a
     window, ordered string_agg rebuild — untouched docs reassemble to
     the same bytes because split+join on the literal separator is
     lossless. Output matches the Spark side: (doc_id, text_md5,
@@ -1469,8 +1469,8 @@ def line_dedup_sql() -> str:
         "unnest(string_split(text, chr(10))) AS line, "
         "unnest(range(len(string_split(text, chr(10))))) AS idx "
         "FROM staged), "
-        "keyed AS (SELECT doc_id, idx, md5(lower(trim(line))) AS k "
-        "FROM lines WHERE len(trim(line)) >= 1), "
+        "keyed AS (SELECT doc_id, idx, md5(lower(trim(line, ' '))) AS k "
+        "FROM lines WHERE len(trim(line, ' ')) >= 1), "
         "ranked AS (SELECT doc_id, idx, row_number() OVER "
         "(PARTITION BY k ORDER BY doc_id, idx) AS rn FROM keyed), "
         "dropped AS (SELECT doc_id, idx FROM ranked WHERE rn > 1) "
@@ -1504,7 +1504,7 @@ def intra_doc_line_dedup_sql(sep: str = " ", min_line_chars: int = 1) -> str:
         f"WITH s AS (SELECT doc_id, text, string_split(text, '{s}') AS ls "
         "FROM documents), "
         "k AS (SELECT doc_id, text, ls, list_transform(ls, x -> CASE "
-        f"WHEN len(trim(x)) >= {m} THEN md5(lower(trim(x))) END) AS ks "
+        f"WHEN len(trim(x, ' ')) >= {m} THEN md5(lower(trim(x, ' '))) END) AS ks "
         "FROM s), "
         "f AS (SELECT doc_id, text, ls, list_filter(ls, (x, i) -> "
         "ks[i] IS NULL OR list_position(ks, ks[i]) = i) AS kept FROM k) "
@@ -1589,7 +1589,7 @@ def _c4_line_survives_sql(ln: str = "ln") -> str:
     """One surviving-line predicate shared by c4_rules oracles."""
     return (
         f"regexp_matches({ln}, '[.!?][\"’”]?[[:space:]]*$') AND "
-        f"len(list_filter(regexp_split_to_array(trim({ln}), '[[:space:]]+'), "
+        f"len(list_filter(regexp_split_to_array(trim({ln}, ' '), '[[:space:]]+'), "
         f"w -> w <> '')) >= 3 AND NOT contains(lower({ln}), 'javascript')"
     )
 
@@ -1636,7 +1636,7 @@ def gopher_repetition_sql(
     parts = [
         "WITH t AS (SELECT doc_id, text, "
         r"list_filter(list_transform(string_split(text, chr(10)), "
-        "ln -> trim(ln)), ln -> ln <> '') AS lns, "
+        "ln -> trim(ln, ' ')), ln -> ln <> '') AS lns, "
         r"list_filter(regexp_split_to_array(text, '[[:space:]]+'), w -> w <> '') "
         f"AS toks FROM {source}), "
         "lcnt AS (SELECT doc_id, ln, count(*) AS c FROM "
@@ -4063,7 +4063,7 @@ def source_overlap_sql(min_shared: int = 1, group_col: str = "source") -> str:
     return (
         "WITH sfp AS (SELECT DISTINCT "
         f"{group_col} AS s, "
-        "md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g')))) "
+        "md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) "
         "AS fp FROM documents), "
         "shared AS (SELECT a.s AS source_a, b.s AS source_b, "
         "count(*) AS n_shared FROM sfp a JOIN sfp b ON a.fp = b.fp "

@@ -1,3 +1,3 @@
-from pagerank_mapreduce_implementation_spark.plans.iterative import IterationDriver
+from pagerank_mapreduce_implementation_spark.plans.iterative import LoopScope
 
-__all__ = ["IterationDriver"]
+__all__ = ["LoopScope"]

@@ -1,9 +1,9 @@
-"""Iteration driver for fixed-point DataFrame loops (O18).
+"""Loop scope: the one owner of fixed-point DataFrame loops (O18).
 
 The reference runs 10 chained MapReduce jobs, each writing its state to
 HDFS and deleting the (i-2)th directory (PageRank.java:190-244, GC at
 :222-228). The Spark-native equivalent keeps state lazy and truncates
-lineage with an eager ``localCheckpoint`` every ``materialize_every``
+lineage with an eager ``localCheckpoint`` every ``MATERIALIZE_EVERY``
 iterations — without truncation the logical plan doubles per iteration
 (join+agg stacked on the previous plan) and analysis time explodes long
 before data size matters; without laziness every iteration pays a full
@@ -15,6 +15,10 @@ loop whose state is small relative to the inputs (the rank vector:
 2 columns x |V|); a reliable ``checkpoint()`` to distributed storage is
 only needed for fault tolerance of very long loops on preemptible
 clusters — callers opt in via ``reliable_dir``.
+
+``LoopScope`` owns a loop's lifetime. ``DataFrame.unpersist()`` is a
+no-op on a checkpoint, so the scope frees each checkpoint RDD it
+created at the RDD layer; RDDs pinned by other code are never touched.
 """
 
 from __future__ import annotations
@@ -23,30 +27,65 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 
+from pagerank_mapreduce_implementation_spark.util import checkpoint_rdds
 
-class IterationDriver:
-    def __init__(
-        self,
-        materialize_every: int = 2,
-        reliable_dir: str | None = None,
-    ) -> None:
-        self.materialize_every = max(1, materialize_every)
+# default truncation cadence of every graph loop: chaining 2 lazy
+# iterations per checkpoint is the measured sweet spot (above)
+MATERIALIZE_EVERY = 2
+
+
+class LoopScope:
+    """Owner of one loop's persisted inputs and checkpoints. On exit,
+    also by exception, every frame ``persist`` pinned is unpersisted and
+    every checkpoint ``truncate`` made is released unless the frame
+    passed to ``keep`` reads it (a kept result must not read a persisted
+    frame lazily: it would recompute from source)."""
+
+    def __init__(self, reliable_dir: str | None = None) -> None:
         self.reliable_dir = reliable_dir
+        self._persisted: list[DataFrame] = []
+        self._checkpoints: dict = {}
+        self._kept: set[int] = set()
 
-    def _truncate(self, df: DataFrame) -> DataFrame:
+    def __enter__(self) -> LoopScope:
+        return self
+
+    def __exit__(self, *_exc) -> None:
+        for df in self._persisted:
+            df.unpersist()
+        for rdd_id, rdd in self._checkpoints.items():
+            if rdd_id not in self._kept:
+                rdd.unpersist(False)
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        self._persisted.append(df.persist())
+        return df
+
+    def truncate(self, df: DataFrame) -> DataFrame:
+        """Eager checkpoint: local, or reliable under ``reliable_dir``."""
         if self.reliable_dir:
             df.sparkSession.sparkContext.setCheckpointDir(self.reliable_dir)
-            return df.checkpoint(eager=True)
-        return df.localCheckpoint(eager=True)
+            out = df.checkpoint(eager=True)
+        else:
+            out = df.localCheckpoint(eager=True)
+        self._checkpoints.update(checkpoint_rdds(out))
+        return out
 
-    def run(
+    def keep(self, df: DataFrame) -> DataFrame:
+        """Mark ``df`` as the result: the checkpoints it reads survive."""
+        self._kept.update(checkpoint_rdds(df))
+        return df
+
+    def iterate(
         self,
         state: DataFrame,
         step: Callable[[DataFrame, int], DataFrame],
         n_iters: int,
+        every: int = MATERIALIZE_EVERY,
         converged: Callable[[DataFrame, DataFrame], bool] | None = None,
     ) -> DataFrame:
-        """Iterate ``state = step(state, i)`` ``n_iters`` times.
+        """Iterate ``state = step(state, i)`` for i = 1..``n_iters``,
+        truncating every ``every`` iterations and after the last.
 
         ``converged(prev, cur)`` (optional) is checked after each
         iteration for early exit — the reference has no convergence test
@@ -54,11 +93,11 @@ class IterationDriver:
         leave it None; with it, every iteration materializes (both
         states are needed concurrently).
         """
-        every = 1 if converged is not None else self.materialize_every
+        every = 1 if converged is not None else max(1, every)
         for i in range(1, n_iters + 1):
             new_state = step(state, i)
             if i % every == 0 or i == n_iters:
-                new_state = self._truncate(new_state)
+                new_state = self.truncate(new_state)
                 if converged is not None and converged(state, new_state):
                     return new_state
             state = new_state

@@ -29,6 +29,21 @@ def release_persistent_rdds_since(spark, before: set[int]) -> None:
             jmap.get(k).unpersist(False)
 
 
+def checkpoint_rdds(df) -> dict:
+    """``{rdd id: JavaRDD}`` of every checkpoint scan (``LogicalRDD``
+    plan node) in ``df``'s analyzed plan."""
+    out = {}
+    stack = [df._jdf.queryExecution().analyzed()]
+    while stack:
+        p = stack.pop()
+        if p.getClass().getSimpleName() == "LogicalRDD":
+            out[int(p.rdd().id())] = p.rdd()
+        children = p.children()
+        for i in range(children.length()):
+            stack.append(children.apply(i))
+    return out
+
+
 def release_result(df) -> None:
     """Release the executor storage pinned by a MATERIALIZED operator
     result — a DataFrame an operator returned via
@@ -58,14 +73,8 @@ def release_result(df) -> None:
     dies for both — release only when done with everything derived
     from the result (the same rule as any manual unpersist).
     """
-    stack = [df._jdf.queryExecution().analyzed()]
-    while stack:
-        p = stack.pop()
-        if p.getClass().getSimpleName() == "LogicalRDD":
-            p.rdd().unpersist(False)
-        children = p.children()
-        for i in range(children.length()):
-            stack.append(children.apply(i))
+    for rdd in checkpoint_rdds(df).values():
+        rdd.unpersist(False)
 
 
 def release_plan_caches(df) -> None:

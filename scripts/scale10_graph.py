@@ -112,6 +112,13 @@ def main() -> None:
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
 
+    def simple_bidir(e):
+        # source_centrality takes simple edges: distinct the directed
+        # edges once (the staging of the registered query), then mirror
+        return bidir(
+            e.repartition(spark.sparkContext.defaultParallelism, "src", "dst").distinct()
+        )
+
     def bidir_w(e):
         return e.unionByName(
             e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
@@ -160,7 +167,7 @@ def main() -> None:
             frame = frames[f"{base}_{scale}"]
             piv = piv_1x if scale == "1x" else piv_10x
             if op == "source_centrality_10piv":
-                build = lambda: graph.source_centrality(bidir(frame), piv, n_rounds=4)  # noqa: B023,E731
+                build = lambda: graph.source_centrality(simple_bidir(frame), piv, n_rounds=4)  # noqa: B023,E731
             elif op == "sssp_weighted_10src":
                 build = lambda: graph.sssp_weighted(bidir_w(frame), piv, n_rounds=4)  # noqa: B023,E731
             else:

@@ -5,6 +5,8 @@ what it should — these fixtures can)."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from pagerank_mapreduce_implementation_spark.operators import dedup
 
@@ -913,8 +915,8 @@ def test_line_dedup_matches_duckdb_oracle(spark):
                  unnest(range(len(string_split(text, chr(10))))) AS idx
           FROM staged
         ), keyed AS (
-          SELECT doc_id, idx, md5(lower(trim(line))) k
-          FROM lines WHERE len(trim(line)) >= 1
+          SELECT doc_id, idx, md5(lower(trim(line, ' '))) k
+          FROM lines WHERE len(trim(line, ' ')) >= 1
         ), ranked AS (
           SELECT doc_id, idx,
                  row_number() OVER (PARTITION BY k ORDER BY doc_id, idx) rn
@@ -1079,3 +1081,41 @@ class TestClusterSurvivors:
         }
         assert out[7]["keep"] and not out[9]["keep"]
         assert out[9]["survivor_id"] == 7
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    texts=st.lists(
+        st.text(alphabet="ab A\u00a0\u2003", min_size=0, max_size=24),
+        min_size=1,
+        max_size=6,
+    )
+)
+@example(texts=["\u00a0ab", "ab", "a b\u2003", "a b"])
+def test_unicode_space_edges_match_oracle(spark, texts):
+    """exact_dedup and line_dedup, as registered, against their DuckDB
+    oracles on text whose edges carry U+00A0 / U+2003. Spark's ``trim``
+    strips only the ASCII space; DuckDB's bare ``trim(x)`` also strips
+    Unicode spaces, so an oracle spelling it would merge fingerprints
+    and line keys that Spark keeps apart."""
+    import tempfile
+
+    import duckdb
+    import pandas as pd
+
+    import __spark_entry__ as entrymod
+    from pagerank_mapreduce_implementation_spark.schemas import DOCUMENTS
+
+    rows = [(i, t, "en", "src0", len(t)) for i, t in enumerate(texts)]
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=DOCUMENTS.fieldNames()))
+    with tempfile.TemporaryDirectory() as sf_dir:
+        spark.createDataFrame(rows, DOCUMENTS).write.parquet(f"{sf_dir}/documents.parquet")
+        for name in ("exact_dedup", "line_dedup"):
+            df = entrymod.queries()[name](spark, sf_dir)
+            got = sorted(tuple(r[c] for c in sorted(df.columns)) for r in df.collect())
+            odf = con.sql(entrymod.oracle_sql()[name]).df()
+            want = sorted(
+                tuple(r) for r in odf[sorted(odf.columns)].itertuples(index=False)
+            )
+            assert got == want, name

@@ -1242,15 +1242,15 @@ def test_gopher_rules_matches_duckdb_oracle(spark, sf_dir):
         r"""
         WITH t AS (SELECT doc_id,  text,
             list_filter(regexp_split_to_array(text, '\s+'), w -> w <> '') AS toks,
-            list_filter(regexp_split_to_array(text, '\n'), ln -> trim(ln) <> '') AS lines
+            list_filter(regexp_split_to_array(text, '\n'), ln -> trim(ln, ' ') <> '') AS lines
           FROM documents),
         m AS (SELECT doc_id,
             len(toks) AS n_words, len(lines) AS n_lines,
             coalesce(list_sum(list_transform(toks, w -> length(w))), 0) AS word_chars,
             len(list_filter(toks, w -> regexp_matches(w, '[A-Za-z]'))) AS alpha_words,
             len(list_intersect(list_transform(toks, w -> lower(w)), [%s])) AS stop_hits,
-            len(list_filter(lines, ln -> regexp_matches(trim(ln), '^([-*•])'))) AS bullet_lines,
-            len(list_filter(lines, ln -> regexp_matches(trim(ln), '\.\.\.$'))) AS ellipsis_lines,
+            len(list_filter(lines, ln -> regexp_matches(trim(ln, ' '), '^([-*•])'))) AS bullet_lines,
+            len(list_filter(lines, ln -> regexp_matches(trim(ln, ' '), '\.\.\.$'))) AS ellipsis_lines,
             length(text) - length(replace(text, '#', '')) AS hashes,
             (length(text) - length(replace(text, '...', ''))) // 3 AS ellipses
           FROM t),

@@ -105,7 +105,7 @@ def test_explicit_vertices_keeps_dangling(spark):
 def test_iteration_driver_convergence_early_exit(spark):
     from pyspark.sql import functions as F
 
-    from pagerank_mapreduce_implementation_spark.plans.iterative import IterationDriver
+    from pagerank_mapreduce_implementation_spark.plans.iterative import LoopScope
 
     calls = []
 
@@ -118,8 +118,9 @@ def test_iteration_driver_convergence_early_exit(spark):
         return cur.agg(F.max("x")).collect()[0][0] < 0.1
 
     state = spark.createDataFrame([(1.0,)], ["x"])
-    out = IterationDriver().run(state, step, n_iters=50, converged=converged)
-    assert out.collect()[0]["x"] < 0.1
+    with LoopScope() as scope:
+        out = scope.iterate(state, step, n_iters=50, converged=converged)
+        assert out.collect()[0]["x"] < 0.1
     assert len(calls) < 10  # early exit, not 50 iterations
 
 
@@ -490,12 +491,10 @@ def test_pagerank_reliable_checkpoint_dir(spark, tmp_path):
 
 
 def test_iteration_driver_reliable_dir_truncates_lineage(spark, tmp_path):
-    """IterationDriver(reliable_dir=...) itself: state after a reliable
+    """LoopScope(reliable_dir).iterate itself: state after a reliable
     truncation is a checkpoint scan (no growing lineage) and survives
     further iterations with correct values."""
-    from pagerank_mapreduce_implementation_spark.plans.iterative import (
-        IterationDriver,
-    )
+    from pagerank_mapreduce_implementation_spark.plans.iterative import LoopScope
 
     state = spark.createDataFrame([(1, 1.0), (2, 2.0)], "id long, v double")
 
@@ -504,9 +503,8 @@ def test_iteration_driver_reliable_dir_truncates_lineage(spark, tmp_path):
 
         return df.select("id", (F.col("v") * 2.0).alias("v"))
 
-    out = IterationDriver(
-        materialize_every=2, reliable_dir=str(tmp_path / "ck")
-    ).run(state, step, n_iters=6)
+    with LoopScope(str(tmp_path / "ck")) as scope:
+        out = scope.keep(scope.iterate(state, step, n_iters=6, every=2))
     assert {r.id: r.v for r in out.collect()} == {1: 64.0, 2: 128.0}
     # the returned frame's plan reads the checkpoint, not the 6-step
     # lineage (Scan ExistingRDD / RDDScanExec at the root)

@@ -900,7 +900,7 @@ def test_tfidf_doc_pairs_no_cartesian_capped_join(spark, sf_dir):
 def test_bfs_frontier_join_no_window_no_cartesian(spark, sf_dir):
     """bfs_distances rounds are frontier joins + anti-joins: the
     returned state is an eager checkpoint (LogicalRDD scan — lineage
-    truncated across rounds, the IterationDriver contract), so the
+    truncated across rounds, the LoopScope contract), so the
     final plan must not drag the whole round stack."""
     df = entrymod.queries()["bfs_distances"](spark, sf_dir)
     p = plan_of(df)
