@@ -1114,9 +1114,12 @@ def _q_hits_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
     set as the pagerank family: top-20 authorities after 10 full
     iterations, hub+authority rounded 6 (ordering on the ROUNDED score
     with the url tiebreak — deterministic cross-engine, the
-    pagerank_top20 convention). Edge table shuffled once per join key
-    (src- and dst-partitioned persisted copies); per-iteration cost is
-    two vertex-sized shuffles + two broadcast 1-row norms."""
+    pagerank_top20 convention). At registered sizes the vertex set is
+    under the 500k-row broadcast gate, so each half-step joins ONE
+    cached edge copy against the broadcast score vector (the src/dst-
+    partitioned edge copies are the past-threshold path); the L2 norm
+    is a ``.first()`` over each checkpointed hub vector — 2 Spark jobs
+    per checkpoint (every second iteration and the last)."""
     out = graph.hits(_edges(spark, sf_dir), n_iters=10)
     return (
         out.select(
@@ -4378,8 +4381,7 @@ def oracle_sql() -> dict[str, str]:
         ),
         "incremental_dedup": (
             "WITH fp AS (SELECT doc_id, lang, source, "
-            "md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) AS fingerprint "
-            "FROM documents), "
+            f"{oracles.fingerprint_sql()} AS fingerprint FROM documents), "
             "seen AS (SELECT DISTINCT fingerprint FROM fp WHERE doc_id < 250), "
             "batch AS (SELECT * FROM fp WHERE doc_id >= 250), "
             "keepers AS (SELECT * FROM (SELECT *, min(doc_id) OVER "
@@ -4785,8 +4787,7 @@ def oracle_sql() -> dict[str, str]:
         # group is arrival-order-dependent in a stream, the fingerprint
         # set is not
         "streaming_exact_dedup": (
-            "SELECT DISTINCT md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) "
-            "AS fingerprint FROM documents"
+            f"SELECT DISTINCT {oracles.fingerprint_sql()} AS fingerprint FROM documents"
         ),
         # horizon > event-time span => no state expiry => exact DISTINCT
         "streaming_bounded_dedup": "SELECT DISTINCT user_id FROM events",
@@ -5126,8 +5127,7 @@ def oracle_sql() -> dict[str, str]:
         # row-wise (per-doc) twin of bloom_probe — no distinct, the
         # streaming probe's exact batch composition
         "streaming_bloom_probe": (
-            "WITH fp AS (SELECT doc_id, source, md5(lower(trim("
-            r"regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) AS item "
+            f"WITH fp AS (SELECT doc_id, source, {oracles.fingerprint_sql()} AS item "
             "FROM documents), "
             "cells AS (SELECT ('0x' || substr(md5('bloom:' || h || ':' "
             "|| item), 1, 15))::UBIGINT::BIGINT % 1024 AS p "
@@ -5152,8 +5152,7 @@ def oracle_sql() -> dict[str, str]:
         # positions ('bloom:<h>:' salts), 32-bit words, bit_or cells,
         # all-bits-present verdict; build half = src0..src9
         "bloom_probe": (
-            "WITH fp AS (SELECT source, md5(lower(trim("
-            r"regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) AS item "
+            f"WITH fp AS (SELECT source, {oracles.fingerprint_sql()} AS item "
             "FROM documents), "
             "cells AS (SELECT ('0x' || substr(md5('bloom:' || h || ':' "
             "|| item), 1, 15))::UBIGINT::BIGINT % 1024 AS p "

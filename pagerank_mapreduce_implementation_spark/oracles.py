@@ -177,13 +177,27 @@ SHINGLES_1 = (
 )
 
 
+def fingerprint_sql(text: str = "text") -> str:
+    """Mirror of the exact-dedup content fingerprint,
+    ``F.md5(dedup.normalize_text(text))``: md5 of the lowercased,
+    whitespace-collapsed, trimmed text. The one SQL home of that
+    expression; every oracle over exact-dedup fingerprints calls it.
+
+    ``trim(x, ' ')``, not bare ``trim()``: DuckDB's default trim strips
+    Unicode whitespace (U+00A0 survives Spark's ASCII-space ``F.trim``
+    but vanished here), while the library-wide whitespace convention
+    is POSIX/ASCII; only the collapsed ASCII space can reach the
+    edges, so trimming exactly ' ' matches ``normalize_text``
+    bit-for-bit."""
+    return f"md5(lower(trim(regexp_replace({text}, '[[:space:]]+', ' ', 'g'), ' ')))"
+
+
 def exact_dedup_sql() -> str:
     return (
         "SELECT doc_id, fingerprint, "
         "min(doc_id) OVER (PARTITION BY fingerprint) AS keeper, "
         "CAST(doc_id <> min(doc_id) OVER (PARTITION BY fingerprint) AS INT) AS is_dup "
-        "FROM (SELECT doc_id, md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) "
-        "AS fingerprint FROM documents)"
+        f"FROM (SELECT doc_id, {fingerprint_sql()} AS fingerprint FROM documents)"
     )
 
 
@@ -4062,9 +4076,7 @@ def source_overlap_sql(min_shared: int = 1, group_col: str = "source") -> str:
         raise ValueError(f"min_shared ({min_shared}) must be >= 1")
     return (
         "WITH sfp AS (SELECT DISTINCT "
-        f"{group_col} AS s, "
-        "md5(lower(trim(regexp_replace(text, '[[:space:]]+', ' ', 'g'), ' '))) "
-        "AS fp FROM documents), "
+        f"{group_col} AS s, {fingerprint_sql()} AS fp FROM documents), "
         "shared AS (SELECT a.s AS source_a, b.s AS source_b, "
         "count(*) AS n_shared FROM sfp a JOIN sfp b ON a.fp = b.fp "
         "AND a.s < b.s GROUP BY a.s, b.s "
@@ -4292,16 +4304,10 @@ def _manifest_core_sql(group_col: str, where: str) -> str:
     manifest_drift_sql — the ONE SQL home of the 60-bit exact-dedup
     fingerprint + null-safe token/char counts (mirror of
     dedup._manifest_aggregate's staged select)."""
-    # trim(x, ' ') not bare trim(): DuckDB's default trim strips
-    # UNICODE whitespace (U+00A0 survives Spark's ASCII-space trim but
-    # vanished here — r17 hypothesis catch), while the library-wide
-    # whitespace convention is POSIX/ASCII; only the collapsed ASCII
-    # space can reach the edges, so trimming exactly ' ' matches
-    # normalize_text bit-for-bit.
+    fp = fingerprint_sql("coalesce(text, '')")
     return (
         f"SELECT {group_col} AS source, doc_id, "
-        "('0x' || substr(md5(lower(trim(regexp_replace(coalesce(text, ''), "
-        "'[[:space:]]+', ' ', 'g'), ' '))), 1, 15))::BIGINT AS fp, "
+        f"('0x' || substr({fp}, 1, 15))::BIGINT AS fp, "
         "len(list_filter(regexp_split_to_array(coalesce(text, ''), "
         "'[[:space:]]+'), w -> w <> '')) AS nt, "
         "length(coalesce(text, '')) AS nc "

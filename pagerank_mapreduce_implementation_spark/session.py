@@ -27,6 +27,14 @@ def get_spark(
 
     Environment overrides (driver contract): ``SPARK_GRAFT_CPUS`` sets
     local parallelism; tests use ``local[*]``.
+
+    Static confs — the generated-code cache size, the warehouse dir,
+    the JVM options — only take effect when this call creates the
+    context; fetching a session created elsewhere keeps that session's
+    values. The code cache holds 1000 generated
+    classes, enough for a graph-loop pass and a text-search pass in
+    one session, so a repeated query reuses its compiled classes
+    instead of recompiling them with Janino every run.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -76,6 +84,18 @@ def get_spark(
             "spark.sql.warehouse.dir",
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-graft-warehouse"),
         )
+        # Generated-code cache (static conf: it only takes effect when
+        # get_spark creates the context). Whole-stage codegen
+        # compiles each plan subtree to a Java class with Janino and
+        # caches it by source in an LRU of 100 by default. A cold pass
+        # of perfbench's graph_loops generates 131 distinct classes
+        # (hits_top20 88, wiki_pagerank 43), of text_search 96, of both
+        # in one session 219 — so at 100 every class is evicted before
+        # its reuse and each warm pass recompiles ~110 (graph) / ~30
+        # (text) and runs them cold (graph_loops pass 10.2 -> 8.0 s at
+        # 1000, 4-vCPU VM). 1000 holds both with headroom; a class is
+        # ~3 kB of bytecode (mean; max 13 kB); metaspace moved < 10 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # Long-session hygiene (a many-hundred-query session is the
