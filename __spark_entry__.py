@@ -3973,39 +3973,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_dedup": _q_embedding_dedup,
         # --- window boundary (50) — below here: green within the
         # 5-round freshness budget (ceil(204/50); README §Registry
-        # capacity). ROUND-17 PLAN: the due list is exactly the 8
-        # r12-green leftovers directly below (they must re-certify by
-        # r17 — r12 falls out of the r13..r17 file window), leaving
-        # ~42 free slots. R17 CANDIDATES (staged r15,
-        # tests/test_staged_ops4.py, parity-green at sf0.001 AND
-        # sf0.01): zipf_fit (textstats.zipf_fit + oracles.zipf_fit_sql;
-        # also wired as clean_corpus(zipf_bands=...)), source_overlap
-        # (dedup.source_overlap + oracles.source_overlap_sql — the
-        # registered form must PLANT a mirror slice like the parity
-        # test; the synthetic corpus has no cross-source exact dups),
-        # ngram_source_overlap (dedup.ngram_source_overlap +
-        # oracles.ngram_source_overlap_sql — non-vacuous as-is), and
-        # the r16-staged pair intra_doc_line_dedup (dedup.intra_doc_
-        # line_dedup + oracles.intra_doc_line_dedup_sql — the
-        # zero-shuffle within-doc keep-first pass; register with
-        # sep=' ' and the md5(text) projection, the line_dedup
-        # convention) and source_unigram_divergence
-        # (textstats.source_unigram_divergence +
-        # oracles.source_unigram_divergence_sql — pairwise JSD between
-        # source unigram distributions, shared-type join only) and
-        # cluster_safe_split (sampling.cluster_safe_split +
-        # oracles.cluster_safe_split_sql — near-dup-cluster-keyed
-        # train/val/test assignment, the split-leakage guard; register
-        # over the dedup_clusters minhash pair list), and
-        # incremental_embedding_dedup (dedup.incremental_embedding_
-        # dedup + oracles.incremental_embedding_dedup_sql — the
-        # embedding-store sibling of incremental_minhash_dedup;
-        # register with the vec_id % 3 store/batch split), and its
-        # streaming twin streaming_cosine_probe (streaming/queries.py
-        # — oracle is the batch min-per-vector SQL over
-        # cosine_matches_ab_sql, the minhash-probe pattern). After
-        # those, pull the oldest r13-green entries forward so r18's
-        # 47-entry r13 due list also shrinks.
+        # capacity). The due list is the 8 r12-green leftovers directly
+        # below: they must re-certify by r17, when r12 falls out of the
+        # r13..r17 file window. The staged r17 candidates were retired
+        # unregistered (CHANGES.md): zipf_fit and intra_doc_line_dedup
+        # remain as clean_corpus stages, the rest were deleted.
         # --- r12 remainder (green r12; THE r17 due list)
         "dedup_clusters": _q_dedup_clusters,
         "streaming_click_attribution": _q_streaming_click_attribution,

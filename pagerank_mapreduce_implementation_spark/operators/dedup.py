@@ -43,9 +43,10 @@ def tokens_null_safe(col: Column) -> Column:
     convention: NULL coalesces to '' BEFORE the split, so consumers see
     an empty array (Spark's size(split(NULL)) is -1 and DuckDB sums
     skip NULLs — the cross-engine divergence this single home
-    prevents). The one tokenizer expression behind source_manifest,
-    blocklist_hits, and streaming_contamination_probe; SQL mirrors
-    spell it list_filter(regexp_split_to_array(coalesce(text, ''),
+    prevents). The tokenizer expression behind textstats.blocklist_hits
+    (clean_corpus's blocklist stage); its SQL mirror
+    (oracles.blocklist_hits_sql) spells it
+    list_filter(regexp_split_to_array(coalesce(text, ''),
     '[[:space:]]+'), w -> w <> '')."""
     return F.filter(
         F.split(F.coalesce(col, F.lit("")), r"\s+"), lambda w: w != ""
@@ -857,76 +858,6 @@ def incremental_minhash_dedup(
         return out.localCheckpoint(eager=True) if materialize else out
     finally:
         sig_b.unpersist()
-
-
-def incremental_embedding_dedup(
-    new_emb: DataFrame,
-    seen_emb: DataFrame,
-    threshold: float = 0.25,
-    num_planes: int = 8,
-    bands: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Incremental SEMANTIC-dup ingestion: a new embedding batch
-    against the persisted survivors' vector store —
-    ``incremental_minhash_dedup``'s embedding-space sibling, closing
-    the incremental family (exact fingerprints, minhash signatures,
-    simhash/phash hamming stores, and now cosine). The store is the
-    raw vectors (what a SemDeDup pipeline persists anyway); the probe
-    sketches BOTH sides with the same deterministic md5-derived
-    hyperplanes (``similarity.cosine_matches_ab`` — the property that
-    makes store and batch bucket keys comparable across runs), so no
-    index beyond the vectors themselves needs maintaining.
-
-    Returns one row per batch vector, the minhash contract:
-    ``(vec_id, dup_of_store, dup_of_batch, keep)`` — ``dup_of_store``
-    if cosine >= ``threshold`` with ANY stored vector (banded-bucket
-    candidates, exact verify), ``dup_of_batch`` if the same holds
-    against a SMALLER-id batch vector (keep-first), ``keep`` =
-    neither. Append the kept vectors to the store for the next batch.
-
-    Recall is band-limited like the ops it composes (documented in
-    cosine_pairs_lsh); scale shape: two banded joins, both bounded by
-    realized bucket collisions, never |store| x |batch|.
-    """
-    from pagerank_mapreduce_implementation_spark.operators.similarity import (
-        cosine_matches_ab,
-        cosine_pairs_lsh,
-    )
-
-    store_hits = (
-        cosine_matches_ab(
-            seen_emb, new_emb, threshold, num_planes, bands, id_col, vec_col
-        )
-        .select(F.col("id_b").alias("vec_id"))
-        .distinct()
-        .withColumn("dup_of_store", F.lit(1))
-    )
-    batch_hits = (
-        cosine_pairs_lsh(
-            new_emb, threshold, num_planes, bands, id_col, vec_col
-        )
-        .select(F.col("vec_b").alias("vec_id"))
-        .distinct()
-        .withColumn("dup_of_batch", F.lit(1))
-    )
-    return (
-        new_emb.select(F.col(id_col).alias("vec_id"))
-        .join(store_hits, "vec_id", "left")
-        .join(batch_hits, "vec_id", "left")
-        .select(
-            "vec_id",
-            F.coalesce("dup_of_store", F.lit(0)).alias("dup_of_store"),
-            F.coalesce("dup_of_batch", F.lit(0)).alias("dup_of_batch"),
-        )
-        .withColumn(
-            "keep",
-            (
-                (F.col("dup_of_store") == 0) & (F.col("dup_of_batch") == 0)
-            ).cast("int"),
-        )
-    )
 
 
 # --- SimHash ----------------------------------------------------------------
@@ -2682,289 +2613,3 @@ def lsh_expected_recall(
             qual.unpersist()
     finally:
         sh.unpersist()
-
-
-def source_overlap(
-    docs: DataFrame,
-    min_shared: int = 1,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Cross-source MIRROR audit — one row per source pair sharing at
-    least ``min_shared`` exact-duplicate documents: ``(source_a,
-    source_b, n_shared, n_fp_a, n_fp_b, jaccard, containment_a,
-    containment_b)`` with ``source_a < source_b``. Two crawls of the
-    same site, a re-packaged dump, or a mirror in the source mix show
-    up as a pair with high containment long before doc-level dedup
-    explains WHERE the duplicate mass comes from; the source-pair view
-    is what a mixture designer acts on (drop/merge a source), the
-    sibling of ``zipf_fit``'s single-source health check.
-
-    Semantics: documents are reduced to the ``exact_dedup``
-    fingerprint (md5 of lowercased, whitespace-collapsed, trimmed
-    text), DISTINCT per source — counts are set sizes, so
-    ``jaccard = shared / (a + b - shared)`` and ``containment_x =
-    shared / n_fp_x`` (the fraction of x's distinct content also in
-    the other source), both rounded 6 from exact integer counts.
-
-    Scale shape — the ``bipartite_projection`` silhouette with the
-    fingerprint as the right vertex: one distinct shuffle to the
-    (source, fingerprint) set, a self-join keyed on the FINGERPRINT
-    whose per-key fan-out is bounded by C(|sources|, 2) — sources are
-    tens, never corpus-scale, so no df cap is needed — and a
-    pair-keyed count with map-side partials; the per-source totals
-    join back broadcast (|sources| rows). Nothing downstream of the
-    distinct scales with corpus size.
-    """
-    if min_shared < 1:
-        raise ValueError(f"min_shared ({min_shared}) must be >= 1")
-    fp = F.md5(normalize_text(F.col(text_col)))
-    sfp = (
-        docs.select(F.col(group_col).alias("__s"), fp.alias("__fp"))
-        .distinct()
-    )
-    a = sfp.select(F.col("__s").alias("source_a"), "__fp")
-    b = sfp.select(F.col("__s").alias("source_b"), "__fp")
-    shared = (
-        a.join(b, "__fp")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    cnt = sfp.groupBy("__s").agg(F.count(F.lit(1)).alias("__n"))
-    ca = F.broadcast(
-        cnt.select(F.col("__s").alias("source_a"), F.col("__n").alias("n_fp_a"))
-    )
-    cb = F.broadcast(
-        cnt.select(F.col("__s").alias("source_b"), F.col("__n").alias("n_fp_b"))
-    )
-    sh = F.col("n_shared").cast("double")
-    return (
-        shared.join(ca, "source_a")
-        .join(cb, "source_b")
-        .select(
-            "source_a",
-            "source_b",
-            "n_shared",
-            "n_fp_a",
-            "n_fp_b",
-            F.round(
-                sh / (F.col("n_fp_a") + F.col("n_fp_b") - F.col("n_shared")), 6
-            ).alias("jaccard"),
-            F.round(sh / F.col("n_fp_a"), 6).alias("containment_a"),
-            F.round(sh / F.col("n_fp_b"), 6).alias("containment_b"),
-        )
-    )
-
-
-def ngram_source_overlap(
-    docs: DataFrame,
-    ngram: int = 5,
-    min_jaccard: float = 0.0,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """NEAR-duplicate cross-source overlap — ``source_overlap``'s
-    shingle-level sibling: one row per source pair whose DISTINCT
-    word-``ngram`` shingle sets overlap at all (and clear
-    ``min_jaccard``): ``(source_a, source_b, n_shared, n_sh_a,
-    n_sh_b, jaccard, containment_a, containment_b)``. Where the exact
-    audit needs byte-identical documents, this catches partial
-    mirrors — the same articles wrapped in different boilerplate, a
-    re-crawl with edited headers — as a high-containment pair whose
-    exact-fingerprint overlap is zero.
-
-    Semantics: each source is reduced to its SET of distinct shingles
-    (``shingles(ngram)``, whitespace-token n-grams); counts are set
-    sizes, jaccard/containment the exact integer-set arithmetic of
-    ``source_overlap``, rounded 6.
-
-    Scale shape: identical to ``source_overlap`` with the shingle as
-    the join key — distinct (source, shingle) is one shuffle bounded
-    by |sources| x vocabulary (NOT corpus rows); the self-join's
-    per-key fan-out is bounded by C(|sources|, 2) because the key's
-    value set IS the source list, so the stop-shingle df cap the
-    doc-level operators need does not apply; totals join back
-    broadcast. At 100 TB the distinct is the operator.
-    """
-    if not 0.0 <= min_jaccard <= 1.0:
-        raise ValueError(f"min_jaccard ({min_jaccard}) must be in [0, 1]")
-    if int(ngram) < 1:
-        # ngram=0 would shingle every doc into the empty string (all
-        # pairs report jaccard ~1.0, silently) and negatives only blow
-        # up inside the slice arithmetic — fail loud like min_jaccard
-        raise ValueError(f"ngram ({ngram}) must be >= 1")
-    # shingles() keys by its doc_col — keying it by the SOURCE gives
-    # the per-source distinct shingle set directly (its final distinct
-    # is exactly the set semantics this operator defines)
-    sh = shingles(
-        docs.select(F.col(group_col).alias("doc_id"), text_col), ngram
-    ).select(F.col("doc_id").alias("__s"), "shingle")
-    a = sh.select(F.col("__s").alias("source_a"), "shingle")
-    b = sh.select(F.col("__s").alias("source_b"), "shingle")
-    shared = (
-        a.join(b, "shingle")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    cnt = sh.groupBy("__s").agg(F.count(F.lit(1)).alias("__n"))
-    ca = F.broadcast(
-        cnt.select(F.col("__s").alias("source_a"), F.col("__n").alias("n_sh_a"))
-    )
-    cb = F.broadcast(
-        cnt.select(F.col("__s").alias("source_b"), F.col("__n").alias("n_sh_b"))
-    )
-    num = F.col("n_shared").cast("double")
-    return (
-        shared.join(ca, "source_a")
-        .join(cb, "source_b")
-        .select(
-            "source_a",
-            "source_b",
-            "n_shared",
-            "n_sh_a",
-            "n_sh_b",
-            F.round(
-                num / (F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_shared")), 6
-            ).alias("jaccard"),
-            F.round(num / F.col("n_sh_a"), 6).alias("containment_a"),
-            F.round(num / F.col("n_sh_b"), 6).alias("containment_b"),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
-
-
-def source_manifest(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
-    """Per-source dataset manifest — the content-versioning primitive a
-    training pipeline records beside every shard build (data cards,
-    cache keys, "did anything change since the last snapshot?"):
-    ``(source, n_docs, n_tokens, n_chars, content_hash, min_doc_id,
-    max_doc_id)``.
-
-    ``content_hash`` is an ORDER-INDEPENDENT multiset hash: the sum,
-    mod 2^60, of each doc's 60-bit content fingerprint (first 15 md5
-    hex digits of the ``normalize_text`` canonical form — the exact
-    same fingerprint convention ``exact_dedup`` keys on, so two
-    corpora agree on the manifest iff they agree doc-for-doc under
-    exact dedup's definition of "same content"). Additive mod-2^60
-    rather than a sorted concatenation because that is the 100 TB
-    shape: a per-source sorted collect would single-partition each
-    source's gigabytes through one string build, while the additive
-    form is one map-side-combined groupBy whose partial sums are
-    exact in decimal(38,0) (long would overflow at 8 docs x 2^60;
-    HUGEINT on the DuckDB side) — same hash from any row order, any
-    partitioning, any engine. The tradeoff is the usual multiset-hash
-    one: adversarial collisions are easier than for a Merkle chain,
-    fine for drift DETECTION, wrong for tamper PROOF.
-
-    NULL text counts as the empty string (doc still counted, zero
-    tokens/chars, the empty-string fingerprint in the hash) — the one
-    convention that keeps both engines' aggregates identical (Spark's
-    size/length would otherwise feed -1/NULL where DuckDB's sum skips
-    NULLs).
-
-    One shuffle (the groupBy), scan-bound otherwise; every per-row
-    expression is JVM-side. Every aggregate is a commutative monoid,
-    which is what makes ``streaming_source_manifest`` the same
-    builder run in complete mode — the mod projects AFTER the agg on
-    both paths (Spark cannot fold a mod into an incremental
-    aggregate, and batch keeps the identical plan so the twins cannot
-    drift).
-    """
-    return _manifest_aggregate(docs, group_col, text_col, doc_col)
-
-
-def _manifest_aggregate(
-    docs: DataFrame, group_col: str, text_col: str, doc_col: str
-) -> DataFrame:
-    """Shared body of source_manifest and its streaming twin: staged
-    per-row fingerprint/counts, monoid-only groupBy, post-agg mod."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
-    fp60 = _word_hash60(normalize_text(txt))
-    toks = tokens_null_safe(F.col(text_col))
-    staged = docs.select(
-        F.col(group_col).alias("source"),
-        F.col(doc_col).alias("doc_id"),
-        fp60.alias("_fp"),
-        F.size(toks).alias("_nt"),
-        F.length(txt).alias("_nc"),
-    )
-    return (
-        staged.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("_nt").cast("long").alias("n_tokens"),
-            F.sum("_nc").cast("long").alias("n_chars"),
-            F.sum(F.col("_fp").cast("decimal(38,0)")).alias("_hsum"),
-            F.min("doc_id").alias("min_doc_id"),
-            F.max("doc_id").alias("max_doc_id"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "n_tokens",
-            "n_chars",
-            (F.col("_hsum") % F.lit(2**60)).cast("long").alias("content_hash"),
-            "min_doc_id",
-            "max_doc_id",
-        )
-    )
-
-
-def manifest_drift(old: DataFrame, new: DataFrame) -> DataFrame:
-    """Snapshot comparison over two ``source_manifest`` frames — the
-    consumer query the manifest exists for ("what changed since the
-    last recorded snapshot?"): ``(source, status, n_docs_old,
-    n_docs_new, docs_delta, tokens_delta, hash_changed)`` with
-    ``status`` one of ``added`` / ``removed`` / ``changed`` /
-    ``unchanged`` (changed = same source present in both whose
-    content_hash moved — the multiset hash makes that the exact
-    "any doc's canonical content differs or counts shifted" signal,
-    up to hash collision).
-
-    A full-outer join of two |sources|-row frames: trivially
-    broadcastable at any corpus size, since the manifests are already
-    the aggregated artifact. All-integer outputs — cross-engine exact
-    with no rounding points.
-    """
-    o = old.select(
-        "source",
-        F.col("n_docs").alias("_do"),
-        F.col("n_tokens").alias("_to"),
-        F.col("content_hash").alias("_ho"),
-    )
-    n = new.select(
-        "source",
-        F.col("n_docs").alias("_dn"),
-        F.col("n_tokens").alias("_tn"),
-        F.col("content_hash").alias("_hn"),
-    )
-    j = o.join(n, "source", "full_outer")
-    status = (
-        F.when(F.col("_do").isNull(), F.lit("added"))
-        .when(F.col("_dn").isNull(), F.lit("removed"))
-        .when(F.col("_ho") != F.col("_hn"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    return j.select(
-        "source",
-        status.alias("status"),
-        F.col("_do").alias("n_docs_old"),
-        F.col("_dn").alias("n_docs_new"),
-        (F.coalesce(F.col("_dn"), F.lit(0)) - F.coalesce(F.col("_do"), F.lit(0)))
-        .cast("long")
-        .alias("docs_delta"),
-        (F.coalesce(F.col("_tn"), F.lit(0)) - F.coalesce(F.col("_to"), F.lit(0)))
-        .cast("long")
-        .alias("tokens_delta"),
-        F.coalesce(F.col("_ho") != F.col("_hn"), F.lit(True)).alias(
-            "hash_changed"
-        ),
-    )

@@ -969,52 +969,3 @@ def calibrate_scores(
         )
     )
     return out
-
-
-def cluster_safe_split(
-    docs: DataFrame,
-    pairs: DataFrame,
-    splits: dict[str, int] | None = None,
-    salt: str = "split:",
-    doc_col: str = "doc_id",
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-) -> DataFrame:
-    """Train/val/test assignment that cannot leak near-duplicates
-    across the split boundary: every document in one near-dup CLUSTER
-    lands in the SAME split, because the hash key is the cluster
-    representative (min reachable id over the ``pairs`` graph's
-    transitive closure), not the document itself. Plain ``hash_split``
-    keeps eval rows stable but happily puts a document in test while
-    its 0.98-jaccard twin trains — the classic contamination hole this
-    closes (the companion to benchmark decontamination: that guards
-    against EXTERNAL eval sets, this guards the split's own).
-
-    ``pairs`` is any near-dup pair list (minhash/simhash/embedding —
-    ``(doc_a, doc_b)``); documents in no pair are their own singleton
-    cluster and split exactly as ``hash_split`` would with the same
-    salt. Returns ``(doc_id, split_key, bucket, split)``.
-
-    Scale shape: the transitive closure is the alternating large/small
-    star loop (``graph.connected_components`` — O(log^2 n) rounds on
-    any cluster diameter); the component map joins back ONCE and is
-    near-dup-volume-sized, not corpus-sized; the split itself stays
-    the zero-shuffle md5-bucket expression, so determinism carries:
-    re-partitioning, re-ordering, appends, or another engine never
-    move a row — and adding a NEW near-dup pair only ever moves the
-    clusters it touches.
-    """
-    from pagerank_mapreduce_implementation_spark.operators.graph import (
-        connected_components,
-    )
-
-    cc = connected_components(
-        pairs.select(a_col, b_col), a_col, b_col, algorithm="star"
-    )
-    keyed = docs.select(F.col(doc_col).alias("doc_id")).join(
-        cc.withColumnRenamed("vertex", "doc_id"), "doc_id", "left"
-    ).select(
-        "doc_id",
-        F.coalesce(F.col("component"), F.col("doc_id")).alias("split_key"),
-    )
-    return hash_split(keyed, "split_key", splits=splits, salt=salt)

@@ -239,8 +239,6 @@ def hyperplane_band_buckets(
     bands: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dims: int | None = None,
-    keep_vec: bool = False,
 ) -> DataFrame:
     """Banded hyperplane buckets: ``(vec_id, band, key)``, one row per
     band, key = the integer of that band's ``r = num_planes/bands``
@@ -253,14 +251,6 @@ def hyperplane_band_buckets(
     bits agree in SOME band (P[candidate] = 1-(1-(1-θ/π)^r)^b). ONE
     narrow pass — the per-band structs are built in a single select and
     exploded; no per-band re-scan of the vectors.
-
-    ``dims`` skips the one-row driver-side peek when the caller already
-    knows the dimensionality — REQUIRED on a streaming frame, where
-    ``.first()`` is illegal (streaming_cosine_probe passes the static
-    store's dims). ``keep_vec`` carries the vector through the bucket
-    rows (duplicated x bands in flight) so a streaming caller never
-    needs to join the buckets back to their source — a stream-stream
-    join.
     """
     if bands <= 0 or num_planes % bands != 0:
         raise ValueError(
@@ -268,16 +258,13 @@ def hyperplane_band_buckets(
             "a remainder would silently drop sign bits from banding"
         )
     r = num_planes // bands
-    if dims is None:
-        dims = _vec_dims(emb, vec_col)
+    dims = _vec_dims(emb, vec_col)
     if dims is None:  # empty input: preserve the output schema
-        out = emb.select(
+        return emb.select(
             F.col(id_col).alias("vec_id"),
             F.lit(0).alias("band"),
             F.lit(0).alias("key"),
-            *([F.col(vec_col).alias("vec")] if keep_vec else []),
         ).filter(F.lit(False))
-        return out
     band_structs = F.array(
         *[
             F.struct(
@@ -297,13 +284,11 @@ def hyperplane_band_buckets(
     )
     return emb.select(
         F.col(id_col).alias("vec_id"),
-        *([F.col(vec_col).alias("vec")] if keep_vec else []),
         F.explode(band_structs).alias("bb"),
     ).select(
         "vec_id",
         F.col("bb.band").alias("band"),
         F.col("bb.key").alias("key"),
-        *(["vec"] if keep_vec else []),
     )
 
 
@@ -1412,97 +1397,3 @@ def margin_matches_ab(
     finally:
         if not handed_off:
             sc.unpersist()
-
-
-def hybrid_rrf_search(
-    docs: DataFrame,
-    emb: DataFrame,
-    terms: list,
-    query_vec_id: int,
-    n: int = 50,
-    k: int = 10,
-    rrf_k: int = 60,
-    k1: float = 1.2,
-    b: float = 0.75,
-    total_docs: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Hybrid retrieval via reciprocal-rank fusion (Cormack et al.,
-    SIGIR 2009): fuse a LEXICAL branch (BM25 over the documents table,
-    operators/text.py:bm25_search) with a SEMANTIC branch (exact cosine
-    top-n for a stored query vector, cosine_topk) into one ranked list
-
-        rrf(d) = sum_branches 1 / (rrf_k + rank_branch(d))
-
-    → ``(doc_id, rrf, lex_rank, sem_rank)`` top-``k`` by fused score,
-    ``doc_id`` tiebreak; a doc absent from one branch's top-``n``
-    contributes 0 for that branch and reports a NULL rank. The engine
-    extension the reference's Search/Rank pipeline (Search$Map @89,
-    SURVEY.md §2.2) grows into once an embedding column exists: RRF is
-    the standard score-free fusion — no cross-branch score calibration,
-    which is exactly why it is the robust default at corpus scale.
-
-    Scale shape: each branch is already scale-safe on its own (BM25 =
-    one corpus tokenize + one pivoted shuffle; cosine = narrow scan +
-    broadcast 1-row query) and ends in a TakeOrderedAndProject of
-    ``n`` rows — the ONLY post-branch work (rank assignment windows,
-    the full-outer fuse join, the final top-k) runs on <= 2n rows, so
-    fusion cost is independent of corpus size. The rank windows are
-    deliberately assigned AFTER the top-n cut: a global row_number
-    over the un-cut scored frame would single-partition the corpus.
-
-    Determinism: both branches rank over their ROUND(6)-certified
-    scores (the same rounding their registered standalone queries
-    hash-exact against DuckDB on) with id tiebreaks, so ranks — and
-    the fused 1/(rrf_k+rank) sums, added lex-then-sem in fixed order —
-    are reproducible across engines bit-exactly.
-    """
-    from pyspark.sql.window import Window
-
-    from pagerank_mapreduce_implementation_spark.operators.text import bm25_search
-
-    if n < 1 or k < 1:
-        raise ValueError("hybrid_rrf_search needs n >= 1 and k >= 1")
-    if rrf_k < 1:
-        raise ValueError("rrf_k must be >= 1 (RRF denominator offset)")
-
-    lex_top = (
-        bm25_search(docs, terms, k1=k1, b=b, total_docs=total_docs)
-        .select("doc_id", F.round("score", 6).alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(n)
-    )
-    lex = lex_top.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.desc("score"), F.asc("doc_id")))
-        .cast("long")
-        .alias("lex_rank"),
-    )
-    sem_top = cosine_topk(
-        emb, query_vec_id, k=n, id_col=id_col, vec_col=vec_col
-    )
-    sem = sem_top.select(
-        F.col("vec_id").alias("doc_id"),
-        F.row_number()
-        .over(Window.orderBy(F.desc("cos"), F.asc("vec_id")))
-        .cast("long")
-        .alias("sem_rank"),
-    )
-    part = lambda r: F.when(  # noqa: E731 — 1/(K+rank), 0 when absent
-        r.isNotNull(), F.lit(1.0) / (F.lit(float(rrf_k)) + r)
-    ).otherwise(F.lit(0.0))
-    return (
-        lex.join(sem, "doc_id", "full_outer")
-        .select(
-            "doc_id",
-            F.round(part(F.col("lex_rank")) + part(F.col("sem_rank")), 6).alias(
-                "rrf"
-            ),
-            "lex_rank",
-            "sem_rank",
-        )
-        .orderBy(F.desc("rrf"), F.asc("doc_id"))
-        .limit(k)
-    )

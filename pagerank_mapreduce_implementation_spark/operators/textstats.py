@@ -2122,114 +2122,6 @@ def zipf_fit(
     )
 
 
-def source_unigram_divergence(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
-    """Pairwise Jensen-Shannon divergence between the GROUPS' unigram
-    distributions — the quantitative mixing companion to ``zipf_fit``
-    (per-source shape) and the ``source_overlap`` family (shared
-    content): one row per group pair that shares at least one word
-    type, ``(source_a, source_b, shared_types, n_types_a, n_types_b,
-    jsd)``. JSD is symmetric, bounded [0, 1] in bits (0 = identical
-    distributions, 1 = disjoint vocabularies), and is exactly the
-    quantity temperature/UniMax mixing decisions want when judging
-    whether two sources are near-duplicates *as distributions* even
-    with zero document overlap (two crawls of the same site, a
-    tokenized re-release).
-
-    Missing-mass identity (what keeps the plan join-light): splitting
-    JSD over shared and exclusive word types,
-
-        JSD = ( Σ_shared [p·log2(2p/(p+q)) + q·log2(2q/(p+q))]
-                + (1 - Σ_shared p) + (1 - Σ_shared q) ) / 2
-
-    because every A-exclusive word contributes p·log2(2p/p) = p bits —
-    so only the SHARED-type equi-join is materialized and exclusive
-    mass arrives via the per-pair shared-mass sums. Pairs sharing no
-    type (JSD exactly 1) are absent, the ``source_overlap`` emission
-    convention.
-
-    Scale shape: tokenize/explode is narrow; ONE shuffle builds the
-    (group, word) counts — bounded by |groups| x vocabulary, never
-    corpus rows; per-group totals broadcast back; the word-keyed
-    self-join fans out at most C(|groups|, 2) per word (the key's
-    value set IS the group list — ``ngram_source_overlap``'s bound);
-    the final pair aggregation is |pairs|-sized. Rounded 6 (the
-    ``entropy_stats`` cross-engine float-sum discipline).
-    """
-    tok = docs.select(
-        F.col(group_col).alias("__s"),
-        F.explode(
-            F.filter(
-                F.split(F.lower(F.col(text_col)), r"\s+"),
-                lambda w: w != F.lit(""),
-            )
-        ).alias("w"),
-    )
-    cnt = tok.groupBy("__s", "w").agg(F.count(F.lit(1)).alias("n"))
-    # "tot_n", not "N": Spark resolves column names case-insensitively,
-    # so n vs N in one frame is AMBIGUOUS_REFERENCE
-    tot = cnt.groupBy("__s").agg(
-        F.sum("n").alias("tot_n"), F.count(F.lit(1)).alias("n_types")
-    )
-    p = cnt.join(F.broadcast(tot), "__s").select(
-        "__s",
-        "w",
-        (F.col("n").cast("double") / F.col("tot_n")).alias("p"),
-        "n_types",
-    )
-    a = p.select(
-        F.col("__s").alias("source_a"),
-        "w",
-        F.col("p").alias("pa"),
-        F.col("n_types").alias("n_types_a"),
-    )
-    b = p.select(
-        F.col("__s").alias("source_b"),
-        "w",
-        F.col("p").alias("pb"),
-        F.col("n_types").alias("n_types_b"),
-    )
-    shared = a.join(b, "w").filter(F.col("source_a") < F.col("source_b"))
-    m = F.col("pa") + F.col("pb")
-    term = F.col("pa") * F.log2(F.lit(2) * F.col("pa") / m) + F.col(
-        "pb"
-    ) * F.log2(F.lit(2) * F.col("pb") / m)
-    return (
-        shared.groupBy("source_a", "source_b", "n_types_a", "n_types_b")
-        .agg(
-            F.count(F.lit(1)).alias("shared_types"),
-            F.sum(term).alias("__t"),
-            F.sum("pa").alias("__ma"),
-            F.sum("pb").alias("__mb"),
-        )
-        .select(
-            "source_a",
-            "source_b",
-            "shared_types",
-            "n_types_a",
-            "n_types_b",
-            # + 0.0 canonicalizes -0.0 (identical distributions sum to
-            # a tiny negative before rounding; engines may disagree on
-            # the sign of that zero, and the driver hash stringifies)
-            (
-                F.round(
-                    (
-                        F.col("__t")
-                        + (F.lit(1.0) - F.col("__ma"))
-                        + (F.lit(1.0) - F.col("__mb"))
-                    )
-                    / 2,
-                    6,
-                )
-                + F.lit(0.0)
-            ).alias("jsd"),
-        )
-    )
-
-
 def blocklist_hits(
     docs: DataFrame,
     blocklist: list,
@@ -2369,8 +2261,8 @@ def encoding_qa(
         "n_chars", "ascii_ratio", "n_replacement", "n_control", "n_mojibake"
     )
     kept = [F.col(c) if isinstance(c, str) else c for c in keep_cols]
-    # NULL text counts as the empty string (the source_manifest
-    # convention) — all-NULL metrics would otherwise ride three-valued
+    # NULL text counts as the empty string (the library-wide
+    # convention, dedup.tokens_null_safe) — all-NULL metrics would otherwise ride three-valued
     # logic into a NULL flagged verdict
     staged = docs.select(
         F.col(doc_col).alias("doc_id"),

@@ -653,42 +653,6 @@ def cosine_matches_ab_sql(
     )
 
 
-def incremental_embedding_dedup_sql(
-    seen_where: str,
-    new_where: str,
-    threshold: float = 0.25,
-    num_planes: int = 8,
-    bands: int = 2,
-) -> str:
-    """Mirror of dedup.incremental_embedding_dedup over two
-    WHERE-filtered views of the embeddings table: the store probe is
-    cosine_matches_ab_sql(seen, new); the in-batch pass reuses the
-    SAME cross-table builder on (new, new) with an ``id_a < id_b``
-    post-filter (identical candidates + verify to cosine_pairs_lsh's
-    deduped self-join); flags and keep replay the integer contract."""
-    store = cosine_matches_ab_sql(
-        seen_where, new_where, threshold, num_planes, bands
-    )
-    batch = cosine_matches_ab_sql(
-        new_where, new_where, threshold, num_planes, bands
-    )
-    return (
-        f"WITH sm AS ({store}), bm AS ({batch}), "
-        "ds AS (SELECT DISTINCT id_b AS vec_id FROM sm), "
-        "db AS (SELECT DISTINCT id_b AS vec_id FROM bm WHERE id_a < id_b), "
-        f"base AS (SELECT vec_id FROM embeddings WHERE {new_where}) "
-        "SELECT base.vec_id, "
-        "CAST(CASE WHEN ds.vec_id IS NULL THEN 0 ELSE 1 END AS INT) "
-        "AS dup_of_store, "
-        "CAST(CASE WHEN db.vec_id IS NULL THEN 0 ELSE 1 END AS INT) "
-        "AS dup_of_batch, "
-        "CAST(CASE WHEN ds.vec_id IS NULL AND db.vec_id IS NULL "
-        "THEN 1 ELSE 0 END AS INT) AS keep "
-        "FROM base LEFT JOIN ds ON base.vec_id = ds.vec_id "
-        "LEFT JOIN db ON base.vec_id = db.vec_id"
-    )
-
-
 def textbook_pagerank_sql(
     edges_sql: str = EDGES_SQL,
     n_iters: int = 10,
@@ -1125,30 +1089,6 @@ def connected_components_sql(pairs_sql: str, a: str = "doc_a", b: str = "doc_b")
         "reach(u, v) AS (SELECT u, u FROM (SELECT DISTINCT u FROM e) "
         "UNION SELECT e.u, r.v FROM e JOIN reach r ON e.v = r.u) "
         "SELECT u AS vertex, min(v) AS component FROM reach GROUP BY u"
-    )
-
-
-def cluster_safe_split_sql(pairs_sql: str, salt: str = "split:") -> str:
-    """Mirror of sampling.cluster_safe_split over ``documents``: the
-    recursive-CTE transitive closure (connected_components_sql) gives
-    each doc its cluster representative (min reachable id, own id for
-    singletons), then the EXACT hash_split arithmetic — md5(salt||key)
-    15-hex-digit prefix mod 100 into the 90/5/5 named ranges — runs on
-    that representative. Same-cluster docs share split_key, hence
-    bucket, hence split: the leakage guarantee is structural on both
-    engines."""
-    s = salt.replace("'", "''")
-    return (
-        f"WITH cc AS ({connected_components_sql(pairs_sql)}), "
-        "k AS (SELECT d.doc_id, "
-        "coalesce(cc.component, d.doc_id) AS split_key "
-        "FROM documents d LEFT JOIN cc ON cc.vertex = d.doc_id), "
-        "bk AS (SELECT doc_id, split_key, "
-        f"('0x' || substr(md5('{s}' || CAST(split_key AS VARCHAR)), 1, 15))"
-        "::UBIGINT::BIGINT % 100 AS b FROM k) "
-        "SELECT doc_id, split_key, CAST(b AS INT) AS bucket, "
-        "CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val' "
-        "ELSE 'test' END AS split FROM bk"
     )
 
 
@@ -4066,169 +4006,6 @@ def zipf_fit_sql(top_k: int = 100, group_col: str = "source") -> str:
     )
 
 
-def source_overlap_sql(min_shared: int = 1, group_col: str = "source") -> str:
-    """Mirror of ``dedup.source_overlap`` over ``documents``: the
-    exact-dedup fingerprint (md5 of lowercased, whitespace-collapsed,
-    trimmed text) distinct per source, the fingerprint-keyed source
-    self-join, and set-arithmetic jaccard/containment from exact
-    integer counts."""
-    if min_shared < 1:
-        raise ValueError(f"min_shared ({min_shared}) must be >= 1")
-    return (
-        "WITH sfp AS (SELECT DISTINCT "
-        f"{group_col} AS s, {fingerprint_sql()} AS fp FROM documents), "
-        "shared AS (SELECT a.s AS source_a, b.s AS source_b, "
-        "count(*) AS n_shared FROM sfp a JOIN sfp b ON a.fp = b.fp "
-        "AND a.s < b.s GROUP BY a.s, b.s "
-        f"HAVING count(*) >= {int(min_shared)}), "
-        "cnt AS (SELECT s, count(*) AS n FROM sfp GROUP BY s) "
-        "SELECT source_a, source_b, n_shared, "
-        "ca.n AS n_fp_a, cb.n AS n_fp_b, "
-        "round(CAST(n_shared AS DOUBLE) / (ca.n + cb.n - n_shared), 6) "
-        "AS jaccard, "
-        "round(CAST(n_shared AS DOUBLE) / ca.n, 6) AS containment_a, "
-        "round(CAST(n_shared AS DOUBLE) / cb.n, 6) AS containment_b "
-        "FROM shared JOIN cnt ca ON shared.source_a = ca.s "
-        "JOIN cnt cb ON shared.source_b = cb.s"
-    )
-
-
-def source_unigram_divergence_sql(group_col: str = "source") -> str:
-    """Mirror of ``textstats.source_unigram_divergence`` over
-    ``documents``: per-group lowercased-whitespace unigram
-    distributions, the shared-type equi-join, and the missing-mass JSD
-    identity (exclusive words contribute their own probability mass —
-    only shared types are joined). round(,6) absorbs the cross-engine
-    summation-order ulps (the entropy_stats discipline)."""
-    return (
-        "WITH tok AS (SELECT "
-        f"{group_col} AS s, "
-        "unnest(list_filter(regexp_split_to_array(lower(text), "
-        "'[[:space:]]+'), x -> x <> '')) AS w FROM documents), "
-        "cnt AS (SELECT s, w, count(*) AS n FROM tok GROUP BY 1, 2), "
-        "tot AS (SELECT s, CAST(sum(n) AS BIGINT) AS tot_n, "
-        "count(*) AS n_types FROM cnt GROUP BY 1), "
-        "p AS (SELECT cnt.s, w, n::DOUBLE / tot_n AS p, n_types "
-        "FROM cnt JOIN tot ON cnt.s = tot.s), "
-        "sh AS (SELECT a.s AS source_a, b.s AS source_b, "
-        "a.n_types AS n_types_a, b.n_types AS n_types_b, "
-        "a.p AS pa, b.p AS pb "
-        "FROM p a JOIN p b ON a.w = b.w AND a.s < b.s) "
-        "SELECT source_a, source_b, count(*) AS shared_types, "
-        "n_types_a, n_types_b, "
-        "round((sum(pa * log2(2 * pa / (pa + pb)) "
-        "+ pb * log2(2 * pb / (pa + pb))) "
-        "+ (1 - sum(pa)) + (1 - sum(pb))) / 2, 6) + 0.0 AS jsd "
-        "FROM sh GROUP BY 1, 2, 4, 5"
-    )
-
-
-def ngram_source_overlap_sql(
-    ngram: int = 5, min_jaccard: float = 0.0, group_col: str = "source"
-) -> str:
-    """Mirror of ``dedup.ngram_source_overlap`` over ``documents``:
-    per-source distinct word-n-gram shingle sets (the ngram_shingles
-    convention: whitespace tokens, n-length windows joined by one
-    space), the shingle-keyed source self-join, set-arithmetic
-    jaccard/containment rounded 6."""
-    if not 0.0 <= min_jaccard <= 1.0:
-        raise ValueError(f"min_jaccard ({min_jaccard}) must be in [0, 1]")
-    n = int(ngram)
-    if n < 1:  # mirror the operator's guard: ngram=0 shingles to ''
-        raise ValueError(f"ngram ({ngram}) must be >= 1")
-    return (
-        "WITH toks AS (SELECT "
-        f"{group_col} AS s, "
-        "list_filter(regexp_split_to_array(text, '[[:space:]]+'), "
-        "w -> w <> '') AS tk FROM documents), "
-        "sh AS (SELECT DISTINCT s, shingle FROM (SELECT s, "
-        f"unnest(CASE WHEN len(tk) >= {n} THEN "
-        f"list_transform(range(1, len(tk) - {n} + 2), "
-        f"i -> array_to_string(tk[i:i+{n - 1}], ' ')) "
-        "ELSE [] END) AS shingle FROM toks)), "
-        "shared AS (SELECT a.s AS source_a, b.s AS source_b, "
-        "count(*) AS n_shared FROM sh a JOIN sh b ON a.shingle = b.shingle "
-        "AND a.s < b.s GROUP BY a.s, b.s), "
-        "cnt AS (SELECT s, count(*) AS n FROM sh GROUP BY s) "
-        "SELECT * FROM (SELECT source_a, source_b, n_shared, "
-        "ca.n AS n_sh_a, cb.n AS n_sh_b, "
-        "round(CAST(n_shared AS DOUBLE) / (ca.n + cb.n - n_shared), 6) "
-        "AS jaccard, "
-        "round(CAST(n_shared AS DOUBLE) / ca.n, 6) AS containment_a, "
-        "round(CAST(n_shared AS DOUBLE) / cb.n, 6) AS containment_b "
-        "FROM shared JOIN cnt ca ON shared.source_a = ca.s "
-        "JOIN cnt cb ON shared.source_b = cb.s) "
-        f"WHERE jaccard >= {float(min_jaccard)!r}"
-    )
-
-
-def hybrid_rrf_search_sql(
-    terms: list,
-    query_vec_id: int = 0,
-    n: int = 50,
-    k: int = 10,
-    rrf_k: int = 60,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> str:
-    """Mirror of ``similarity.hybrid_rrf_search``: the registered BM25
-    oracle shape (pivoted per-term tf columns, 1-row avgdl/df agg, the
-    SAME left-to-right score addition) round(6)-ranked and cut to
-    ``n``, the cosine_topk oracle shape cut to ``n``, row_number ranks
-    over the rounded scores with id tiebreaks, FULL OUTER fuse on
-    doc_id, rrf = 1/(K+lex_rank) + 1/(K+sem_rank) with absent branches
-    contributing 0, top-``k`` by (rrf DESC, doc_id)."""
-    terms = list(dict.fromkeys(terms))
-    if not terms:
-        raise ValueError("hybrid_rrf_search_sql needs at least one query term")
-    dot = _dot_sql("e.embedding", "q.embedding")
-    bm25_parts = " + ".join(
-        f"(CASE WHEN tf{i} > 0 THEN "
-        f"log10(1.0 + (nn.n - st.df{i} + 0.5)/(st.df{i} + 0.5)) "
-        f"* (tf{i} * {float(k1 + 1.0)!r}) / "
-        f"(tf{i} + {float(k1)!r} * (1.0 - {float(b)!r} + {float(b)!r} * dl / st.avgdl)) "
-        "ELSE 0.0 END)"
-        for i in range(len(terms))
-    )
-    return (
-        "WITH tok AS (SELECT doc_id, lower(w) AS word FROM (SELECT doc_id, "
-        "unnest(regexp_split_to_array(text, '[[:space:]]+')) AS w "
-        "FROM documents) WHERE w <> ''), "
-        "agg AS (SELECT doc_id, count(*) AS dl, "
-        + ", ".join(
-            f"sum(CASE WHEN word = '{t}' THEN 1 ELSE 0 END) AS tf{i}"
-            for i, t in enumerate(terms)
-        )
-        + " FROM tok GROUP BY doc_id), "
-        "st AS (SELECT CAST(sum(dl) AS DOUBLE)/count(*) AS avgdl, "
-        + ", ".join(
-            f"sum(CASE WHEN tf{i} > 0 THEN 1 ELSE 0 END) AS df{i}"
-            for i in range(len(terms))
-        )
-        + " FROM agg), "
-        "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents), "
-        f"lexs AS (SELECT doc_id, round({bm25_parts}, 6) AS score "
-        "FROM agg, st, nn WHERE "
-        + " OR ".join(f"tf{i} > 0" for i in range(len(terms)))
-        + f" ORDER BY score DESC, doc_id ASC LIMIT {int(n)}), "
-        "lex AS (SELECT doc_id, row_number() OVER "
-        "(ORDER BY score DESC, doc_id ASC) AS lex_rank FROM lexs), "
-        f"q AS (SELECT embedding FROM embeddings WHERE vec_id = {int(query_vec_id)}), "
-        f"sems AS (SELECT e.vec_id AS doc_id, round({dot} / "
-        f"({_norm_sql('e.embedding')} * {_norm_sql('q.embedding')}), 6) AS cos "
-        f"FROM embeddings e, q WHERE e.vec_id <> {int(query_vec_id)} "
-        f"ORDER BY cos DESC, e.vec_id ASC LIMIT {int(n)}), "
-        "sem AS (SELECT doc_id, row_number() OVER "
-        "(ORDER BY cos DESC, doc_id ASC) AS sem_rank FROM sems) "
-        "SELECT COALESCE(lex.doc_id, sem.doc_id) AS doc_id, "
-        f"round(COALESCE(1.0/({int(rrf_k)} + lex_rank), 0.0) + "
-        f"COALESCE(1.0/({int(rrf_k)} + sem_rank), 0.0), 6) AS rrf, "
-        "lex_rank, sem_rank "
-        "FROM lex FULL OUTER JOIN sem ON lex.doc_id = sem.doc_id "
-        f"ORDER BY rrf DESC, doc_id ASC LIMIT {int(k)}"
-    )
-
-
 def blocklist_hits_sql(
     blocklist: list, max_hit_ratio: float = 0.0, lowercase: bool = True
 ) -> str:
@@ -4296,105 +4073,4 @@ def encoding_qa_sql(min_ascii_ratio: float = 0.5) -> str:
         "SELECT doc_id, n_chars, ascii_ratio, n_replacement, n_control, "
         "n_mojibake, (n_replacement > 0 OR n_control > 0 OR n_mojibake > 0 "
         f"OR ascii_ratio < {float(min_ascii_ratio)!r}) AS flagged FROM r"
-    )
-
-
-def _manifest_core_sql(group_col: str, where: str) -> str:
-    """Per-doc manifest staging shared by source_manifest_sql and
-    manifest_drift_sql — the ONE SQL home of the 60-bit exact-dedup
-    fingerprint + null-safe token/char counts (mirror of
-    dedup._manifest_aggregate's staged select)."""
-    fp = fingerprint_sql("coalesce(text, '')")
-    return (
-        f"SELECT {group_col} AS source, doc_id, "
-        f"('0x' || substr({fp}, 1, 15))::BIGINT AS fp, "
-        "len(list_filter(regexp_split_to_array(coalesce(text, ''), "
-        "'[[:space:]]+'), w -> w <> '')) AS nt, "
-        "length(coalesce(text, '')) AS nc "
-        f"FROM documents WHERE {where}"
-    )
-
-
-def source_manifest_sql(group_col: str = "source", where: str = "TRUE") -> str:
-    """Mirror of ``dedup.source_manifest`` over ``documents``: the
-    additive mod-2^60 multiset hash of exact-dedup content
-    fingerprints (first 15 md5 hex digits of the normalize_text form),
-    summed in HUGEINT (Spark sums decimal(38,0) — both exact)."""
-    return (
-        f"WITH s AS ({_manifest_core_sql(group_col, where)}) "
-        "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, "
-        "CAST(sum(nt) AS BIGINT) AS n_tokens, "
-        "CAST(sum(nc) AS BIGINT) AS n_chars, "
-        "CAST(sum(fp) % 1152921504606846976 AS BIGINT) AS content_hash, "
-        "min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id "
-        "FROM s GROUP BY source"
-    )
-
-
-def manifest_drift_sql(
-    old_where: str = "doc_id % 7 <> 0", new_where: str = "TRUE"
-) -> str:
-    """Mirror of ``dedup.manifest_drift`` over two WHERE-filtered
-    manifest views of ``documents`` (the registered-query shape: old =
-    last snapshot, new = current corpus). Both snapshots build from
-    ``_manifest_core_sql`` — the fingerprint convention has one SQL
-    home."""
-
-    def manifest(where: str) -> str:
-        return (
-            "SELECT source, CAST(count(*) AS BIGINT) AS n_docs, "
-            "CAST(sum(nt) AS BIGINT) AS n_tokens, "
-            "CAST(sum(fp) % 1152921504606846976 AS BIGINT) AS content_hash "
-            f"FROM ({_manifest_core_sql('source', where)}) GROUP BY source"
-        )
-
-    return (
-        f"WITH o AS ({manifest(old_where)}), n AS ({manifest(new_where)}) "
-        "SELECT COALESCE(o.source, n.source) AS source, "
-        "CASE WHEN o.source IS NULL THEN 'added' "
-        "WHEN n.source IS NULL THEN 'removed' "
-        "WHEN o.content_hash <> n.content_hash THEN 'changed' "
-        "ELSE 'unchanged' END AS status, "
-        "o.n_docs AS n_docs_old, n.n_docs AS n_docs_new, "
-        "CAST(COALESCE(n.n_docs, 0) - COALESCE(o.n_docs, 0) AS BIGINT) "
-        "AS docs_delta, "
-        "CAST(COALESCE(n.n_tokens, 0) - COALESCE(o.n_tokens, 0) AS BIGINT) "
-        "AS tokens_delta, "
-        "COALESCE(o.content_hash <> n.content_hash, TRUE) AS hash_changed "
-        "FROM o FULL OUTER JOIN n ON o.source = n.source"
-    )
-
-
-def streaming_contamination_probe_sql(
-    ngram: int = 8, threshold: float = 0.01, bench_mod: int = 20
-) -> str:
-    """Mirror of ``streaming.streaming_contamination_probe`` with the
-    bench set = docs where doc_id % bench_mod == 0 and the STREAM =
-    the full documents table (bench docs probe as fully self-
-    contaminated — the flag-at-ingest semantics). Emits flagged rows
-    only; the threshold compares the RAW ratio (the batch
-    contamination_check convention the operator mirrors) and round(6)
-    is presentation only."""
-    if ngram < 1:
-        raise ValueError(f"ngram ({ngram}) must be >= 1")
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(
-            f"threshold ({threshold}) must be in (0, 1] — the probe's "
-            "emit-hits-only shape cannot express threshold 0"
-        )
-    return (
-        f"WITH {_shingles_ngram(ngram)}, "
-        f"b AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % {bench_mod} = 0), "
-        "cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_shingles "
-        "FROM sh GROUP BY doc_id), "
-        "hits AS (SELECT sh.doc_id, CAST(count(*) AS BIGINT) AS n_contaminated "
-        "FROM sh JOIN b ON sh.shingle = b.shingle GROUP BY sh.doc_id) "
-        # the threshold compares the RAW ratio (the batch
-        # contamination_check convention); round(6) is presentation
-        "SELECT doc_id, n_shingles, n_contaminated, "
-        "round(raw, 6) AS contamination_ratio FROM "
-        "(SELECT h.doc_id, c.n_shingles, h.n_contaminated, "
-        "CAST(h.n_contaminated AS DOUBLE) / c.n_shingles AS raw "
-        "FROM hits h JOIN cnt c ON h.doc_id = c.doc_id) "
-        f"WHERE raw >= {float(threshold)!r}"
     )

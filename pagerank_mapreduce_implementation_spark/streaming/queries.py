@@ -372,76 +372,6 @@ def streaming_minhash_probe(
     )
 
 
-def streaming_cosine_probe(
-    emb_stream: DataFrame,
-    seen_emb: DataFrame,
-    threshold: float = 0.25,
-    num_planes: int = 8,
-    bands: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    broadcast_store: bool = True,
-) -> DataFrame:
-    """Streaming SEMANTIC near-dup probe: an unbounded embedding stream
-    checked against a STATIC vector store — the streaming twin of
-    ``dedup.incremental_embedding_dedup``'s ``dup_of_store`` verdict,
-    completing the probe family (minhash, phash, and now cosine) from
-    the identical pieces: a stateless per-row sketch (the deterministic
-    md5-derived hyperplane band keys — pure column expressions, dims
-    supplied by the STATIC store so no streaming-illegal peek), the
-    store's buckets + vectors as broadcast static join sides
-    (stream-static joins carry no state store), an exact round-6
-    cosine verify, and one final per-vector min — the only stateful
-    operator, bounded by the number of near-dup vectors seen, not the
-    stream.
-
-    ``broadcast_store`` as in ``streaming_minhash_probe``: False flips
-    to a shuffling stream-static join (still stateless) when the store
-    outgrows the broadcast cap.
-
-    Emits ``(vec_id, dup_store_id)`` for stream vectors whose cosine
-    against some store vector clears ``threshold`` — ``dup_store_id``
-    the smallest matching store id. Batch-vs-store semantics are
-    bit-identical to the batch operator, so the oracle is the batch
-    SQL.
-    """
-    from pagerank_mapreduce_implementation_spark.operators.similarity import (
-        _dot,
-        _norm,
-        _vec_dims,
-        hyperplane_band_buckets,
-    )
-
-    dims = _vec_dims(seen_emb, vec_col)
-    stream_bb = hyperplane_band_buckets(
-        emb_stream, num_planes, bands, id_col, vec_col,
-        dims=dims, keep_vec=True,
-    )
-    store_bb = hyperplane_band_buckets(
-        seen_emb, num_planes, bands, id_col, vec_col
-    ).select(F.col("vec_id").alias("store_id"), "band", "key")
-    store_vecs = seen_emb.select(
-        F.col(id_col).alias("store_id"),
-        F.col(vec_col).alias("sv"),
-        _norm(F.col(vec_col)).alias("sn"),
-    )
-    if broadcast_store:
-        store_bb = F.broadcast(store_bb)
-        store_vecs = F.broadcast(store_vecs)
-    cos = F.round(
-        _dot(F.col("vec"), F.col("sv")) / (_norm(F.col("vec")) * F.col("sn")),
-        6,
-    )
-    matches = (
-        stream_bb.join(store_bb, ["band", "key"])
-        .join(store_vecs, "store_id")
-        .filter(cos >= F.lit(threshold))
-    )
-    return matches.groupBy("vec_id").agg(
-        F.min("store_id").alias("dup_store_id")
-    )
-
-
 def streaming_search(
     tfidf_stream: DataFrame, terms: list[str]
 ) -> DataFrame:
@@ -835,125 +765,4 @@ def streaming_value_histogram(
         events.select(bucket.alias("bucket_start"))
         .groupBy("bucket_start")
         .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
-def streaming_source_manifest(
-    docs: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
-    """Live dataset manifest — the streaming twin of
-    ``dedup.source_manifest``: running ``(source, n_docs, n_tokens,
-    n_chars, content_hash, min_doc_id, max_doc_id)`` over an unbounded
-    document ingest. The snapshot-versioning read (has this source's
-    content drifted since the last recorded manifest?) maintained
-    incrementally instead of re-scanned per batch.
-
-    The additive mod-2^60 multiset hash is exactly what makes this
-    streamable: every component is a commutative-monoid aggregate
-    (count/sum/min/max), so complete-mode state = ONE row per source —
-    independent of stream length, no watermark needed. The running
-    hash accumulates in decimal(38,0) WITHOUT the final mod (38 digits
-    absorb ~10^20 docs before overflow; Spark cannot fold a mod into
-    an incremental agg) and the mod-2^60 + cast projects AFTER the
-    aggregation — this is literally the batch operator's builder
-    (``dedup._manifest_aggregate``) applied to an unbounded frame, so
-    the twins CANNOT drift; the parity test pins bit-equality anyway.
-    """
-    from pagerank_mapreduce_implementation_spark.operators.dedup import (
-        _manifest_aggregate,
-    )
-
-    return _manifest_aggregate(docs, group_col, text_col, doc_col)
-
-
-def streaming_contamination_probe(
-    docs: DataFrame,
-    bench: DataFrame,
-    ngram: int = 8,
-    threshold: float = 0.01,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    broadcast_bench: bool = True,
-) -> DataFrame:
-    """Live benchmark-decontamination — the streaming member of the
-    probe family (minhash, phash, bloom, LM, cosine, now
-    contamination): an unbounded document stream probed against a
-    STATIC evaluation set's shingle table, emitting
-    ``(doc_id, n_shingles, n_contaminated, contamination_ratio)`` for
-    docs sharing AT LEAST ONE benchmark shingle whose RAW ratio
-    clears ``threshold`` — exactly ``contamination.
-    contamination_check``'s flagged slice (the batch op also compares
-    the unrounded ratio; both sides divide the same exact integers,
-    so the raw compare is cross-engine deterministic). ``threshold``
-    must be > 0: the emit-hits-only shape cannot express the batch
-    op's threshold-0 behavior of flagging zero-overlap docs, so that
-    configuration raises instead of silently diverging.
-
-    Stateless by the family's construction: per-doc distinct shingles
-    build as per-row array expressions staged as NAMED columns (the
-    dedup.shingles CSE rule: a filter(split(...)) referenced from
-    inside a higher-order lambda re-evaluates per window position —
-    measured 4x), the doc's shingle count rides the explode, and the
-    bench side joins in as a broadcast STATIC inner side
-    (stream-static joins carry no state store; set
-    ``broadcast_bench=False`` past the 8 GB cap — same results, the
-    micro-batch shuffles against the bucketed bench instead). The
-    only stateful operator is the final per-doc count, and the INNER
-    join bounds its state to docs sharing >= 1 benchmark shingle —
-    contamination incidence, not stream length (the
-    streaming_minhash_probe argument).
-
-    NULL text counts as the empty string (zero shingles — never
-    emitted), the library-wide convention.
-    """
-    if ngram < 1:
-        raise ValueError(f"ngram ({ngram}) must be >= 1")
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(
-            f"threshold ({threshold}) must be in (0, 1]: the probe emits "
-            "matched docs only and cannot express threshold-0's "
-            "flag-everything semantics (use batch contamination_check)"
-        )
-    from pagerank_mapreduce_implementation_spark.operators.dedup import (
-        shingles as batch_shingles,
-        tokens_null_safe,
-    )
-
-    tok_staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
-        tokens_null_safe(F.col(text_col)).alias("_toks"),
-    )
-    grams = F.when(
-        F.size("_toks") >= ngram,
-        F.transform(
-            F.sequence(F.lit(1), F.size("_toks") - F.lit(ngram) + F.lit(1)),
-            lambda i: F.array_join(F.slice(F.col("_toks"), i, ngram), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    sh_staged = tok_staged.select(
-        "doc_id", F.array_distinct(grams).alias("_sh")
-    )
-    staged = sh_staged.select(
-        "doc_id",
-        F.size("_sh").alias("n_shingles"),
-        F.explode("_sh").alias("shingle"),
-    )
-    b = batch_shingles(bench, ngram, text_col, doc_col).select("shingle").distinct()
-    if broadcast_bench:
-        b = F.broadcast(b)
-    raw_ratio = F.col("n_contaminated").cast("double") / F.col("n_shingles")
-    return (
-        staged.join(b, "shingle")
-        .groupBy("doc_id", "n_shingles")
-        .agg(F.count(F.lit(1)).alias("n_contaminated"))
-        .filter(raw_ratio >= threshold)
-        .select(
-            "doc_id",
-            F.col("n_shingles").cast("long").alias("n_shingles"),
-            "n_contaminated",
-            F.round(raw_ratio, 6).alias("contamination_ratio"),
-        )
     )

@@ -1093,11 +1093,13 @@ class TestClusterSurvivors:
 )
 @example(texts=["\u00a0ab", "ab", "a b\u2003", "a b"])
 def test_unicode_space_edges_match_oracle(spark, texts):
-    """exact_dedup and line_dedup, as registered, against their DuckDB
-    oracles on text whose edges carry U+00A0 / U+2003. Spark's ``trim``
-    strips only the ASCII space; DuckDB's bare ``trim(x)`` also strips
-    Unicode spaces, so an oracle spelling it would merge fingerprints
-    and line keys that Spark keeps apart."""
+    """exact_dedup, line_dedup and incremental_dedup, as registered,
+    against their DuckDB oracles on text whose edges carry U+00A0 /
+    U+2003. Spark's ``trim`` strips only the ASCII space; DuckDB's bare
+    ``trim(x)`` also strips Unicode spaces, so an oracle spelling it
+    would merge fingerprints and line keys that Spark keeps apart.
+    Doc ids step by 100 so incremental_dedup's fixed doc_id < 250 store
+    split leaves a non-empty new batch."""
     import tempfile
 
     import duckdb
@@ -1106,12 +1108,12 @@ def test_unicode_space_edges_match_oracle(spark, texts):
     import __spark_entry__ as entrymod
     from pagerank_mapreduce_implementation_spark.schemas import DOCUMENTS
 
-    rows = [(i, t, "en", "src0", len(t)) for i, t in enumerate(texts)]
+    rows = [(100 * i, t, "en", "src0", len(t)) for i, t in enumerate(texts)]
     con = duckdb.connect()
     con.register("documents", pd.DataFrame(rows, columns=DOCUMENTS.fieldNames()))
     with tempfile.TemporaryDirectory() as sf_dir:
         spark.createDataFrame(rows, DOCUMENTS).write.parquet(f"{sf_dir}/documents.parquet")
-        for name in ("exact_dedup", "line_dedup"):
+        for name in ("exact_dedup", "line_dedup", "incremental_dedup"):
             df = entrymod.queries()[name](spark, sf_dir)
             got = sorted(tuple(r[c] for c in sorted(df.columns)) for r in df.collect())
             odf = con.sql(entrymod.oracle_sql()[name]).df()

@@ -1,12 +1,9 @@
-"""STAGED operators queued for a later driver window — the round-14
-cohort (readability_scores, oov_stats, simhash_recall_report,
-lsh_expected_recall) REGISTERED in round 16; the round-15 additions
-(zipf_fit, source_overlap, ngram_source_overlap) and the round-16
-intra_doc_line_dedup target r17's free slots. Until registered this
-file is their correctness gate: DuckDB parity through the registry
+"""Local correctness gate for the round-14 cohort (readability_scores,
+oov_stats, simhash_recall_report, lsh_expected_recall — registered in
+round 16) and the unregistered operators wired into clean_corpus
+(zipf_fit, intra_doc_line_dedup): DuckDB parity through the registry
 harness's normalize/compare, plus semantics on hand-checkable
-fixtures and plan-shape asserts (registered entries keep their tests
-here as the local regression gate)."""
+fixtures and plan-shape asserts."""
 
 from __future__ import annotations
 
@@ -389,7 +386,7 @@ def test_lsh_expected_recall_validates_against_realized_audit(spark, sf_dir):
     assert pred[(8, 2)] < pred[(16, 4)] < pred[(32, 8)]
 
 
-# --- round-15 staged (r17 candidate): Zipf rank-frequency audit -------------
+# --- Zipf rank-frequency audit (clean_corpus zipf_bands stage) -------------
 
 
 def test_zipf_fit_parity(spark, sf_dir, duck):
@@ -489,133 +486,7 @@ def test_clean_corpus_zipf_bands_drop_whole_source(spark, tmp_path):
     assert sorted(out_inf) == ["farm", "web", "web"]
 
 
-# --- round-15 staged (r17 candidate): cross-source mirror audit -------------
-
-
-def test_source_overlap_parity_with_planted_mirror(spark, sf_dir, duck):
-    """The synthetic corpus has no cross-source exact dups, so the
-    parity run PLANTS a mirror: every doc_id % 7 == 0 re-labeled as
-    source 'mirrorX' and unioned in (the recall-report convention —
-    the oracle replays the identical plant), guaranteeing non-vacuous
-    shared mass between the mirror and every real source it copies."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    docs = Catalog(spark, sf_dir).documents
-    planted = docs.unionByName(
-        docs.filter(F.col("doc_id") % 7 == 0).withColumn(
-            "source", F.lit("mirrorX")
-        )
-    )
-    got = dedup.source_overlap(planted, min_shared=1)
-    assert got.count() > 0, "vacuous: plant produced no shared pairs"
-    # 'mirrorX' < 'srcN' lexicographically, so the plant lands on the
-    # source_a side of every pair it joins
-    assert got.filter(F.col("source_a") == "mirrorX").count() > 0
-    oracle = oracles.source_overlap_sql(min_shared=1).replace(
-        "FROM documents",
-        "FROM (SELECT * FROM documents UNION ALL "
-        "SELECT * REPLACE ('mirrorX' AS source) FROM documents "
-        "WHERE doc_id % 7 = 0)",
-    )
-    check(got, duck, oracle)
-
-
-def test_source_overlap_semantics(spark):
-    """Hand-built sets: A={t1,t2,t3}, B={t2,t3,t4} (shared 2,
-    jaccard 0.5, containments 2/3), C={t9} disjoint (no row);
-    fingerprints are whitespace/case-insensitive so 'T1' and ' t1 '
-    collapse; min_shared=3 empties the report; min_shared=0 raises."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    docs = spark.createDataFrame(
-        [
-            (1, "t1", "A"), (2, "t2", "A"), (3, "t3", "A"),
-            (4, "T1  ", "A"),          # same fingerprint as doc 1
-            (5, "t2", "B"), (6, "t3", "B"), (7, "t4", "B"),
-            (8, "t9", "C"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    rows = dedup.source_overlap(docs).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["source_a"], r["source_b"]) == ("A", "B")
-    assert r["n_shared"] == 2 and r["n_fp_a"] == 3 and r["n_fp_b"] == 3
-    assert r["jaccard"] == 0.5
-    assert r["containment_a"] == round(2 / 3, 6) == r["containment_b"]
-    assert dedup.source_overlap(docs, min_shared=3).count() == 0
-    with pytest.raises(ValueError, match=">= 1"):
-        dedup.source_overlap(docs, min_shared=0)
-
-
-def test_source_overlap_broadcasts_totals(spark, sf_dir):
-    """The per-source totals join back as broadcasts (|sources| rows);
-    the only corpus-scale shuffles are the distinct and the
-    fingerprint-keyed self-join — no sort-merge join, no Python."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    df = dedup.source_overlap(Catalog(spark, sf_dir).documents)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in p
-    assert "Python" not in p
-    assert p.count("BroadcastHashJoin") >= 2
-
-
-def test_ngram_source_overlap_parity(spark, sf_dir, duck):
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    got = dedup.ngram_source_overlap(Catalog(spark, sf_dir).documents, ngram=5)
-    assert got.count() > 0, "vacuous: no source pair shares a shingle"
-    check(got, duck, oracles.ngram_source_overlap_sql(5))
-
-
-def test_ngram_source_overlap_semantics(spark):
-    """Partial mirror: B carries A's exact sentence inside different
-    boilerplate — ZERO exact-fingerprint overlap but high shingle
-    containment; C is disjoint; min_jaccard filters; bad args raise."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    core = "one two three four five six"          # 2 distinct 5-grams
-    docs = spark.createDataFrame(
-        [
-            (1, core, "A"),
-            (2, "intro words here then " + core + " outro tail words", "B"),
-            (3, "totally different words in every position here", "C"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    assert dedup.source_overlap(docs).count() == 0  # exact audit is blind
-    rows = {
-        (r["source_a"], r["source_b"]): r
-        for r in dedup.ngram_source_overlap(docs, ngram=5).collect()
-    }
-    r = rows[("A", "B")]
-    assert r["n_shared"] == 2 and r["n_sh_a"] == 2     # A is fully contained
-    assert r["containment_a"] == 1.0
-    assert ("A", "C") not in rows and ("B", "C") not in rows
-    assert (
-        dedup.ngram_source_overlap(docs, ngram=5, min_jaccard=0.9).count() == 0
-    )
-    with pytest.raises(ValueError, match=r"\[0, 1\]"):
-        dedup.ngram_source_overlap(docs, min_jaccard=1.5)
-    # ngram=0 would shingle everything to '' (all pairs ~1.0, silently)
-    with pytest.raises(ValueError, match="ngram"):
-        dedup.ngram_source_overlap(docs, ngram=0)
-    with pytest.raises(ValueError, match="ngram"):
-        oracles.ngram_source_overlap_sql(ngram=-1)
-
-
-def test_ngram_source_overlap_broadcasts_totals(spark, sf_dir):
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    df = dedup.ngram_source_overlap(Catalog(spark, sf_dir).documents, ngram=5)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in p
-    assert "Python" not in p
-    assert p.count("BroadcastHashJoin") >= 2
-
-
-# --- round-16 staged (r17 candidate): within-doc keep-first dedup -----------
+# --- within-doc keep-first dedup (clean_corpus intra_line_dedup stage) -----
 
 
 def test_intra_doc_line_dedup_parity(spark, sf_dir, duck):
@@ -711,138 +582,6 @@ def test_clean_corpus_intra_line_dedup_stage(spark, tmp_path):
     assert out[2] == "chorus line\nits own verse"
 
 
-# --- round-16 staged (r17 candidate): source distribution divergence --------
-
-
-def test_source_unigram_divergence_parity(spark, sf_dir, duck):
-    got = textstats.source_unigram_divergence(Catalog(spark, sf_dir).documents)
-    rows = got.collect()
-    assert len(rows) > 0
-    assert all(0.0 <= r["jsd"] <= 1.0 for r in rows)
-    # the synthetic sources draw from one vocabulary: distributions
-    # must be CLOSE but not identical (0 would mean a vacuous gate)
-    assert all(0.0 < r["jsd"] < 0.5 for r in rows)
-    check(got, duck, oracles.source_unigram_divergence_sql())
-
-
-def test_source_unigram_divergence_semantics(spark):
-    """Hand-checked JSD on two tiny distributions (A: a a b, B: a c —
-    shared mass via 'a' only, exclusive words contribute their own
-    probability), identical sources land at exactly 0.0 (and +0.0, not
-    -0.0), disjoint-vocabulary pairs are NOT emitted (the
-    source_overlap convention), case folds."""
-    import math
-
-    docs = spark.createDataFrame(
-        [
-            (1, "a A b", "X"),
-            (2, "a c", "Y"),
-            (3, "a a b", "X2"),
-            (4, "A a b", "X3"),
-            (5, "zz qq", "Z"),
-        ],
-        "doc_id long, text string, source string",
-    )
-    rows = {
-        (r["source_a"], r["source_b"]): r
-        for r in textstats.source_unigram_divergence(docs).collect()
-    }
-    pa, qa = 2 / 3, 1 / 2
-    m = pa + qa
-    term = pa * math.log2(2 * pa / m) + qa * math.log2(2 * qa / m)
-    want = round((term + (1 - pa) + (1 - qa)) / 2, 6)
-    r = rows[("X", "Y")]
-    assert r["jsd"] == pytest.approx(want, abs=2e-6)
-    assert r["shared_types"] == 1
-    assert (r["n_types_a"], r["n_types_b"]) == (2, 2)
-    # identical distributions: exactly zero, positive zero
-    assert rows[("X", "X2")]["jsd"] == 0.0
-    assert math.copysign(1.0, rows[("X", "X2")]["jsd"]) == 1.0
-    assert rows[("X2", "X3")]["jsd"] == 0.0
-    # Z shares no type with anyone: absent from the emission
-    assert not any("Z" in k for k in rows)
-
-
-def test_source_unigram_divergence_plan(spark, sf_dir):
-    """Scale claims on the executed plan: per-group totals join back
-    as BROADCAST (never a shuffle join on the word-keyed frame), and
-    the word self-join is the only sort-merge exchange pair."""
-    df = textstats.source_unigram_divergence(Catalog(spark, sf_dir).documents)
-    df.collect()
-    p = (
-        df._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-        .split("+- == Initial Plan ==")[0]
-    )
-    assert "BroadcastHashJoin" in p
-
-
-# --- round-16 staged (r17 candidate): leakage-safe splits --------------------
-
-
-def test_cluster_safe_split_parity(spark, sf_dir, duck):
-    """The registered form: minhash near-dup pairs (the dedup_clusters
-    input) -> star-CC cluster representatives -> hash_split on the
-    representative — vs the recursive-CTE + identical md5 arithmetic
-    replay."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-    from pagerank_mapreduce_implementation_spark.operators.sampling import (
-        cluster_safe_split,
-    )
-
-    docs = Catalog(spark, sf_dir).documents
-    pairs = dedup.minhash_near_dups(docs, threshold=0.5, ngram=5)
-    got = cluster_safe_split(docs, pairs)
-    rows = got.collect()
-    assert len(rows) == docs.count()
-    # non-vacuous: at least one doc is keyed by a DIFFERENT id (its
-    # cluster representative), i.e. the guard actually re-keyed docs
-    assert any(r["doc_id"] != r["split_key"] for r in rows)
-    check(
-        got,
-        duck,
-        oracles.cluster_safe_split_sql(
-            "SELECT doc_a, doc_b FROM ("
-            + oracles.minhash_near_dups_sql(0.5, ngram=5)
-            + ")"
-        ),
-    )
-
-
-def test_cluster_safe_split_semantics(spark):
-    """The leakage guarantee, hand-checked: a 3-doc chain cluster
-    {1,2,3} (transitive through 2 — pairwise minhash would never put
-    1-3 in a pair) lands in ONE split keyed by min id 1; singleton 4
-    splits exactly as plain hash_split(salt) would; same-cluster docs
-    NEVER straddle the boundary regardless of their own ids' buckets."""
-    from pagerank_mapreduce_implementation_spark.operators.sampling import (
-        cluster_safe_split,
-        hash_split,
-    )
-
-    docs = spark.createDataFrame(
-        [(i,) for i in (1, 2, 3, 4)], "doc_id long"
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3)], "doc_a long, doc_b long"
-    )
-    rows = {r["doc_id"]: r for r in cluster_safe_split(docs, pairs).collect()}
-    assert {rows[i]["split_key"] for i in (1, 2, 3)} == {1}
-    assert len({rows[i]["split"] for i in (1, 2, 3)}) == 1
-    assert len({rows[i]["bucket"] for i in (1, 2, 3)}) == 1
-    assert rows[4]["split_key"] == 4
-    plain = {
-        r["doc_id"]: r
-        for r in hash_split(docs, "doc_id").collect()
-    }
-    # singleton inherits the exact plain assignment; the cluster
-    # inherits the REPRESENTATIVE's
-    assert rows[4]["bucket"] == plain[4]["bucket"]
-    assert rows[1]["bucket"] == plain[1]["bucket"]
-    assert rows[3]["bucket"] == plain[1]["bucket"]
-
-
 # --- retirement twins (README §Registry capacity, endgame rule 4) ------------
 
 
@@ -865,135 +604,3 @@ def test_word_count_boundary_jar_exact_tokenizer(spark):
     assert rows == {
         ("a", 1), (",", 2), ("b", 1), ("!!", 1), ("c", 1), ("x", 1), ("y", 1)
     }
-
-
-# --- round-16 staged (r17 candidate): incremental embedding dedup -----------
-
-
-def test_incremental_embedding_dedup_parity(spark, sf_dir, duck):
-    """The registered form: store = vec_id % 3 == 0, batch = the rest;
-    banded hyperplane candidates + exact cosine verify on both the
-    store probe and the in-batch keep-first pass, vs the same-planes
-    SQL replay."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    emb = Catalog(spark, sf_dir).embeddings
-    seen = emb.filter(F.col("vec_id") % 3 == 0)
-    new = emb.filter(F.col("vec_id") % 3 != 0)
-    got = dedup.incremental_embedding_dedup(new, seen, threshold=0.25)
-    rows = got.collect()
-    assert len(rows) == new.count()
-    # non-vacuous on every axis the gate certifies
-    assert any(r["dup_of_store"] == 1 for r in rows)
-    assert any(r["dup_of_batch"] == 1 for r in rows)
-    assert any(r["keep"] == 1 for r in rows)
-    check(
-        got,
-        duck,
-        oracles.incremental_embedding_dedup_sql(
-            "vec_id % 3 = 0", "vec_id % 3 <> 0", threshold=0.25
-        ),
-    )
-
-
-def test_incremental_embedding_dedup_semantics(spark):
-    """Hand-checked flags: a batch vector aligned with a stored one is
-    dup_of_store; two aligned batch vectors flag only the HIGHER id as
-    dup_of_batch (keep-first — the lower id stands in); an orthogonal
-    vector keeps; flags compose (a vector can be both)."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    seen = spark.createDataFrame(
-        [(1, [1.0, 0.0, 0.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    new = spark.createDataFrame(
-        [
-            (10, [2.0, 0.0, 0.0, 0.0]),   # parallel to store 1 AND to 11
-            (11, [1.0, 0.0, 0.0, 0.0]),   # parallel to store 1 and batch 10
-            (12, [0.0, 1.0, 0.0, 0.0]),   # orthogonal to everything
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    rows = {
-        r["vec_id"]: r
-        for r in dedup.incremental_embedding_dedup(
-            new, seen, threshold=0.9
-        ).collect()
-    }
-    assert rows[10]["dup_of_store"] == 1 and rows[10]["dup_of_batch"] == 0
-    assert rows[11]["dup_of_store"] == 1 and rows[11]["dup_of_batch"] == 1
-    assert rows[12]["dup_of_store"] == 0 and rows[12]["dup_of_batch"] == 0
-    assert (rows[10]["keep"], rows[11]["keep"], rows[12]["keep"]) == (0, 0, 1)
-
-
-# --- round-16 staged (r17 candidate): streaming cosine probe -----------------
-
-
-def test_streaming_cosine_probe_parity_and_batch_twin(spark, sf_dir, duck):
-    """The streaming semantic probe (embeddings stream vec_id % 3 != 0
-    vs the static store of the rest) is row-identical to the batch
-    store verdict AND to the DuckDB min-per-vector replay of the
-    same-planes cross-table match — the minhash-probe certification
-    pattern."""
-    from pagerank_mapreduce_implementation_spark import streaming as strm
-    from pagerank_mapreduce_implementation_spark.operators import similarity
-
-    emb_stream = strm.read_table_stream(spark, sf_dir, "embeddings").filter(
-        F.col("vec_id") % 3 != 0
-    )
-    seen = Catalog(spark, sf_dir).embeddings.filter(F.col("vec_id") % 3 == 0)
-    out = strm.queries.streaming_cosine_probe(
-        emb_stream, seen, threshold=0.25
-    )
-    strm.run_to_memory(out, "_test_cos_probe", state_partitions=8)
-    got = spark.table("_test_cos_probe")
-    assert got.count() > 0  # non-vacuous at this threshold
-    # batch twin: min store match per stream vector via the same op
-    # family the probe composes
-    batch = (
-        similarity.cosine_matches_ab(
-            seen,
-            Catalog(spark, sf_dir).embeddings.filter(F.col("vec_id") % 3 != 0),
-            0.25,
-        )
-        .groupBy(F.col("id_b").alias("vec_id"))
-        .agg(F.min("id_a").alias("dup_store_id"))
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, batch.collect())
-    )
-    check(
-        got,
-        duck,
-        "SELECT id_b AS vec_id, min(id_a) AS dup_store_id FROM ("
-        + oracles.cosine_matches_ab_sql(
-            "vec_id % 3 = 0", "vec_id % 3 <> 0", 0.25
-        )
-        + ") GROUP BY 1",
-    )
-    spark.catalog.dropTempView("_test_cos_probe")
-
-
-def test_streaming_cosine_probe_semantics(spark, tmp_path):
-    """Hand-checked: a streamed vector parallel to a stored one reports
-    the SMALLEST matching store id; an orthogonal one is absent."""
-    from pagerank_mapreduce_implementation_spark import streaming as strm
-
-    seen = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [1.0, 0.0]), (3, [0.0, 1.0])],
-        "vec_id long, embedding array<double>",
-    )
-    path = str(tmp_path / "stream_emb")
-    spark.createDataFrame(
-        [(10, [2.0, 0.0]), (11, [0.0, -3.0])],
-        "vec_id long, embedding array<double>",
-    ).write.parquet(path)
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<double>"
-    ).parquet(path)
-    out = strm.queries.streaming_cosine_probe(stream, seen, threshold=0.9)
-    strm.run_to_memory(out, "_test_cos_sem", state_partitions=4)
-    rows = {r["vec_id"]: r["dup_store_id"] for r in spark.table("_test_cos_sem").collect()}
-    assert rows == {10: 1}  # min of stores {1, 2}; 11 anti-parallel to 3
-    spark.catalog.dropTempView("_test_cos_sem")

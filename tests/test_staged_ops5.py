@@ -1,9 +1,8 @@
-"""STAGED operators queued for a later driver window — the round-16
-continuation cohort (hybrid_rrf_search, blocklist_hits, encoding_qa).
-Until registered this file is their correctness gate: DuckDB parity
-through the registry harness's normalize/compare, plus semantics on
-hand-checkable fixtures and plan-shape asserts (registered entries
-keep their tests here as the local regression gate)."""
+"""Local correctness gate for the unregistered operators wired into
+clean_corpus as its encoding gate and blocklist stage (encoding_qa,
+blocklist_hits): DuckDB parity through the registry harness's
+normalize/compare, plus semantics on hand-checkable fixtures,
+plan-shape asserts and hypothesis cross-engine gates."""
 
 from __future__ import annotations
 
@@ -16,15 +15,12 @@ pytestmark = pytest.mark.slow
 from pyspark.sql import functions as F
 
 from pagerank_mapreduce_implementation_spark import oracles
-from pagerank_mapreduce_implementation_spark.operators import similarity
 from pagerank_mapreduce_implementation_spark.sources.catalog import Catalog
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
-
-SEARCH_TERMS = ["spark", "window", "table"]
 
 
 @pytest.fixture(scope="module")
@@ -53,120 +49,6 @@ def check(spark_df, duck_con, oracle_sql):
         assert not ((gk in "iu" and wk == "f") or (gk == "f" and wk in "iu")), (
             f"{col}: integer-vs-float divergence ({got[col].dtype} vs {want[col].dtype})"
         )
-
-
-# --- hybrid retrieval: reciprocal-rank fusion ------------------------------
-
-
-def test_hybrid_rrf_parity(spark, sf_dir, duck):
-    got = similarity.hybrid_rrf_search(
-        Catalog(spark, sf_dir).documents,
-        Catalog(spark, sf_dir).embeddings,
-        SEARCH_TERMS,
-        query_vec_id=0,
-        n=50,
-        k=10,
-    )
-    rows = got.collect()
-    assert len(rows) == 10
-    # non-vacuous: fusion must actually fuse — at least one returned doc
-    # carries BOTH branch ranks
-    assert any(
-        r["lex_rank"] is not None and r["sem_rank"] is not None for r in rows
-    ), "vacuous: no doc appeared in both branches' top-n"
-    check(got, duck, oracles.hybrid_rrf_search_sql(SEARCH_TERMS, 0, 50, 10))
-
-
-def test_hybrid_rrf_semantics(spark):
-    """Textbook-RRF hand calc: BM25 ranks doc2 over doc1 (shorter doc,
-    same idf), cosine ranks 1 > 3 > 2 — fusion flips the lexical
-    winner because doc1 places well in BOTH branches, and a doc absent
-    from one branch gets a NULL rank contributing 0."""
-    docs = spark.createDataFrame(
-        [(1, "apple apple banana"), (2, "apple"), (3, "cherry")],
-        "doc_id long, text string",
-    )
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0]),
-            (1, [1.0, 0.0]),
-            (2, [0.0, 1.0]),
-            (3, [0.6, 0.8]),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    out = similarity.hybrid_rrf_search(
-        docs, emb, ["apple"], query_vec_id=0, n=10, k=10
-    ).collect()
-    assert [r["doc_id"] for r in out] == [1, 2, 3]
-    r1, r2, r3 = out
-    # lex: doc2 rank 1, doc1 rank 2 (bm25 length normalization);
-    # sem: vec1 rank 1 (cos 1), vec3 rank 2 (cos .6), vec2 rank 3 (cos 0)
-    assert (r1["lex_rank"], r1["sem_rank"]) == (2, 1)
-    assert (r2["lex_rank"], r2["sem_rank"]) == (1, 3)
-    assert r3["lex_rank"] is None and r3["sem_rank"] == 2
-    assert r1["rrf"] == round(1 / 62 + 1 / 61, 6)
-    assert r2["rrf"] == round(1 / 61 + 1 / 63, 6)
-    assert r3["rrf"] == round(1 / 62, 6)
-
-
-def test_hybrid_rrf_n_cutoff(spark):
-    """The top-n cut is per-branch: with n=2 the semantic branch keeps
-    only vecs 1 and 3, so doc2 loses its semantic contribution
-    entirely (NULL sem_rank) while keeping its lexical one."""
-    docs = spark.createDataFrame(
-        [(1, "apple apple banana"), (2, "apple"), (3, "cherry")],
-        "doc_id long, text string",
-    )
-    emb = spark.createDataFrame(
-        [
-            (0, [1.0, 0.0]),
-            (1, [1.0, 0.0]),
-            (2, [0.0, 1.0]),
-            (3, [0.6, 0.8]),
-        ],
-        "vec_id long, embedding array<float>",
-    )
-    rows = {
-        r["doc_id"]: r
-        for r in similarity.hybrid_rrf_search(
-            docs, emb, ["apple"], query_vec_id=0, n=2, k=10
-        ).collect()
-    }
-    assert rows[2]["sem_rank"] is None
-    assert rows[2]["rrf"] == round(1 / 61, 6)
-
-
-def test_hybrid_rrf_guards(spark, sf_dir):
-    docs = Catalog(spark, sf_dir).documents
-    emb = Catalog(spark, sf_dir).embeddings
-    with pytest.raises(ValueError):
-        similarity.hybrid_rrf_search(docs, emb, ["a"], 0, n=0)
-    with pytest.raises(ValueError):
-        similarity.hybrid_rrf_search(docs, emb, ["a"], 0, rrf_k=0)
-    with pytest.raises(ValueError):
-        similarity.hybrid_rrf_search(docs, emb, [], 0)
-
-
-def test_hybrid_rrf_plan_shape(spark, sf_dir):
-    """Each branch must end in a TakeOrderedAndProject BEFORE rank
-    assignment (the window runs on <= n rows, never the corpus), and
-    the documents scan prunes to (doc_id, text)."""
-    import re as _re
-
-    df = similarity.hybrid_rrf_search(
-        Catalog(spark, sf_dir).documents,
-        Catalog(spark, sf_dir).embeddings,
-        SEARCH_TERMS,
-        query_vec_id=0,
-        n=50,
-        k=10,
-    )
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert p.count("TakeOrderedAndProject") >= 2
-    for scan_cols in _re.findall(r"FileScan parquet \[([^\]]*)\]", p):
-        cols = [c.split("#")[0] for c in scan_cols.split(",")]
-        assert "lang" not in cols and "label" not in cols
 
 
 # --- blocklist policy filter -----------------------------------------------
@@ -199,7 +81,7 @@ def test_blocklist_hits_semantics(spark):
             (2, "clean words only"),
             (3, ""),
             (4, "bad worse bad worse"),
-            (5, None),  # NULL text counts as '' (source_manifest convention)
+            (5, None),  # NULL text counts as '' (dedup.tokens_null_safe)
         ],
         "doc_id long, text string",
     )
@@ -415,307 +297,6 @@ def test_encoding_qa_keep_cols_flag_only(spark, sf_dir):
         textstats.encoding_qa(docs, keep_cols=("n_chars",), flag_only=False)
 
 
-# --- per-source dataset manifest -------------------------------------------
-
-
-def test_source_manifest_parity(spark, sf_dir, duck):
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    got = dedup.source_manifest(Catalog(spark, sf_dir).documents)
-    rows = got.collect()
-    assert len(rows) > 1
-    assert len({r["content_hash"] for r in rows}) == len(rows), (
-        "vacuous: sources share a content hash"
-    )
-    check(got, duck, oracles.source_manifest_sql())
-
-
-def test_source_manifest_order_independence(spark, sf_dir):
-    """The multiset hash must be identical under any row order and any
-    partitioning — that is the entire point of the additive form."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    docs = Catalog(spark, sf_dir).documents
-    base = {
-        r["source"]: r["content_hash"]
-        for r in dedup.source_manifest(docs).collect()
-    }
-    shuffled = docs.orderBy(F.reverse(F.col("text"))).repartition(13)
-    again = {
-        r["source"]: r["content_hash"]
-        for r in dedup.source_manifest(shuffled).collect()
-    }
-    assert base == again
-
-
-def test_source_manifest_detects_single_char_drift(spark):
-    """A one-character edit in one doc must move exactly that source's
-    hash; identical content in a different doc-id order must NOT
-    (content_hash keys on text, not ids)."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    rows = [
-        (1, "alpha beta", "a"),
-        (2, "gamma delta", "a"),
-        (3, "epsilon zeta", "b"),
-    ]
-    schema = "doc_id long, text string, source string"
-    base = {
-        r["source"]: r
-        for r in dedup.source_manifest(
-            spark.createDataFrame(rows, schema)
-        ).collect()
-    }
-    # NOTE "alpha betA" would NOT drift: the fingerprint is over the
-    # normalize_text canonical form, which lowercases — same content
-    # under exact_dedup's definition, same hash, by design
-    edited = [(1, "alpha betz", "a"), rows[1], rows[2]]
-    got = {
-        r["source"]: r
-        for r in dedup.source_manifest(
-            spark.createDataFrame(edited, schema)
-        ).collect()
-    }
-    assert got["a"]["content_hash"] != base["a"]["content_hash"]
-    assert got["b"]["content_hash"] == base["b"]["content_hash"]
-    swapped = [(2, "alpha beta", "a"), (1, "gamma delta", "a"), rows[2]]
-    got2 = {
-        r["source"]: r
-        for r in dedup.source_manifest(
-            spark.createDataFrame(swapped, schema)
-        ).collect()
-    }
-    assert got2["a"]["content_hash"] == base["a"]["content_hash"]
-
-
-def test_source_manifest_one_shuffle_plan(spark, sf_dir):
-    """One groupBy exchange with a map-side partial agg below it; the
-    scan prunes to (doc_id, text, source)."""
-    import re as _re
-
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    df = dedup.source_manifest(Catalog(spark, sf_dir).documents)
-    p = df._jdf.queryExecution().executedPlan().toString()
-    assert p.count("Exchange") == 1
-    assert "Python" not in p
-    # plans print root-first, so the partial (map-side) aggregate is
-    # the SECOND HashAggregate, below the exchange
-    assert p.count("HashAggregate") == 2
-    assert p.rindex("HashAggregate") > p.index("Exchange"), (
-        "no map-side partial aggregation below the exchange"
-    )
-    scan_cols = _re.search(r"FileScan parquet \[([^\]]*)\]", p)
-    assert scan_cols is not None
-    assert len(scan_cols.group(1).split(",")) <= 3
-
-
-def test_source_manifest_null_text_parity(spark):
-    """NULL text counts as the empty string on BOTH engines — without
-    the coalesce, Spark's size(NULL) = -1 would decrement n_tokens
-    while DuckDB's sum skips NULLs (cross-engine divergence on a
-    general library primitive)."""
-    import duckdb as _duck
-    import pandas as _pd
-
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    rows = [(1, "two words", "a"), (2, None, "a"), (3, "one", "b")]
-    schema = "doc_id long, text string, source string"
-    got = normalize(
-        dedup.source_manifest(spark.createDataFrame(rows, schema)).toPandas()
-    )
-    con = _duck.connect()
-    con.register(
-        "documents", _pd.DataFrame(rows, columns=["doc_id", "text", "source"])
-    )
-    want = normalize(con.sql(oracles.source_manifest_sql()).df())
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
-    a = got[got.source == "a"].iloc[0]
-    assert a["n_docs"] == 2 and a["n_tokens"] == 2 and a["n_chars"] == 9
-
-
-def test_streaming_source_manifest_matches_batch(spark, sf_dir):
-    """Batch/stream parity for the manifest twin: availableNow over
-    the full documents table must equal dedup.source_manifest row for
-    row — including the content_hash, whose mod is deliberately
-    deferred past the incremental aggregation."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-    from pagerank_mapreduce_implementation_spark.streaming import (
-        read_table_stream,
-        run_to_memory,
-        streaming_source_manifest,
-    )
-
-    stream = read_table_stream(spark, sf_dir, "documents")
-    assert stream.isStreaming
-    run_to_memory(
-        streaming_source_manifest(stream), "stream_manifest", "complete"
-    )
-    got = sorted(map(tuple, spark.table("stream_manifest").collect()))
-    want = sorted(
-        map(
-            tuple,
-            dedup.source_manifest(Catalog(spark, sf_dir).documents).collect(),
-        )
-    )
-    assert got == want
-    assert len(got) > 1
-    spark.catalog.dropTempView("stream_manifest")
-
-
-def test_manifest_drift_parity(spark, sf_dir, duck):
-    """Registered-query shape: old snapshot = docs with doc_id % 7
-    <> 0, new = full corpus. A source whose ids happen to all avoid
-    the %7 slice would legitimately report unchanged, so the assert
-    requires changed rows to EXIST, not to be universal."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    docs = Catalog(spark, sf_dir).documents
-    got = dedup.manifest_drift(
-        dedup.source_manifest(docs.filter(F.col("doc_id") % 7 != 0)),
-        dedup.source_manifest(docs),
-    )
-    rows = got.collect()
-    assert len(rows) > 1
-    statuses = {r["status"] for r in rows}
-    assert "changed" in statuses, "vacuous: no source drifted"
-    assert statuses <= {"changed", "unchanged"}
-    check(got, duck, oracles.manifest_drift_sql())
-
-
-def test_manifest_drift_semantics(spark):
-    """All four verdicts on a hand fixture: a source only in new
-    (added), only in old (removed), same content permuted across doc
-    ids (unchanged — the multiset hash ignores id assignment), and a
-    one-word edit (changed with zero docs_delta)."""
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    schema = "doc_id long, text string, source string"
-    old = spark.createDataFrame(
-        [
-            (1, "alpha beta", "stable"),
-            (2, "gamma delta", "stable"),
-            (3, "old words", "edited"),
-            (4, "going away", "gone"),
-        ],
-        schema,
-    )
-    new = spark.createDataFrame(
-        [
-            (9, "gamma delta", "stable"),
-            (8, "alpha beta", "stable"),
-            (3, "new words", "edited"),
-            (5, "brand new", "fresh"),
-        ],
-        schema,
-    )
-    rows = {
-        r["source"]: r
-        for r in dedup.manifest_drift(
-            dedup.source_manifest(old), dedup.source_manifest(new)
-        ).collect()
-    }
-    assert rows["stable"]["status"] == "unchanged"
-    assert not rows["stable"]["hash_changed"]
-    assert rows["edited"]["status"] == "changed"
-    assert rows["edited"]["docs_delta"] == 0
-    assert rows["gone"]["status"] == "removed"
-    assert rows["gone"]["n_docs_new"] is None and rows["gone"]["docs_delta"] == -1
-    assert rows["fresh"]["status"] == "added"
-    assert rows["fresh"]["hash_changed"]
-
-
-# --- streaming contamination probe -----------------------------------------
-
-
-def test_streaming_contamination_probe_parity(spark, sf_dir, duck):
-    """Stream the full documents table against the doc_id%20 bench
-    subset: bench docs probe as fully self-contaminated (ratio 1.0)
-    plus any genuine cross-doc 8-gram overlaps; flagged rows must
-    hash-match the DuckDB replay exactly."""
-    from pagerank_mapreduce_implementation_spark.streaming import (
-        read_table_stream,
-        run_to_memory,
-        streaming_contamination_probe,
-    )
-
-    bench = Catalog(spark, sf_dir).documents.filter(F.col("doc_id") % 20 == 0)
-    probe = streaming_contamination_probe(
-        read_table_stream(spark, sf_dir, "documents"), bench
-    )
-    run_to_memory(probe, "stream_contam", "complete")
-    got = spark.table("stream_contam")
-    rows = got.collect()
-    assert any(r["contamination_ratio"] == 1.0 for r in rows)
-    assert any(r["contamination_ratio"] < 1.0 for r in rows), (
-        "vacuous: only bench self-hits flagged"
-    )
-    check(got, duck, oracles.streaming_contamination_probe_sql())
-    spark.catalog.dropTempView("stream_contam")
-
-
-def test_streaming_contamination_probe_matches_batch(spark, sf_dir):
-    """The probe's flagged slice must equal the batch
-    contamination_check verdict (same rounding point for the
-    threshold compare)."""
-    from pagerank_mapreduce_implementation_spark.operators.contamination import (
-        contamination_check,
-    )
-    from pagerank_mapreduce_implementation_spark.streaming import (
-        read_table_stream,
-        run_to_memory,
-        streaming_contamination_probe,
-    )
-
-    docs = Catalog(spark, sf_dir).documents
-    bench = docs.filter(F.col("doc_id") % 20 == 0)
-    run_to_memory(
-        streaming_contamination_probe(
-            read_table_stream(spark, sf_dir, "documents"), bench
-        ),
-        "stream_contam_b",
-        "complete",
-    )
-    got = sorted(map(tuple, spark.table("stream_contam_b").collect()))
-    want = sorted(
-        map(
-            tuple,
-            contamination_check(docs, bench, ngram=8, threshold=0.01)
-            .filter(F.col("is_contaminated") == 1)
-            .select(
-                "doc_id",
-                F.col("n_shingles").cast("long"),
-                F.col("n_contaminated").cast("long"),
-                "contamination_ratio",
-            )
-            .collect(),
-        )
-    )
-    assert got == want and len(got) > 0
-    spark.catalog.dropTempView("stream_contam_b")
-
-
-def test_streaming_contamination_probe_guards(spark, sf_dir):
-    from pagerank_mapreduce_implementation_spark.streaming import (
-        streaming_contamination_probe,
-    )
-
-    docs = Catalog(spark, sf_dir).documents
-    with pytest.raises(ValueError):
-        streaming_contamination_probe(docs, docs, ngram=0)
-    with pytest.raises(ValueError):
-        streaming_contamination_probe(docs, docs, threshold=1.5)
-    # threshold 0 would silently diverge from batch (the probe can't
-    # emit zero-overlap docs) — must refuse, both sides
-    with pytest.raises(ValueError):
-        streaming_contamination_probe(docs, docs, threshold=0.0)
-    with pytest.raises(ValueError):
-        oracles.streaming_contamination_probe_sql(ngram=0)
-    with pytest.raises(ValueError):
-        oracles.streaming_contamination_probe_sql(threshold=0.0)
-
-
 # --- hypothesis cross-engine gates (the winnow non-ascii precedent) --------
 
 from hypothesis import HealthCheck, given, settings  # noqa: E402
@@ -791,50 +372,3 @@ def test_blocklist_hits_hypothesis_duckdb_gate(spark, texts):
     con.register("documents", _pd.DataFrame(rows, columns=["doc_id", "text"]))
     want = normalize(con.sql(oracles.blocklist_hits_sql(blk, 0.3)).df())
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
-
-
-@settings(**_PROP)
-@given(
-    rows=st.lists(
-        st.tuples(
-            st.one_of(
-                st.text(alphabet=_HOSTILE_ALPHABET, max_size=25), st.none()
-            ),
-            st.sampled_from(["a", "b"]),
-        ),
-        min_size=1,
-        max_size=6,
-    )
-)
-def test_source_manifest_hypothesis_gate(spark, rows):
-    """source_manifest parity on hostile multisets AND the multiset
-    invariance: reversing row order and reassigning doc_ids must keep
-    every content_hash (the additive hash's defining property)."""
-    import duckdb as _duck
-    import pandas as _pd
-
-    from pagerank_mapreduce_implementation_spark.operators import dedup
-
-    tagged = [(i, t, s) for i, (t, s) in enumerate(rows)]
-    schema = "doc_id long, text string, source string"
-    got = normalize(
-        dedup.source_manifest(spark.createDataFrame(tagged, schema)).toPandas()
-    )
-    con = _duck.connect()
-    con.register(
-        "documents", _pd.DataFrame(tagged, columns=["doc_id", "text", "source"])
-    )
-    want = normalize(con.sql(oracles.source_manifest_sql()).df())
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
-    permuted = [
-        (100 + i, t, s) for i, (t, s) in enumerate(reversed(rows))
-    ]
-    again = dedup.source_manifest(
-        spark.createDataFrame(permuted, schema)
-    ).collect()
-    assert {(r["source"], r["content_hash"]) for r in again} == {
-        (r["source"], r["content_hash"])
-        for r in dedup.source_manifest(
-            spark.createDataFrame(tagged, schema)
-        ).collect()
-    }
