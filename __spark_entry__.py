@@ -816,10 +816,6 @@ def _q_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=8,
         min_len=12,
         max_gram_df=NGRAM_MAX_SHINGLE_DF,
-        # persist the gram table for its three consumers (A/B'd
-        # 2.8 -> 1.8 s at sf0.1); the checkpoint releases via the
-        # bench/driver persisted-RDD sweep
-        materialize=True,
     )
 
 
@@ -3645,17 +3641,7 @@ def _q_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     bipartite graph, so the union is ALREADY simple — the simple edge
     set the operator expects).
     Oracle: unrolled MATERIALIZED frontier CTEs."""
-    # r17 (§2.4): repartition on the distinct keys BEFORE the distinct —
-    # the aggregation reuses the exchange (no second shuffle) and the
-    # dedup hash work runs at full width instead of inside the 1-file
-    # 3-task scan stage (profiled 1.2 s there; o-p edges are nearly
-    # duplicate-free, so map-side pre-dedup collapsed ~nothing anyway:
-    # exchange wrote 11 MB ≈ raw size).
-    e = (
-        _bipartite_edges(spark, sf_dir)
-        .repartition(spark.sparkContext.defaultParallelism, "src", "dst")
-        .distinct()
-    )
+    e = _bipartite_edges(spark, sf_dir).distinct()
     bidir = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )

@@ -426,7 +426,6 @@ def minhash_near_dups(
     bands: int = 4,
     text_col: str = "text",
     doc_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs with exact Jaccard verification.
 
@@ -434,24 +433,14 @@ def minhash_near_dups(
     signatures never collide in any band are not candidates. Tune
     (num_hashes, bands) to the target threshold.
 
-    ``materialize=True`` (default) returns an eager ``localCheckpoint``
-    — the shingle table is persisted for the build and released before
-    returning, so repeated actions on the result never recompute the
-    pipeline. The checkpoint pins executor storage that
-    ``DataFrame.unpersist()`` CANNOT free; when done, call
-    ``util.release_result(result)`` (after which the result is dead).
-    ``materialize=False`` returns the lazy plan instead — nothing
-    pinned, nothing to release, but every action replays the full
-    pipeline (shingles included): the right mode when the result feeds
-    exactly one write.
+    Returns an eager ``localCheckpoint`` — the shingle table is
+    persisted for the build and released before returning, so repeated
+    actions on the result never recompute the pipeline. The checkpoint
+    pins executor storage that ``DataFrame.unpersist()`` CANNOT free;
+    when done, call ``util.release_result(result)`` (after which the
+    result is dead).
     """
-    sh = shingles(docs, ngram, text_col, doc_col)
-    if not materialize:
-        sig = minhash_signatures(sh, num_hashes)
-        return jaccard_verify(
-            lsh_bucket_candidates(sig, num_hashes, bands), sh, threshold
-        )
-    sh = sh.persist()
+    sh = shingles(docs, ngram, text_col, doc_col).persist()
     try:
         sig = minhash_signatures(sh, num_hashes)
         cand = lsh_bucket_candidates(sig, num_hashes, bands)
@@ -469,7 +458,6 @@ def _shingle_pair_scores(
     score_name: str,
     score_expr,
     max_shingle_df: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Shared exact-recall pair scorer over shingle sets: candidates =
     pairs sharing at least one shingle, scored by ``score_expr(i, na,
@@ -500,8 +488,7 @@ def _shingle_pair_scores(
     sh = shingles(docs, ngram, text_col, doc_col)
     if max_shingle_df is not None:
         sh = df_capped_shingles(sh, max_shingle_df)
-    if materialize:
-        sh = sh.persist()
+    sh = sh.persist()
     try:
         a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
         b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -526,10 +513,9 @@ def _shingle_pair_scores(
             .select("doc_a", "doc_b", score.alias(score_name))
             .filter(F.col(score_name) >= threshold)
         )
-        return out.localCheckpoint(eager=True) if materialize else out
+        return out.localCheckpoint(eager=True)
     finally:
-        if materialize:
-            sh.unpersist()
+        sh.unpersist()
 
 
 def ngram_jaccard_pairs(
@@ -539,7 +525,6 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     doc_col: str = "doc_id",
     max_shingle_df: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """n-gram Jaccard dedup WITHOUT LSH: candidates = pairs sharing at
     least one shingle — exact recall for threshold > 0 when
@@ -548,9 +533,8 @@ def ngram_jaccard_pairs(
     minhash_near_dups: an uncapped ubiquitous shingle pairs its whole
     doc list quadratically in the self-join.
 
-    ``materialize``: see ``minhash_near_dups`` — True returns an eager
-    checkpoint (release with ``util.release_result`` when done); False
-    returns the lazy plan (nothing pinned, recomputes per action).
+    Returns an eager checkpoint, as ``minhash_near_dups`` does (release
+    with ``util.release_result`` when done).
     """
     return _shingle_pair_scores(
         docs,
@@ -561,7 +545,6 @@ def ngram_jaccard_pairs(
         "jaccard",
         lambda i, na, nb: i / (na + nb - i),
         max_shingle_df=max_shingle_df,
-        materialize=materialize,
     )
 
 
@@ -571,7 +554,6 @@ def ngram_jaccard_prefix_pairs(
     ngram: int = 3,
     text_col: str = "text",
     doc_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """EXACT-recall n-gram Jaccard pairs via PREFIX FILTERING (the
     set-similarity-join literature's answer to the stop-shingle
@@ -604,9 +586,7 @@ def ngram_jaccard_prefix_pairs(
     """
     from pyspark.sql.window import Window
 
-    sh = shingles(docs, ngram, text_col, doc_col)
-    if materialize:
-        sh = sh.persist()
+    sh = shingles(docs, ngram, text_col, doc_col).persist()
     try:
         dfq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
         w_doc = Window.partitionBy("doc_id").orderBy("__df", "shingle")
@@ -629,11 +609,9 @@ def ngram_jaccard_prefix_pairs(
             )
             .distinct()
         )
-        verified = jaccard_verify(cand, sh, threshold)
-        return verified.localCheckpoint(eager=True) if materialize else verified
+        return jaccard_verify(cand, sh, threshold).localCheckpoint(eager=True)
     finally:
-        if materialize:
-            sh.unpersist()
+        sh.unpersist()
 
 
 def ngram_containment_pairs(
@@ -643,7 +621,6 @@ def ngram_containment_pairs(
     text_col: str = "text",
     doc_col: str = "doc_id",
     max_shingle_df: int | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """ASYMMETRIC near-dup: shingle containment ``|A∩B| / min(|A|,|B|)``
     — catches a small doc embedded in a big one (boilerplate templates,
@@ -667,7 +644,6 @@ def ngram_containment_pairs(
         "containment",
         lambda i, na, nb: i / F.least(na, nb),
         max_shingle_df=max_shingle_df,
-        materialize=materialize,
     )
 
 
@@ -682,7 +658,6 @@ def incremental_minhash_dedup(
     doc_col: str = "doc_id",
     seen_bands: DataFrame | None = None,
     validate_bands: bool = True,
-    materialize: bool = True,
 ) -> DataFrame:
     """Incremental NEAR-dup ingestion: a new batch against a MinHash
     SIGNATURE store — the production shape at 100 TB, where the corpus
@@ -734,10 +709,8 @@ def incremental_minhash_dedup(
     check, which ``programs.clean_corpus`` runs (and repairs) before
     every probe.
 
-    ``materialize``: see ``minhash_near_dups`` — True (default)
-    returns an eager checkpoint; release with ``util.release_result``
-    when done. False returns the lazy plan (nothing pinned; each
-    action recomputes the batch signatures).
+    Returns an eager checkpoint, as ``minhash_near_dups`` does; release
+    it with ``util.release_result`` when done.
     """
     import math
 
@@ -855,7 +828,7 @@ def incremental_minhash_dedup(
                 ).cast("int"),
             )
         )
-        return out.localCheckpoint(eager=True) if materialize else out
+        return out.localCheckpoint(eager=True)
     finally:
         sig_b.unpersist()
 
@@ -1053,7 +1026,6 @@ def simhash_near_dups(
     chunks: int = 4,
     text_col: str = "text",
     doc_col: str = "doc_id",
-    materialize: bool = True,
 ) -> DataFrame:
     """SimHash near-dup pairs: ``(doc_a, doc_b, hamming)``.
 
@@ -1062,15 +1034,11 @@ def simhash_near_dups(
     recall, like all LSH). Verified with bit_count(xor) — the shared
     ``hamming_band_pairs`` machinery.
 
-    ``materialize``: see ``minhash_near_dups`` — True (default)
-    persists the fingerprint table for the band self-join and returns
-    an eager checkpoint (release with ``util.release_result``); False
-    returns the lazy plan, recomputing the fingerprints per action.
+    The fingerprint table is persisted for the band self-join and the
+    result is an eager checkpoint, as in ``minhash_near_dups``
+    (release it with ``util.release_result``).
     """
-    fp = simhash(docs, text_col, doc_col)
-    if not materialize:
-        return hamming_band_pairs(fp, "simhash", max_hamming, chunks, SIMHASH_BITS)
-    fp = fp.persist()
+    fp = simhash(docs, text_col, doc_col).persist()
     try:
         out = hamming_band_pairs(fp, "simhash", max_hamming, chunks, SIMHASH_BITS)
         return out.localCheckpoint(eager=True)
@@ -1139,7 +1107,6 @@ def substring_runs(
     max_gram_df: int | None = None,
     text_col: str = "text",
     doc_col: str = "doc_id",
-    materialize: bool = False,
 ) -> DataFrame:
     """Exact-substring dedup (Lee et al. 2022, "Deduplicating Training
     Data Makes Language Models Better"): maximal verbatim token runs of
@@ -1188,19 +1155,16 @@ def substring_runs(
     collision would agree). ``min_len >= k`` required: runs shorter
     than k are invisible to a k-gram scan by construction.
 
-    ``materialize=True`` persists the GRAM table for its three
-    consumers (the df-cap count and both self-join sides — Catalyst
-    clones equi-join diamonds into different pruned subtrees, so
-    lazily the corpus is tokenized+hashed three times) and returns the
-    (small) run report as a releasable eager checkpoint
-    (``util.release_result``); measured 2.8 s -> 1.8 s at sf0.1. The
-    default stays lazy — the one-job shape with nothing pinned; at
+    The GRAM table is persisted for its three consumers (the df-cap
+    count and both self-join sides — Catalyst clones equi-join diamonds
+    into different pruned subtrees, so lazily the corpus is
+    tokenized+hashed three times) and the (small) run report is
+    returned as a releasable eager checkpoint (``util.release_result``);
+    measured 2.8 s -> 1.8 s at sf0.1 against the lazy plan. At
     memory-tight extremes the persisted gram table (tens of bytes per
     token, MEMORY_AND_DISK) is the documented trade against three
     tokenize passes.
     """
-    from pyspark.sql.window import Window
-
     if k < 1:
         raise ValueError(f"k ({k}) must be >= 1")
     if min_len < k:
@@ -1208,13 +1172,28 @@ def substring_runs(
             f"min_len ({min_len}) must be >= k ({k}): a {k}-gram scan "
             f"cannot see shared runs shorter than {k} tokens"
         )
+    if max_gram_df is not None and max_gram_df < 1:
+        raise ValueError(f"max_gram_df ({max_gram_df}) must be >= 1")
+    grams = _gram_positions(docs, k, text_col, doc_col).persist()
+    try:
+        out = _runs_from_grams(grams, k, min_len, max_gram_df)
+        return out.localCheckpoint(eager=True)
+    finally:
+        grams.unpersist()
+
+
+def _gram_positions(
+    docs: DataFrame, k: int, text_col: str, doc_col: str
+) -> DataFrame:
+    """``(doc_id, pos, gh)``: every k-gram's 0-based token position and
+    md5 hash, for docs of at least ``k`` tokens."""
     # named token-array column first: no CSE across higher-order
     # functions (same measured pitfall as shingles)
     arr = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
     toks = docs.select(F.col(doc_col).alias("doc_id"), arr.alias("toks")).filter(
         F.size("toks") >= k
     )
-    grams = toks.select(
+    return toks.select(
         "doc_id",
         F.posexplode(
             F.transform(
@@ -1223,67 +1202,63 @@ def substring_runs(
             )
         ).alias("pos", "gh"),
     )
-    if materialize:
-        grams = grams.persist()
-    try:
-        capped = grams
-        if max_gram_df is not None:
-            if max_gram_df < 1:
-                raise ValueError(f"max_gram_df ({max_gram_df}) must be >= 1")
-            # df counts DOCS per gram (a gram repeated within one doc is
-            # one df), so the cap bounds pair fan-out per gram at C(df, 2)
-            hot = (
-                grams.select("doc_id", "gh")
-                .distinct()
-                .groupBy("gh")
-                .agg(F.count(F.lit(1)).alias("__df"))
-                .filter(F.col("__df") > max_gram_df)
-                .select("gh")
-            )
-            capped = grams.join(hot, "gh", "left_anti")
-        hits = (
+
+
+def _runs_from_grams(
+    grams: DataFrame, k: int, min_len: int, max_gram_df: int | None
+) -> DataFrame:
+    """The lazy plan ``substring_runs`` checkpoints: steps 2-3 of its
+    algorithm over a ``_gram_positions`` table."""
+    from pyspark.sql.window import Window
+
+    capped = grams
+    if max_gram_df is not None:
+        # df counts DOCS per gram (a gram repeated within one doc is
+        # one df), so the cap bounds pair fan-out per gram at C(df, 2)
+        hot = (
+            grams.select("doc_id", "gh")
+            .distinct()
+            .groupBy("gh")
+            .agg(F.count(F.lit(1)).alias("__df"))
+            .filter(F.col("__df") > max_gram_df)
+            .select("gh")
+        )
+        capped = grams.join(hot, "gh", "left_anti")
+    hits = (
+        capped.select(F.col("doc_id").alias("doc_a"), F.col("pos").alias("ia"), "gh")
+        .join(
             capped.select(
-                F.col("doc_id").alias("doc_a"), F.col("pos").alias("ia"), "gh"
-            )
-            .join(
-                capped.select(
-                    F.col("doc_id").alias("doc_b"), F.col("pos").alias("ib"), "gh"
-                ),
-                "gh",
-            )
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b", "ia", "ib")
+                F.col("doc_id").alias("doc_b"), F.col("pos").alias("ib"), "gh"
+            ),
+            "gh",
         )
-        diag = (F.col("ia") - F.col("ib")).alias("__diag")
-        w = Window.partitionBy(
-            "doc_a", "doc_b", F.col("ia") - F.col("ib")
-        ).orderBy("ia")
-        islands = hits.select(
-            "doc_a",
-            "doc_b",
-            diag,
-            "ia",
-            (F.col("ia") - F.row_number().over(w)).alias("__grp"),
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", "ia", "ib")
+    )
+    diag = (F.col("ia") - F.col("ib")).alias("__diag")
+    w = Window.partitionBy("doc_a", "doc_b", F.col("ia") - F.col("ib")).orderBy("ia")
+    islands = hits.select(
+        "doc_a",
+        "doc_b",
+        diag,
+        "ia",
+        (F.col("ia") - F.row_number().over(w)).alias("__grp"),
+    )
+    runs = (
+        islands.groupBy("doc_a", "doc_b", "__diag", "__grp")
+        .agg(
+            F.min("ia").alias("a_start"),
+            (F.count(F.lit(1)) + F.lit(k - 1)).alias("match_len"),
         )
-        runs = (
-            islands.groupBy("doc_a", "doc_b", "__diag", "__grp")
-            .agg(
-                F.min("ia").alias("a_start"),
-                (F.count(F.lit(1)) + F.lit(k - 1)).alias("match_len"),
-            )
-            .filter(F.col("match_len") >= min_len)
-        )
-        out = runs.select(
-            "doc_a",
-            "doc_b",
-            "a_start",
-            (F.col("a_start") - F.col("__diag")).alias("b_start"),
-            "match_len",
-        )
-        return out.localCheckpoint(eager=True) if materialize else out
-    finally:
-        if materialize:
-            grams.unpersist()
+        .filter(F.col("match_len") >= min_len)
+    )
+    return runs.select(
+        "doc_a",
+        "doc_b",
+        "a_start",
+        (F.col("a_start") - F.col("__diag")).alias("b_start"),
+        "match_len",
+    )
 
 
 def strip_substring_runs(
@@ -1294,7 +1269,6 @@ def strip_substring_runs(
     text_col: str = "text",
     doc_col: str = "doc_id",
     runs: DataFrame | None = None,
-    materialize_runs: bool = True,
 ) -> DataFrame:
     """The REMOVAL step ``substring_runs`` reports for (Lee et al.
     2022 end their pipeline in deletion, not a report): cut every
@@ -1327,24 +1301,14 @@ def strip_substring_runs(
     Pass a precomputed ``runs`` frame to reuse a report you already
     paid for; it must carry this function's (k, min_len) semantics.
 
-    ``materialize_runs`` (default True) computes the internal run
-    report with ``substring_runs(materialize=True)`` — the gram table
-    persists for its three consumers and the report pins as an eager
-    checkpoint that the RETURNED frame references; release it with the
-    surrounding program scope (``util.release_result`` on any consumer
-    of this output, or ``release_persistent_rdds_since`` as
-    ``clean_corpus`` does). Ignored when ``runs`` is supplied.
+    Without ``runs``, the report comes from ``substring_runs``, whose
+    eager checkpoint the RETURNED frame references; release it with
+    ``util.release_result`` on any consumer of this output, or with
+    ``util.release_persistent_rdds_since`` as ``programs.clean_corpus``
+    does.
     """
     if runs is None:
-        runs = substring_runs(
-            docs,
-            k,
-            min_len,
-            max_gram_df,
-            text_col,
-            doc_col,
-            materialize=materialize_runs,
-        )
+        runs = substring_runs(docs, k, min_len, max_gram_df, text_col, doc_col)
     spans = (
         runs.select(
             F.col("doc_b").alias(doc_col),

@@ -1409,7 +1409,6 @@ def bipartite_projection(
     edges: DataFrame,
     min_shared: int = 2,
     max_right_degree: int | None = 64,
-    materialize: bool = True,
 ) -> DataFrame:
     """Project a bipartite ``(src, dst)`` graph onto its LEFT vertex
     set → ``(a, b, shared)``: pairs of left vertices connected to at
@@ -1433,21 +1432,11 @@ def bipartite_projection(
     Spark clones equi-join diamonds into canonically different
     subtrees, so without the cache the dedup shuffle and the degree
     agg run twice — once per join side (A/B at sf0.1: 6.2 -> 5.3 s,
-    identical pairs). With ``materialize=True`` (default) the output
-    is eagerly localCheckpoint'ed so the cache can be dropped before
-    returning — construction becomes a blocking action and the result
-    (small by construction: pairs clearing ``min_shared`` over the
-    capped right subspace) is pinned. Pass ``materialize=False`` to
-    stay fully lazy and composable (streaming inputs, downstream
-    filter pushdown, or an uncapped run whose pair set should stream
-    into the caller's aggregation rather than pin in storage — the
-    round-13 advisory cases); the lazy plan keeps the persist, whose
-    first-use population still deduplicates the diamond, but the
-    caller owns the cache lifetime — release it with
-    ``util.release_plan_caches(plan)`` after the consuming action,
-    which uncaches exactly the frames THIS plan pins (round-14
-    advice: ``spark.catalog.clearCache()`` nukes every cache in the
-    session and is the wrong tool in a long-lived session).
+    identical pairs). The output is eagerly localCheckpoint'ed so the
+    cache can be dropped before returning — construction is a blocking
+    action and the result (small by construction: pairs clearing
+    ``min_shared`` over the capped right subspace) is pinned until
+    ``util.release_result`` frees it.
     """
     if min_shared < 1:
         raise ValueError(f"min_shared ({min_shared}) must be >= 1")
@@ -1479,8 +1468,6 @@ def bipartite_projection(
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)
     )
-    if not materialize:
-        return out
     try:
         return out.localCheckpoint(eager=True)
     finally:

@@ -637,7 +637,6 @@ def phash_near_dups(
     max_hamming: int = 10,
     chunks: int = 4,
     hasher: Callable[[bytes], int] | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Image near-dup pairs by perceptual hash:
     ``(doc_a, doc_b, hamming)`` — the standard image-corpus curation op
@@ -647,7 +646,8 @@ def phash_near_dups(
     band join (dedup.hamming_band_pairs): candidates only from equal
     chunks, verified with bit_count(xor) — never the all-pairs product.
     The hash is 60-bit so text SimHash and image pHash share one
-    banding/verify implementation and one oracle shape.
+    banding/verify implementation and one oracle shape. Returns an
+    eager checkpoint; release it with ``util.release_result`` when done.
     """
     from pagerank_mapreduce_implementation_spark.operators.dedup import (
         hamming_band_pairs,
@@ -656,14 +656,7 @@ def phash_near_dups(
     # persist -> eager checkpoint -> unpersist: the simhash_near_dups
     # cadence (the band self-join reads the hash table twice; without
     # the persist the Python hashing pass would run once per side).
-    # materialize contract matches minhash_near_dups: True pins an
-    # eager checkpoint (release with util.release_result when done);
-    # False returns the lazy plan — the Arrow hashing pass then runs
-    # once PER SIDE of the band join on every action.
-    fp = phash_images(blobs, hasher)
-    if not materialize:
-        return hamming_band_pairs(fp, "phash", max_hamming, chunks, PHASH_BITS)
-    fp = fp.persist()
+    fp = phash_images(blobs, hasher).persist()
     try:
         out = hamming_band_pairs(fp, "phash", max_hamming, chunks, PHASH_BITS)
         return out.localCheckpoint(eager=True)
@@ -911,7 +904,6 @@ def audio_near_dups(
     max_hamming: int = 8,
     chunks: int = 4,
     hasher: Callable[[bytes], int] | None = None,
-    materialize: bool = True,
 ) -> DataFrame:
     """Audio near-dup pairs by energy-delta fingerprint:
     ``(doc_a, doc_b, hamming)`` — re-encoded/re-gained copies of one
@@ -919,17 +911,13 @@ def audio_near_dups(
     dedup). Identical cadence and contract to ``phash_near_dups``:
     one Arrow hashing pass (persisted so the band self-join reads it
     twice without re-decoding) into the shared 15-bit-chunk Hamming
-    band join; ``materialize=False`` returns the lazy plan, the
-    default returns a releasable eager checkpoint
+    band join, returned as a releasable eager checkpoint
     (``util.release_result``)."""
     from pagerank_mapreduce_implementation_spark.operators.dedup import (
         hamming_band_pairs,
     )
 
-    fp = audio_fingerprints(blobs, hasher)
-    if not materialize:
-        return hamming_band_pairs(fp, "afp", max_hamming, chunks, PHASH_BITS)
-    fp = fp.persist()
+    fp = audio_fingerprints(blobs, hasher).persist()
     try:
         out = hamming_band_pairs(fp, "afp", max_hamming, chunks, PHASH_BITS)
         return out.localCheckpoint(eager=True)

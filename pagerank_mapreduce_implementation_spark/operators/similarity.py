@@ -502,8 +502,9 @@ def lloyd_centroids(
     Deterministic seed, no RNG; empty cells keep their previous
     centroid (the coalesce against the prior array). Lineage is cut
     each iteration with a lazy localCheckpoint so the final job does
-    not replay every earlier assignment pass; after the final collect,
-    every RDD the checkpoints pinned is released at the RDD layer
+    not replay every earlier assignment pass; after the final collect
+    (or when the loop raises), every RDD the checkpoints pinned is
+    released at the RDD layer
     (round-5 advice: ``DataFrame.unpersist()`` is a NO-OP on
     localCheckpoint'ed frames — the checkpoint persists the underlying
     RDD outside the cache manager, so the release must diff
@@ -552,85 +553,87 @@ def lloyd_centroids(
     )
 
     rdds_before = _persistent_rdd_ids(spark)
-    for _ in range(n_iters):
-        staged = emb.crossJoin(F.broadcast(cur)).select(
-            F.col(id_col).alias("__id"),
-            F.col(vec_col).cast("array<double>").alias("vec"),
-            _norm(F.col(vec_col)).alias("vnorm"),
-            F.col("cents"),
-        )
-        scores = F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                (_dot(F.col("vec"), c["cvec"]) / (F.col("vnorm") * c["cnorm"])).alias(
-                    "ccos"
+    try:
+        for _ in range(n_iters):
+            staged = emb.crossJoin(F.broadcast(cur)).select(
+                F.col(id_col).alias("__id"),
+                F.col(vec_col).cast("array<double>").alias("vec"),
+                _norm(F.col(vec_col)).alias("vnorm"),
+                F.col("cents"),
+            )
+            scores = F.transform(
+                F.col("cents"),
+                lambda c: F.struct(
+                    (
+                        _dot(F.col("vec"), c["cvec"]) / (F.col("vnorm") * c["cnorm"])
+                    ).alias("ccos"),
+                    c["cell_id"].alias("cell_id"),
                 ),
-                c["cell_id"].alias("cell_id"),
-            ),
-        )
-        best = F.aggregate(
-            scores,
-            F.struct(F.lit(-2.0).alias("ccos"), F.lit(0).alias("cell_id")),
-            lambda b, s: F.when(s["ccos"] > b["ccos"], s).otherwise(b),
-        )
-        assign = staged.select("__id", "vec", best["cell_id"].alias("cell_id"))
-        if exact_mean:
-            # deterministic mean: id-sorted member list, ONE sequential
-            # elementwise fold (0.0 + v1 + v2 + ...) — identical to the
-            # oracle's list_reduce over list(vec ORDER BY id)
-            mem = assign.groupBy("cell_id").agg(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("__id"), F.col("vec")))
-                ).alias("ms")
             )
-            mvec = F.transform(
-                F.aggregate(
-                    F.col("ms"),
-                    F.array_repeat(F.lit(0.0), dims),
-                    lambda acc, m: F.zip_with(acc, m["vec"], lambda a, b: a + b),
-                ),
-                lambda s: s / F.size(F.col("ms")),
+            best = F.aggregate(
+                scores,
+                F.struct(F.lit(-2.0).alias("ccos"), F.lit(0).alias("cell_id")),
+                lambda b, s: F.when(s["ccos"] > b["ccos"], s).otherwise(b),
             )
-            means_1row = mem.select("cell_id", mvec.alias("mvec")).agg(
-                F.collect_list(F.struct("cell_id", "mvec")).alias("m")
-            )
-        else:
-            means_1row = (
-                assign.groupBy("cell_id")
-                .agg(*[F.avg(F.col("vec")[i]).alias(f"c{i}") for i in range(dims)])
-                .select(
-                    "cell_id",
-                    F.array(*[F.col(f"c{i}") for i in range(dims)]).alias("mvec"),
+            assign = staged.select("__id", "vec", best["cell_id"].alias("cell_id"))
+            if exact_mean:
+                # deterministic mean: id-sorted member list, ONE sequential
+                # elementwise fold (0.0 + v1 + v2 + ...) — identical to the
+                # oracle's list_reduce over list(vec ORDER BY id)
+                mem = assign.groupBy("cell_id").agg(
+                    F.sort_array(
+                        F.collect_list(F.struct(F.col("__id"), F.col("vec")))
+                    ).alias("ms")
                 )
-                .agg(F.collect_list(F.struct("cell_id", "mvec")).alias("m"))
-            )
-        # merge: each cell takes its new mean, or keeps its previous
-        # centroid when no vector landed in it this round
-        cur = _with_cnorms(
-            cur.crossJoin(means_1row).select(
-                F.transform(
-                    "cents",
-                    lambda c: F.struct(
-                        c["cell_id"].alias("cell_id"),
-                        F.coalesce(
-                            F.get(
-                                F.filter(
-                                    F.col("m"),
-                                    lambda s: s["cell_id"] == c["cell_id"],
-                                ),
-                                F.lit(0),
-                            )["mvec"],
-                            c["cvec"],
-                        ).alias("cvec"),
+                mvec = F.transform(
+                    F.aggregate(
+                        F.col("ms"),
+                        F.array_repeat(F.lit(0.0), dims),
+                        lambda acc, m: F.zip_with(acc, m["vec"], lambda a, b: a + b),
                     ),
-                ).alias("cents")
+                    lambda s: s / F.size(F.col("ms")),
+                )
+                means_1row = mem.select("cell_id", mvec.alias("mvec")).agg(
+                    F.collect_list(F.struct("cell_id", "mvec")).alias("m")
+                )
+            else:
+                means_1row = (
+                    assign.groupBy("cell_id")
+                    .agg(*[F.avg(F.col("vec")[i]).alias(f"c{i}") for i in range(dims)])
+                    .select(
+                        "cell_id",
+                        F.array(*[F.col(f"c{i}") for i in range(dims)]).alias("mvec"),
+                    )
+                    .agg(F.collect_list(F.struct("cell_id", "mvec")).alias("m"))
+                )
+            # merge: each cell takes its new mean, or keeps its previous
+            # centroid when no vector landed in it this round
+            cur = _with_cnorms(
+                cur.crossJoin(means_1row).select(
+                    F.transform(
+                        "cents",
+                        lambda c: F.struct(
+                            c["cell_id"].alias("cell_id"),
+                            F.coalesce(
+                                F.get(
+                                    F.filter(
+                                        F.col("m"),
+                                        lambda s: s["cell_id"] == c["cell_id"],
+                                    ),
+                                    F.lit(0),
+                                )["mvec"],
+                                c["cvec"],
+                            ).alias("cvec"),
+                        ),
+                    ).alias("cents")
+                )
             )
-        )
-        cur = cur.localCheckpoint(eager=False)
+            cur = cur.localCheckpoint(eager=False)
 
-    row = cur.select("cents").first()
+        row = cur.select("cents").first()
+    finally:
+        _release_persistent_rdds_since(spark, rdds_before)
     cents = row["cents"] if row is not None else []
-    _release_persistent_rdds_since(spark, rdds_before)
     return [[float(x) for x in c["cvec"]] for c in cents]
 
 
@@ -872,7 +875,7 @@ def pq_train(
     a zero-shuffle broadcast fold, and each iteration shuffles only
     the ``(s, code)`` partial means. Lineage is cut per iteration with
     a lazy localCheckpoint and released at the RDD layer after the
-    final collect (the lloyd_centroids contract).
+    final collect or on a raise (the lloyd_centroids contract).
     """
     if m < 1 or k < 1:
         raise ValueError(f"m ({m}) and k ({k}) must be >= 1")
@@ -921,67 +924,69 @@ def pq_train(
     )
 
     rdds_before = _persistent_rdd_ids(spark)
-    for _ in range(n_iters):
-        staged = sub.crossJoin(F.broadcast(cur))
-        cands = F.filter(F.col("cb"), lambda e: e["s"] == F.col("s"))
-        best = F.aggregate(
-            F.transform(
-                cands,
-                lambda e: F.struct(
-                    _sq_l2(F.col("subvec"), e["cvec"]).alias("d2"),
-                    e["code"].alias("code"),
+    try:
+        for _ in range(n_iters):
+            staged = sub.crossJoin(F.broadcast(cur))
+            cands = F.filter(F.col("cb"), lambda e: e["s"] == F.col("s"))
+            best = F.aggregate(
+                F.transform(
+                    cands,
+                    lambda e: F.struct(
+                        _sq_l2(F.col("subvec"), e["cvec"]).alias("d2"),
+                        e["code"].alias("code"),
+                    ),
                 ),
-            ),
-            F.struct(
-                F.lit(float("inf")).alias("d2"), F.lit(0).alias("code")
-            ),
-            # strict < keeps the FIRST (lowest code) on ties — the
-            # array is sorted by (s, code)
-            lambda b, s: F.when(s["d2"] < b["d2"], s).otherwise(b),
-        )
-        assign = staged.select(
-            "__id", "s", "subvec", best["code"].alias("code")
-        )
-        mem = assign.groupBy("s", "code").agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("__id"), F.col("subvec")))
-            ).alias("ms")
-        )
-        mvec = F.transform(
-            F.aggregate(
-                F.col("ms"),
-                F.array_repeat(F.lit(0.0), sd),
-                lambda acc, e: F.zip_with(acc, e["subvec"], lambda a, b: a + b),
-            ),
-            lambda x: x / F.size(F.col("ms")),
-        )
-        means_1row = mem.select("s", "code", mvec.alias("mvec")).agg(
-            F.collect_list(F.struct("s", "code", "mvec")).alias("mn")
-        )
-        cur = cur.crossJoin(means_1row).select(
-            F.transform(
-                "cb",
-                lambda e: F.struct(
-                    e["s"].alias("s"),
-                    e["code"].alias("code"),
-                    F.coalesce(
-                        F.get(
-                            F.filter(
-                                F.col("mn"),
-                                lambda x: (x["s"] == e["s"])
-                                & (x["code"] == e["code"]),
-                            ),
-                            F.lit(0),
-                        )["mvec"],
-                        e["cvec"],
-                    ).alias("cvec"),
+                F.struct(
+                    F.lit(float("inf")).alias("d2"), F.lit(0).alias("code")
                 ),
-            ).alias("cb")
-        )
-        cur = cur.localCheckpoint(eager=False)
+                # strict < keeps the FIRST (lowest code) on ties — the
+                # array is sorted by (s, code)
+                lambda b, s: F.when(s["d2"] < b["d2"], s).otherwise(b),
+            )
+            assign = staged.select(
+                "__id", "s", "subvec", best["code"].alias("code")
+            )
+            mem = assign.groupBy("s", "code").agg(
+                F.sort_array(
+                    F.collect_list(F.struct(F.col("__id"), F.col("subvec")))
+                ).alias("ms")
+            )
+            mvec = F.transform(
+                F.aggregate(
+                    F.col("ms"),
+                    F.array_repeat(F.lit(0.0), sd),
+                    lambda acc, e: F.zip_with(acc, e["subvec"], lambda a, b: a + b),
+                ),
+                lambda x: x / F.size(F.col("ms")),
+            )
+            means_1row = mem.select("s", "code", mvec.alias("mvec")).agg(
+                F.collect_list(F.struct("s", "code", "mvec")).alias("mn")
+            )
+            cur = cur.crossJoin(means_1row).select(
+                F.transform(
+                    "cb",
+                    lambda e: F.struct(
+                        e["s"].alias("s"),
+                        e["code"].alias("code"),
+                        F.coalesce(
+                            F.get(
+                                F.filter(
+                                    F.col("mn"),
+                                    lambda x: (x["s"] == e["s"])
+                                    & (x["code"] == e["code"]),
+                                ),
+                                F.lit(0),
+                            )["mvec"],
+                            e["cvec"],
+                        ).alias("cvec"),
+                    ),
+                ).alias("cb")
+            )
+            cur = cur.localCheckpoint(eager=False)
 
-    row = cur.select("cb").first()
-    _release_persistent_rdds_since(spark, rdds_before)
+        row = cur.select("cb").first()
+    finally:
+        _release_persistent_rdds_since(spark, rdds_before)
     if row is None:
         return []
     books: list[list[list[float]]] = [
@@ -1263,7 +1268,6 @@ def margin_matches_ab(
     bands: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    materialize: bool = True,
 ) -> DataFrame:
     """Margin-criterion cross-corpus mining (Artetxe & Schwenk 2019,
     the CCMatrix/LASER bitext scorer): ``(id_a, id_b, cos, margin)``
@@ -1293,14 +1297,8 @@ def margin_matches_ab(
     partition by one vector's id over its HIT-SIZED candidate list;
     the denominator tables are id-keyed aggregates joined back on the
     candidate set. Raise ``bands`` for recall, ``k`` for neighborhood
-    smoothing; both knobs are mirrored in the oracle.
-    ``materialize=False`` skips the eager final checkpoint and returns
-    the lazy composable plan (streaming/pushdown callers — the
-    ``bipartite_projection`` escape hatch); the scored-candidate
-    persist stays, cache lifetime owned by the caller — release with
-    ``util.release_plan_caches(plan)`` when done (uncaches exactly
-    what this plan pins; never ``clearCache()``). If plan ASSEMBLY
-    raises before the handoff, the persist is released internally.
+    smoothing; both knobs are mirrored in the oracle. The result is an
+    eager checkpoint; release it with ``util.release_result`` when done.
     """
     if k < 1:
         raise ValueError(f"k ({k}) must be >= 1")
@@ -1343,13 +1341,6 @@ def margin_matches_ab(
         )
         .persist()
     )
-    # r14 advisory (+ r15 review): with materialize=False the caller
-    # owns the persist lifetime ONLY once the lazy plan is successfully
-    # returned — an exception ANYWHERE in plan assembly (the window/
-    # groupBy transforms analyze eagerly on the JVM) must still release
-    # the cache, so the try opens immediately after the persist and a
-    # handoff flag (not the materialize flag) keys the finally.
-    handed_off = False
     try:
         ranked = sc.withColumn(
             "__ra",
@@ -1390,10 +1381,6 @@ def margin_matches_ab(
             )
             .filter(F.col("margin") >= margin_threshold)
         )
-        if not materialize:
-            handed_off = True
-            return out
         return out.localCheckpoint(eager=True)
     finally:
-        if not handed_off:
-            sc.unpersist()
+        sc.unpersist()

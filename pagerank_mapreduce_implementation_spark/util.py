@@ -49,8 +49,9 @@ def release_result(df) -> None:
     result — a DataFrame an operator returned via
     ``localCheckpoint(eager=True)`` (``minhash_near_dups``,
     ``ngram_jaccard_pairs``, ``simhash_near_dups``,
-    ``incremental_minhash_dedup``, ``embedding_cosine_dups``,
-    ``phash_near_dups``, ...). Call it when you are DONE with the
+    ``incremental_minhash_dedup``, ``substring_runs``,
+    ``phash_near_dups``, ``bipartite_projection``,
+    ``margin_matches_ab``, ...). Call it when you are DONE with the
     result: the checkpoint's lineage is truncated, so any action on
     ``df`` after release fails loudly with
     ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND`` rather than silently
@@ -67,7 +68,7 @@ def release_result(df) -> None:
     reference, not just a checkpoint at the root. A lazy
     (non-checkpointed) DataFrame is accepted and ignored — releasing a
     plan that pins nothing is a no-op, so callers can release
-    unconditionally (e.g. results obtained with ``materialize=False``).
+    unconditionally (e.g. ``cosine_pairs_lsh``'s lazy default result).
 
     Shared-lineage caveat: a checkpoint referenced by TWO live frames
     dies for both — release only when done with everything derived
@@ -76,42 +77,3 @@ def release_result(df) -> None:
     for rdd in checkpoint_rdds(df).values():
         rdd.unpersist(False)
 
-
-def release_plan_caches(df) -> None:
-    """Release every PERSISTED frame a LAZY operator result references
-    — the counterpart of ``release_result`` for ``materialize=False``
-    outputs (``bipartite_projection``, ``margin_matches_ab``, ...)
-    whose plan embeds an operator-internal ``persist()`` the caller
-    otherwise has no handle to. Walks the plan WITH cache substitution
-    applied (``withCachedData`` — the analyzed plan never shows
-    ``InMemoryRelation``; substitution happens after analysis) and
-    fully uncaches each relation via the session CacheManager
-    (``uncacheQuery(cascade=False, blocking=True)``), so the entry is
-    REMOVED, not just its buffers dropped: ``df`` stays valid and
-    recomputes from source on any later action, and other plans that
-    referenced the same cache likewise fall back to recompute (the
-    same shared-lineage rule as any manual unpersist).
-
-    Why this exists (round-14 advice): the docstrings used to
-    delegate lazy-path cleanup to ``spark.catalog.clearCache()``,
-    which nukes EVERY cache in the session — a blunt instrument for
-    long-lived sessions. This releases exactly the caches the one
-    plan pins. Nested persists (a cached frame built over another
-    cached frame) are reached by re-applying cache substitution to
-    each relation's stored child plan (``cacheManager.useCachedData``
-    — the stored plan itself is PRE-substitution, so walking it raw
-    would miss the inner cache). No-op on plans that pin nothing, so
-    callers can release unconditionally."""
-    spark = df.sparkSession
-    jsess = spark._jsparkSession
-    cm = jsess.sharedState().cacheManager()
-    stack = [df._jdf.queryExecution().withCachedData()]
-    while stack:
-        p = stack.pop()
-        if p.getClass().getSimpleName() == "InMemoryRelation":
-            inner = p.cacheBuilder().logicalPlan()
-            cm.uncacheQuery(jsess, inner, False, True)
-            stack.append(cm.useCachedData(inner))
-        children = p.children()
-        for i in range(children.length()):
-            stack.append(children.apply(i))

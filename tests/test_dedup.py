@@ -412,28 +412,23 @@ def _cached_rdd_ids(spark):
 def test_materialized_results_are_releasable_by_direct_callers(spark, planted):
     """Round-7 verdict item 4: the eager-checkpoint returns must be
     releasable WITHOUT going through programs.clean_corpus. Contract:
-    materialize=True pins exactly the result (release_result frees it);
-    materialize=False pins nothing and returns identical rows."""
+    each result pins exactly its checkpoint (release_result frees it
+    and every internal persist is already gone)."""
     from pagerank_mapreduce_implementation_spark.util import release_result
 
     ops = [
-        lambda m: dedup.minhash_near_dups(planted, 0.5, ngram=3, materialize=m),
-        lambda m: dedup.ngram_jaccard_pairs(planted, 0.5, ngram=3, materialize=m),
-        lambda m: dedup.ngram_jaccard_prefix_pairs(
-            planted, 0.5, ngram=3, materialize=m
-        ),
-        lambda m: dedup.ngram_containment_pairs(
-            planted, 0.5, ngram=3, materialize=m
-        ),
-        lambda m: dedup.simhash_near_dups(planted, 60, materialize=m),
-        lambda m: dedup.incremental_minhash_dedup(
+        lambda: dedup.minhash_near_dups(planted, 0.5, ngram=3),
+        lambda: dedup.ngram_jaccard_pairs(planted, 0.5, ngram=3),
+        lambda: dedup.ngram_jaccard_prefix_pairs(planted, 0.5, ngram=3),
+        lambda: dedup.ngram_containment_pairs(planted, 0.5, ngram=3),
+        lambda: dedup.simhash_near_dups(planted, 60),
+        lambda: dedup.incremental_minhash_dedup(
             planted.filter("doc_id >= 3"),
             dedup.minhash_signatures(
                 dedup.shingles(planted.filter("doc_id <= 2"), 3)
             ),
             threshold=0.5,
             ngram=3,
-            materialize=m,
         ),
     ]
     # NB: compare via set DIFFERENCE, not equality — Spark's
@@ -441,15 +436,11 @@ def test_materialized_results_are_releasable_by_direct_callers(spark, planted):
     # tests, shrinking the baseline mid-assert
     for build in ops:
         before = _cached_rdd_ids(spark)
-        lazy_rows = sorted(tuple(r) for r in build(False).collect())
-        assert not _cached_rdd_ids(spark) - before  # lazy pins nothing
-        out = build(True)
-        eager_rows = sorted(tuple(r) for r in out.collect())
-        assert eager_rows == lazy_rows
+        out = build()
+        out.collect()
         assert _cached_rdd_ids(spark) - before  # checkpoint is pinned
         release_result(out)
         assert not _cached_rdd_ids(spark) - before  # ... and released
-        release_result(build(False))  # no-op on a lazy frame
 
 
 def test_phash_near_dups_releasable(spark):
@@ -461,88 +452,11 @@ def test_phash_near_dups_releasable(spark):
         "doc_id long, content binary",
     )
     before = _cached_rdd_ids(spark)
-    lazy_rows = sorted(
-        tuple(r) for r in multimodal.phash_near_dups(blobs, materialize=False).collect()
-    )
-    assert not _cached_rdd_ids(spark) - before
     out = multimodal.phash_near_dups(blobs)
-    assert sorted(tuple(r) for r in out.collect()) == lazy_rows
+    assert out.collect()
     assert _cached_rdd_ids(spark) - before
     release_result(out)
     assert not _cached_rdd_ids(spark) - before
-
-
-def test_release_plan_caches_lazy_operator_outputs(spark):
-    """Round-14 advice: materialize=False outputs whose plan embeds an
-    operator-internal persist (bipartite_projection, margin_matches_ab)
-    must have a NARROW release path — util.release_plan_caches frees
-    exactly the caches the one plan pins (never clearCache), and the
-    plan stays valid afterwards (recomputes from source, identical
-    rows)."""
-    import numpy as np
-
-    from pagerank_mapreduce_implementation_spark.operators import (
-        graph,
-        similarity,
-    )
-    from pagerank_mapreduce_implementation_spark.util import (
-        release_plan_caches,
-    )
-
-    e = spark.createDataFrame(
-        [("o1", "p1"), ("o1", "p2"), ("o2", "p1"), ("o2", "p2"),
-         ("o3", "p1"), ("o1", "p9"), ("o2", "p9"), ("o3", "p9")],
-        "src string, dst string",
-    )
-    rng = np.random.default_rng(7)
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in rng.normal(size=8)]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    builds = [
-        lambda: graph.bipartite_projection(
-            e, min_shared=1, max_right_degree=4, materialize=False
-        ),
-        lambda: similarity.margin_matches_ab(
-            emb.filter("vec_id % 2 = 0"),
-            emb.filter("vec_id % 2 = 1"),
-            k=3,
-            margin_threshold=0.0,
-            materialize=False,
-        ),
-    ]
-    for build in builds:
-        before = _cached_rdd_ids(spark)
-        plan = build()
-        rows = sorted(tuple(r) for r in plan.collect())
-        assert rows, "vacuous: lazy plan produced no rows"
-        assert _cached_rdd_ids(spark) - before  # the internal persist
-        release_plan_caches(plan)
-        assert not _cached_rdd_ids(spark) - before  # ... narrowly freed
-        # the plan is still usable — it recomputes, identically
-        assert sorted(tuple(r) for r in plan.collect()) == rows
-        release_plan_caches(plan)  # idempotent / no-op second release
-
-
-def test_release_plan_caches_reaches_nested_persists(spark):
-    """A cached frame built OVER another cached frame: the walk must
-    recurse through each InMemoryRelation's pre-substitution child
-    plan, releasing both layers — and the plan still recomputes."""
-    from pagerank_mapreduce_implementation_spark.util import (
-        release_plan_caches,
-    )
-
-    before = _cached_rdd_ids(spark)
-    inner = spark.range(1000).selectExpr("id", "id % 7 as g").persist()
-    outer = (
-        inner.groupBy("g").count().persist()
-    )
-    plan = outer.selectExpr("sum(count) as total")
-    rows = plan.collect()
-    assert _cached_rdd_ids(spark) - before
-    release_plan_caches(plan)
-    assert not _cached_rdd_ids(spark) - before
-    assert plan.collect() == rows
 
 
 def test_ks_drift_leaves_no_pinned_cache(spark):
@@ -607,25 +521,15 @@ def _docs_of(spark, *texts):
 
 
 def test_substring_runs_materialize_contract(spark):
-    """materialize=True (the driver-query setting) returns the same
-    rows as the lazy default, pins an eager checkpoint the lazy path
-    does not, and releases cleanly via util.release_result."""
+    """substring_runs returns an eager checkpoint that pins storage and
+    releases cleanly via util.release_result, gram persist included."""
     from pagerank_mapreduce_implementation_spark.util import release_result
 
     passage = " ".join(f"w{i}" for i in range(20))
     docs = _docs_of(spark, passage, f"j1 j2 j3 {passage} q1 q2")
     before = _cached_rdd_ids(spark)
-    lazy = sorted(
-        tuple(r)
-        for r in dedup.substring_runs(
-            docs, k=8, min_len=12, max_gram_df=64
-        ).collect()
-    )
-    assert not _cached_rdd_ids(spark) - before  # lazy pins nothing
-    out = dedup.substring_runs(
-        docs, k=8, min_len=12, max_gram_df=64, materialize=True
-    )
-    assert sorted(tuple(r) for r in out.collect()) == lazy and lazy
+    out = dedup.substring_runs(docs, k=8, min_len=12, max_gram_df=64)
+    assert out.collect()
     assert _cached_rdd_ids(spark) - before  # checkpoint pinned
     release_result(out)
     assert not _cached_rdd_ids(spark) - before  # gram persist released too

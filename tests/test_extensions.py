@@ -794,6 +794,43 @@ def test_lloyd_releases_checkpoint_storage(spark):
     assert not leaked, f"lloyd_centroids leaked cached RDDs: {leaked}"
 
 
+@pytest.mark.parametrize(
+    "helper, fail_at, train",
+    [
+        # _with_cnorms runs once for the seed, then once per iteration
+        ("_with_cnorms", 3, lambda e: similarity.lloyd_centroids(e, 4, n_iters=3)),
+        # _sq_l2 runs once per iteration
+        ("_sq_l2", 2, lambda e: similarity.pq_train(e, m=2, k=4, n_iters=3)),
+    ],
+    ids=["lloyd_centroids", "pq_train"],
+)
+def test_training_loop_releases_checkpoints_when_it_raises(
+    spark, monkeypatch, helper, fail_at, train
+):
+    """A failure in iteration 2 must still release the lazy checkpoint
+    iteration 1 pinned — the release runs on every exit, not only
+    after the final collect."""
+    from pagerank_mapreduce_implementation_spark.util import persistent_rdd_ids
+
+    rows = [(i, [float(i % 4), float((i * 7) % 5), 1.0, 2.0]) for i in range(40)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    orig = getattr(similarity, helper)
+    calls = 0
+
+    def failing(*args):
+        nonlocal calls
+        calls += 1
+        if calls == fail_at:
+            raise RuntimeError("injected")
+        return orig(*args)
+
+    monkeypatch.setattr(similarity, helper, failing)
+    before = persistent_rdd_ids(spark)
+    with pytest.raises(RuntimeError, match="injected"):
+        train(emb)
+    assert persistent_rdd_ids(spark) - before == set()
+
+
 def test_weighted_sample_deterministic_and_proportional(spark):
     from pagerank_mapreduce_implementation_spark.operators.sampling import weighted_sample
 

@@ -5,6 +5,7 @@ PIL-free — the PPM codec chain is vendored, so these run everywhere
 from __future__ import annotations
 
 from pagerank_mapreduce_implementation_spark.operators import multimodal as mm
+from pagerank_mapreduce_implementation_spark.util import release_result
 
 
 def test_ppm_ahash_golden_gray_ramp():
@@ -62,10 +63,9 @@ def test_phash_near_dups_finds_recompressed_copy(spark):
         [(1, img("x")), (2, img("x", flip=7)), (3, img("unrelated"))],
         "doc_id long, content binary",
     )
-    pairs = {
-        (r.doc_a, r.doc_b)
-        for r in mm.phash_near_dups(blobs, max_hamming=10, materialize=False).collect()
-    }
+    out = mm.phash_near_dups(blobs, max_hamming=10)
+    pairs = {(r.doc_a, r.doc_b) for r in out.collect()}
+    release_result(out)
     assert (1, 2) in pairs
     assert (1, 3) not in pairs and (2, 3) not in pairs
 
@@ -134,12 +134,9 @@ def test_dcthash_near_dup_recall_through_band_join(spark):
          (3, _cell_image(other))],
         "doc_id long, content binary",
     )
-    rows = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in mm.phash_near_dups(
-            blobs, max_hamming=6, hasher=mm.ppm_dcthash, materialize=False
-        ).collect()
-    }
+    out = mm.phash_near_dups(blobs, max_hamming=6, hasher=mm.ppm_dcthash)
+    rows = {(r.doc_a, r.doc_b): r.hamming for r in out.collect()}
+    release_result(out)
     assert rows.get((1, 2)) == 0
     assert (1, 3) not in rows and (2, 3) not in rows
 
@@ -210,11 +207,9 @@ def test_wav_fingerprint_discriminates_and_rejects_stubs():
 
 def test_audio_near_dups_finds_regained_copy(spark):
     """End-to-end: a re-gained copy pairs at Hamming 0 through the
-    shared band join; unrelated clips stay apart; the materialize
-    contract matches phash_near_dups."""
+    shared band join; unrelated clips stay apart; the result is a
+    releasable checkpoint, as in phash_near_dups."""
     import numpy as np
-
-    from pagerank_mapreduce_implementation_spark.util import release_result
 
     sig = mm.wav_test_signal(7, base=256)
     half = (sig.astype(np.int64) // 2).astype("<i2")
@@ -227,17 +222,11 @@ def test_audio_near_dups_finds_regained_copy(spark):
         ],
         "doc_id long, content binary",
     )
-    lazy = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in mm.audio_near_dups(blobs, max_hamming=6, materialize=False).collect()
-    }
-    assert lazy.get((1, 2)) == 0
-    assert (1, 3) not in lazy and (2, 3) not in lazy
     out = mm.audio_near_dups(blobs, max_hamming=6)
-    assert {
-        (r.doc_a, r.doc_b): r.hamming for r in out.collect()
-    } == lazy
+    rows = {(r.doc_a, r.doc_b): r.hamming for r in out.collect()}
     release_result(out)
+    assert rows.get((1, 2)) == 0
+    assert (1, 3) not in rows and (2, 3) not in rows
 
 
 def _video(frame_ids, flip=None):
@@ -308,8 +297,6 @@ def test_video_near_dups_materialize_contract(spark):
     """Default materializes (ONE demux+hash pass for both join sides —
     decode dominates for video) and releases; lazy mode pins nothing
     and returns identical rows."""
-    from pagerank_mapreduce_implementation_spark.util import release_result
-
     def cached():
         return {
             int(i.id())
@@ -564,15 +551,11 @@ def test_wav_spectral_fingerprint_discriminates_and_bands(spark):
         ],
         "doc_id long, content binary",
     )
-    rows = {
-        (r.doc_a, r.doc_b): r.hamming
-        for r in mm.audio_near_dups(
-            blobs,
-            max_hamming=4,
-            hasher=mm.wav_spectral_fingerprint,
-            materialize=False,
-        ).collect()
-    }
+    out = mm.audio_near_dups(
+        blobs, max_hamming=4, hasher=mm.wav_spectral_fingerprint
+    )
+    rows = {(r.doc_a, r.doc_b): r.hamming for r in out.collect()}
+    release_result(out)
     assert rows.get((1, 2)) == 0
     assert (1, 3) not in rows and (2, 3) not in rows
 
@@ -647,15 +630,11 @@ def test_audio_spectral_dups_wrap_parity(spark):
 
     docs = spark.range(n).withColumnRenamed("id", "doc_id")
     blobs = docs.mapInPandas(synth, schema=mm.BLOB_SCHEMA)
-    got = {
-        (r.doc_a, r.doc_b)
-        for r in mm.audio_near_dups(
-            blobs,
-            max_hamming=0,
-            hasher=mm.wav_spectral_fingerprint,
-            materialize=False,
-        ).collect()
-    }
+    out = mm.audio_near_dups(
+        blobs, max_hamming=0, hasher=mm.wav_spectral_fingerprint
+    )
+    got = {(r.doc_a, r.doc_b) for r in out.collect()}
+    release_result(out)
     want = {
         (a, b)
         for a in range(n)

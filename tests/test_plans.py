@@ -489,17 +489,16 @@ def test_substring_runs_window_keyed_by_pair_and_diagonal(spark, sf_dir):
     """substring_dedup's gaps-and-islands window partitions by
     (doc_a, doc_b, diagonal) — candidate-volume-sized — never by a
     corpus-wide key; candidates come from the gram-hash equi-join,
-    never a cartesian. Inspected on the LAZY operator — the registry
-    query's eager checkpoint (materialize=True since round 9)
-    truncates the lineage to a LogicalRDD scan."""
+    never a cartesian. Inspected on the lazy body substring_runs
+    checkpoints — the operator's eager checkpoint truncates the
+    lineage to a LogicalRDD scan."""
     from pagerank_mapreduce_implementation_spark.operators import dedup
     from pagerank_mapreduce_implementation_spark.sources.catalog import Catalog
 
-    p = plan_of(
-        dedup.substring_runs(
-            Catalog(spark, sf_dir).documents, k=8, min_len=12, max_gram_df=64
-        )
+    grams = dedup._gram_positions(
+        Catalog(spark, sf_dir).documents, 8, "text", "doc_id"
     )
+    p = plan_of(dedup._runs_from_grams(grams, k=8, min_len=12, max_gram_df=64))
     assert "CartesianProduct" not in p
     # every window spec opens with the pair columns
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", p)
@@ -510,8 +509,9 @@ def test_substring_runs_window_keyed_by_pair_and_diagonal(spark, sf_dir):
 
 def test_phash_images_one_arrow_pass_no_shuffle(spark):
     """The hashing pass is ONE Arrow mapInPandas over the blobs —
-    narrow, zero exchanges; the default phash_near_dups persists it so
-    the band self-join reads the hashes twice without re-decoding."""
+    narrow, zero exchanges; phash_near_dups persists it so the band
+    self-join reads the hashes twice without re-decoding."""
+    from pagerank_mapreduce_implementation_spark.operators import dedup
     from pagerank_mapreduce_implementation_spark.operators import multimodal as mm
 
     blobs = spark.createDataFrame(
@@ -521,9 +521,11 @@ def test_phash_images_one_arrow_pass_no_shuffle(spark):
     p = plan_of(mm.phash_images(blobs))
     assert p.count("MapInPandas") == 1
     assert "Exchange" not in p
-    # the band join over the fingerprints: equi-join on (chunk, key),
-    # never the all-pairs product
-    p2 = plan_of(mm.phash_near_dups(blobs, materialize=False))
+    # the band join over the fingerprints (the body phash_near_dups
+    # checkpoints): equi-join on (chunk, key), never the all-pairs product
+    p2 = plan_of(
+        dedup.hamming_band_pairs(mm.phash_images(blobs), "phash", 10, 4, mm.PHASH_BITS)
+    )
     assert "CartesianProduct" not in p2 and "BroadcastNestedLoopJoin" not in p2
 
 
