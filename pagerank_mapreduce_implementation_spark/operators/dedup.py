@@ -57,7 +57,6 @@ def exact_dedup(
     docs: DataFrame,
     text_col: str = "text",
     doc_col: str = "doc_id",
-    skew_safe: bool = False,
 ) -> DataFrame:
     """Exact dedup by content fingerprint.
 
@@ -69,25 +68,12 @@ def exact_dedup(
     into a single task, so the hottest fingerprint's duplicate count is
     the straggler bound — fine on real corpora (the hot key is
     boilerplate, still a small fraction of rows), pathological if
-    billions of rows share one fingerprint. ``skew_safe=True`` switches
-    to a groupBy(min)+join plan with identical output: the partial
-    (map-side) aggregation collapses each hot key to one row per input
-    partition BEFORE the shuffle, and the keeper join back is a plain
-    equi-join that AQE's skew-join splitting can handle — the shape to
-    pick for adversarial corpora, at the cost of a second shuffle.
+    billions of rows share one fingerprint.
     """
     from pyspark.sql.window import Window
 
     fp = F.md5(normalize_text(F.col(text_col))).alias("fingerprint")
     base = docs.select(F.col(doc_col).alias("doc_id"), fp)
-    if skew_safe:
-        keepers = base.groupBy("fingerprint").agg(F.min("doc_id").alias("keeper"))
-        return base.join(keepers, "fingerprint").select(
-            "doc_id",
-            "fingerprint",
-            "keeper",
-            (F.col("doc_id") != F.col("keeper")).cast("int").alias("is_dup"),
-        )
     w = Window.partitionBy("fingerprint")
     return (
         base.withColumn("keeper", F.min("doc_id").over(w))
@@ -952,7 +938,6 @@ def hamming_store_probe(
     max_hamming: int = 10,
     chunks: int = 4,
     bits: int = SIMHASH_BITS,
-    broadcast_store: bool = True,
 ) -> DataFrame:
     """Cross-probe of a batch fingerprint table against a persisted
     STORE of fingerprints — the incremental/streaming twin of
@@ -966,15 +951,12 @@ def hamming_store_probe(
     Candidates come from equal ``bits/chunks``-bit chunks on BOTH
     sides (same pigeonhole recall as the self-join: any pair within
     chunks-1 Hamming is guaranteed a shared chunk), verified with
-    ``bit_count(xor)``. The store's chunk index is broadcast under
-    ``broadcast_store``. The store is fingerprints-only (~8 bytes +
-    ids per doc, ×``chunks`` exploded), so the default holds to
-    roughly the 100M-fingerprint mark under an 8 GB
-    ``spark.sql.maxBroadcastTableSize``-era budget — comfortably every
-    per-tenant or per-day store, but NOT a billion-doc corpus index:
-    past the broadcast cap set ``broadcast_store=False`` to shuffle
-    against a store bucketed on (chunk, key) instead (same plan the
-    self-join uses). Stateless row-wise expressions throughout,
+    ``bit_count(xor)``. The store's chunk index is broadcast. The store
+    is fingerprints-only (~8 bytes + ids per doc, ×``chunks``
+    exploded), so the broadcast holds to roughly the 100M-fingerprint
+    mark under an 8 GB ``spark.sql.maxBroadcastTableSize``-era budget —
+    comfortably every per-tenant or per-day store, but NOT a
+    billion-doc corpus index. Stateless row-wise expressions throughout,
     which is what lets Structured Streaming run it per micro-batch
     with no state beyond the caller's final aggregation.
     """
@@ -1004,9 +986,9 @@ def hamming_store_probe(
         )
 
     stream_chunks = chunked(fp, "doc_id", fp_col, "doc_id", "__fp")
-    store_chunks = chunked(store_fp, "doc_id", fp_col, "store_id", "fp_s")
-    if broadcast_store:
-        store_chunks = F.broadcast(store_chunks)
+    store_chunks = F.broadcast(
+        chunked(store_fp, "doc_id", fp_col, "store_id", "fp_s")
+    )
     hamming = F.bit_count(F.col("__fp").bitwiseXOR(F.col("fp_s")))
     return (
         stream_chunks.join(store_chunks, ["chunk", "key"])

@@ -112,7 +112,7 @@ def degree_histogram(edges: DataFrame, direction: str = "out") -> DataFrame:
     the zero row. ``"out"``'s fat tail is what makes the scatter
     EMIT-side expensive (one row per outlink); ``"in"``'s fat tail is
     the gather-side hot key the contribution aggregation shuffles
-    into — the one that sizes `num_partitions` / motivates salting.
+    into — the one that motivates salting.
 
     Shape: degree agg -> tiny histogram agg; the zero row comes from
     two SCALAR counts (distinct vertices minus scoring keys)
@@ -150,8 +150,6 @@ def pagerank(
     n_iters: int = 10,
     mode: str = "reference",
     damping: float = DAMPING,
-    materialize_every: int = MATERIALIZE_EVERY,
-    num_partitions: int | None = None,
     vertices: DataFrame | None = None,
     seed_count: int | None = None,
     weight_col: str | None = None,
@@ -208,11 +206,10 @@ def pagerank(
     # one Exchange total in the links build). At 100 TB this is the
     # difference between 1 and 4 passes over the edge table.
     #
-    # Width: when the caller doesn't pin num_partitions, size the loop
-    # from Catalyst's PLAN-TIME size estimate (file statistics x
-    # column pruning — zero jobs, no pre-pass scan of the edge table;
-    # the verdict-flagged count() pre-pass was an extra full read of
-    # the biggest table before any work). An iterative loop wants
+    # Width: size the loop from Catalyst's PLAN-TIME size estimate
+    # (file statistics x column pruning — zero jobs, no pre-pass scan
+    # of the edge table; the verdict-flagged count() pre-pass was an
+    # extra full read of the biggest table before any work). An iterative loop wants
     # moderately coarse tasks: per-iteration stage launch costs are
     # paid 10x, so ~250k edge rows (~2 MB of pruned scan estimate) per
     # task amortizes them, while the cap at the configured shuffle
@@ -222,17 +219,16 @@ def pagerank(
     # persisted links table to core-count width (32 near-empty cache
     # partitions re-joined 10x), =false coalesces 600k rows to ONE
     # task (serializing the scatter join).
-    if num_partitions is None:
-        cap = _shuffle_width(spark)
-        est_bytes = _plan_size_bytes(edges)
-        if est_bytes is None:
-            # Private stats surface unavailable (Spark internals moved):
-            # fall back to full configured shuffle width — over-fanning
-            # a small graph costs stage-launch overhead only, while
-            # under-fanning a big one would serialize the loop.
-            num_partitions = cap
-        else:
-            num_partitions = max(1, min(cap, 1 + est_bytes // _LOOP_PARTITION_BYTES))
+    cap = _shuffle_width(spark)
+    est_bytes = _plan_size_bytes(edges)
+    if est_bytes is None:
+        # Private stats surface unavailable (Spark internals moved):
+        # fall back to full configured shuffle width — over-fanning
+        # a small graph costs stage-launch overhead only, while
+        # under-fanning a big one would serialize the loop.
+        num_partitions = cap
+    else:
+        num_partitions = max(1, min(cap, 1 + est_bytes // _LOOP_PARTITION_BYTES))
     with LoopScope(reliable_dir) as scope:
         if weight_col is not None:
             # weighted scatter: out_degree becomes sum(w) per src; a source
@@ -444,7 +440,7 @@ def pagerank(
 
         # textbook mode references ranks twice per step (contribs +
         # dangling); the dangling branch recomputes at most
-        # materialize_every-1 lazy iterations, which A/B-measures cheaper
+        # MATERIALIZE_EVERY-1 lazy iterations, which A/B-measures cheaper
         # than eagerly materializing every step (8.6s -> 6.4s at sf0.1).
         # reliable_dir switches the lineage truncation from executor-local
         # checkpoint blocks to RELIABLE checkpoints in that directory —
@@ -476,9 +472,7 @@ def pagerank(
         # the static tables and every earlier checkpoint on exit (the
         # reference GC'd intermediate dirs the same way,
         # PageRank.java:222-228,308-327).
-        result = scope.iterate(
-            ranks, step, n_iters, materialize_every, converged=converged
-        )
+        result = scope.iterate(ranks, step, n_iters, converged=converged)
         return scope.keep(result)
 
 
@@ -544,7 +538,7 @@ def connected_components(
     ``RuntimeError`` and leaves nothing pinned.
     """
     if algorithm == "star":
-        return _cc_star(edges, src_col, dst_col, max_iters)
+        return _cc_star(edges, src_col, dst_col, max_iters, reliable_dir)
     if algorithm != "label":
         raise ValueError(f"unknown algorithm {algorithm!r}")
     bidir = edges.select(
@@ -598,7 +592,11 @@ def connected_components(
 
 
 def _cc_star(
-    edges: DataFrame, src_col: str, dst_col: str, max_iters: int
+    edges: DataFrame,
+    src_col: str,
+    dst_col: str,
+    max_iters: int,
+    reliable_dir: str | None,
 ) -> DataFrame:
     """Alternating large-star/small-star connected components (Kiveris
     et al. SoCC'14) — see ``connected_components(algorithm="star")``.
@@ -624,7 +622,7 @@ def _cc_star(
     fall out of the final edge list; component minima themselves and
     never-appearing (isolated) inputs label as self.
     """
-    with LoopScope() as scope:
+    with LoopScope(reliable_dir) as scope:
         e = scope.truncate(
             edges.select(
                 F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
@@ -903,8 +901,6 @@ def label_propagation(
 
 def triangle_counts(
     edges: DataFrame,
-    num_partitions: int | None = None,
-    broadcast_adj: bool = True,
     canon: DataFrame | None = None,
     with_degree: bool = False,
 ) -> DataFrame:
@@ -940,14 +936,12 @@ def triangle_counts(
       property does not), because the intersection is ~90M hash
       probes and probing longs beats probing strings; decoded back
       at the end through the same materialized dim.
-    - ``broadcast_adj`` (default True): broadcast the grouped
-      adjacency into both probes so the intersection runs MAP-SIDE
-      over the cached oriented edges — a shuffled adjacency join
-      ships one neighbor ARRAY per edge, wedge-sized traffic (+8 s
-      measured). The
-      adjacency is vertex-count rows / edge-count total elements;
-      past the executor broadcast budget (>~100M edges) set False —
-      co-partitioned joins take over.
+    - BROADCAST adjacency: the grouped adjacency goes into both probes
+      so the intersection runs MAP-SIDE over the cached oriented edges
+      — a shuffled adjacency join ships one neighbor ARRAY per edge,
+      wedge-sized traffic (+8 s measured). The adjacency is
+      vertex-count rows / edge-count total elements, which bounds
+      this plan to the executor broadcast budget (~100M edges).
 
     Credits: a and b take ``size(intersection)`` and each closing
     vertex takes 1, all emitted by ONE explode over per-row credit
@@ -969,7 +963,7 @@ def triangle_counts(
     scanned and distinct'd ONCE, not once per consumer; ownership
     (persist/unpersist) stays with the caller.
     """
-    nparts = num_partitions or _shuffle_width(edges.sparkSession)
+    nparts = _shuffle_width(edges.sparkSession)
     with LoopScope() as scope:
         if canon is None:
             canon_str = scope.persist(
@@ -989,7 +983,7 @@ def triangle_counts(
             .distinct()
             .withColumn("vid", F.monotonically_increasing_id())
         )
-        dim = F.broadcast(vdim) if broadcast_adj else vdim
+        dim = F.broadcast(vdim)
         canon = (
             canon_str.join(dim.select(F.col("url").alias("cu"), F.col("vid").alias("u")), "cu")
             .join(dim.select(F.col("url").alias("cv"), F.col("vid").alias("v")), "cv")
@@ -1001,7 +995,7 @@ def triangle_counts(
             .groupBy("x")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        dd = F.broadcast(deg) if broadcast_adj else deg
+        dd = F.broadcast(deg)
         with_deg = (
             canon.join(dd.withColumnRenamed("x", "u").withColumnRenamed("d", "du"), "u")
             .join(dd.withColumnRenamed("x", "v").withColumnRenamed("d", "dv"), "v")
@@ -1015,9 +1009,9 @@ def triangle_counts(
                 F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
             ).repartition(nparts, "a")
         )
-        adj = oriented.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
-        if broadcast_adj:
-            adj = F.broadcast(adj)
+        adj = F.broadcast(
+            oriented.groupBy("a").agg(F.collect_list("b").alias("nbrs"))
+        )
         closed = (
             oriented.join(adj, "a")
             .join(
@@ -1074,9 +1068,7 @@ def triangle_counts(
             # caller (clustering_coefficients) a second string-keyed
             # aggregation over the canonical edges plus a vertex join
             dv = deg.withColumnRenamed("x", "vid")
-            out = out.join(
-                F.broadcast(dv) if broadcast_adj else dv, "vid", "left"
-            ).select(
+            out = out.join(F.broadcast(dv), "vid", "left").select(
                 "url",
                 F.coalesce("t", F.lit(0)).cast("long").alias("triangles"),
                 F.coalesce("d", F.lit(0)).cast("long").alias("degree"),

@@ -13,24 +13,17 @@ PAIRWISE set, so SQL needs a per-group self-join (quadratic shuffle
 blow-up at scale) while a per-group Python kernel computes it in-place
 on each group's bounded point set.
 
-Two physical modes, one semantics — the cost model to respect at
-100 TB:
+The physical plan, and the cost model to respect at 100 TB:
+``groupBy().agg(collect_list(struct))`` (JVM-side shuffle + agg) then
+ONE scalar Pandas UDF over the packed point arrays. Many groups ride in
+each Arrow batch, so the per-group Python overhead is the kernel itself
+(~20 µs for n<=32 points), not a per-group Arrow round-trip. Right for
+SMALL bounded groups (per-user, per-session) — the common corpus
+shape; ``applyInPandas`` was measured at ~3 ms/group of fixed overhead
+(1.5k groups ≈ 4.5 s), 100× the kernel cost in plumbing. A group too
+large for one array cell is outside the contract.
 
-- ``mode="batched"`` (default): ``groupBy().agg(collect_list(struct))``
-  (JVM-side shuffle + agg) then ONE scalar Pandas UDF over the packed
-  point arrays. Many groups ride in each Arrow batch, so the per-group
-  Python overhead is the kernel itself (~20 µs for n<=32 points), not
-  a per-group Arrow round-trip. Right for SMALL bounded groups
-  (per-user, per-session) — the common corpus shape. This exists
-  because the round-5 bench measured ``applyInPandas`` at ~3 ms/group
-  of fixed overhead (1.5k groups ≈ 4.5 s): routing small groups
-  through it pays 100× the kernel cost in plumbing.
-- ``mode="apply"``: ``groupBy().applyInPandas`` — each group arrives
-  as one Arrow-backed pandas frame. Right when groups are LARGE
-  (collect_list would materialize an oversized array cell) but still
-  fit a single task; pays the fixed per-group invocation cost.
-
-Both modes are arrival-order independent (the pair rule keys on x
+The kernel is arrival-order independent (the pair rule keys on x
 VALUES, the median sorts), so the surface sits behind the driver's
 exact hash gate.
 """
@@ -65,7 +58,6 @@ def grouped_theilsen(
     group_col: str,
     x_col: str,
     y_col: str,
-    mode: str = "batched",
     ndigits: int = 9,
 ) -> DataFrame:
     """Per-group Theil-Sen slope of ``y_col`` over ``x_col``:
@@ -73,36 +65,12 @@ def grouped_theilsen(
     ``slope`` rounded JVM-side (``F.round``, half-up — matching the
     SQL oracle) to ``ndigits``; NULL when the group has no two points
     with distinct x. Null-valued x/y rows are dropped first (both the
-    kernel and the SQL oracle see the same point set).
-
-    Group-key dtype is taken from the input schema so the contract
-    works for any atomic key type.
+    kernel and the SQL oracle see the same point set). The group key
+    passes through the groupBy, so any atomic key type works.
     """
     import pandas as pd
 
-    if mode not in ("batched", "apply"):
-        raise ValueError(f"mode must be 'batched' or 'apply', got {mode!r}")
-    key_type = df.schema[group_col].dataType.simpleString()
     pts = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-
-    if mode == "apply":
-
-        def per_group(pdf: pd.DataFrame) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    group_col: [pdf[group_col].iloc[0]],
-                    "n": [len(pdf)],
-                    "slope": [_theilsen_slope(pdf[x_col], pdf[y_col])],
-                }
-            )
-
-        out = pts.groupBy(group_col).applyInPandas(
-            per_group,
-            schema=f"{group_col} {key_type}, n long, slope double",
-        )
-        return out.select(
-            group_col, "n", F.round("slope", ndigits).alias("slope")
-        )
 
     def _slopes(pts_ser):
         return pd.Series(

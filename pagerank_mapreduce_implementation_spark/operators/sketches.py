@@ -281,7 +281,6 @@ def bloom_filter_probe(
     n_bits: int = 1 << 16,
     n_hashes: int = 4,
     salt: str = "bloom:",
-    broadcast_filter: bool = True,
 ) -> DataFrame:
     """Membership probe of DISTINCT items against a
     ``bloom_filter_table``: ``(item, maybe_member)`` — ``false`` is
@@ -289,10 +288,9 @@ def bloom_filter_probe(
     exact path". ``n_bits``/``n_hashes``/``salt`` must match the build
     (they define the hash family; a mismatch silently probes garbage,
     so pass them from one shared config). The filter is broadcast
-    under ``broadcast_filter`` (<= ``n_bits/32`` rows — a 2^30-bit
-    filter is 4 MB of words); set False past the broadcast cap to
-    shuffle-join on ``word`` instead. Probe cost: ``n_hashes`` cells
-    per item through one join + one all-bits-present groupBy."""
+    (<= ``n_bits/32`` rows — a 2^30-bit filter is 4 MB of words).
+    Probe cost: ``n_hashes`` cells per item through one join + one
+    all-bits-present groupBy."""
     if n_bits < 32 or n_bits % 32 != 0:
         raise ValueError(
             f"n_bits must be a positive multiple of 32, got {n_bits}"
@@ -318,8 +316,7 @@ def bloom_filter_probe(
             "mask"
         ),
     )
-    flt = F.broadcast(filter_df) if broadcast_filter else filter_df
-    hit = probes.join(flt, "word", "left").select(
+    hit = probes.join(F.broadcast(filter_df), "word", "left").select(
         "item",
         (
             F.col("bits").isNotNull()

@@ -664,7 +664,6 @@ def bpe_train(
     text_col: str = "text",
     pattern: str = TOKEN_WS_RE,
     lowercase: bool = False,
-    materialize_every: int = 4,
 ) -> DataFrame:
     """Learn a BPE merge table from the corpus (Sennrich et al. 2016)
     → ``(rank, lhs, rhs, merged)``, one row per learned merge in
@@ -694,9 +693,9 @@ def bpe_train(
     reproduces the resume-after-merge scan exactly — no Python in the
     loop). States persist LAZILY and materialize as a side effect of
     the next argmax job (an eager per-iteration checkpoint measured
-    2x the loop's wall clock); a lazy ``localCheckpoint`` every
-    ``materialize_every`` merges keeps the plan depth flat and the
-    predecessor unpersists once its successor is live.
+    2x the loop's wall clock); a lazy ``localCheckpoint`` every 4
+    merges keeps the plan depth flat and the predecessor unpersists
+    once its successor is live.
 
     The returned merge table is built driver-side from the collected
     argmax rows — legitimate: ``num_merges`` rows IS the learned
@@ -767,8 +766,8 @@ def bpe_train(
     # (zero extra jobs — an eager per-iteration localCheckpoint was
     # measured at 2x the whole loop's wall clock at sf0.1); the
     # predecessor is unpersisted once its successor is materialized,
-    # and a LAZY localCheckpoint every ``materialize_every`` merges
-    # truncates the logical plan so analysis cost stays flat.
+    # and a LAZY localCheckpoint every 4 merges truncates the logical
+    # plan so analysis cost stays flat.
     # Release discipline: a plain CACHE is an optimization — if its
     # blocks evict, lineage recomputes from the newest checkpoint
     # below it — so a cached predecessor releases as soon as its
@@ -780,7 +779,6 @@ def bpe_train(
     prev: DataFrame | None = None
     prev_is_ckpt = False
     old_ckpt: DataFrame | None = None
-    every = max(1, materialize_every)
     for rank in range(1, num_merges + 1):
         best = (
             state.select(F.col("cnt"), F.explode(pair_struct).alias("p"))
@@ -807,7 +805,7 @@ def bpe_train(
         merges.append((rank, lhs, rhs, lhs + rhs))
         prev, prev_is_ckpt = state, state_is_ckpt
         state = _apply_merge(state, lhs, rhs)
-        if rank % every == 0:
+        if rank % 4 == 0:
             # lazy checkpoint doubles as the cache — persisting the
             # checkpointed frame again would double-store it
             state = state.localCheckpoint(eager=False)

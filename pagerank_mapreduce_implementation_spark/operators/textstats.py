@@ -1510,8 +1510,6 @@ def perplexity_buckets(
     doc_col: str = "doc_id",
     group_col: str = "source",
     add_k: float = 1.0,
-    method: str = "window",
-    nll_bucket_width: float = 0.25,
 ) -> DataFrame:
     """CCNet-style per-source perplexity bucketing → ``(doc_id,
     source, nll, bucket, bucket_name)``: every document is scored
@@ -1530,79 +1528,22 @@ def perplexity_buckets(
     total. ntile's fill rule (first ``n_rows % n`` buckets take the
     extra row) is the SQL-standard one on both engines.
 
-    Scale shape: scoring is the ``bigram_lm_scores`` plan. Bucketing
-    has two EXACT physical forms selected by ``method``:
-
-    - ``"window"`` (default): ONE per-source window sort —
-      ``ntile(n)`` directly. A source's docs rank in one task; right
-      below ~10^8 docs per source, wrong for a pathologically
-      dominant source.
-    - ``"twopass"``: the distributed-prefix-rank rewrite (the
-      ``pack_sequences`` two-phase idiom, applied to a VALUE-ordered
-      rank): rows land in deterministic contiguous nll-value buckets
-      (``floor(nll / nll_bucket_width)`` — bucket order IS sort
-      order), local ranks are per-(source, bucket) windows (parallel
-      across buckets), bucket counts get a tiny per-source running
-      sum broadcast back as offsets, and the global rank feeds the
-      closed-form ntile fill rule (first ``s mod n`` buckets take
-      ``ceil(s/n)`` rows). Output-identical to ``"window"`` — the
-      registry gates both against ONE oracle, a pure physical
-      rewrite — with parallelism ~ sources x value-buckets instead
-      of sources. ``nll_bucket_width`` only shapes the parallelism
-      (skewed nll mass -> fuller buckets), never the result.
+    Scale shape: scoring is the ``bigram_lm_scores`` plan; bucketing is
+    ONE per-source window sort — ``ntile(n)`` directly. A source's docs
+    rank in one task: right below ~10^8 docs per source, wrong for a
+    pathologically dominant source.
     """
     from pyspark.sql.window import Window
 
     if n_buckets < 1:
         raise ValueError(f"n_buckets ({n_buckets}) must be >= 1")
-    if method not in ("window", "twopass"):
-        raise ValueError(f"method must be 'window' or 'twopass', got {method!r}")
-    if nll_bucket_width <= 0:
-        raise ValueError(f"nll_bucket_width ({nll_bucket_width}) must be > 0")
     scores = bigram_lm_scores(docs, text_col=text_col, doc_col=doc_col, add_k=add_k)
     dims = docs.select(F.col(doc_col).alias("doc_id"), F.col(group_col).alias("source"))
     scored = scores.join(dims, "doc_id").select("doc_id", "source", "nll")
-    if method == "window":
-        w = Window.partitionBy("source").orderBy(F.asc("nll"), F.asc("doc_id"))
-        out = scored.select(
-            "doc_id", "source", "nll", F.ntile(n_buckets).over(w).alias("bucket")
-        )
-    else:
-        st = scored.withColumn(
-            "__b", F.floor(F.col("nll") / F.lit(float(nll_bucket_width))).cast("long")
-        )
-        w_local = Window.partitionBy("source", "__b").orderBy("nll", "doc_id")
-        st = st.withColumn("__lr", F.row_number().over(w_local))
-        counts = st.groupBy("source", "__b").agg(F.max("__lr").alias("__cnt"))
-        w_src = (
-            Window.partitionBy("source")
-            .orderBy("__b")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offs = counts.withColumn(
-            "__off", F.coalesce(F.sum("__cnt").over(w_src), F.lit(0))
-        ).select("source", "__b", "__off")
-        totals = counts.groupBy("source").agg(F.sum("__cnt").alias("__s"))
-        n = int(n_buckets)
-        st = (
-            st.join(F.broadcast(offs), ["source", "__b"])
-            .join(F.broadcast(totals), "source")
-            .withColumn("__r", F.col("__off") + F.col("__lr"))
-        )
-        q = F.expr(f"__s div {n}")
-        rem = F.col("__s") % n
-        head = (q + 1) * rem  # rows living in the ceil-sized buckets
-        bucket = (
-            F.when(
-                F.col("__r") <= head,
-                F.expr(f"(__r - 1) div ((__s div {n}) + 1)") + 1,
-            )
-            .otherwise(
-                rem + F.expr(f"(__r - ((__s div {n}) + 1) * (__s % {n}) - 1) div (__s div {n})") + 1
-            )
-            .cast("int")
-        )
-        out = st.select("doc_id", "source", "nll", bucket.alias("bucket"))
+    w = Window.partitionBy("source").orderBy(F.asc("nll"), F.asc("doc_id"))
+    out = scored.select(
+        "doc_id", "source", "nll", F.ntile(n_buckets).over(w).alias("bucket")
+    )
     if n_buckets == 3:
         name = (
             F.when(F.col("bucket") == 1, F.lit("head"))

@@ -81,11 +81,11 @@ class LoopScope:
         state: DataFrame,
         step: Callable[[DataFrame, int], DataFrame],
         n_iters: int,
-        every: int = MATERIALIZE_EVERY,
         converged: Callable[[DataFrame, DataFrame], bool] | None = None,
     ) -> DataFrame:
         """Iterate ``state = step(state, i)`` for i = 1..``n_iters``,
-        truncating every ``every`` iterations and after the last.
+        truncating every ``MATERIALIZE_EVERY`` iterations and after the
+        last.
 
         ``converged(prev, cur)`` (optional) is checked after each
         iteration for early exit — the reference has no convergence test
@@ -93,7 +93,7 @@ class LoopScope:
         leave it None; with it, every iteration materializes (both
         states are needed concurrently).
         """
-        every = 1 if converged is not None else max(1, every)
+        every = 1 if converged is not None else MATERIALIZE_EVERY
         for i in range(1, n_iters + 1):
             new_state = step(state, i)
             if i % every == 0 or i == n_iters:

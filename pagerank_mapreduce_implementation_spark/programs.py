@@ -1079,7 +1079,6 @@ def dedup_media(
     cc_max_iters: int = 20,
     fingerprint_store: str | None = None,
     chunks: int = 4,
-    broadcast_store: bool = True,
 ) -> DataFrame:
     """Media-corpus near-dup removal end to end (the modality twin of
     ``clean_corpus``'s dedup stages, wiring round-8/9's operators into
@@ -1109,12 +1108,11 @@ def dedup_media(
     (the media analog of ``clean_corpus(signature_store=...)``): batch
     docs are first probed against ``{store}/fps`` — fingerprints only,
     never blobs: ``(doc_id, phash)`` for image/audio (8 bytes/doc,
-    probed via the shared ``hamming_store_probe`` chunk index,
-    broadcast under ``broadcast_store``), ``(doc_id, frame_idx,
-    fhash)`` for video (probed by shared-count, or by cross-batch
-    RUNS when ``min_run`` is set — positions persist, so run semantics
-    survive the batch boundary; store and probe must use the same
-    ``every_n``). Cross-batch duplicates are dropped, then the batch
+    probed via the shared ``hamming_store_probe`` broadcast chunk
+    index), ``(doc_id, frame_idx, fhash)`` for video (probed by
+    shared-count, or by cross-batch RUNS when ``min_run`` is set —
+    positions persist, so run semantics survive the batch boundary;
+    store and probe must use the same ``every_n``). Cross-batch duplicates are dropped, then the batch
     survivors' fingerprints are APPENDED for batch N+1. First run
     against a missing store just seeds it. Doc ids must be globally
     unique across batches (the clean_corpus store contract).
@@ -1232,7 +1230,6 @@ def dedup_media(
                     max_hamming,
                     chunks,
                     multimodal.PHASH_BITS,
-                    broadcast_store=broadcast_store,
                 ).select("doc_id")
                 docs = docs.join(matched, "doc_id", "left_anti")
                 fp_kept = fp.join(matched, "doc_id", "left_anti")

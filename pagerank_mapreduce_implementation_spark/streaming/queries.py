@@ -279,20 +279,15 @@ def streaming_minhash_probe(
     bands: int = 4,
     text_col: str = "text",
     doc_col: str = "doc_id",
-    broadcast_store: bool = True,
 ) -> DataFrame:
     """Streaming cross-batch NEAR-dup detection: an unbounded document
     stream probed against a STATIC MinHash signature store — the
     streaming twin of ``dedup.incremental_minhash_dedup``'s
     ``dup_of_store`` verdict.
 
-    ``broadcast_store`` pins the store's band index + signatures as
-    broadcast build sides (right while the store fits the 8 GB
-    broadcast cap — hundreds of millions of signatures). Past that,
-    set False: a stream-static join stays STATELESS under any
-    strategy, and Catalyst shuffles the micro-batch against the
-    (bucketed-on-disk) store instead — same results, same zero state,
-    just no driver-side pin of an over-large table.
+    The store's band index + signatures are pinned as broadcast build
+    sides, which holds while the store fits the 8 GB broadcast cap —
+    hundreds of millions of signatures.
 
     The whole probe is STATELESS per micro-batch by construction:
     signatures come from ``dedup.rowwise_minhash_signatures`` (pure
@@ -345,12 +340,16 @@ def streaming_minhash_probe(
         F.col("bb.band").alias("band"),
         F.col("bb.bucket").alias("bucket"),
     )
-    store_bands = band_buckets(seen_sigs, num_hashes, bands).select(
-        F.col("doc_id").alias("store_id"), "band", "bucket"
+    store_bands = F.broadcast(
+        band_buckets(seen_sigs, num_hashes, bands).select(
+            F.col("doc_id").alias("store_id"), "band", "bucket"
+        )
     )
-    store_sigs = seen_sigs.select(
-        F.col("doc_id").alias("store_id"),
-        *[F.col(f"h{i}").alias(f"s{i}") for i in range(num_hashes)],
+    store_sigs = F.broadcast(
+        seen_sigs.select(
+            F.col("doc_id").alias("store_id"),
+            *[F.col(f"h{i}").alias(f"s{i}") for i in range(num_hashes)],
+        )
     )
     n_eq = sum(
         [
@@ -359,9 +358,6 @@ def streaming_minhash_probe(
         ],
         F.lit(0),
     )
-    if broadcast_store:
-        store_bands = F.broadcast(store_bands)
-        store_sigs = F.broadcast(store_sigs)
     matches = (
         bb.join(store_bands, ["band", "bucket"])
         .join(store_sigs, "store_id")
@@ -539,7 +535,6 @@ def streaming_phash_probe(
     max_hamming: int = 10,
     chunks: int = 4,
     hasher=None,
-    broadcast_store: bool = True,
 ) -> DataFrame:
     """Streaming IMAGE near-dup probe: an unbounded blob stream checked
     against a STATIC perceptual-hash store (``seen_fp``: ``(doc_id,
@@ -548,9 +543,8 @@ def streaming_phash_probe(
     identical pieces: a stateless per-row fingerprint (here the Arrow
     ``mapInPandas`` hashing pass, which Structured Streaming runs
     per-micro-batch with no state), the 15-bit-chunk pigeonhole
-    explode, and a stream-static join against the store's chunk index
-    (broadcast under ``broadcast_store``, else a shuffle against the
-    bucketed-on-disk store — stateless either way).
+    explode, and a stateless stream-static join against the store's
+    broadcast chunk index.
 
     Emits one row per stream doc with a verified match:
     ``(doc_id, dup_store_id, min_hamming)`` — the smallest matching
@@ -575,7 +569,6 @@ def streaming_phash_probe(
         max_hamming,
         chunks,
         PHASH_BITS,
-        broadcast_store=broadcast_store,
     )
 
 

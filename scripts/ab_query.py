@@ -26,7 +26,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 
 def ab(spark, fn, reps: int = 3, label: str = "query") -> dict:

@@ -33,7 +33,6 @@ def main() -> None:
     args = ap.parse_args()
 
     sys.path.insert(0, os.path.abspath(args.repo))
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     import __spark_entry__ as entrymod
     from pagerank_mapreduce_implementation_spark.session import get_spark
 

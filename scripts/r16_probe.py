@@ -20,7 +20,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 import __spark_entry__ as entry  # noqa: E402
 from pagerank_mapreduce_implementation_spark.session import get_spark  # noqa: E402

@@ -19,7 +19,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 EVDIR = "/tmp/spark-events-r17"
 
@@ -30,7 +29,7 @@ def build_session():
     get_spark's getOrCreate inside operators reuses it)."""
     from pyspark.sql import SparkSession
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 8)
     os.makedirs(EVDIR, exist_ok=True)
     b = (
         SparkSession.builder.appName("r17-joblog")

@@ -1,7 +1,7 @@
 """10x-replication scaling study for the r12-r14 graph cohort (r14
 verdict item 7): validate that the broadcast-hint gates
-(``graph._BFS_BROADCAST_ROWS`` = 500k state rows; ``broadcast_adj``
-adjacency broadcasts) degrade GRACEFULLY — not cliff — once the data
+(``graph._BFS_BROADCAST_ROWS`` = 500k state rows; the triangle
+counter's adjacency broadcasts) degrade GRACEFULLY — not cliff — once the data
 pushes vertex/state counts past the thresholds they were tuned below.
 
 Method (the round-4 /tmp/sf1 harness shape, in-memory): build the
@@ -22,7 +22,7 @@ Gate exposure at 10x:
   joins every round) — it is the shape the gated loops degrade TO,
   so its ratio is the graceful-degradation reference line.
 - ``clustering_coefficients`` broadcasts the grouped adjacency
-  (``broadcast_adj=True``); 10x distinct edges grows that broadcast
+  (``triangle_counts``); 10x distinct edges grows that broadcast
   10x (still far under the ~100M-edge advice bound).
 - ``bipartite_projection`` / ``cluster_survivors``: no broadcast
   gate; included to complete the cohort (persist diamonds, star CC).

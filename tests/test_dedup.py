@@ -123,31 +123,48 @@ def test_shingles_ngram_windows(spark):
     assert dedup.shingles(docs2, 3).count() == 0
 
 
-def test_exact_dedup_skew_safe_property_equal(spark, planted):
-    """skew_safe=True (groupBy+join, AQE-splittable hot keys) must be
-    row-for-row identical to the window plan — on the planted fixture
-    AND on random corpora with a deliberately hot fingerprint."""
+def test_exact_dedup_matches_python_model(spark, planted):
+    """The window plan equals a Python model row for row — on the
+    planted fixture AND on a corpus with a deliberately hot
+    fingerprint: the fingerprint is md5 of the lowercased,
+    whitespace-collapsed, trimmed text (so identical texts share one),
+    the keeper is the group's min doc_id and ``is_dup`` marks every
+    other member."""
+    import hashlib
     import random
+    import re
+
+    def model(rows):
+        fps = {
+            d: hashlib.md5(
+                re.sub(r"[ \t\n\x0b\f\r]+", " ", t).strip(" ").lower().encode()
+            ).hexdigest()
+            for d, t in rows
+        }
+        keeper = {}
+        for d, fp in fps.items():
+            keeper[fp] = min(d, keeper.get(fp, d))
+        return sorted(
+            (d, fp, keeper[fp], int(d != keeper[fp])) for d, fp in fps.items()
+        )
 
     def rows_of(df):
         return sorted(tuple(r) for r in df.collect())
 
-    assert rows_of(dedup.exact_dedup(planted)) == rows_of(
-        dedup.exact_dedup(planted, skew_safe=True)
-    )
+    planted_rows = [(r["doc_id"], r["text"]) for r in planted.collect()]
+    assert rows_of(dedup.exact_dedup(planted)) == model(planted_rows)
 
     rng = random.Random(17)
-    # 300 rows, ~60% of them the SAME text (the hot-fingerprint case
-    # the skew_safe plan exists for), rest drawn from 20 templates
+    # 300 rows, ~60% of them the SAME text (the hot-fingerprint case),
+    # rest drawn from 20 templates
     hot = "boilerplate cookie banner accept all cookies"
     corpus = [
         (i, hot if rng.random() < 0.6 else f"doc variant {rng.randrange(20)}")
         for i in range(300)
     ]
     docs = spark.createDataFrame(corpus, "doc_id long, text string")
-    a = rows_of(dedup.exact_dedup(docs))
-    b = rows_of(dedup.exact_dedup(docs, skew_safe=True))
-    assert a == b and len(a) == 300
+    got = rows_of(dedup.exact_dedup(docs))
+    assert got == model(corpus) and len(got) == 300
 
 
 def test_ngram_containment_catches_embedded_doc(spark):

@@ -1057,11 +1057,10 @@ def test_count_min_sketch_guarantees(spark):
 
 def test_grouped_theilsen_kernel_and_modes(spark):
     """grouped_theilsen: the per-group Theil-Sen slope (median of
-    pairwise slopes over distinct-x pairs) matches a hand computation;
-    the batched (collect_list + vectorized pandas UDF) and apply
-    (applyInPandas) physical modes agree exactly; arrival order never
-    changes the result; degenerate groups (singleton, all-equal x)
-    yield NULL slope."""
+    pairwise slopes over distinct-x pairs) matches a hand computation
+    through the collect_list + vectorized pandas UDF plan; arrival
+    order never changes the result; degenerate groups (singleton,
+    all-equal x) yield NULL slope."""
     from pagerank_mapreduce_implementation_spark.operators.grouped import (
         _theilsen_slope,
         grouped_theilsen,
@@ -1087,18 +1086,17 @@ def test_grouped_theilsen_kernel_and_modes(spark):
     ]
     df = spark.createDataFrame(rows, "user_id long, x double, y double")
     want = {1: (3, 1.0), 2: (1, None), 3: (2, None), 4: (2, 2.0)}
-    for mode in ("batched", "apply"):
-        got = {
-            r["user_id"]: (r["n"], r["slope"])
-            for r in grouped_theilsen(df, "user_id", "x", "y", mode=mode).collect()
-        }
-        assert got == want, mode
+    got = {
+        r["user_id"]: (r["n"], r["slope"])
+        for r in grouped_theilsen(df, "user_id", "x", "y").collect()
+    }
+    assert got == want
     # arrival order independence (the hash-gate requirement)
     shuffled = spark.createDataFrame(rows[::-1], "user_id long, x double, y double")
     a = sorted(map(tuple, grouped_theilsen(df, "user_id", "x", "y").collect()))
     b = sorted(map(tuple, grouped_theilsen(shuffled, "user_id", "x", "y").collect()))
     assert a == b
-    # empty input keeps the schema; string keys work (dtype from schema)
+    # empty input keeps the schema; string keys work
     empty = spark.createDataFrame([], "user_id long, x double, y double")
     out = grouped_theilsen(empty, "user_id", "x", "y")
     assert out.columns == ["user_id", "n", "slope"] and out.count() == 0
@@ -1106,8 +1104,6 @@ def test_grouped_theilsen_kernel_and_modes(spark):
         [("a", 0.0, 4.0), ("a", 1.0, 6.0)], "k string, x double, y double"
     )
     assert grouped_theilsen(sdf, "k", "x", "y").collect()[0]["slope"] == 2.0
-    with pytest.raises(ValueError):
-        grouped_theilsen(df, "user_id", "x", "y", mode="nope")
 
 
 def test_event_funnel_first_touch_semantics(spark):

@@ -490,6 +490,30 @@ def test_pagerank_reliable_checkpoint_dir(spark, tmp_path):
     assert written, f"no checkpoint part files under {ckpt}"
 
 
+def test_cc_star_honors_reliable_dir(spark, tmp_path):
+    """connected_components(algorithm="star") truncates through the
+    caller's reliable_dir like the label loop: checkpoint files land in
+    the directory, and the labels equal a run without it."""
+    import os
+
+    from pagerank_mapreduce_implementation_spark.operators.graph import (
+        connected_components,
+    )
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(11)], "src long, dst long"
+    )
+
+    def labels(**kw):
+        out = connected_components(edges, algorithm="star", **kw)
+        return {r.vertex: r.component for r in out.collect()}
+
+    ckpt = str(tmp_path / "reliable")
+    assert labels(reliable_dir=ckpt) == labels()
+    written = [f for _root, _dirs, files in os.walk(ckpt) for f in files]
+    assert written, f"no checkpoint files under {ckpt}"
+
+
 def test_iteration_driver_reliable_dir_truncates_lineage(spark, tmp_path):
     """LoopScope(reliable_dir).iterate itself: state after a reliable
     truncation is a checkpoint scan (no growing lineage) and survives
@@ -504,7 +528,7 @@ def test_iteration_driver_reliable_dir_truncates_lineage(spark, tmp_path):
         return df.select("id", (F.col("v") * 2.0).alias("v"))
 
     with LoopScope(str(tmp_path / "ck")) as scope:
-        out = scope.keep(scope.iterate(state, step, n_iters=6, every=2))
+        out = scope.keep(scope.iterate(state, step, n_iters=6))
     assert {r.id: r.v for r in out.collect()} == {1: 64.0, 2: 128.0}
     # the returned frame's plan reads the checkpoint, not the 6-step
     # lineage (Scan ExistingRDD / RDDScanExec at the root)

@@ -125,7 +125,7 @@ def test_pagerank_reference_parity_random_graphs(spark, edges):
     df = spark.createDataFrame(edges, "src string, dst string")
     got = {
         r["url"]: r["rank"]
-        for r in graph.pagerank(df, n_iters=3, num_partitions=2).collect()
+        for r in graph.pagerank(df, n_iters=3).collect()
     }
     want = _simulate_reference(edges, iters=3)
     assert set(got) == set(want)
@@ -149,7 +149,7 @@ def test_pagerank_textbook_mass_conservation(spark, raw):
     # remap targets onto the src set -> no red links; dangling possible
     edges = [(s, srcs[hash(d) % len(srcs)]) for s, d in raw]
     df = spark.createDataFrame(edges, "src string, dst string")
-    ranks = graph.pagerank(df, n_iters=3, mode="textbook", num_partitions=2)
+    ranks = graph.pagerank(df, n_iters=3, mode="textbook")
     total = ranks.agg(F.sum("rank")).first()[0]
     assert math.isclose(total, 1.0, rel_tol=1e-9)
 
@@ -1087,13 +1087,13 @@ def test_sssp_matches_python_bellman_ford(spark, edges, n_rounds):
     ),
     n=st.integers(min_value=1, max_value=4),
 )
-def test_twopass_buckets_equal_window_ntile(spark, rows, n):
-    """The twopass rank formula == ntile for every group size /
-    bucket count / tie pattern — directly on a synthetic scored
-    table via the underlying rank arithmetic: we run BOTH methods of
-    perplexity_buckets over docs built so bigram nll is constant,
-    making doc_id the effective sort key (ties in the score column is
-    exactly the hard case for the fill rule)."""
+def test_perplexity_buckets_equal_python_ntile(spark, rows, n):
+    """perplexity_buckets == a Python ntile model for every group size
+    / bucket count / tie pattern: per source, rows ordered by (nll,
+    doc_id), the first ``s mod n`` buckets take one extra row. Docs
+    are built so bigram nll is constant, making doc_id the effective
+    sort key (ties in the score column are exactly the hard case for
+    the fill rule)."""
     from pagerank_mapreduce_implementation_spark.operators import textstats
 
     if not rows:
@@ -1102,17 +1102,22 @@ def test_twopass_buckets_equal_window_ntile(spark, rows, n):
         [(i, "x y", src) for i, src, _ in rows],
         "doc_id long, text string, source string",
     )
-    a = {
-        (r["doc_id"]): (r["source"], r["bucket"])
-        for r in textstats.perplexity_buckets(docs, n_buckets=n).collect()
-    }
-    b = {
-        (r["doc_id"]): (r["source"], r["bucket"])
-        for r in textstats.perplexity_buckets(
-            docs, n_buckets=n, method="twopass", nll_bucket_width=0.5
-        ).collect()
-    }
-    assert a == b and a
+    out = textstats.perplexity_buckets(docs, n_buckets=n).collect()
+    got = {r["doc_id"]: (r["source"], r["bucket"]) for r in out}
+    by_src: dict[str, list] = {}
+    for r in out:
+        by_src.setdefault(r["source"], []).append((r["nll"], r["doc_id"]))
+    want = {}
+    for src, keys in by_src.items():
+        s = len(keys)
+        q, extra = divmod(s, n)
+        sizes = [q + 1] * extra + [q] * (n - extra)
+        ranked = iter(sorted(keys))
+        for bucket, size in enumerate(sizes, start=1):
+            for _ in range(size):
+                want[next(ranked)[1]] = (src, bucket)
+    assert got == want and got
+    assert {d for d, _s, _ in rows} == set(got)
 
 
 @settings(**PROP_SETTINGS)

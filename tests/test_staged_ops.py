@@ -120,17 +120,6 @@ def oracles_stoplist_sql():
     return "[" + ", ".join(f"'{w}'" for w in STOPWORDS) + "]"
 
 
-def test_perplexity_twopass_matches_window_oracle(spark, sf_dir, duck):
-    """The two-pass distributed-prefix-rank form is a pure physical
-    rewrite: gated against the SAME window-formulation oracle."""
-    import __spark_entry__ as entry
-
-    got = textstats.perplexity_buckets(
-        Catalog(spark, sf_dir).documents, method="twopass"
-    )
-    check(got, duck, entry.oracle_sql()["perplexity_buckets"])
-
-
 def test_sssp_weighted_parity(spark, sf_dir, duck):
     got = graph.sssp_weighted(
         _bip_edges(spark, sf_dir, weighted=True, bidir=True), ["o1"], n_rounds=4
@@ -263,16 +252,6 @@ def test_mad_outliers_flags_the_planted_point(spark):
     out = {r["doc_id"]: r["is_outlier"] for r in textstats.mad_outliers(df).collect()}
     assert out[99] is True
     assert sum(1 for v in out.values() if v) == 1
-
-
-def test_perplexity_twopass_guards(spark):
-    docs = spark.createDataFrame(
-        [(1, "a b", "s1")], "doc_id long, text string, source string"
-    )
-    with pytest.raises(ValueError):
-        textstats.perplexity_buckets(docs, method="nope")
-    with pytest.raises(ValueError):
-        textstats.perplexity_buckets(docs, method="twopass", nll_bucket_width=0.0)
 
 
 _SEQ = iter(range(1_000_000))
