@@ -33,7 +33,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 from pyspark.sql import functions as F  # noqa: E402
 
