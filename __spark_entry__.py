@@ -2246,7 +2246,7 @@ def _q_streaming_word_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pagerank_mapreduce_implementation_spark import streaming as strm
 
     docs = strm.read_table_stream(spark, sf_dir, "documents")
-    wc = strm.streaming_word_count(docs, text_col="text")
+    wc = strm.streaming_word_count(docs)
     name = f"_stream_wc_{next(_STREAM_SEQ)}"
     strm.run_to_memory(wc, name)
     return spark.table(name)

@@ -2,21 +2,17 @@
 reference has no JSON anywhere; the events table's ``props`` column is
 a JSON object string, the common shape of event payloads at scale).
 
-Two extraction forms, both JVM built-ins (no UDFs):
-
-- ``json_field``: path extraction via ``get_json_object`` — no schema
-  needed, right for pulling one or two fields.
-- ``parse_props``: full ``from_json`` parse against an explicit schema
-  — right when many fields are consumed (one parse, then plain column
-  access; ``get_json_object`` re-parses the string per call site).
+- ``json_field``: path extraction via ``get_json_object`` (a JVM
+  built-in, no UDF) — no schema needed, right for pulling one or two
+  fields.
 
 At 100 TB the rule is: extract early, drop the raw JSON string column,
-let column pruning carry only the typed fields through the pipeline.
+let column pruning carry only the extracted fields through the pipeline.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -24,10 +20,3 @@ def json_field(col: Column | str, path: str) -> Column:
     """Extract one field as string (NULL on missing/malformed).
     ``path`` is a JSONPath like ``$.k`` or ``$.a.b``."""
     return F.get_json_object(col, path)
-
-
-def parse_props(df: DataFrame, schema: str, col: str = "props") -> DataFrame:
-    """Replace a JSON string column with a typed struct parsed against
-    ``schema`` (DDL form, e.g. ``"k int, tags array<string>"``).
-    Malformed rows yield a NULL struct (PERMISSIVE mode)."""
-    return df.withColumn(col, F.from_json(F.col(col), schema))

@@ -41,13 +41,6 @@ def page_title(line: Column | str) -> Column:
     return F.coalesce(F.try_element_at(titles, F.lit(-1)), F.lit(""))
 
 
-def page_text(line: Column | str) -> Column:
-    """First <text...</text body (attributes included in group 1,
-    matching the reference's missing-``>`` quirk). Kept for users with
-    single-body lines; the parser proper uses ``page_text_bodies``."""
-    return F.regexp_extract(line, TEXT_RE, 1)
-
-
 def page_text_bodies(line: Column | str) -> Column:
     """ALL <text...</text bodies on the line, in order — the reference
     iterates every match (PageRank.java:392,397)."""

@@ -35,8 +35,6 @@ def contamination_check(
     bench: DataFrame,
     ngram: int = 8,
     threshold: float = 0.01,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """Per training doc, overlap with the benchmark shingle set:
     ``(doc_id, n_shingles, n_contaminated, contamination_ratio,
@@ -57,9 +55,9 @@ def contamination_check(
     not just the flagged rows (filter ``is_contaminated == 1`` to get
     the drop list).
     """
-    t_sh = shingles(train, ngram, text_col, doc_col)
+    t_sh = shingles(train, ngram)
     b_sh = (
-        shingles(bench, ngram, text_col, doc_col)
+        shingles(bench, ngram)
         .select("shingle")
         .distinct()
         .withColumn("__bench", F.lit(1))
@@ -74,7 +72,7 @@ def contamination_check(
     )
     # docs too short for any ngram-shingle never reach per_doc — keep
     # them at 0/0 via a left join from the full doc list
-    all_docs = train.select(F.col(doc_col).alias("doc_id"))
+    all_docs = train.select("doc_id")
     ratio = F.when(
         F.col("n_shingles") > 0,
         F.col("n_contaminated").cast("double") / F.col("n_shingles"),
@@ -106,20 +104,16 @@ def decontaminate(
     bench: DataFrame,
     ngram: int = 8,
     threshold: float = 0.01,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """The drop pass: training rows whose contamination_ratio is below
     ``threshold`` (caller's schema preserved — the same anti-join shape
     as dedup.embedding_near_dup_survivors)."""
     flagged = (
-        contamination_check(train, bench, ngram, threshold, text_col, doc_col)
+        contamination_check(train, bench, ngram, threshold)
         .filter(F.col("is_contaminated") == 1)
         .select("doc_id")
     )
-    return train.join(
-        flagged.withColumnRenamed("doc_id", doc_col), doc_col, "left_anti"
-    )
+    return train.join(flagged, "doc_id", "left_anti")
 
 
 def fuzzy_contamination(
@@ -129,8 +123,6 @@ def fuzzy_contamination(
     ngram: int = 5,
     num_hashes: int = 16,
     bands: int = 4,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """Paraphrase-robust contamination: training docs whose MinHash
     signature collides with a BENCHMARK doc in >= 1 LSH band, verified
@@ -158,8 +150,8 @@ def fuzzy_contamination(
         shingles,
     )
 
-    t_sh = shingles(train, ngram, text_col, doc_col)
-    b_sh = shingles(bench, ngram, text_col, doc_col)
+    t_sh = shingles(train, ngram)
+    b_sh = shingles(bench, ngram)
     t_bk = band_buckets(
         minhash_signatures(t_sh, num_hashes), num_hashes, bands
     )
@@ -200,8 +192,6 @@ def contamination_spans(
     train: DataFrame,
     bench: DataFrame,
     ngram: int = 8,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """WHERE the leak is, not just how much: merged token spans of
     benchmark-shared n-grams per training doc → ``(doc_id, start_tok,
@@ -227,8 +217,8 @@ def contamination_spans(
         raise ValueError(f"ngram ({ngram}) must be >= 1")
     from pyspark.sql import Window
 
-    arr = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    toks = train.select(F.col(doc_col).alias("doc_id"), arr.alias("toks"))
+    arr = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    toks = train.select("doc_id", arr.alias("toks"))
     pos_sh = F.when(
         F.size("toks") >= ngram,
         F.transform(
@@ -243,7 +233,7 @@ def contamination_spans(
         toks.select("doc_id", F.explode(pos_sh).alias("s"))
         .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.shingle").alias("shingle"))
     )
-    b_sh = shingles(bench, ngram, text_col, doc_col).select("shingle").distinct()
+    b_sh = shingles(bench, ngram).select("shingle").distinct()
     hits = occ.join(b_sh, "shingle").select("doc_id", "pos")
     w = Window.partitionBy("doc_id").orderBy("pos")
     # new island when this gram's token range can no longer touch the

@@ -53,11 +53,7 @@ def tokens_null_safe(col: Column) -> Column:
     )
 
 
-def exact_dedup(
-    docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def exact_dedup(docs: DataFrame) -> DataFrame:
     """Exact dedup by content fingerprint.
 
     Returns every doc with its group fingerprint, the group's keeper
@@ -72,8 +68,8 @@ def exact_dedup(
     """
     from pyspark.sql.window import Window
 
-    fp = F.md5(normalize_text(F.col(text_col))).alias("fingerprint")
-    base = docs.select(F.col(doc_col).alias("doc_id"), fp)
+    fp = F.md5(normalize_text(F.col("text"))).alias("fingerprint")
+    base = docs.select("doc_id", fp)
     w = Window.partitionBy("fingerprint")
     return (
         base.withColumn("keeper", F.min("doc_id").over(w))
@@ -84,8 +80,6 @@ def exact_dedup(
 def incremental_exact_dedup(
     new_docs: DataFrame,
     seen_fingerprints: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     bloom_prefilter: DataFrame | None = None,
     bloom_n_bits: int = 1 << 16,
     bloom_n_hashes: int = 4,
@@ -127,12 +121,12 @@ def incremental_exact_dedup(
     """
     from pyspark.sql.window import Window
 
-    fp = F.md5(normalize_text(F.col(text_col))).alias("fingerprint")
+    fp = F.md5(normalize_text(F.col("text"))).alias("fingerprint")
     w = Window.partitionBy("fingerprint")
     in_batch = (
         new_docs.select("*", fp)
-        .withColumn("__keeper", F.min(doc_col).over(w))
-        .filter(F.col(doc_col) == F.col("__keeper"))
+        .withColumn("__keeper", F.min("doc_id").over(w))
+        .filter(F.col("doc_id") == F.col("__keeper"))
         .drop("__keeper")
     )
     if bloom_prefilter is None:
@@ -162,12 +156,7 @@ def incremental_exact_dedup(
     return cleared.unionByName(sliver)
 
 
-def shingles(
-    docs: DataFrame,
-    n: int = 1,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def shingles(docs: DataFrame, n: int = 1, text_col: str = "text") -> DataFrame:
     """Distinct word n-gram shingles per doc: ``(doc_id, shingle)``.
 
     n=1 is word-set semantics; n>=2 are classic shingles. Narrow
@@ -177,7 +166,7 @@ def shingles(
         # post-explode filter keeps the hot path in codegen
         return (
             docs.select(
-                F.col(doc_col).alias("doc_id"),
+                "doc_id",
                 F.explode(F.split(F.col(text_col), r"\s+")).alias("shingle"),
             )
             .filter(F.col("shingle") != "")
@@ -188,7 +177,7 @@ def shingles(
     # re-evaluates it per window position (no CSE across higher-order
     # functions — measured 4x slower when inlined).
     arr = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    toks = docs.select(F.col(doc_col).alias("doc_id"), arr.alias("toks"))
+    toks = docs.select("doc_id", arr.alias("toks"))
     # slice is 1-based; sequence end is inclusive -> size-n+1 starts
     sh = F.when(
         F.size("toks") >= n,
@@ -265,8 +254,6 @@ def rowwise_minhash_signatures(
     docs: DataFrame,
     ngram: int = 5,
     num_hashes: int = 16,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """The SAME MinHash signature as ``minhash_signatures`` computed as
     PURE per-row column expressions — no explode, no groupBy, no
@@ -283,8 +270,8 @@ def rowwise_minhash_signatures(
     aggregation beats per-row array passes when the corpus is already
     being shuffled anyway.
     """
-    arr = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    toks = docs.select(F.col(doc_col).alias("doc_id"), arr.alias("__toks"))
+    arr = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    toks = docs.select("doc_id", arr.alias("__toks"))
     if ngram == 1:
         sh = F.col("__toks")
     else:
@@ -410,8 +397,6 @@ def minhash_near_dups(
     ngram: int = 1,
     num_hashes: int = 16,
     bands: int = 4,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs with exact Jaccard verification.
 
@@ -426,7 +411,7 @@ def minhash_near_dups(
     when done, call ``util.release_result(result)`` (after which the
     result is dead).
     """
-    sh = shingles(docs, ngram, text_col, doc_col).persist()
+    sh = shingles(docs, ngram).persist()
     try:
         sig = minhash_signatures(sh, num_hashes)
         cand = lsh_bucket_candidates(sig, num_hashes, bands)
@@ -439,8 +424,6 @@ def _shingle_pair_scores(
     docs: DataFrame,
     threshold: float,
     ngram: int,
-    text_col: str,
-    doc_col: str,
     score_name: str,
     score_expr,
     max_shingle_df: int | None = None,
@@ -471,7 +454,7 @@ def _shingle_pair_scores(
     carries no near-dup signal anyway. ``None`` keeps the exact
     uncapped semantics (fine when a profile shows no heavy shingles).
     """
-    sh = shingles(docs, ngram, text_col, doc_col)
+    sh = shingles(docs, ngram)
     if max_shingle_df is not None:
         sh = df_capped_shingles(sh, max_shingle_df)
     sh = sh.persist()
@@ -508,8 +491,6 @@ def ngram_jaccard_pairs(
     docs: DataFrame,
     threshold: float,
     ngram: int = 3,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """n-gram Jaccard dedup WITHOUT LSH: candidates = pairs sharing at
@@ -526,8 +507,6 @@ def ngram_jaccard_pairs(
         docs,
         threshold,
         ngram,
-        text_col,
-        doc_col,
         "jaccard",
         lambda i, na, nb: i / (na + nb - i),
         max_shingle_df=max_shingle_df,
@@ -538,8 +517,6 @@ def ngram_jaccard_prefix_pairs(
     docs: DataFrame,
     threshold: float,
     ngram: int = 3,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """EXACT-recall n-gram Jaccard pairs via PREFIX FILTERING (the
     set-similarity-join literature's answer to the stop-shingle
@@ -572,7 +549,7 @@ def ngram_jaccard_prefix_pairs(
     """
     from pyspark.sql.window import Window
 
-    sh = shingles(docs, ngram, text_col, doc_col).persist()
+    sh = shingles(docs, ngram).persist()
     try:
         dfq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
         w_doc = Window.partitionBy("doc_id").orderBy("__df", "shingle")
@@ -604,8 +581,6 @@ def ngram_containment_pairs(
     docs: DataFrame,
     threshold: float,
     ngram: int = 3,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     max_shingle_df: int | None = None,
 ) -> DataFrame:
     """ASYMMETRIC near-dup: shingle containment ``|A∩B| / min(|A|,|B|)``
@@ -625,8 +600,6 @@ def ngram_containment_pairs(
         docs,
         threshold,
         ngram,
-        text_col,
-        doc_col,
         "containment",
         lambda i, na, nb: i / F.least(na, nb),
         max_shingle_df=max_shingle_df,
@@ -640,8 +613,6 @@ def incremental_minhash_dedup(
     ngram: int = 5,
     num_hashes: int = 16,
     bands: int = 4,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     seen_bands: DataFrame | None = None,
     validate_bands: bool = True,
 ) -> DataFrame:
@@ -736,9 +707,7 @@ def incremental_minhash_dedup(
                 )
 
     min_matches = math.ceil(num_hashes * threshold)
-    sig_b = minhash_signatures(
-        shingles(new_docs, ngram, text_col, doc_col), num_hashes
-    ).persist()
+    sig_b = minhash_signatures(shingles(new_docs, ngram), num_hashes).persist()
     try:
         bb_batch = band_buckets(sig_b, num_hashes, bands)
         bb_store = (
@@ -828,9 +797,7 @@ def _word_hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def simhash(
-    docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id"
-) -> DataFrame:
+def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """60-bit SimHash fingerprint per doc: ``(doc_id, simhash)``.
 
     Classic bit-vote: each token's hash votes +count/-count per bit
@@ -838,7 +805,7 @@ def simhash(
     """
     # post-explode filter (not an array-lambda): stays in codegen
     tokens = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         F.explode(F.split(F.col(text_col), r"\s+")).alias("word"),
     ).filter(F.col("word") != "")
     # Vote +/-1 per token OCCURRENCE — algebraically identical to the
@@ -875,7 +842,6 @@ def hamming_band_pairs(
     max_hamming: int,
     chunks: int = 4,
     bits: int = SIMHASH_BITS,
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Hamming-banded near-dup pairs over ANY integer fingerprint
     column (SimHash text prints, perceptual image hashes, …):
@@ -902,7 +868,7 @@ def hamming_band_pairs(
         ]
     )
     buckets = fp.select(
-        F.col(id_col).alias("doc_id"), F.col(fp_col).alias("__fp"), F.explode(chunk_structs).alias("cc")
+        "doc_id", F.col(fp_col).alias("__fp"), F.explode(chunk_structs).alias("cc")
     ).select(
         "doc_id", "__fp", F.col("cc.chunk").alias("chunk"), F.col("cc.key").alias("key")
     )
@@ -1006,8 +972,6 @@ def simhash_near_dups(
     docs: DataFrame,
     max_hamming: int = 3,
     chunks: int = 4,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """SimHash near-dup pairs: ``(doc_a, doc_b, hamming)``.
 
@@ -1020,7 +984,7 @@ def simhash_near_dups(
     result is an eager checkpoint, as in ``minhash_near_dups``
     (release it with ``util.release_result``).
     """
-    fp = simhash(docs, text_col, doc_col).persist()
+    fp = simhash(docs).persist()
     try:
         out = hamming_band_pairs(fp, "simhash", max_hamming, chunks, SIMHASH_BITS)
         return out.localCheckpoint(eager=True)
@@ -1034,9 +998,6 @@ def embedding_near_dup_survivors(
     threshold: float = 0.25,
     num_planes: int = 8,
     bands: int = 2,
-    doc_col: str = "doc_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding-cosine near-dup pass: drop every document whose
     embedding has cosine >= ``threshold`` with a SMALLER-id document
@@ -1064,19 +1025,11 @@ def embedding_near_dup_survivors(
     """
     from pagerank_mapreduce_implementation_spark.operators.similarity import cosine_pairs_lsh
 
-    pairs = cosine_pairs_lsh(
-        emb,
-        threshold,
-        num_planes,
-        bands,
-        id_col=id_col,
-        vec_col=vec_col,
-        materialize=True,
-    )
-    dropped = pairs.select(F.col("vec_b").alias(doc_col)).distinct()
+    pairs = cosine_pairs_lsh(emb, threshold, num_planes, bands, materialize=True)
+    dropped = pairs.select(F.col("vec_b").alias("doc_id")).distinct()
     # survivors keep the caller's own columns — projecting a fixed
     # schema here would break any docs frame that lacks it
-    return docs.join(dropped, doc_col, "left_anti")
+    return docs.join(dropped, "doc_id", "left_anti")
 
 
 # --- Exact-substring (suffix-array style) runs ------------------------------
@@ -1087,8 +1040,6 @@ def substring_runs(
     k: int = 8,
     min_len: int = 12,
     max_gram_df: int | None = None,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """Exact-substring dedup (Lee et al. 2022, "Deduplicating Training
     Data Makes Language Models Better"): maximal verbatim token runs of
@@ -1156,7 +1107,7 @@ def substring_runs(
         )
     if max_gram_df is not None and max_gram_df < 1:
         raise ValueError(f"max_gram_df ({max_gram_df}) must be >= 1")
-    grams = _gram_positions(docs, k, text_col, doc_col).persist()
+    grams = _gram_positions(docs, k).persist()
     try:
         out = _runs_from_grams(grams, k, min_len, max_gram_df)
         return out.localCheckpoint(eager=True)
@@ -1164,17 +1115,13 @@ def substring_runs(
         grams.unpersist()
 
 
-def _gram_positions(
-    docs: DataFrame, k: int, text_col: str, doc_col: str
-) -> DataFrame:
+def _gram_positions(docs: DataFrame, k: int) -> DataFrame:
     """``(doc_id, pos, gh)``: every k-gram's 0-based token position and
     md5 hash, for docs of at least ``k`` tokens."""
     # named token-array column first: no CSE across higher-order
     # functions (same measured pitfall as shingles)
-    arr = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    toks = docs.select(F.col(doc_col).alias("doc_id"), arr.alias("toks")).filter(
-        F.size("toks") >= k
-    )
+    arr = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    toks = docs.select("doc_id", arr.alias("toks")).filter(F.size("toks") >= k)
     return toks.select(
         "doc_id",
         F.posexplode(
@@ -1248,8 +1195,6 @@ def strip_substring_runs(
     k: int = 8,
     min_len: int = 12,
     max_gram_df: int | None = None,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     runs: DataFrame | None = None,
 ) -> DataFrame:
     """The REMOVAL step ``substring_runs`` reports for (Lee et al.
@@ -1259,7 +1204,7 @@ def strip_substring_runs(
     doc keeps the passage, so exactly one verbatim copy survives any
     duplicate chain a<b<c).
 
-    Returns ``docs`` with ``text_col`` rebuilt minus the stripped
+    Returns ``docs`` with ``text`` rebuilt minus the stripped
     spans plus an ``n_stripped`` token count. Documents with no spans
     pass through BYTE-identical (no whitespace canonicalization);
     stripped documents are rebuilt by single-space-joining their
@@ -1290,34 +1235,34 @@ def strip_substring_runs(
     does.
     """
     if runs is None:
-        runs = substring_runs(docs, k, min_len, max_gram_df, text_col, doc_col)
+        runs = substring_runs(docs, k, min_len, max_gram_df)
     spans = (
         runs.select(
-            F.col("doc_b").alias(doc_col),
+            F.col("doc_b").alias("doc_id"),
             F.struct(
                 F.col("b_start").alias("s"),
                 (F.col("b_start") + F.col("match_len")).alias("e"),
             ).alias("sp"),
         )
-        .groupBy(doc_col)
+        .groupBy("doc_id")
         .agg(F.collect_list("sp").alias("__spans"))
     )
-    arr = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    staged = docs.join(spans, doc_col, "left").withColumn("__toks", arr)
+    arr = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    staged = docs.join(spans, "doc_id", "left").withColumn("__toks", arr)
     kept = F.filter(
         F.col("__toks"),
         lambda w, i: ~F.exists(
             F.col("__spans"), lambda sp: (sp["s"] <= i) & (i < sp["e"])
         ),
     )
-    new_text = F.when(F.col("__spans").isNull(), F.col(text_col)).otherwise(
+    new_text = F.when(F.col("__spans").isNull(), F.col("text")).otherwise(
         F.array_join(kept, " ")
     )
     n_stripped = F.when(F.col("__spans").isNull(), F.lit(0)).otherwise(
         F.size("__toks") - F.size(kept)
     )
     out_cols = [
-        new_text.alias(text_col) if c == text_col else F.col(c)
+        new_text.alias("text") if c == "text" else F.col(c)
         for c in docs.columns
     ]
     return staged.select(*out_cols, n_stripped.alias("n_stripped"))
@@ -1327,8 +1272,6 @@ def line_dedup(
     docs: DataFrame,
     sep: str = "\n",
     min_line_chars: int = 1,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     key: "Callable[[Column], Column] | None" = None,
 ) -> DataFrame:
     """Corpus-wide repeated-LINE removal, keep-first (the CCNet /
@@ -1337,7 +1280,7 @@ def line_dedup(
     banners, nav bars, and license boilerplate that whole-document
     dedup can never see).
 
-    Splits ``text_col`` on the LITERAL separator ``sep``, keys each
+    Splits ``text`` on the LITERAL separator ``sep``, keys each
     line (default: ``md5(lower(trim(line)))`` — CCNet's
     case-insensitive normalization without its digit-stripping,
     documented deviation), and keeps only the FIRST occurrence of
@@ -1347,7 +1290,7 @@ def line_dedup(
     one document count too (second copy drops), matching CCNet's
     shard-global behavior.
 
-    Returns ``docs`` with ``text_col`` rebuilt (surviving lines
+    Returns ``docs`` with ``text`` rebuilt (surviving lines
     re-joined with ``sep``, original order) plus ``n_dropped_lines``.
     Documents losing no lines pass through BYTE-identical — the
     rebuild only touches victims.
@@ -1373,8 +1316,8 @@ def line_dedup(
     pat = _re.escape(sep)
 
     lines = docs.select(
-        F.col(doc_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), pat)).alias("idx", "line"),
+        "doc_id",
+        F.posexplode(F.split(F.col("text"), pat)).alias("idx", "line"),
     ).filter(F.length(F.trim("line")) >= min_line_chars)
     keyed = lines.select("doc_id", "idx", keyfn(F.col("line")).alias("k"))
     # one shuffle: (df, first-owner) per key — min(struct) orders by
@@ -1393,20 +1336,20 @@ def line_dedup(
         .agg(F.collect_list("idx").alias("__drops"))
     )
     staged = docs.join(
-        dropped.withColumnRenamed("doc_id", doc_col), doc_col, "left"
-    ).withColumn("__lines", F.split(F.col(text_col), pat))
+        dropped, "doc_id", "left"
+    ).withColumn("__lines", F.split(F.col("text"), pat))
     kept = F.filter(
         F.col("__lines"),
         lambda ln, i: ~F.array_contains(F.col("__drops"), i),
     )
-    new_text = F.when(F.col("__drops").isNull(), F.col(text_col)).otherwise(
+    new_text = F.when(F.col("__drops").isNull(), F.col("text")).otherwise(
         F.array_join(kept, sep)
     )
     n_dropped = F.when(F.col("__drops").isNull(), F.lit(0)).otherwise(
         F.size("__drops")
     )
     out_cols = [
-        new_text.alias(text_col) if c == text_col else F.col(c)
+        new_text.alias("text") if c == "text" else F.col(c)
         for c in docs.columns
     ]
     return staged.select(*out_cols, n_dropped.alias("n_dropped_lines"))
@@ -1416,8 +1359,6 @@ def intra_doc_line_dedup(
     docs: DataFrame,
     sep: str = "\n",
     min_line_chars: int = 1,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     key: "Callable[[Column], Column] | None" = None,
 ) -> DataFrame:
     """WITHIN-document repeated-line removal, keep-first —
@@ -1427,7 +1368,7 @@ def intra_doc_line_dedup(
     Penedo et al. 2023 run exactly this before any corpus-global
     pass). Same key convention (``md5(lower(trim(line)))``), same
     ``min_line_chars`` exemption (blank separators never collapse),
-    same contract: ``docs`` with ``text_col`` rebuilt (surviving
+    same contract: ``docs`` with ``text`` rebuilt (surviving
     lines re-joined with ``sep``, original order — documents losing
     no lines pass through BYTE-identical) plus ``n_dropped_lines``.
 
@@ -1449,7 +1390,7 @@ def intra_doc_line_dedup(
     keyfn = key or (lambda c: F.md5(F.lower(F.trim(c))))
     pat = _re.escape(sep)
 
-    lines = F.split(F.col(text_col), pat, -1)
+    lines = F.split(F.col("text"), pat, -1)
     staged = docs.withColumn("__lines", lines).withColumn(
         "__keys",
         F.transform(
@@ -1470,11 +1411,9 @@ def intra_doc_line_dedup(
         ),
     )
     n_dropped = F.size("__lines") - F.size(kept)
-    new_text = F.when(n_dropped == 0, F.col(text_col)).otherwise(
-        F.array_join(kept, sep)
-    )
+    new_text = F.when(n_dropped == 0, F.col("text")).otherwise(F.array_join(kept, sep))
     out_cols = [
-        new_text.alias(text_col) if c == text_col else F.col(c)
+        new_text.alias("text") if c == "text" else F.col(c)
         for c in docs.columns
     ]
     return staged.select(*out_cols, n_dropped.alias("n_dropped_lines"))
@@ -1487,9 +1426,6 @@ def semdedup(
     threshold: float = 0.95,
     n_iters: int = 2,
     keep_rule: str = "min_id",
-    doc_col: str = "doc_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): semantic dedup by k-means-cluster-
     bounded cosine comparison. Cluster the embeddings (Lloyd,
@@ -1504,8 +1440,8 @@ def semdedup(
       centroid-similarity examples preserves cluster-edge diversity.
 
     Returns the surviving ``docs`` rows, caller's schema preserved
-    (the ``embedding_near_dup_survivors`` contract — ids in ``emb``'s
-    ``id_col`` name ``docs``' ``doc_col``).
+    (the ``embedding_near_dup_survivors`` contract — ``emb``'s
+    ``vec_id`` values name ``docs``' ``doc_id``).
 
     Scale shape — the paper's point re-expressed in Spark terms:
     clustering REPLACES the quadratic all-pairs product with per-cell
@@ -1521,7 +1457,7 @@ def semdedup(
 
     Wide embeddings (1k+ dims): compose with
     ``embeddings.pca_project`` / ``embeddings.truncate_embeddings``
-    first (rename ``proj`` to the ``vec_col`` name) — every per-cell
+    first (rename ``proj`` to ``embedding``) — every per-cell
     cosine and the assignment fold shrink by dims/d while SemDeDup's
     cluster geometry is preserved by construction.
     """
@@ -1541,10 +1477,8 @@ def semdedup(
         # all but one doc per cell — a corpus wipe, not a dedup
         raise ValueError(f"threshold ({threshold}) must be in (0, 1]")
 
-    cents = lloyd_centroids(
-        emb, n_cells, n_iters, id_col, vec_col, exact_mean=True
-    )
-    cents_df, assign = ivf_assign(emb, n_cells, id_col, vec_col, centroids=cents)
+    cents = lloyd_centroids(emb, n_cells, n_iters, exact_mean=True)
+    cents_df, assign = ivf_assign(emb, n_cells, centroids=cents)
     side = assign.select(
         "vec_id", "cell_id", "vec", _norm(F.col("vec")).alias("vnorm")
     )
@@ -1593,13 +1527,13 @@ def semdedup(
         else:
             victim = F.col("id_b")
         dropped = (
-            pairs.select(victim.alias(doc_col))
+            pairs.select(victim.alias("doc_id"))
             .distinct()
             .localCheckpoint(eager=True)
         )
     finally:
         side.unpersist()
-    return docs.join(F.broadcast(dropped), doc_col, "left_anti")
+    return docs.join(F.broadcast(dropped), "doc_id", "left_anti")
 
 
 # --- content-defined chunking (CDC) ----------------------------------------
@@ -1608,13 +1542,7 @@ CDC_POLY_BASE = 8191
 CDC_POLY_MOD = 1_000_000_007
 
 
-def cdc_chunks(
-    docs: DataFrame,
-    window: int = 3,
-    divisor: int = 16,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def cdc_chunks(docs: DataFrame, window: int = 3, divisor: int = 16) -> DataFrame:
     """Content-defined chunking at token granularity — the LBFS/Rabin
     split (Muthitacharoen et al. 2001) that storage dedup and
     incremental-crawl pipelines use: ``(doc_id, chunk_idx, chunk_hash,
@@ -1651,12 +1579,8 @@ def cdc_chunks(
         raise ValueError(f"divisor ({divisor}) must be >= 1")
     B, M = CDC_POLY_BASE, CDC_POLY_MOD
 
-    toks = F.filter(
-        F.split(F.col(text_col), r"\s+"), lambda t: t != F.lit("")
-    )
-    t = docs.select(
-        F.col(doc_col).alias("doc_id"), toks.alias("toks")
-    ).filter(F.size("toks") > 0)
+    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda t: t != F.lit(""))
+    t = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") > 0)
     t = t.select(
         "doc_id",
         "toks",
@@ -1700,13 +1624,7 @@ def cdc_chunks(
     ).select("doc_id", "c.chunk_idx", "c.chunk_hash", "c.n_tokens")
 
 
-def cdc_dup_stats(
-    docs: DataFrame,
-    window: int = 3,
-    divisor: int = 16,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def cdc_dup_stats(docs: DataFrame, window: int = 3, divisor: int = 16) -> DataFrame:
     """Per-document chunk-level duplication profile over the CDC
     split: ``(doc_id, n_chunks, n_tokens, dup_chunks, dup_tokens,
     dup_token_frac)`` — ``dup_*`` counting chunks whose content hash
@@ -1721,13 +1639,7 @@ def cdc_dup_stats(
     occurrence counts join back candidate-bounded under AQE, then the
     per-doc rollup on ``doc_id``.
     """
-    ch = cdc_chunks(
-        docs,
-        window=window,
-        divisor=divisor,
-        text_col=text_col,
-        doc_col=doc_col,
-    )
+    ch = cdc_chunks(docs, window=window, divisor=divisor)
     occ = ch.groupBy("chunk_hash").agg(F.count(F.lit(1)).alias("occ"))
     dup = F.col("occ") > 1
     return (
@@ -1768,7 +1680,6 @@ def cluster_survivors(
     docs: DataFrame,
     threshold: float = 0.5,
     ngram: int = 5,
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """The dedup DECISION table — per document: which near-dup cluster
     it belongs to, which cluster member survives, and whether this row
@@ -1799,14 +1710,14 @@ def cluster_survivors(
     from pagerank_mapreduce_implementation_spark.operators import textstats as _ts
 
     pairs = minhash_near_dups(
-        docs, threshold=threshold, ngram=ngram, doc_col=doc_col
+        docs, threshold=threshold, ngram=ngram
     ).select("doc_a", "doc_b")
     comp = _graph.connected_components(pairs, "doc_a", "doc_b", algorithm="star")
-    quality = _ts.quality_scores(docs, doc_col=doc_col, score_only=True).select(
+    quality = _ts.quality_scores(docs, score_only=True).select(
         F.col("doc_id"), F.col("quality")
     )
     membered = (
-        docs.select(F.col(doc_col).alias("doc_id"))
+        docs.select("doc_id")
         .join(comp.withColumnRenamed("vertex", "doc_id"), "doc_id", "left")
         .select(
             "doc_id", F.coalesce("component", F.col("doc_id")).alias("cluster_id")
@@ -1832,8 +1743,6 @@ def edit_verified_dups(
     max_dist: int = 20,
     threshold: float = 0.5,
     ngram: int = 5,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """Edit-distance-VERIFIED near-duplicates → ``(doc_a, doc_b,
     edit_dist)``: MinHash+LSH candidate pairs re-checked with the
@@ -1857,11 +1766,9 @@ def edit_verified_dups(
     if max_dist < 0:
         raise ValueError(f"max_dist ({max_dist}) must be non-negative")
     pairs = minhash_near_dups(
-        docs, threshold=threshold, ngram=ngram, text_col=text_col, doc_col=doc_col
+        docs, threshold=threshold, ngram=ngram
     ).select("doc_a", "doc_b")
-    texts = docs.select(
-        F.col(doc_col).alias("doc_id"), F.col(text_col).alias("__t")
-    )
+    texts = docs.select("doc_id", F.col("text").alias("__t"))
     return (
         pairs.join(
             texts.select(
@@ -1886,13 +1793,7 @@ def edit_verified_dups(
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame,
-    k: int = 5,
-    w: int = 4,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame:
     """Winnowing fingerprint selection (Schleimer-Wilkerson-Aiken 2003,
     the MOSS scheme) — ``(doc_id, pos, fp)``: over the lowercased,
     whitespace-stripped text, hash every character ``k``-gram (the
@@ -1933,7 +1834,7 @@ def winnow_fingerprints(
     """
     if k < 1 or w < 1:
         raise ValueError(f"k ({k}) and w ({w}) must be >= 1")
-    id_type = docs.schema[doc_col].dataType.simpleString()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
 
     def _select(batches):
         import hashlib
@@ -2074,7 +1975,7 @@ def winnow_fingerprints(
                 columns=["doc_id", "pos", "fp"],
             ).astype({"pos": "int64", "fp": "int64"})
 
-    staged = docs.select(F.col(doc_col).alias("doc_id"), F.col(text_col).alias("__t"))
+    staged = docs.select("doc_id", F.col("text").alias("__t"))
     return staged.mapInPandas(_select, f"doc_id {id_type}, pos long, fp long")
 
 
@@ -2084,8 +1985,6 @@ def winnow_matches(
     w: int = 4,
     min_shared: int = 2,
     max_fp_df: int | None = None,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     normalize: bool = False,
 ) -> DataFrame:
     """Document pairs sharing winnowing fingerprints —
@@ -2108,11 +2007,7 @@ def winnow_matches(
     """
     if min_shared < 1:
         raise ValueError(f"min_shared ({min_shared}) must be >= 1")
-    fps = (
-        winnow_fingerprints(docs, k=k, w=w, text_col=text_col, doc_col=doc_col)
-        .select("doc_id", "fp")
-        .distinct()
-    )
+    fps = winnow_fingerprints(docs, k=k, w=w).select("doc_id", "fp").distinct()
     if max_fp_df is not None:
         if max_fp_df < 2:
             raise ValueError(f"max_fp_df ({max_fp_df}) must be >= 2")
@@ -2154,8 +2049,6 @@ def dedup_report(
     threshold: float = 0.5,
     ngram: int = 5,
     group_col: str = "source",
-    doc_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-source mass accounting of the dedup DECISION —
     ``(source, n_docs, n_kept, tokens_total, tokens_kept, drop_rate)``:
@@ -2173,14 +2066,12 @@ def dedup_report(
     integers and ``drop_rate`` a single rounded division, so the
     oracle composes the survivors SQL with a plain GROUP BY.
     """
-    verdict = cluster_survivors(docs, threshold, ngram, doc_col).select(
-        F.col("doc_id"), "keep"
-    )
+    verdict = cluster_survivors(docs, threshold, ngram).select(F.col("doc_id"), "keep")
     toks = F.size(
-        F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
+        F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != "")
     ).cast("long")
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"), F.col(group_col), toks.alias("__nt")
+        "doc_id", F.col(group_col), toks.alias("__nt")
     ).join(verdict, "doc_id")
     agged = staged.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -2208,8 +2099,6 @@ def _planted_twin_corpus(
     sample_mod: int,
     salt: str,
     twin_offset: int,
-    text_col: str,
-    doc_col: str,
 ) -> tuple[DataFrame, DataFrame]:
     """Shared truth-planting stage of the recall audits
     (``minhash_recall_report`` / ``simhash_recall_report``): every
@@ -2225,8 +2114,8 @@ def _planted_twin_corpus(
         raise ValueError(f"sample_mod ({sample_mod}) must be >= 1")
     if twin_offset < 1:
         raise ValueError(f"twin_offset ({twin_offset}) must be positive")
-    key = F.col(doc_col).cast("long")
-    arr = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+    key = F.col("doc_id").cast("long")
+    arr = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
     staged = docs.filter(key % sample_mod == 0).select(
         key.alias("doc_id"), arr.alias("__toks")
     )
@@ -2266,7 +2155,7 @@ def _planted_twin_corpus(
     ).select(
         (F.col("doc_id") + F.lit(int(twin_offset))).alias("doc_id"), "__text"
     )
-    corpus = docs.select(key.alias("doc_id"), F.col(text_col).alias("__text")).unionAll(
+    corpus = docs.select(key.alias("doc_id"), F.col("text").alias("__text")).unionAll(
         twins
     )
     return staged.select("doc_id"), corpus
@@ -2280,8 +2169,6 @@ def minhash_recall_report(
     ngram: int = 2,
     num_hashes: int = 16,
     bands: int = 4,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     salt: str = "mhrecall:",
     twin_offset: int = 1 << 40,
 ) -> DataFrame:
@@ -2302,7 +2189,7 @@ def minhash_recall_report(
 
     Determinism end to end (perturbation coins, universal-hash
     signatures, band buckets, round-6 Jaccard) means the DuckDB oracle
-    replays the whole audit bit-for-bit. ``doc_col`` values must be
+    replays the whole audit bit-for-bit. ``doc_id`` values must be
     unique, non-negative and < ``twin_offset`` (twin ids are
     ``doc_id + twin_offset``).
 
@@ -2314,9 +2201,9 @@ def minhash_recall_report(
     broadcast-crossed aggregates.
     """
     planted_ids, corpus = _planted_twin_corpus(
-        docs, drop_rate, sample_mod, salt, twin_offset, text_col, doc_col
+        docs, drop_rate, sample_mod, salt, twin_offset
     )
-    sh = shingles(corpus, ngram, "__text", "doc_id").persist()
+    sh = shingles(corpus, ngram, "__text").persist()
     try:
         sig = minhash_signatures(sh, num_hashes)
         found = jaccard_verify(
@@ -2359,8 +2246,6 @@ def simhash_recall_report(
     sample_mod: int = 10,
     max_hamming: int = 8,
     chunks: int = 4,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     salt: str = "shrecall:",
     twin_offset: int = 1 << 40,
 ) -> DataFrame:
@@ -2395,9 +2280,9 @@ def simhash_recall_report(
     if max_hamming < 0:
         raise ValueError(f"max_hamming ({max_hamming}) must be >= 0")
     planted_ids, corpus = _planted_twin_corpus(
-        docs, drop_rate, sample_mod, salt, twin_offset, text_col, doc_col
+        docs, drop_rate, sample_mod, salt, twin_offset
     )
-    fp = simhash(corpus, "__text", "doc_id").persist()
+    fp = simhash(corpus, "__text").persist()
     try:
         found = hamming_band_pairs(
             fp, "simhash", max_hamming, chunks, SIMHASH_BITS
@@ -2460,8 +2345,6 @@ def lsh_expected_recall(
     drop_rate: float = 0.15,
     sample_mod: int = 10,
     ngram: int = 2,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     salt: str = "mhrecall:",
     twin_offset: int = 1 << 40,
 ) -> DataFrame:
@@ -2506,9 +2389,9 @@ def lsh_expected_recall(
                 "unrolled power chain is capped"
             )
     planted_ids, corpus = _planted_twin_corpus(
-        docs, drop_rate, sample_mod, salt, twin_offset, text_col, doc_col
+        docs, drop_rate, sample_mod, salt, twin_offset
     )
-    sh = shingles(corpus, ngram, "__text", "doc_id").persist()
+    sh = shingles(corpus, ngram, "__text").persist()
     try:
         planted = planted_ids.select(
             F.col("doc_id").alias("doc_a"),

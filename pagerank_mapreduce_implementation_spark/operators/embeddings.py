@@ -21,8 +21,8 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pagerank_mapreduce_implementation_spark.operators.similarity import _dot, _norm
 
 
-def _uniform_dims(emb: DataFrame, vec_col: str) -> int | None:
-    """Vector length of ``vec_col``, ASSERTING it is uniform across the
+def _uniform_dims(emb: DataFrame) -> int | None:
+    """Vector length of ``embedding``, ASSERTING it is uniform across the
     table — the dims probe every op here shares. Inferring dims from an
     arbitrary first row (the previous form) silently mis-handles ragged
     inputs: out-of-range coordinates become NULLs that ``F.avg`` skips,
@@ -31,26 +31,20 @@ def _uniform_dims(emb: DataFrame, vec_col: str) -> int | None:
     aggregate — the same single-job cost as the ``first()`` it
     replaces. Returns ``None`` for an empty table."""
     row = emb.agg(
-        F.min(F.size(F.col(vec_col))).alias("lo"),
-        F.max(F.size(F.col(vec_col))).alias("hi"),
+        F.min(F.size(F.col("embedding"))).alias("lo"),
+        F.max(F.size(F.col("embedding"))).alias("hi"),
     ).first()
     if row is None or row["lo"] is None:
         return None
     if row["lo"] != row["hi"]:
         raise ValueError(
-            f"{vec_col}: ragged vector lengths (min {row['lo']}, max "
+            f"embedding: ragged vector lengths (min {row['lo']}, max "
             f"{row['hi']}) — embedding ops require uniform dims"
         )
     return int(row["hi"])
 
 
-def truncate_embeddings(
-    emb: DataFrame,
-    dims: int,
-    renorm: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def truncate_embeddings(emb: DataFrame, dims: int, renorm: bool = True) -> DataFrame:
     """Matryoshka truncation: keep the first ``dims`` coordinates of
     each vector — ``(vec_id, embedding: array<double>[dims])`` — and by
     default re-L2-normalize the prefix (the serving contract of
@@ -67,12 +61,10 @@ def truncate_embeddings(
     """
     if dims < 1:
         raise ValueError(f"dims ({dims}) must be >= 1")
-    sl = F.transform(
-        F.slice(F.col(vec_col), 1, dims), lambda x: x.cast("double")
-    )
-    staged = emb.select(F.col(id_col).alias("vec_id"), sl.alias("__v"))
+    sl = F.transform(F.slice(F.col("embedding"), 1, dims), lambda x: x.cast("double"))
+    staged = emb.select("vec_id", sl.alias("__v"))
     if not renorm:
-        return staged.select("vec_id", F.col("__v").alias(vec_col))
+        return staged.select("vec_id", F.col("__v").alias("embedding"))
     # the norm becomes an ATTRIBUTE before the per-element lambda reads
     # it (same shape as quantize_embeddings' __mx): referenced twice and
     # non-cheap, so CollapseProject keeps it materialized — inlining the
@@ -85,15 +77,13 @@ def truncate_embeddings(
             F.transform(F.col("__v"), lambda x: x / F.col("__n")),
         )
         .otherwise(F.col("__v"))
-        .alias(vec_col),
+        .alias("embedding"),
     )
 
 
 def mean_pool_embeddings(
     emb: DataFrame,
     group_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact: bool = False,
 ) -> DataFrame:
     """Per-group centroid: ``(group_col, n, centroid: array<double>)``
@@ -106,17 +96,17 @@ def mean_pool_embeddings(
     with map-side partial aggregation), the same shape
     ``similarity.lloyd_centroids`` step (2) uses. ``exact=True`` is the
     audit/oracle configuration: per group, members are collected sorted
-    by ``id_col`` and summed as one sequential left fold, so the
+    by ``vec_id`` and summed as one sequential left fold, so the
     centroid is bit-independent of partitioning (a group's members
     materialize in one task — fine at audit scale, not the 100 TB
     default; identical trade to ``lloyd_centroids(exact_mean=True)``).
     """
-    dims = _uniform_dims(emb, vec_col)
+    dims = _uniform_dims(emb)
     if dims is None:
         return emb.select(
             F.col(group_col),
             F.lit(0).cast("long").alias("n"),
-            F.col(vec_col).cast("array<double>").alias("centroid"),
+            F.col("embedding").cast("array<double>").alias("centroid"),
         ).limit(0)
     if exact:
         folded = (
@@ -126,8 +116,8 @@ def mean_pool_embeddings(
                 F.sort_array(
                     F.collect_list(
                         F.struct(
-                            F.col(id_col).alias("_id"),
-                            F.col(vec_col).cast("array<double>").alias("v"),
+                            F.col("vec_id").alias("_id"),
+                            F.col("embedding").cast("array<double>").alias("v"),
                         )
                     )
                 ).alias("ms"),
@@ -143,9 +133,7 @@ def mean_pool_embeddings(
             "n",
             F.transform(summed, lambda s: s / F.col("n")).alias("centroid"),
         )
-    cols = [
-        F.col(vec_col)[i].cast("double").alias(f"__c{i}") for i in range(dims)
-    ]
+    cols = [F.col("embedding")[i].cast("double").alias(f"__c{i}") for i in range(dims)]
     agged = (
         emb.select(F.col(group_col), *cols)
         .groupBy(group_col)
@@ -161,12 +149,7 @@ def mean_pool_embeddings(
     )
 
 
-def embedding_gram(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    exact: bool = False,
-) -> DataFrame:
+def embedding_gram(emb: DataFrame, exact: bool = False) -> DataFrame:
     """The gram matrix G = X^T X of the embedding table as its upper
     triangle — ``(i, j, g)`` with 0-based ``i <= j`` — the one-pass
     sufficient statistic behind PCA/whitening/covariance (d^2 numbers
@@ -187,7 +170,7 @@ def embedding_gram(
     and mirrored by the DuckDB oracle — at the cost of a row-count x
     d^2/2 explode. Audit scale only.
     """
-    dims = _uniform_dims(emb, vec_col)
+    dims = _uniform_dims(emb)
     if dims is None:
         return emb.sparkSession.createDataFrame([], "i int, j int, g double")
     if exact:
@@ -198,7 +181,7 @@ def embedding_gram(
             "'p', cast(__v[i] as double) * cast(__v[j] as double)))))"
         )
         cells = (
-            emb.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
+            emb.select(F.col("vec_id").alias("__id"), F.col("embedding").alias("__v"))
             .select("__id", F.explode(tri).alias("c"))
             .select("__id", "c.i", "c.j", "c.p")
         )
@@ -226,21 +209,19 @@ def embedding_gram(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            x = np.array(pdf["embedding"].tolist(), dtype=np.float64)
             g = x.T @ x
             yield pd.DataFrame(
                 {"i": iu.astype("int32"), "j": ju.astype("int32"), "g": g[iu, ju]}
             )
 
-    partials = emb.select(vec_col).mapInPandas(_partial, "i int, j int, g double")
+    partials = emb.select("embedding").mapInPandas(_partial, "i int, j int, g double")
     return partials.groupBy("i", "j").agg(F.sum("g").alias("g"))
 
 
 def pca_components(
     emb: DataFrame,
     k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     center: bool = True,
 ) -> tuple[list[float], list[list[float]], int, list[float]]:
     """Top-``k`` principal components of the embedding table:
@@ -262,17 +243,15 @@ def pca_components(
 
     if k < 1:
         raise ValueError(f"k ({k}) must be >= 1")
-    dims = _uniform_dims(emb, vec_col)
+    dims = _uniform_dims(emb)
     if dims is None:
         raise ValueError("pca_components: empty embedding table")
     if k > dims:
         raise ValueError(f"k ({k}) must be <= dims ({dims})")
-    cells = embedding_gram(emb, id_col=id_col, vec_col=vec_col).collect()
+    cells = embedding_gram(emb).collect()
     pooled = mean_pool_embeddings(
-        emb.select(F.lit(1).alias("__g"), F.col(id_col), F.col(vec_col)),
+        emb.select(F.lit(1).alias("__g"), F.col("vec_id"), F.col("embedding")),
         group_col="__g",
-        id_col=id_col,
-        vec_col=vec_col,
     ).first()
     n = int(pooled["n"])
     mu = np.array(pooled["centroid"], dtype=np.float64)
@@ -300,8 +279,6 @@ def pca_components(
 def pca_project(
     emb: DataFrame,
     k: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     center: bool = True,
     components: list[list[float]] | None = None,
     means: list[float] | None = None,
@@ -335,9 +312,7 @@ def pca_project(
     import numpy as np
 
     if components is None:
-        eigenvalues, components, _, fit_means = pca_components(
-            emb, k=k, id_col=id_col, vec_col=vec_col, center=center
-        )
+        eigenvalues, components, _, fit_means = pca_components(emb, k=k, center=center)
         if means is None:
             means = fit_means
     k = len(components)
@@ -371,8 +346,8 @@ def pca_project(
     ]
     return (
         emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
+            "vec_id",
+            F.col("embedding").cast("array<double>").alias("__v"),
         )
         .select("vec_id", *projs)
         .select(
@@ -387,10 +362,6 @@ def cluster_top_terms(
     emb: DataFrame,
     n_cells: int = 8,
     k: int = 5,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
     weighting: str = "count",
 ) -> DataFrame:
@@ -399,8 +370,8 @@ def cluster_top_terms(
     ties broken by the word so the list is deterministic. The
     interpretability read of a clustered corpus (what IS cell 3?)
     before acting on cluster-level decisions (SemDeDup keeps, mixture
-    shifts, topic pruning). ``emb``'s ``id_col`` names ``docs``'
-    ``doc_col`` (the semdedup contract); pass
+    shifts, topic pruning). ``emb``'s ``vec_id`` names ``docs``'
+    ``doc_id`` (the semdedup contract); pass
     ``centroids=lloyd_centroids(...)`` for production cells.
 
     Scale shape: assignment is ``ivf_assign``'s narrow broadcast fold
@@ -425,14 +396,10 @@ def cluster_top_terms(
 
     if k < 1:
         raise ValueError(f"k ({k}) must be >= 1")
-    _, assign = ivf_assign(
-        emb, n_cells=n_cells, id_col=id_col, vec_col=vec_col, centroids=centroids
-    )
-    toks = F.filter(
-        F.split(F.lower(F.col(text_col)), r"\s+"), lambda x: x != ""
-    )
+    _, assign = ivf_assign(emb, n_cells=n_cells, centroids=centroids)
+    toks = F.filter(F.split(F.lower(F.col("text")), r"\s+"), lambda x: x != "")
     words = (
-        docs.select(F.col(doc_col).alias("vec_id"), toks.alias("__t"))
+        docs.select(F.col("doc_id").alias("vec_id"), toks.alias("__t"))
         .join(assign.select("vec_id", "cell_id"), "vec_id")
         .select("cell_id", F.explode("__t").alias("word"))
     )
@@ -470,8 +437,6 @@ def cluster_top_terms(
 def group_compactness(
     emb: DataFrame,
     group_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact: bool = False,
 ) -> DataFrame:
     """Embedding-space coherence per group — ``(group_col, n,
@@ -490,12 +455,12 @@ def group_compactness(
     addition under any partitioning — then rounded 6.
     """
     cents = mean_pool_embeddings(
-        emb, group_col=group_col, id_col=id_col, vec_col=vec_col, exact=exact
+        emb, group_col=group_col, exact=exact
     ).select(group_col, "centroid")
     cents = cents.withColumn("__cn", _norm(F.col("centroid")))
     joined = emb.select(
         F.col(group_col),
-        F.col(vec_col).cast("array<double>").alias("__v"),
+        F.col("embedding").cast("array<double>").alias("__v"),
     ).join(cents, group_col)
     # zero-norm guard (review finding): Spark's non-ANSI divide turns
     # dot/0 into NULL, which F.sum would silently SKIP while the count

@@ -96,13 +96,6 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def out_degree(edges: DataFrame) -> DataFrame:
-    """Out-degree per source, counting duplicate edges (the reference
-    divides by the full outlink-list length, duplicates included:
-    PageRank.java:465)."""
-    return edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
-
-
 def degree_histogram(edges: DataFrame, direction: str = "out") -> DataFrame:
     """Degree DISTRIBUTION of a link graph — the skew profile you
     read BEFORE running PageRank at scale: ``(out_degree, n_vertices)``
@@ -149,13 +142,11 @@ def pagerank(
     edges: DataFrame,
     n_iters: int = 10,
     mode: str = "reference",
-    damping: float = DAMPING,
     vertices: DataFrame | None = None,
     seed_count: int | None = None,
     weight_col: str | None = None,
     reset: DataFrame | None = None,
     reliable_dir: str | None = None,
-    tol: float | None = None,
 ) -> DataFrame:
     """PageRank over (src, dst) edges.
 
@@ -195,8 +186,6 @@ def pagerank(
     """
     if mode not in ("reference", "textbook"):
         raise ValueError(f"unknown mode {mode!r}")
-    if tol is not None and tol <= 0:
-        raise ValueError(f"tol ({tol}) must be positive")
     spark = edges.sparkSession
 
     # Static per-iteration join input: one row per edge occurrence with
@@ -391,13 +380,13 @@ def pagerank(
                 # personalized reference teleport (1-d)*N*reset(u): the
                 # uniform vector reset=1/N reproduces the flat 0.15 constant
                 const = (
-                    F.lit((1.0 - damping) * n) * F.col("reset")
+                    F.lit((1.0 - DAMPING) * n) * F.col("reset")
                     if use_reset
-                    else F.lit(1.0 - damping)
+                    else F.lit(1.0 - DAMPING)
                 )
                 return sums.filter(F.col("own") == 1).select(
                     "url",
-                    (const + F.lit(damping) * F.col("contrib_sum")).alias("rank"),
+                    (const + F.lit(DAMPING) * F.col("contrib_sum")).alias("rank"),
                 )
             # textbook: redistribute dangling mass, normalize constant by N.
             # The mass is a broadcast 1-row aggregate (scalar subquery), NOT
@@ -408,11 +397,11 @@ def pagerank(
                 # terms (bit-identical) and, crucially, the step's SECOND
                 # reference to the lazy rank chain.
                 if use_reset:
-                    new_rank = F.lit(1.0 - damping) * F.col("reset") + F.lit(
-                        damping
+                    new_rank = F.lit(1.0 - DAMPING) * F.col("reset") + F.lit(
+                        DAMPING
                     ) * F.col("contrib_sum")
                 else:
-                    new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * F.col(
+                    new_rank = F.lit((1.0 - DAMPING) / n) + F.lit(DAMPING) * F.col(
                         "contrib_sum"
                     )
                 return sums.filter(F.col("own") == 1).select(
@@ -425,11 +414,11 @@ def pagerank(
             if use_reset:
                 # standard personalized PageRank: teleport AND dangling
                 # mass land on vertices in reset-vector proportion
-                new_rank = F.lit(1.0 - damping) * F.col("reset") + F.lit(damping) * (
+                new_rank = F.lit(1.0 - DAMPING) * F.col("reset") + F.lit(DAMPING) * (
                     F.col("contrib_sum") + F.col("dangling_mass") * F.col("reset")
                 )
             else:
-                new_rank = F.lit((1.0 - damping) / n) + F.lit(damping) * (
+                new_rank = F.lit((1.0 - DAMPING) / n) + F.lit(DAMPING) * (
                     F.col("contrib_sum") + F.col("dangling_mass") / n
                 )
             return (
@@ -447,32 +436,11 @@ def pagerank(
         # the preemptible-cluster mode: a lost executor replays from the
         # persisted state, not from iteration 0 (tests/test_pagerank.py
         # pins value parity + on-disk checkpoint files).
-        # tol: opt-in L1-convergence early exit — n_iters becomes a CAP.
-        # Reference parity callers leave it None (PageRank.java:190
-        # hard-codes 10 iterations; the registered queries and their
-        # unrolled-CTE oracles depend on the exact count). With it, the
-        # loop materializes every iteration (both states are needed) and
-        # pays one vertex-sized join + a 1-row aggregate per check — worth
-        # it at 100 TB where a converged loop otherwise burns full
-        # scatter/gather rounds doing nothing. The iterated vectors are
-        # support-only but share the SAME key set every round (every
-        # vertex keeps its own=1 row), so the inner join is total.
-        converged = None
-        if tol is not None:
-            def converged(prev: DataFrame, cur: DataFrame) -> bool:
-                row = (
-                    prev.select("url", F.col("rank").alias("__prev"))
-                    .join(cur, "url")
-                    .agg(F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("d"))
-                    .first()
-                )
-                return row["d"] is not None and float(row["d"]) < tol
-
         # The result is the final boundary's checkpoint; the scope drops
         # the static tables and every earlier checkpoint on exit (the
         # reference GC'd intermediate dirs the same way,
         # PageRank.java:222-228,308-327).
-        result = scope.iterate(ranks, step, n_iters, converged=converged)
+        result = scope.iterate(ranks, step, n_iters)
         return scope.keep(result)
 
 

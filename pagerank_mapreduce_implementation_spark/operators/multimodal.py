@@ -40,12 +40,10 @@ IMAGE_META_SCHEMA = (
 )
 
 
-def text_as_blob(docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id") -> DataFrame:
+def text_as_blob(docs: DataFrame) -> DataFrame:
     """Deterministic binary payload column for testing the multimodal
     path against the existing corpus (utf-8 bytes of the text)."""
-    return docs.select(
-        F.col(doc_col).alias("doc_id"), F.encode(F.col(text_col), "utf-8").alias("content")
-    )
+    return docs.select("doc_id", F.encode(F.col("text"), "utf-8").alias("content"))
 
 
 def blob_metadata(blobs: DataFrame) -> DataFrame:

@@ -31,9 +31,7 @@ PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def redact_pii(
-    docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id"
-) -> DataFrame:
+def redact_pii(docs: DataFrame) -> DataFrame:
     """Per doc: PII counts + the redacted text:
     ``(doc_id, n_urls, n_emails, n_phones, redacted)``.
 
@@ -45,7 +43,7 @@ def redact_pii(
     are already masked — the same longest-first discipline the
     replacement uses.
     """
-    staged = docs.select(F.col(doc_col).alias("doc_id"), F.col(text_col).alias("_t"))
+    staged = docs.select("doc_id", F.col("text").alias("_t"))
     out_cols: list[Column] = []
     running = F.col("_t")
     for name, pattern, mask in PATTERNS:
@@ -62,11 +60,7 @@ def redact_pii(
 CARD_RE = r"\b\d(?:[ -]?\d){12,18}\b"
 
 
-def luhn_scan(
-    docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def luhn_scan(docs: DataFrame) -> DataFrame:
     """Checksum-validated payment-card detection — one row per
     card-shaped candidate: ``(doc_id, card_digits, n_digits,
     luhn_valid)``. A bare 13-19-digit regex false-positives on every
@@ -90,9 +84,9 @@ def luhn_scan(
     inspectable before anything is destroyed.
     """
     cards = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         F.explode(
-            F.regexp_extract_all(F.col(text_col), F.lit(CARD_RE), F.lit(0))
+            F.regexp_extract_all(F.col("text"), F.lit(CARD_RE), F.lit(0))
         ).alias("card"),
     )
     digits = F.regexp_replace(F.col("card"), r"[^0-9]", "")

@@ -172,9 +172,7 @@ def stratified_weighted_sample(
     )
 
 
-def _source_token_totals(
-    staged: DataFrame, source_col: str, text_col: str
-) -> "dict[str, int]":
+def _source_token_totals(staged: DataFrame, source_col: str) -> "dict[str, int]":
     """Collect per-source whitespace-token totals for the mixers,
     FAIL-LOUD on the two inputs that used to crash deep inside the
     allocation math (review finding): a NULL source key (None cannot
@@ -189,7 +187,7 @@ def _source_token_totals(
     no_text = sorted(r[0] for r in trows if r["__T"] is None)
     if no_text:
         raise ValueError(
-            f"sources with no countable {text_col} (every row NULL): "
+            "sources with no countable text (every row NULL): "
             f"{no_text} — their token mass is undefined"
         )
     return {r[0]: int(r["__T"]) for r in trows}
@@ -228,8 +226,6 @@ def mix_sources(
     docs: DataFrame,
     target_props: dict[str, float],
     source_col: str = "source",
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     salt: str = "mix:",
 ) -> DataFrame:
     """Deterministic DATA MIXING: subsample each source so the
@@ -269,9 +265,9 @@ def mix_sources(
         raise ValueError("target_props must be non-empty")
     if any(p <= 0 for p in target_props.values()):
         raise ValueError("target proportions must be positive")
-    toks = F.size(F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != ""))
+    toks = F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != ""))
     staged = docs.withColumn("__nt", toks.cast("long"))
-    totals = _source_token_totals(staged, source_col, text_col)
+    totals = _source_token_totals(staged, source_col)
     missing = sorted(set(target_props) - set(totals))
     if missing:
         raise ValueError(
@@ -291,7 +287,7 @@ def mix_sources(
     return (
         staged.join(F.broadcast(rates), source_col)
         .filter(
-            _hash_uniform(F.col(doc_col), salt) * F.col("__T")
+            _hash_uniform(F.col("doc_id"), salt) * F.col("__T")
             < F.col("__p") * F.col("__k")
         )
         .drop("__nt", "__T", "__p", "__k")
@@ -300,8 +296,6 @@ def mix_sources(
 
 def _hashed_gram_counts(
     docs: DataFrame,
-    text_col: str,
-    doc_col: str,
     n_buckets: int,
     ngram_ns: tuple,
     salt: str,
@@ -313,8 +307,8 @@ def _hashed_gram_counts(
     (``_hash_bucket``, identical in the SQL oracle). Narrow per-row
     gram build + ONE token-volume shuffle (the groupBy), zero-gram
     docs naturally absent."""
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
-    staged = docs.select(F.col(doc_col).alias("doc_id"), toks.alias("__t"))
+    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
+    staged = docs.select("doc_id", toks.alias("__t"))
     nt = F.size("__t")
 
     def grams_of(n: int) -> Column:
@@ -342,8 +336,6 @@ def _hashed_gram_counts(
 def dsir_weights(
     raw: DataFrame,
     target: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     n_buckets: int = 1024,
     ngram_ns: tuple = (1, 2),
     smoothing: float = 1.0,
@@ -379,12 +371,8 @@ def dsir_weights(
         raise ValueError(f"smoothing must be > 0, got {smoothing}")
     if not ngram_ns or any(int(n) < 1 for n in ngram_ns):
         raise ValueError(f"ngram_ns must be ints >= 1, got {ngram_ns!r}")
-    raw_bc = _hashed_gram_counts(
-        raw, text_col, doc_col, n_buckets, ngram_ns, salt
-    )
-    tgt_bc = _hashed_gram_counts(
-        target, text_col, doc_col, n_buckets, ngram_ns, salt
-    )
+    raw_bc = _hashed_gram_counts(raw, n_buckets, ngram_ns, salt)
+    tgt_bc = _hashed_gram_counts(target, n_buckets, ngram_ns, salt)
     raw_dist = raw_bc.groupBy("bucket").agg(F.sum("cnt").alias("__r"))
     tgt_dist = tgt_bc.groupBy("bucket").agg(F.sum("cnt").alias("__t"))
     dist = (
@@ -436,8 +424,6 @@ def dsir_select(
     raw: DataFrame,
     target: DataFrame,
     k: int,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     n_buckets: int = 1024,
     ngram_ns: tuple = (1, 2),
     smoothing: float = 1.0,
@@ -459,9 +445,7 @@ def dsir_select(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    w = dsir_weights(
-        raw, target, text_col, doc_col, n_buckets, ngram_ns, smoothing, salt
-    )
+    w = dsir_weights(raw, target, n_buckets, ngram_ns, smoothing, salt)
     u = _hash_uniform(F.col("doc_id"), gumbel_salt)
     score = F.round(
         F.col("log_weight") * F.lit(_LN10) - F.log(-F.log(u)), 6
@@ -539,8 +523,6 @@ def unimax_mix(
     total_budget: float,
     epoch_cap: float = 1.0,
     source_col: str = "source",
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     salt: str = "unimax:",
     return_alloc: bool = False,
 ) -> DataFrame:
@@ -573,9 +555,9 @@ def unimax_mix(
         raise ValueError(f"total_budget ({total_budget}) must be positive")
     if epoch_cap <= 0:
         raise ValueError(f"epoch_cap ({epoch_cap}) must be positive")
-    toks = F.size(F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != ""))
+    toks = F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != ""))
     staged = docs.withColumn("__nt", toks.cast("long"))
-    totals = _source_token_totals(staged, source_col, text_col)
+    totals = _source_token_totals(staged, source_col)
     alloc = _unimax_waterfall(totals, total_budget, epoch_cap)
     if return_alloc:
         return spark.createDataFrame(
@@ -592,7 +574,7 @@ def unimax_mix(
     return (
         staged.join(F.broadcast(rates), source_col)
         .filter(
-            _hash_uniform(F.col(doc_col), salt) * F.col("__T") < F.col("__b")
+            _hash_uniform(F.col("doc_id"), salt) * F.col("__T") < F.col("__b")
         )
         .drop("__nt", "__T", "__b")
     )
@@ -603,8 +585,6 @@ def temperature_mix(
     total_budget: float,
     tau: float = 2.0,
     source_col: str = "source",
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     salt: str = "temp:",
     return_alloc: bool = False,
 ) -> DataFrame:
@@ -635,9 +615,9 @@ def temperature_mix(
         raise ValueError(f"total_budget ({total_budget}) must be positive")
     if tau <= 0:
         raise ValueError(f"tau ({tau}) must be positive")
-    toks = F.size(F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != ""))
+    toks = F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != ""))
     staged = docs.withColumn("__nt", toks.cast("long"))
-    totals = _source_token_totals(staged, source_col, text_col)
+    totals = _source_token_totals(staged, source_col)
 
     import math as _math
 
@@ -670,7 +650,7 @@ def temperature_mix(
     return (
         staged.join(F.broadcast(rates), source_col)
         .filter(
-            _hash_uniform(F.col(doc_col), salt) * F.col("__T") < F.col("__b")
+            _hash_uniform(F.col("doc_id"), salt) * F.col("__T") < F.col("__b")
         )
         .drop("__nt", "__T", "__b")
     )
@@ -679,7 +659,6 @@ def temperature_mix(
 def training_order(
     docs: DataFrame,
     seed: str = "torder",
-    doc_col: str = "doc_id",
     n_buckets: int = 1024,
 ) -> DataFrame:
     """Deterministic global training order: ``(doc_id, position)`` with
@@ -697,16 +676,16 @@ def training_order(
     bucket a per-bucket window ranks locally (parallel across buckets)
     and the tiny bucket-counts table's running sum broadcasts back as
     each bucket's global offset — the same two-phase prefix pattern as
-    ``text.pack_sequences``. Ties in ``u`` break by ``doc_col``;
-    identical keys get identical coins, so ``doc_col`` must be unique
+    ``text.pack_sequences``. Ties in ``u`` break by ``doc_id``;
+    identical keys get identical coins, so ``doc_id`` must be unique
     (the corpus contract).
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets ({n_buckets}) must be >= 1")
     salt = f"{seed}:"
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
-        _hash_uniform(F.col(doc_col), salt).alias("__u"),
+        "doc_id",
+        _hash_uniform(F.col("doc_id"), salt).alias("__u"),
     ).withColumn(
         # u in [0,1) exactly, so the bucket index is in [0, n_buckets)
         "__bucket",
@@ -751,7 +730,6 @@ def curriculum_order(
     score_col: str,
     boundaries: list[float],
     seed: str = "curriculum",
-    doc_col: str = "doc_id",
     n_buckets: int = 1024,
     descending: bool = True,
 ) -> DataFrame:
@@ -795,9 +773,9 @@ def curriculum_order(
     stage = (F.lit(n_stages - 1) - raw) if descending else raw
     salt = f"{seed}:"
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         stage.cast("int").alias("stage"),
-        _hash_uniform(F.col(doc_col), salt).alias("__u"),
+        _hash_uniform(F.col("doc_id"), salt).alias("__u"),
     ).withColumn(
         "__bucket",
         F.col("stage").cast("long") * n_buckets
@@ -812,7 +790,6 @@ def token_budget_mix(
     score_col: str = "n_chars",
     group_col: str = "source",
     key_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Fill per-source TOKEN budgets greedily by score —
     ``(doc_id, source, n_tokens)``: within each source, docs are taken
@@ -845,7 +822,7 @@ def token_budget_mix(
     if bad:
         raise ValueError(f"budgets must be >= 1 token: {bad}")
     toks = F.size(
-        F.filter(F.split(F.col(text_col), r"\s+"), lambda x: x != "")
+        F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != "")
     ).cast("long")
     bmap = F.create_map(
         *[x for s, b in sorted(budgets.items()) for x in (F.lit(s), F.lit(int(b)))]

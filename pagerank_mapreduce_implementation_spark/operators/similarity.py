@@ -57,12 +57,7 @@ def _norm(a: Column) -> Column:
     )
 
 
-def quantize_embeddings(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    as_string: bool = False,
-) -> DataFrame:
+def quantize_embeddings(emb: DataFrame, as_string: bool = False) -> DataFrame:
     """Symmetric per-vector INT8 quantization — the storage-shrink pass
     an embedding corpus takes before ANN serving (4x smaller than
     float32; dequantize with one scalar multiply per vector):
@@ -77,8 +72,8 @@ def quantize_embeddings(
     form: a sortable scalar column); default is ``array<int>`` for
     downstream math.
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    staged = emb.select(F.col(id_col).alias("vec_id"), v.alias("__v")).withColumn(
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    staged = emb.select("vec_id", v.alias("__v")).withColumn(
         "__mx", F.array_max(F.transform(F.col("__v"), lambda x: F.abs(x)))
     )
     q = F.when(
@@ -104,13 +99,7 @@ def quantize_embeddings(
     return out
 
 
-def cosine_topk(
-    emb: DataFrame,
-    query_vec_id: int,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, query_vec_id: int, k: int = 10) -> DataFrame:
     """Exact brute-force cosine top-k for one stored query vector:
     ``(vec_id, cos)``, query row excluded, ties broken by vec_id.
 
@@ -119,17 +108,17 @@ def cosine_topk(
     per-row work); the scan stays narrow (no shuffle until the final
     TakeOrderedAndProject).
     """
-    q = emb.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qvec"), _norm(F.col(vec_col)).alias("qnorm")
+    q = emb.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("qvec"), _norm(F.col("embedding")).alias("qnorm")
     )
     return (
-        emb.filter(F.col(id_col) != query_vec_id)
+        emb.filter(F.col("vec_id") != query_vec_id)
         .crossJoin(F.broadcast(q))
         .select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             F.round(
-                _dot(F.col(vec_col), F.col("qvec"))
-                / (_norm(F.col(vec_col)) * F.col("qnorm")),
+                _dot(F.col("embedding"), F.col("qvec"))
+                / (_norm(F.col("embedding")) * F.col("qnorm")),
                 6,
             ).alias("cos"),
         )
@@ -138,26 +127,21 @@ def cosine_topk(
     )
 
 
-def cosine_pairs_brute(
-    emb: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_pairs_brute(emb: DataFrame, threshold: float) -> DataFrame:
     """Exact all-pairs cosine >= threshold: ``(vec_a, vec_b, cos)``.
 
     O(N^2) — correct baseline and fine to ~10^4 rows; use
     cosine_pairs_lsh at scale.
     """
     a = emb.select(
-        F.col(id_col).alias("vec_a"),
-        F.col(vec_col).alias("va"),
-        _norm(F.col(vec_col)).alias("na"),
+        F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("va"),
+        _norm(F.col("embedding")).alias("na"),
     )
     b = emb.select(
-        F.col(id_col).alias("vec_b"),
-        F.col(vec_col).alias("vb"),
-        _norm(F.col(vec_col)).alias("nb"),
+        F.col("vec_id").alias("vec_b"),
+        F.col("embedding").alias("vb"),
+        _norm(F.col("embedding")).alias("nb"),
     )
     return (
         a.join(b, F.col("vec_a") < F.col("vec_b"))
@@ -183,13 +167,13 @@ def _plane_sign(p: int, d: int) -> float:
     )
 
 
-def _plane_dot(vec_col: str, p: int, dims: int) -> Column:
+def _plane_dot(p: int, dims: int) -> Column:
     """v · plane_p with the signs folded to ±1 LITERALS at plan-build
     time — they depend only on (p, d); evaluating md5 per row x plane x
     dimension put ~512 hash calls on every scanned row."""
     return F.aggregate(
         F.zip_with(
-            F.col(vec_col),
+            F.col("embedding"),
             F.array(*[F.lit(_plane_sign(p, d)) for d in range(dims)]),
             lambda x, s: x.cast("double") * s,
         ),
@@ -198,19 +182,14 @@ def _plane_dot(vec_col: str, p: int, dims: int) -> Column:
     )
 
 
-def _vec_dims(emb: DataFrame, vec_col: str) -> int | None:
+def _vec_dims(emb: DataFrame) -> int | None:
     """Dimensionality from one driver-side peek at a single row (a
     scalar, like the reference's page count N); None on empty input."""
-    first = emb.select(F.size(F.col(vec_col)).alias("d")).first()
+    first = emb.select(F.size(F.col("embedding")).alias("d")).first()
     return None if first is None else first["d"]
 
 
-def hyperplane_sketch(
-    emb: DataFrame,
-    num_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def hyperplane_sketch(emb: DataFrame, num_planes: int = 8) -> DataFrame:
     """Full sign sketch against deterministic ±1 hyperplanes:
     ``(vec_id, sketch)`` with sketch bit p = (v·plane_p >= 0).
 
@@ -220,25 +199,23 @@ def hyperplane_sketch(
     is a single band of ``num_planes`` planes, whose recall collapses
     as planes grow.
     """
-    dims = _vec_dims(emb, vec_col)
+    dims = _vec_dims(emb)
     if dims is None:  # empty input: preserve the output schema
-        return emb.select(F.col(id_col).alias("vec_id"), F.lit(0).alias("sketch"))
+        return emb.select("vec_id", F.lit(0).alias("sketch"))
     sketch = sum(
         [
-            F.when(_plane_dot(vec_col, p, dims) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
+            F.when(_plane_dot(p, dims) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
             for p in range(num_planes)
         ],
         F.lit(0),
     )
-    return emb.select(F.col(id_col).alias("vec_id"), sketch.alias("sketch"))
+    return emb.select("vec_id", sketch.alias("sketch"))
 
 
 def hyperplane_band_buckets(
     emb: DataFrame,
     num_planes: int = 8,
     bands: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Banded hyperplane buckets: ``(vec_id, band, key)``, one row per
     band, key = the integer of that band's ``r = num_planes/bands``
@@ -258,10 +235,10 @@ def hyperplane_band_buckets(
             "a remainder would silently drop sign bits from banding"
         )
     r = num_planes // bands
-    dims = _vec_dims(emb, vec_col)
+    dims = _vec_dims(emb)
     if dims is None:  # empty input: preserve the output schema
         return emb.select(
-            F.col(id_col).alias("vec_id"),
+            "vec_id",
             F.lit(0).alias("band"),
             F.lit(0).alias("key"),
         ).filter(F.lit(False))
@@ -272,7 +249,7 @@ def hyperplane_band_buckets(
                 sum(
                     [
                         F.when(
-                            _plane_dot(vec_col, b * r + j, dims) >= 0, F.lit(1 << j)
+                            _plane_dot(b * r + j, dims) >= 0, F.lit(1 << j)
                         ).otherwise(F.lit(0))
                         for j in range(r)
                     ],
@@ -283,7 +260,7 @@ def hyperplane_band_buckets(
         ]
     )
     return emb.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         F.explode(band_structs).alias("bb"),
     ).select(
         "vec_id",
@@ -297,8 +274,6 @@ def cosine_pairs_lsh(
     threshold: float,
     num_planes: int = 8,
     bands: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     materialize: bool = False,
 ) -> DataFrame:
     """All-pairs cosine >= threshold, candidates from banded hyperplane
@@ -331,7 +306,7 @@ def cosine_pairs_lsh(
     pick per call shape; at vector-scan-bound scale True saves a full
     corpus pass.
     """
-    buckets = hyperplane_band_buckets(emb, num_planes, bands, id_col, vec_col)
+    buckets = hyperplane_band_buckets(emb, num_planes, bands)
     if materialize:
         buckets = buckets.persist()
     try:
@@ -343,9 +318,9 @@ def cosine_pairs_lsh(
             .distinct()
         )
         base = emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("vec"),
-            _norm(F.col(vec_col)).alias("nrm"),
+            "vec_id",
+            F.col("embedding").alias("vec"),
+            _norm(F.col("embedding")).alias("nrm"),
         )
         a = base.select(
             F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"), F.col("nrm").alias("na")
@@ -377,8 +352,6 @@ def cosine_matches_ab(
     threshold: float,
     num_planes: int = 8,
     bands: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """CROSS-corpus cosine matches: ``(id_a, id_b, cos)`` with cos >=
     threshold between two DIFFERENT embedding tables — the
@@ -394,22 +367,22 @@ def cosine_matches_ab(
     cosine_pairs_lsh; no ``a < b`` ordering filter because the id
     spaces are unrelated.
     """
-    ba = hyperplane_band_buckets(emb_a, num_planes, bands, id_col, vec_col).select(
+    ba = hyperplane_band_buckets(emb_a, num_planes, bands).select(
         F.col("vec_id").alias("id_a"), "band", "key"
     )
-    bb = hyperplane_band_buckets(emb_b, num_planes, bands, id_col, vec_col).select(
+    bb = hyperplane_band_buckets(emb_b, num_planes, bands).select(
         F.col("vec_id").alias("id_b"), "band", "key"
     )
     cand = ba.join(bb, ["band", "key"]).select("id_a", "id_b").distinct()
     base_a = emb_a.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        _norm(F.col(vec_col)).alias("na"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("va"),
+        _norm(F.col("embedding")).alias("na"),
     )
     base_b = emb_b.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        _norm(F.col(vec_col)).alias("nb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vb"),
+        _norm(F.col("embedding")).alias("nb"),
     )
     return (
         cand.join(base_a, "id_a")
@@ -428,16 +401,14 @@ def cosine_matches_ab(
 # --- IVF (inverted-file) ANN ------------------------------------------------
 
 
-def _seed_centroids(
-    emb: DataFrame, n_cells: int, id_col: str, vec_col: str
-) -> list[list[float]]:
+def _seed_centroids(emb: DataFrame, n_cells: int) -> list[list[float]]:
     """First ``n_cells`` vectors by id — the deterministic no-RNG seed
     (a small dim table pulled to the driver, the same move as
     broadcasting it)."""
     rows = (
-        emb.orderBy(id_col)
+        emb.orderBy("vec_id")
         .limit(n_cells)
-        .select(F.col(vec_col).alias("cvec"))
+        .select(F.col("embedding").alias("cvec"))
         .collect()
     )
     return [[float(x) for x in r["cvec"]] for r in rows]
@@ -467,8 +438,6 @@ def lloyd_centroids(
     emb: DataFrame,
     n_cells: int = 16,
     n_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact_mean: bool = False,
 ) -> list[list[float]]:
     """K-means (Lloyd) centroid refinement as DataFrame ops — the
@@ -525,7 +494,7 @@ def lloyd_centroids(
     clustering does not care about).
     """
     spark = emb.sparkSession
-    first = emb.select(F.size(F.col(vec_col)).alias("d")).first()
+    first = emb.select(F.size(F.col("embedding")).alias("d")).first()
     if first is None:  # empty input: nothing to refine
         return []
     dims = int(first["d"])
@@ -534,11 +503,11 @@ def lloyd_centroids(
     # The collect_list runs on a single tiny partition (post-limit),
     # sort_array orders structs by cell_id (first field).
     seed = (
-        emb.orderBy(id_col)
+        emb.orderBy("vec_id")
         .limit(n_cells)
         .select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("cvec"),
+            F.col("vec_id").alias("_id"),
+            F.col("embedding").cast("array<double>").alias("cvec"),
         )
     )
     from pyspark.sql.window import Window
@@ -556,9 +525,9 @@ def lloyd_centroids(
     try:
         for _ in range(n_iters):
             staged = emb.crossJoin(F.broadcast(cur)).select(
-                F.col(id_col).alias("__id"),
-                F.col(vec_col).cast("array<double>").alias("vec"),
-                _norm(F.col(vec_col)).alias("vnorm"),
+                F.col("vec_id").alias("__id"),
+                F.col("embedding").cast("array<double>").alias("vec"),
+                _norm(F.col("embedding")).alias("vnorm"),
                 F.col("cents"),
             )
             scores = F.transform(
@@ -640,8 +609,6 @@ def lloyd_centroids(
 def ivf_assign(
     emb: DataFrame,
     n_cells: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """IVF-flat coarse quantizer: returns (centroids, assignments).
@@ -664,7 +631,7 @@ def ivf_assign(
     cent_vecs = (
         [[float(x) for x in v] for v in centroids]
         if centroids is not None
-        else _seed_centroids(emb, n_cells, id_col, vec_col)
+        else _seed_centroids(emb, n_cells)
     )
 
     def seq_norm(v: list[float]) -> float:
@@ -688,9 +655,9 @@ def ivf_assign(
         "cents array<struct<cell_id:int,cvec:array<double>,cnorm:double>>",
     )
     staged = emb.crossJoin(F.broadcast(cents_1row)).select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        _norm(F.col(vec_col)).alias("vnorm"),
+        "vec_id",
+        F.col("embedding").alias("vec"),
+        _norm(F.col("embedding")).alias("vnorm"),
         F.col("cents"),
     )
     scores = F.transform(
@@ -717,8 +684,6 @@ def ivf_topk(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF ANN top-k for one stored query vector: ``(vec_id, cos)``.
@@ -730,9 +695,9 @@ def ivf_topk(
     exact cosine_topk baseline); pass ``centroids=lloyd_centroids(...)``
     to trade a few index-build passes for better cell quality.
     """
-    cents, assign = ivf_assign(emb, n_cells, id_col, vec_col, centroids=centroids)
-    q = emb.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qvec"), _norm(F.col(vec_col)).alias("qnorm")
+    cents, assign = ivf_assign(emb, n_cells, centroids=centroids)
+    q = emb.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("qvec"), _norm(F.col("embedding")).alias("qnorm")
     )
     probe = (
         cents.crossJoin(F.broadcast(q))
@@ -770,8 +735,6 @@ def ivf_topk_batch(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF ANN top-k for MANY stored query vectors in ONE pass over the
@@ -791,11 +754,11 @@ def ivf_topk_batch(
     """
     from pyspark.sql.window import Window
 
-    cents, assign = ivf_assign(emb, n_cells, id_col, vec_col, centroids=centroids)
-    qs = emb.filter(F.col(id_col).isin(list(query_vec_ids))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
+    cents, assign = ivf_assign(emb, n_cells, centroids=centroids)
+    qs = emb.filter(F.col("vec_id").isin(list(query_vec_ids))).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        _norm(F.col("embedding")).alias("qnorm"),
     )
     scored_cells = cents.crossJoin(F.broadcast(qs)).select(
         "query_id",
@@ -852,8 +815,6 @@ def pq_train(
     m: int = 4,
     k: int = 8,
     n_iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[list[float]]]:
     """Product-quantization codebooks (Jegou et al. 2011): split each
     vector into ``m`` equal subspaces and Lloyd-refine ``k`` codewords
@@ -880,7 +841,7 @@ def pq_train(
     if m < 1 or k < 1:
         raise ValueError(f"m ({m}) and k ({k}) must be >= 1")
     spark = emb.sparkSession
-    first = emb.select(F.size(F.col(vec_col)).alias("d")).first()
+    first = emb.select(F.size(F.col("embedding")).alias("d")).first()
     if first is None:
         return []
     dims = int(first["d"])
@@ -890,9 +851,9 @@ def pq_train(
 
     # exploded (id, s, subvec) once — narrow, reused every iteration
     sub = emb.select(
-        F.col(id_col).alias("__id"),
+        F.col("vec_id").alias("__id"),
         F.explode(F.sequence(F.lit(0), F.lit(m - 1))).alias("s"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.col("embedding").cast("array<double>").alias("v"),
     ).select(
         "__id",
         "s",
@@ -905,9 +866,9 @@ def pq_train(
     # by id (one tiny post-limit partition, like _seed_centroids)
     from pyspark.sql.window import Window
 
-    seedv = emb.orderBy(id_col).limit(k).select(
-        F.col(id_col).alias("__id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+    seedv = emb.orderBy("vec_id").limit(k).select(
+        F.col("vec_id").alias("__id"),
+        F.col("embedding").cast("array<double>").alias("v"),
     )
     seedv = seedv.select(
         F.row_number().over(Window.orderBy("__id")).alias("code"), "v"
@@ -1027,21 +988,16 @@ def _pq_codes_col(
     return F.array(*codes)
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_encode(emb: DataFrame, codebooks: list[list[list[float]]]) -> DataFrame:
     """Encode every vector to its ``m`` PQ codes: ``(vec_id, codes)``
     with ``codes`` the comma-joined per-subspace codeword ids (a
     string so the cross-engine hash sees identical values). The
     ``m``-bytes-per-vector store this emits is what PQ serving scans
     instead of the raw floats. Zero shuffles — literal-codebook
     argmin folds only."""
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col("embedding").cast("array<double>")
     return emb.select(
-        F.col(id_col).alias("vec_id"),
+        "vec_id",
         F.array_join(_pq_codes_col(vec, codebooks), ",").alias("codes"),
     )
 
@@ -1051,8 +1007,6 @@ def pq_topk(
     query_vec_id: int,
     codebooks: list[list[list[float]]],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes: the query stays
     a full-precision vector, each candidate is scored from its codes
@@ -1069,8 +1023,8 @@ def pq_topk(
     codes; both paths share the same plan tail.
     """
     qrow = (
-        emb.filter(F.col(id_col) == query_vec_id)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
+        emb.filter(F.col("vec_id") == query_vec_id)
+        .select(F.col("embedding").cast("array<double>").alias("v"))
         .first()
     )
     if qrow is None:
@@ -1086,7 +1040,7 @@ def pq_topk(
         ]
         for s, book in enumerate(codebooks)
     ]
-    vec = F.col(vec_col).cast("array<double>")
+    vec = F.col("embedding").cast("array<double>")
     codes = _pq_codes_col(vec, codebooks)
     score: Column = F.lit(0.0)
     for s, table in enumerate(dt):
@@ -1094,9 +1048,9 @@ def pq_topk(
             F.array(*[F.lit(float(d)) for d in table]), codes[s]
         )
     return (
-        emb.filter(F.col(id_col) != query_vec_id)
+        emb.filter(F.col("vec_id") != query_vec_id)
         .select(
-            F.col(id_col).alias("vec_id"), F.round(score, 6).alias("adist")
+            "vec_id", F.round(score, 6).alias("adist")
         )
         .orderBy(F.col("adist").asc(), F.col("vec_id").asc())
         .limit(k)
@@ -1110,8 +1064,6 @@ def ivf_pq_topk(
     k: int = 10,
     n_cells: int = 8,
     n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVFADC (Jegou et al. 2011, the FAISS `IVFx,PQy` serving path):
@@ -1125,11 +1077,9 @@ def ivf_pq_topk(
     reads ``m`` bytes per surviving candidate; plan = the ivf_topk
     probe (two broadcast dims, no corpus shuffle) + pq_topk's literal
     fold scoring + TakeOrderedAndProject."""
-    cents, assign = ivf_assign(
-        emb, n_cells, id_col, vec_col, centroids=centroids
-    )
-    q = emb.filter(F.col(id_col) == query_vec_id).select(
-        F.col(vec_col).alias("qvec"), _norm(F.col(vec_col)).alias("qnorm")
+    cents, assign = ivf_assign(emb, n_cells, centroids=centroids)
+    q = emb.filter(F.col("vec_id") == query_vec_id).select(
+        F.col("embedding").alias("qvec"), _norm(F.col("embedding")).alias("qnorm")
     )
     probe = (
         cents.crossJoin(F.broadcast(q))
@@ -1145,8 +1095,8 @@ def ivf_pq_topk(
         .select("cell_id")
     )
     qrow = (
-        emb.filter(F.col(id_col) == query_vec_id)
-        .select(F.col(vec_col).cast("array<double>").alias("v"))
+        emb.filter(F.col("vec_id") == query_vec_id)
+        .select(F.col("embedding").cast("array<double>").alias("v"))
         .first()
     )
     if qrow is None:
@@ -1184,8 +1134,6 @@ def ann_recall_report(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Recall@k of the IVF index against the exact brute-force ground
@@ -1215,16 +1163,14 @@ def ann_recall_report(
         raise ValueError(f"k ({k}) must be >= 1")
     if not query_vec_ids:
         raise ValueError("query_vec_ids must be non-empty")
-    ann = ivf_topk_batch(
-        emb, query_vec_ids, k, n_cells, n_probe, id_col, vec_col, centroids
-    )
-    qs = emb.filter(F.col(id_col).isin(list(query_vec_ids))).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
+    ann = ivf_topk_batch(emb, query_vec_ids, k, n_cells, n_probe, centroids)
+    qs = emb.filter(F.col("vec_id").isin(list(query_vec_ids))).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        _norm(F.col("embedding")).alias("qnorm"),
     )
     scored = (
-        emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("__v"))
+        emb.select("vec_id", F.col("embedding").alias("__v"))
         .crossJoin(F.broadcast(qs))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -1266,8 +1212,6 @@ def margin_matches_ab(
     margin_threshold: float = 1.0,
     num_planes: int = 8,
     bands: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Margin-criterion cross-corpus mining (Artetxe & Schwenk 2019,
     the CCMatrix/LASER bitext scorer): ``(id_a, id_b, cos, margin)``
@@ -1304,22 +1248,22 @@ def margin_matches_ab(
         raise ValueError(f"k ({k}) must be >= 1")
     from pyspark.sql.window import Window
 
-    ba = hyperplane_band_buckets(emb_a, num_planes, bands, id_col, vec_col).select(
+    ba = hyperplane_band_buckets(emb_a, num_planes, bands).select(
         F.col("vec_id").alias("id_a"), "band", "key"
     )
-    bb = hyperplane_band_buckets(emb_b, num_planes, bands, id_col, vec_col).select(
+    bb = hyperplane_band_buckets(emb_b, num_planes, bands).select(
         F.col("vec_id").alias("id_b"), "band", "key"
     )
     cand = ba.join(bb, ["band", "key"]).select("id_a", "id_b").distinct()
     base_a = emb_a.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("va"),
-        _norm(F.col(vec_col)).alias("na"),
+        F.col("vec_id").alias("id_a"),
+        F.col("embedding").alias("va"),
+        _norm(F.col("embedding")).alias("na"),
     )
     base_b = emb_b.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vb"),
-        _norm(F.col(vec_col)).alias("nb"),
+        F.col("vec_id").alias("id_b"),
+        F.col("embedding").alias("vb"),
+        _norm(F.col("embedding")).alias("nb"),
     )
     co6 = F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6)
     # PERSIST the scored candidate set: it feeds three subtrees (both

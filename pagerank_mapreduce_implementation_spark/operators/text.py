@@ -52,14 +52,12 @@ TOKEN_WS_RE = r"\s+"
 
 def tokenize(
     docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     pattern: str = TOKEN_WS_RE,
     lowercase: bool = False,
 ) -> DataFrame:
     """O23: one row per token occurrence: ``(doc_id, word)``."""
-    word = F.explode(F.split(F.col(text_col), pattern)).alias("word")
-    out = docs.select(F.col(doc_col).alias("doc_id"), word).filter(F.col("word") != "")
+    word = F.explode(F.split(F.col("text"), pattern)).alias("word")
+    out = docs.select("doc_id", word).filter(F.col("word") != "")
     if lowercase:
         out = out.select("doc_id", F.lower("word").alias("word"))
     return out
@@ -276,13 +274,7 @@ def bm25_search(
     )
 
 
-def chunk_documents(
-    docs: DataFrame,
-    window: int = 64,
-    stride: int = 48,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def chunk_documents(docs: DataFrame, window: int = 64, stride: int = 48) -> DataFrame:
     """Overlapping token windows per document — the pretraining
     chunk/pack step: ``(doc_id, chunk_id, chunk, n_tokens)``.
 
@@ -307,10 +299,8 @@ def chunk_documents(
     """
     if window <= 0 or stride <= 0:
         raise ValueError(f"window ({window}) and stride ({stride}) must be positive")
-    toks = F.filter(
-        F.split(F.col(text_col), TOKEN_WS_RE), lambda x: x != ""
-    )
-    staged = docs.select(F.col(doc_col).alias("doc_id"), toks.alias("__toks"))
+    toks = F.filter(F.split(F.col("text"), TOKEN_WS_RE), lambda x: x != "")
+    staged = docs.select("doc_id", toks.alias("__toks"))
     return _window_token_arrays(staged, window, stride)
 
 
@@ -352,13 +342,11 @@ def _window_token_arrays(staged: DataFrame, window: int, stride: int) -> DataFra
 def pack_sequences(
     docs: DataFrame,
     budget: int,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     bucket_size: int = 4096,
     tokenizer: str = "ws",
 ) -> DataFrame:
     """GPT-style sequence packing layout: concatenate every document's
-    tokens in ``doc_col`` order into one virtual token stream and cut
+    tokens in ``doc_id`` order into one virtual token stream and cut
     it into fixed ``budget``-token bins — the step that turns a cleaned
     corpus into fully-packed training sequences (no padding waste;
     documents may straddle a bin boundary, exactly like production
@@ -380,7 +368,7 @@ def pack_sequences(
     bucket_size rows — get their own tiny running sum and broadcast-
     join back as each bucket's global offset. Two narrow windows + one
     broadcast join instead of a serialized global sort; the classic
-    two-phase scan/prefix pattern. ``doc_col`` must be numeric and
+    two-phase scan/prefix pattern. ``doc_id`` must be numeric and
     unique (the corpus contract; hash ids first if not).
 
     ``tokenizer``: ``"ws"`` budgets whitespace tokens (pure codegen);
@@ -398,18 +386,18 @@ def pack_sequences(
     if bucket_size <= 0:
         raise ValueError(f"bucket_size ({bucket_size}) must be positive")
     if tokenizer == "ws":
-        toks = F.size(F.filter(F.split(F.col(text_col), TOKEN_WS_RE), lambda x: x != ""))
+        toks = F.size(F.filter(F.split(F.col("text"), TOKEN_WS_RE), lambda x: x != ""))
     elif tokenizer == "bpe":
         from pagerank_mapreduce_implementation_spark.functions.bpe import bpe_pieces_udf
 
-        toks = F.size(bpe_pieces_udf()(F.col(text_col)))
+        toks = F.size(bpe_pieces_udf()(F.col("text")))
     else:
         raise ValueError(f"tokenizer must be 'ws' or 'bpe', got {tokenizer!r}")
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         toks.cast("long").alias("n_tokens"),
         # integral division (not a double floor): exact for any id range
-        F.expr(f"{doc_col} div {int(bucket_size)}").alias("__bucket"),
+        F.expr(f"doc_id div {int(bucket_size)}").alias("__bucket"),
     )
     in_bucket = Window.partitionBy("__bucket").orderBy("doc_id")
     staged = staged.withColumn(
@@ -452,8 +440,6 @@ def pack_sequences(
 def pack_bins(
     docs: DataFrame,
     budget: int,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     bucket_size: int = 4096,
     tokenizer: str = "ws",
     with_doc_spans: bool = False,
@@ -502,19 +488,19 @@ def pack_bins(
     if bucket_size <= 0:
         raise ValueError(f"bucket_size ({bucket_size}) must be positive")
     if tokenizer == "ws":
-        toks = F.filter(F.split(F.col(text_col), TOKEN_WS_RE), lambda x: x != "")
+        toks = F.filter(F.split(F.col("text"), TOKEN_WS_RE), lambda x: x != "")
     elif tokenizer == "bpe":
         from pagerank_mapreduce_implementation_spark.functions.bpe import bpe_pieces_udf
 
-        toks = bpe_pieces_udf()(F.col(text_col))
+        toks = bpe_pieces_udf()(F.col("text"))
     else:
         raise ValueError(f"tokenizer must be 'ws' or 'bpe', got {tokenizer!r}")
     # pack_sequences' prefix-sum layout, with __toks carried through
     # the per-bucket window (the totals branch prunes it away)
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         toks.alias("__toks"),
-        F.expr(f"{doc_col} div {int(bucket_size)}").alias("__bucket"),
+        F.expr(f"doc_id div {int(bucket_size)}").alias("__bucket"),
     ).withColumn("__nt", F.size("__toks").cast("long"))
     in_bucket = Window.partitionBy("__bucket").orderBy("doc_id")
     staged = staged.withColumn("__cum", F.sum("__nt").over(in_bucket))
@@ -627,8 +613,6 @@ def chunk_documents_bpe(
     docs: DataFrame,
     window: int = 64,
     stride: int = 48,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """``chunk_documents`` over SUBWORD (BPE) tokens instead of
     whitespace words — the real chunk/pack contract: training packs are
@@ -651,17 +635,13 @@ def chunk_documents_bpe(
 
     if window <= 0 or stride <= 0:
         raise ValueError(f"window ({window}) and stride ({stride}) must be positive")
-    staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
-        bpe_pieces_udf()(F.col(text_col)).alias("__toks"),
-    )
+    staged = docs.select("doc_id", bpe_pieces_udf()(F.col("text")).alias("__toks"))
     return _window_token_arrays(staged, window, stride)
 
 
 def bpe_train(
     docs: DataFrame,
     num_merges: int = 16,
-    text_col: str = "text",
     pattern: str = TOKEN_WS_RE,
     lowercase: bool = False,
 ) -> DataFrame:
@@ -704,7 +684,7 @@ def bpe_train(
     if num_merges <= 0:
         raise ValueError(f"num_merges ({num_merges}) must be positive")
     spark = docs.sparkSession
-    word = F.explode(F.split(F.col(text_col), pattern)).alias("word")
+    word = F.explode(F.split(F.col("text"), pattern)).alias("word")
     words = docs.select(word).filter(F.col("word") != "")
     if lowercase:
         words = words.select(F.lower("word").alias("word"))
@@ -826,8 +806,6 @@ def bpe_train(
 
 def build_inverted_index(
     docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     pattern: str = TOKEN_WS_RE,
     shard_size: int | None = None,
 ) -> DataFrame:
@@ -855,8 +833,8 @@ def build_inverted_index(
     shards (set membership and scoring are shard-associative).
     ``shard_size=None`` keeps one shard per word (shard column 0)."""
     toks = docs.select(
-        F.col(doc_col).alias("doc_id"),
-        F.posexplode(F.split(F.col(text_col), pattern)).alias("pos", "word"),
+        "doc_id",
+        F.posexplode(F.split(F.col("text"), pattern)).alias("pos", "word"),
     ).filter(F.col("word") != "")
     per_doc = toks.groupBy("word", "doc_id").agg(
         F.array_join(F.array_sort(F.collect_list("pos")), ",").alias("pl")
@@ -972,7 +950,6 @@ def tfidf_doc_pairs(
 
 def bpe_fertility(
     docs: DataFrame,
-    text_col: str = "text",
     group_col: str = "source",
     round_digits: int = 6,
 ) -> DataFrame:
@@ -995,14 +972,12 @@ def bpe_fertility(
     """
     from pagerank_mapreduce_implementation_spark.functions.bpe import bpe_pieces_udf
 
-    words = F.size(
-        F.filter(F.split(F.col(text_col), TOKEN_WS_RE), lambda x: x != "")
-    )
+    words = F.size(F.filter(F.split(F.col("text"), TOKEN_WS_RE), lambda x: x != ""))
     staged = docs.select(
         F.col(group_col).alias("source"),
         words.cast("long").alias("__w"),
-        F.size(bpe_pieces_udf()(F.col(text_col))).cast("long").alias("__p"),
-        F.length(text_col).cast("long").alias("__c"),
+        F.size(bpe_pieces_udf()(F.col("text"))).cast("long").alias("__p"),
+        F.length("text").cast("long").alias("__c"),
     )
     return (
         staged.groupBy("source")
@@ -1043,13 +1018,7 @@ def bpe_fertility(
 SENTENCE_SPLIT_RE = r"[.!?]+\s+"
 
 
-def chunk_sentences(
-    docs: DataFrame,
-    window: int = 5,
-    stride: int = 4,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def chunk_sentences(docs: DataFrame, window: int = 5, stride: int = 4) -> DataFrame:
     """Overlapping SENTENCE windows per document — retrieval-passage
     chunking (the RAG twin of ``chunk_documents``' token windows):
     ``(doc_id, chunk_id, chunk, n_sentences)`` where chunk ``i`` covers
@@ -1066,10 +1035,8 @@ def chunk_sentences(
     """
     if window <= 0 or stride <= 0:
         raise ValueError(f"window ({window}) and stride ({stride}) must be positive")
-    sents = F.filter(
-        F.split(F.col(text_col), SENTENCE_SPLIT_RE), lambda x: x != ""
-    )
-    staged = docs.select(F.col(doc_col).alias("doc_id"), sents.alias("__toks"))
+    sents = F.filter(F.split(F.col("text"), SENTENCE_SPLIT_RE), lambda x: x != "")
+    staged = docs.select("doc_id", sents.alias("__toks"))
     return _window_token_arrays(staged, window, stride).withColumnRenamed(
         "n_tokens", "n_sentences"
     )
@@ -1078,8 +1045,6 @@ def chunk_sentences(
 def packing_report(
     docs: DataFrame,
     budget: int,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     bucket_size: int = 4096,
     tokenizer: str = "ws",
 ) -> DataFrame:
@@ -1104,7 +1069,7 @@ def packing_report(
     map-side-partial aggregate: scan-bound at 100 TB.
     """
     b = int(budget)
-    layout = pack_sequences(docs, b, text_col, doc_col, bucket_size, tokenizer)
+    layout = pack_sequences(docs, b, bucket_size, tokenizer)
     nz = F.col("n_tokens") > 0
     last_bin = F.expr(f"(global_start + n_tokens - 1) div {b}")
     segs = F.when(nz, last_bin - F.col("bin_id") + 1).otherwise(F.lit(0))

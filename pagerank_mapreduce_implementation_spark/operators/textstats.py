@@ -49,13 +49,11 @@ def _check_keep_cols(kept_names: list[str], reserved: set, op: str) -> None:
         )
 
 
-def _tokens(text_col: str) -> Column:
-    return F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+def _tokens() -> Column:
+    return F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
 
 
-def token_stats(
-    docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id"
-) -> DataFrame:
+def token_stats(docs: DataFrame) -> DataFrame:
     """Whitespace-token and BPE-ish piece counts per doc:
     ``(doc_id, n_tokens, n_pieces, avg_token_len)``."""
     # Stage the token array as a named column: a repeated inline
@@ -63,9 +61,9 @@ def token_stats(
     # (CollapseProject keeps the staging Project precisely because the
     # expression is non-cheap and multiply referenced).
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
-        F.col(text_col).alias("_text"),
-        _tokens(text_col).alias("_toks"),
+        "doc_id",
+        F.col("text").alias("_text"),
+        _tokens().alias("_toks"),
     )
     n_tokens = F.size("_toks")
     total_len = F.aggregate(F.col("_toks"), F.lit(0), lambda acc, w: acc + F.length(w))
@@ -83,8 +81,6 @@ def token_stats(
 
 def quality_scores(
     docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     keep_cols: tuple = (),
     with_tokens: bool = False,
     score_only: bool = False,
@@ -122,15 +118,15 @@ def quality_scores(
     )
     kept = [F.col(c) if isinstance(c, str) else c for c in keep_cols]
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         *kept,
-        F.size(_tokens(text_col)).alias("_q_n_tokens"),
-        F.length(F.col(text_col)).alias("_q_n_chars"),
-        F.length(F.regexp_replace(F.col(text_col), r"[A-Za-z0-9\s]", "")).alias(
+        F.size(_tokens()).alias("_q_n_tokens"),
+        F.length(F.col("text")).alias("_q_n_chars"),
+        F.length(F.regexp_replace(F.col("text"), r"[A-Za-z0-9\s]", "")).alias(
             "_q_punct"
         ),
         F.size(
-            F.filter(_tokens(text_col), lambda w: F.lower(w).isin(STOPWORDS))
+            F.filter(_tokens(), lambda w: F.lower(w).isin(STOPWORDS))
         ).alias("_q_stop"),
     )
     kept_names = [
@@ -168,12 +164,7 @@ def quality_scores(
     )
 
 
-def lang_id(
-    docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    keep_cols: tuple = (),
-) -> DataFrame:
+def lang_id(docs: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """Marker-word language-ID heuristic: ``(doc_id, [keep_cols...],
     pred_lang, score)``.
 
@@ -189,9 +180,7 @@ def lang_id(
     # named score columns — the CASE chain references every score 2-3
     # times, which would re-split the text ~20x per row if inlined.
     kept = [F.col(c) if isinstance(c, str) else c for c in keep_cols]
-    toks = docs.select(
-        F.col(doc_col).alias("doc_id"), *kept, _tokens(text_col).alias("_toks")
-    )
+    toks = docs.select("doc_id", *kept, _tokens().alias("_toks"))
     kept_names = [
         c if isinstance(c, str) else toks.columns[1 + i]
         for i, c in enumerate(keep_cols)
@@ -228,8 +217,6 @@ def lang_id(
 def repetition_ratio(
     docs: DataFrame,
     ngram: int = 2,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     keep_cols: tuple = (),
 ) -> DataFrame:
     """Within-document n-gram repetition (the Gopher/C4-style quality
@@ -245,9 +232,7 @@ def repetition_ratio(
     quality_scores) so filter consumers skip the doc_id join-back.
     """
     kept = [F.col(c) if isinstance(c, str) else c for c in keep_cols]
-    staged = docs.select(
-        F.col(doc_col).alias("doc_id"), *kept, _tokens(text_col).alias("_toks")
-    )
+    staged = docs.select("doc_id", *kept, _tokens().alias("_toks"))
     kept_names = [
         c if isinstance(c, str) else staged.columns[1 + i]
         for i, c in enumerate(keep_cols)
@@ -279,9 +264,7 @@ def repetition_ratio(
     )
 
 
-def top_ngram_stats(
-    docs: DataFrame, ngram: int = 2, text_col: str = "text", doc_col: str = "doc_id"
-) -> DataFrame:
+def top_ngram_stats(docs: DataFrame, ngram: int = 2) -> DataFrame:
     """The Gopher-style TOP-n-gram coverage rule (repetition_ratio's
     sibling: that one scores how much of the doc repeats at all, this
     one scores how much ONE phrase dominates — boilerplate headers and
@@ -296,9 +279,7 @@ def top_ngram_stats(
     the shuffle) + a per-doc total riding the same counted table — the
     tf-idf-style two-shuffle silhouette, nothing quadratic.
     """
-    staged = docs.select(
-        F.col(doc_col).alias("doc_id"), _tokens(text_col).alias("_toks")
-    )
+    staged = docs.select("doc_id", _tokens().alias("_toks"))
     grams = F.when(
         F.size("_toks") >= ngram,
         F.transform(
@@ -333,9 +314,7 @@ def top_ngram_stats(
     )
 
 
-def fingerprints(
-    docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id"
-) -> DataFrame:
+def fingerprints(docs: DataFrame) -> DataFrame:
     """Word-level polynomial rolling hash per doc (Karp-Rabin style):
     ``(doc_id, fingerprint)``.
 
@@ -347,16 +326,14 @@ def fingerprints(
     """
     word_h = lambda w: F.conv(F.substring(F.md5(w), 1, 7), 16, 10).cast("long")  # noqa: E731
     fp = F.aggregate(
-        F.transform(_tokens(text_col), word_h),
+        F.transform(_tokens(), word_h),
         F.lit(0).cast("long"),
         lambda acc, h: (acc * FINGERPRINT_BASE + h) % FINGERPRINT_MOD,
     )
-    return docs.select(F.col(doc_col).alias("doc_id"), fp.alias("fingerprint"))
+    return docs.select("doc_id", fp.alias("fingerprint"))
 
 
-def lm_scores(
-    docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id"
-) -> DataFrame:
+def lm_scores(docs: DataFrame) -> DataFrame:
     """Unigram-LM surprisal per document — the classic cheap quality /
     outlier signal (a doc whose words are rare under the corpus' own
     unigram distribution is boilerplate-free gibberish or off-domain):
@@ -374,8 +351,8 @@ def lm_scores(
     is what this is: a probability-normalized df table.
     """
     tok = docs.select(
-        F.col(doc_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("word"),
+        "doc_id",
+        F.explode(F.split(F.col("text"), r"\s+")).alias("word"),
     ).filter(F.col("word") != "")
     wc = tok.groupBy("word").agg(F.count(F.lit(1)).alias("wcnt"))
     total = wc.agg(F.sum("wcnt").alias("__total"))
@@ -395,12 +372,7 @@ def lm_scores(
     )
 
 
-def bigram_lm_scores(
-    docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    add_k: float = 1.0,
-) -> DataFrame:
+def bigram_lm_scores(docs: DataFrame, add_k: float = 1.0) -> DataFrame:
     """Bigram-LM (add-k smoothed) perplexity per document — the CCNet-
     style LM quality filter one order up from ``lm_scores``' unigram
     surprisal (CCNet/RefinedWeb score pages under a corpus-trained LM
@@ -427,20 +399,18 @@ def bigram_lm_scores(
     """
     if add_k <= 0:
         raise ValueError(f"add_k must be > 0, got {add_k}")
-    bi = doc_bigrams(docs, text_col=text_col, doc_col=doc_col)
-    scored = bigram_surprisal_table(docs, text_col=text_col, add_k=add_k, bigrams=bi)
+    bi = doc_bigrams(docs)
+    scored = bigram_surprisal_table(docs, add_k=add_k, bigrams=bi)
     return _score_bigram_docs(bi, scored)
 
 
-def doc_bigrams(
-    docs: DataFrame, text_col: str = "text", doc_col: str = "doc_id"
-) -> DataFrame:
+def doc_bigrams(docs: DataFrame) -> DataFrame:
     """Per-row adjacent token pairs → ``(doc_id, w1, w2)`` — a NARROW
     transform (tokenize + array build + explode, no shuffle), so it
     works unchanged on a STREAMING frame (the streaming_lm_probe
     path)."""
-    toks = _tokens(text_col)
-    staged = docs.select(F.col(doc_col).alias("doc_id"), toks.alias("__t"))
+    toks = _tokens()
+    staged = docs.select("doc_id", toks.alias("__t"))
     return staged.select(
         "doc_id",
         F.explode(
@@ -460,7 +430,6 @@ def doc_bigrams(
 
 def bigram_surprisal_table(
     docs: DataFrame,
-    text_col: str = "text",
     add_k: float = 1.0,
     bigrams: DataFrame | None = None,
 ) -> DataFrame:
@@ -474,10 +443,10 @@ def bigram_surprisal_table(
     bigram-build plan."""
     if add_k <= 0:
         raise ValueError(f"add_k must be > 0, got {add_k}")
-    toks = _tokens(text_col)
+    toks = _tokens()
     staged = docs.select(toks.alias("__t"))
     if bigrams is None:
-        bigrams = doc_bigrams(docs, text_col=text_col, doc_col="doc_id")
+        bigrams = doc_bigrams(docs)
     c2 = bigrams.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     c1 = c2.groupBy("w1").agg(F.sum("c2").alias("c1"))
     vocab = staged.select(F.explode("__t").alias("w")).agg(
@@ -510,12 +479,7 @@ def _score_bigram_docs(bi: DataFrame, scored: DataFrame) -> DataFrame:
     )
 
 
-def entropy_stats(
-    docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    keep_cols: tuple = (),
-) -> DataFrame:
+def entropy_stats(docs: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """Character-distribution stats per doc — the classic cheap
     compressibility proxy (machine-generated/binary-ish junk sits at
     the entropy extremes; English prose lands ~4-4.5 bits/char):
@@ -536,12 +500,12 @@ def entropy_stats(
     )
     kept = [F.col(c) if isinstance(c, str) else c for c in keep_cols]
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         *kept,
         # split("", "") yields [""] — drop empties so a blank doc
         # reports n_chars 0, not 1
         F.array_sort(
-            F.filter(F.split(F.col(text_col), ""), lambda c: c != "")
+            F.filter(F.split(F.col("text"), ""), lambda c: c != "")
         ).alias("__cs"),
     )
     n = F.size("__cs")
@@ -594,12 +558,7 @@ def entropy_stats(
     )
 
 
-def readability_scores(
-    docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    keep_cols: tuple = (),
-) -> DataFrame:
+def readability_scores(docs: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """Flesch reading ease + Flesch-Kincaid grade per doc (Flesch
     1948 / Kincaid et al. 1975, public) — the classic complexity axis
     the length/punct/stopword quality score does not measure (a wall
@@ -642,14 +601,14 @@ def readability_scores(
     )
     kept = [F.col(c) if isinstance(c, str) else c for c in keep_cols]
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         *kept,
-        F.size(_tokens(text_col)).cast("long").alias("n_words"),
+        F.size(_tokens()).cast("long").alias("n_words"),
         F.size(
-            F.expr(f"regexp_extract_all({text_col}, '[.!?]+', 0)")
+            F.expr("regexp_extract_all(text, '[.!?]+', 0)")
         ).cast("long").alias("__term_runs"),
         F.size(
-            F.expr(f"regexp_extract_all(lower({text_col}), '[aeiouy]+', 0)")
+            F.expr("regexp_extract_all(lower(text), '[aeiouy]+', 0)")
         ).cast("long").alias("n_syllables"),
     )
     n_sent = F.when(
@@ -687,12 +646,7 @@ def readability_scores(
     )
 
 
-def oov_stats(
-    docs: DataFrame,
-    top_k: int = 1000,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def oov_stats(docs: DataFrame, top_k: int = 1000) -> DataFrame:
     """Out-of-vocabulary rate per doc against the corpus' OWN head
     vocabulary — ``(doc_id, n_tokens, n_oov, oov_ratio)`` where a
     token is OOV when its lowercased form is outside the ``top_k``
@@ -714,9 +668,9 @@ def oov_stats(
     """
     if top_k < 1:
         raise ValueError(f"top_k ({top_k}) must be >= 1")
-    toks = F.filter(F.split(F.col(text_col), r"\s+"), lambda w: w != "")
+    toks = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
     tok = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         F.explode_outer(toks).alias("__w"),
     ).select("doc_id", F.lower("__w").alias("__w"))
     vocab = (
@@ -755,8 +709,6 @@ GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 def gopher_rules(
     docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     keep_cols: tuple = (),
     min_words: int = 50,
     max_words: int = 100_000,
@@ -809,25 +761,23 @@ def gopher_rules(
         "gopher_rules",
     )
     kept = [F.col(c) if isinstance(c, str) else c for c in keep_cols]
-    toks = _tokens(text_col)
-    lines = F.filter(
-        F.split(F.col(text_col), r"\n"), lambda ln: F.trim(ln) != ""
-    )
+    toks = _tokens()
+    lines = F.filter(F.split(F.col("text"), r"\n"), lambda ln: F.trim(ln) != "")
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         *kept,
         toks.alias("_g_toks"),
         lines.alias("_g_lines"),
-        F.length(text_col).alias("_g_len"),
+        F.length("text").alias("_g_len"),
         (
-            F.length(text_col)
-            - F.length(F.regexp_replace(F.col(text_col), r"#", ""))
+            F.length("text")
+            - F.length(F.regexp_replace(F.col("text"), r"#", ""))
         ).alias("_g_hashes"),
         (
             (
-                F.length(text_col)
+                F.length("text")
                 - F.length(
-                    F.regexp_replace(F.col(text_col), r"\.\.\.", "")
+                    F.regexp_replace(F.col("text"), r"\.\.\.", "")
                 )
             )
             / F.lit(3)
@@ -895,8 +845,6 @@ def gopher_rules(
 
 def c4_rules(
     docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     keep_cols: tuple = (),
     min_words_per_line: int = 3,
     min_sentences: int = 5,
@@ -948,7 +896,7 @@ def c4_rules(
     kept_cols = [F.col(c) if isinstance(c, str) else c for c in keep_cols]
 
     term = r'[.!?]["’”]?\s*$'
-    lines = F.split(F.col(text_col), r"\n")
+    lines = F.split(F.col("text"), r"\n")
     n_words = lambda ln: F.size(  # noqa: E731
         F.filter(F.split(F.trim(ln), r"\s+"), lambda w: w != "")
     )
@@ -958,7 +906,7 @@ def c4_rules(
         & ~F.contains(F.lower(ln), F.lit(line_drop_needle.lower()))
     )
     kept_lines = F.filter(lines, survives)
-    lowered = F.lower(F.col(text_col))
+    lowered = F.lower(F.col("text"))
     page_ok = F.size(kept_lines) >= min_sentences
     for needle in drop_needles:
         page_ok = page_ok & ~F.contains(lowered, F.lit(needle.lower()))
@@ -970,7 +918,7 @@ def c4_rules(
         bad = F.array(*[F.lit(w.lower()) for w in bad_words])
         page_ok = page_ok & ~F.exists(words, lambda w: F.array_contains(bad, w))
     return docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         *kept_cols,
         F.array_join(kept_lines, "\n").alias("clean_text"),
         F.size(kept_lines).alias("n_lines_kept"),
@@ -992,8 +940,6 @@ GOPHER_DUP_NGRAM_CAPS: tuple = (
 
 def gopher_repetition(
     docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     keep_cols: tuple = (),
     max_dup_line_frac: float = 0.30,
     max_dup_line_char_frac: float = 0.20,
@@ -1073,16 +1019,16 @@ def gopher_repetition(
 
     lines = F.array_sort(
         F.filter(
-            F.transform(F.split(F.col(text_col), r"\n"), F.trim),
+            F.transform(F.split(F.col("text"), r"\n"), F.trim),
             lambda ln: ln != "",
         )
     )
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         *kept,
-        F.col(text_col).alias("__txt"),
+        F.col("text").alias("__txt"),
         lines.alias("__lines"),
-        _tokens(text_col).alias("__toks"),
+        _tokens().alias("__toks"),
     )
 
     nl = F.size("__lines")
@@ -1244,15 +1190,9 @@ def gopher_repetition(
 QUALITY_CLF_FEATURES = ("x1", "x2", "x3", "x4", "x5")
 
 
-def _quality_clf_features(
-    docs: DataFrame, text_col: str, doc_col: str, label: Column
-) -> DataFrame:
-    toks = _tokens(text_col)
-    staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
-        label.cast("double").alias("y"),
-        toks.alias("__t"),
-    )
+def _quality_clf_features(docs: DataFrame, label: Column) -> DataFrame:
+    toks = _tokens()
+    staged = docs.select("doc_id", label.cast("double").alias("y"), toks.alias("__t"))
     nw = F.size("__t")
     word_chars = F.aggregate(
         "__t", F.lit(0).cast("long"), lambda a, w: a + F.length(w)
@@ -1283,7 +1223,7 @@ def _quality_clf_features(
 
 
 def _standardized_clf_features(
-    docs: DataFrame, text_col: str, doc_col: str, label: Column
+    docs: DataFrame, label: Column
 ) -> tuple[DataFrame, list[tuple[float, float]]]:
     """Z-score-standardized classifier features plus the (μ, σ) pairs:
     moment sums under the round-12/decimal(32,12) order-independence
@@ -1291,7 +1231,7 @@ def _standardized_clf_features(
     (decimal→double cast, division, multiply, sqrt — all exactly
     specified, so the SQL oracle's identical expressions produce the
     identical doubles)."""
-    raw = _quality_clf_features(docs, text_col, doc_col, label)
+    raw = _quality_clf_features(docs, label)
     mrow = raw.agg(
         F.count(F.lit(1)).alias("n"),
         *[
@@ -1339,8 +1279,6 @@ def _standardized_clf_features(
 def train_quality_classifier(
     docs: DataFrame,
     label: Column,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     n_iters: int = 5,
     learning_rate: float = 0.5,
 ) -> list[float]:
@@ -1386,7 +1324,7 @@ def train_quality_classifier(
         raise ValueError(f"n_iters must be >= 1, got {n_iters}")
     if learning_rate <= 0:
         raise ValueError(f"learning_rate must be > 0, got {learning_rate}")
-    feats, _ = _standardized_clf_features(docs, text_col, doc_col, label)
+    feats, _ = _standardized_clf_features(docs, label)
     feats = feats.persist()
     try:
         n = feats.count()
@@ -1420,8 +1358,6 @@ def train_quality_classifier(
 def quality_classifier_scores(
     docs: DataFrame,
     label: Column,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     n_iters: int = 5,
     learning_rate: float = 0.5,
 ) -> DataFrame:
@@ -1432,10 +1368,8 @@ def quality_classifier_scores(
     filter on ``score`` like any other textstats verdict column.
     Scoring is a second zero-shuffle pass (same standardization, same
     trained weights — all plan literals)."""
-    w = train_quality_classifier(
-        docs, label, text_col, doc_col, n_iters, learning_rate
-    )
-    feats, _ = _standardized_clf_features(docs, text_col, doc_col, label)
+    w = train_quality_classifier(docs, label, n_iters, learning_rate)
+    feats, _ = _standardized_clf_features(docs, label)
     z = F.lit(w[0])
     for j, c in enumerate(QUALITY_CLF_FEATURES):
         z = z + F.lit(w[j + 1]) * F.col(c)
@@ -1448,12 +1382,7 @@ def quality_classifier_scores(
     )
 
 
-def novelty_scores(
-    docs: DataFrame,
-    n: int = 5,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def novelty_scores(docs: DataFrame, n: int = 5) -> DataFrame:
     """Per-doc n-gram NOVELTY — the share of a doc's distinct word
     n-grams that appear in NO other document: ``(doc_id, n_grams,
     novel_frac)``, ``novel_frac`` rounded 6. The cheap corpus-level
@@ -1485,12 +1414,12 @@ def novelty_scores(
         shingles,
     )
 
-    sh = shingles(docs, n, text_col=text_col, doc_col=doc_col)
+    sh = shingles(docs, n)
     with_df = sh.withColumn(
         "__df", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
     )
     return (
-        with_df.groupBy(doc_col)
+        with_df.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_grams"),
             F.round(
@@ -1499,15 +1428,12 @@ def novelty_scores(
                 6,
             ).alias("novel_frac"),
         )
-        .withColumnRenamed(doc_col, "doc_id")
     )
 
 
 def perplexity_buckets(
     docs: DataFrame,
     n_buckets: int = 3,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     group_col: str = "source",
     add_k: float = 1.0,
 ) -> DataFrame:
@@ -1537,8 +1463,8 @@ def perplexity_buckets(
 
     if n_buckets < 1:
         raise ValueError(f"n_buckets ({n_buckets}) must be >= 1")
-    scores = bigram_lm_scores(docs, text_col=text_col, doc_col=doc_col, add_k=add_k)
-    dims = docs.select(F.col(doc_col).alias("doc_id"), F.col(group_col).alias("source"))
+    scores = bigram_lm_scores(docs, add_k=add_k)
+    dims = docs.select("doc_id", F.col(group_col).alias("source"))
     scored = scores.join(dims, "doc_id").select("doc_id", "source", "nll")
     w = Window.partitionBy("source").orderBy(F.asc("nll"), F.asc("doc_id"))
     out = scored.select(
@@ -1555,12 +1481,7 @@ def perplexity_buckets(
     return out.withColumn("bucket_name", name)
 
 
-def trigram_lm_scores(
-    docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-    add_k: float = 1.0,
-) -> DataFrame:
+def trigram_lm_scores(docs: DataFrame, add_k: float = 1.0) -> DataFrame:
     """Trigram-LM (add-k smoothed) perplexity per document —
     ``(doc_id, n_trigrams, nll3)`` with ``nll3`` = mean over the doc's
     adjacent token triples of ``-log10 P(w3|w1,w2)``, rounded 6, where
@@ -1584,8 +1505,8 @@ def trigram_lm_scores(
     """
     if add_k <= 0:
         raise ValueError(f"add_k must be > 0, got {add_k}")
-    toks = _tokens(text_col)
-    staged = docs.select(F.col(doc_col).alias("doc_id"), toks.alias("__t"))
+    toks = _tokens()
+    staged = docs.select("doc_id", toks.alias("__t"))
     tri = staged.select(
         "doc_id",
         F.explode(
@@ -1634,7 +1555,6 @@ def mad_outliers(
     docs: DataFrame,
     score_col: str = "quality",
     group_col: str = "source",
-    doc_col: str = "doc_id",
     cutoff: float = 3.0,
     side: str = "both",
 ) -> DataFrame:
@@ -1666,7 +1586,7 @@ def mad_outliers(
     if side not in ("both", "low", "high"):
         raise ValueError(f"side must be 'both', 'low' or 'high', got {side!r}")
     scores = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         F.col(group_col).alias("source"),
         F.col(score_col).alias("score"),
     )
@@ -1697,12 +1617,7 @@ def mad_outliers(
     )
 
 
-def bigram_pmi(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_count: int = 2,
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def bigram_pmi(docs: DataFrame, min_count: int = 2) -> DataFrame:
     """Corpus collocations by pointwise mutual information —
     ``(w1, w2, c2, pmi)`` for each adjacent-token bigram with
     ``c2 >= min_count``: ``pmi = log10(c2 * N / (cl * cr))`` over the
@@ -1720,7 +1635,7 @@ def bigram_pmi(
     """
     if min_count < 1:
         raise ValueError(f"min_count ({min_count}) must be >= 1")
-    bg = doc_bigrams(docs, text_col=text_col, doc_col=doc_col)
+    bg = doc_bigrams(docs)
     c2 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     tot = c2.agg(F.sum("c2").cast("double").alias("__n"))
     cl = c2.groupBy("w1").agg(F.sum("c2").alias("__cl"))
@@ -1753,8 +1668,6 @@ def normalize_text(
     form: str = "NFC",
     strip_controls: bool = True,
     collapse_ws: bool = True,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     keep_cols: tuple = (),
 ) -> DataFrame:
     """Canonical text normalization — ``(doc_id, clean_text, changed)``
@@ -1796,7 +1709,7 @@ def normalize_text(
     if bad:
         raise ValueError(f"normalize_text: unknown keep_cols {bad}")
 
-    id_type = docs.schema[doc_col].dataType.simpleString()
+    id_type = docs.schema["doc_id"].dataType.simpleString()
     keep_schema = "".join(
         f", {c} {docs.schema[c].dataType.simpleString()}" for c in keep
     )
@@ -1818,11 +1731,7 @@ def normalize_text(
             ]
             yield pdf
 
-    staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
-        *keep,
-        F.col(text_col).alias("__t"),
-    )
+    staged = docs.select("doc_id", *keep, F.col("text").alias("__t"))
     out = staged.mapInPandas(
         _normalize,
         f"doc_id {id_type}{keep_schema}, __t string, __n string",
@@ -1857,12 +1766,7 @@ DEFAULT_TAXONOMY: dict = {
 }
 
 
-def classify_domains(
-    docs: DataFrame,
-    taxonomy: dict | None = None,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def classify_domains(docs: DataFrame, taxonomy: dict | None = None) -> DataFrame:
     """Rule-based topical classification — one row per doc:
     ``(doc_id, domain, hits, total_hits, confidence)`` — the
     keyword-taxonomy bucketing a mixture pipeline uses when sources
@@ -1891,8 +1795,8 @@ def classify_domains(
     for d, kws in tax.items():
         if not kws:
             raise ValueError(f"classify_domains: domain {d!r} has no keywords")
-    toks = F.transform(_tokens(text_col), lambda w: F.lower(w))
-    staged = docs.select(F.col(doc_col).alias("doc_id"), toks.alias("__t"))
+    toks = F.transform(_tokens(), lambda w: F.lower(w))
+    staged = docs.select("doc_id", toks.alias("__t"))
     hit = lambda kws: F.size(  # noqa: E731
         F.filter(F.col("__t"), lambda w: w.isin([k.lower() for k in kws]))
     ).cast("long")
@@ -1951,12 +1855,7 @@ def classify_domains(
     )
 
 
-def zipf_fit(
-    docs: DataFrame,
-    top_k: int = 100,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def zipf_fit(docs: DataFrame, top_k: int = 100, group_col: str = "source") -> DataFrame:
     """Rank-frequency (Zipf) audit per group — one row per ``group_col``
     value: ``(<group_col>, n_tokens, n_types, hapax_ratio, zipf_slope,
     zipf_intercept, zipf_r2)``. Natural text follows Zipf's law with a
@@ -2000,7 +1899,7 @@ def zipf_fit(
         raise ValueError(f"top_k ({top_k}) must be >= 2 to fit a line")
     tok = docs.select(
         F.col(group_col).alias("__g"),
-        F.explode(F.split(F.col(text_col), r"\s+")).alias("word"),
+        F.explode(F.split(F.col("text"), r"\s+")).alias("word"),
     ).filter(F.col("word") != "")
     wc = tok.groupBy("__g", "word").agg(F.count(F.lit(1)).alias("cnt"))
     stats = wc.groupBy("__g").agg(
@@ -2066,8 +1965,6 @@ def zipf_fit(
 def blocklist_hits(
     docs: DataFrame,
     blocklist: list,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     max_hit_ratio: float = 0.0,
     lowercase: bool = True,
     keep_cols: tuple = (),
@@ -2110,16 +2007,14 @@ def blocklist_hits(
         tokens_null_safe,
     )
 
-    toks = tokens_null_safe(F.col(text_col))
+    toks = tokens_null_safe(F.col("text"))
     if lowercase:
         toks = F.transform(toks, lambda w: F.lower(w))
     feature_out = () if flag_only else (
         "n_tokens", "n_hits", "n_distinct_hits", "hit_ratio"
     )
     kept = [F.col(c) if isinstance(c, str) else c for c in keep_cols]
-    staged = docs.select(
-        F.col(doc_col).alias("doc_id"), *kept, toks.alias("_bl_toks")
-    )
+    staged = docs.select("doc_id", *kept, toks.alias("_bl_toks"))
     kept_names = [
         c if isinstance(c, str) else staged.columns[1 + i]
         for i, c in enumerate(keep_cols)
@@ -2161,8 +2056,6 @@ MOJIBAKE_MARKERS = ["Ã", "â€", "Â"]
 
 def encoding_qa(
     docs: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     min_ascii_ratio: float = 0.5,
     keep_cols: tuple = (),
     flag_only: bool = False,
@@ -2206,9 +2099,9 @@ def encoding_qa(
     # convention, dedup.tokens_null_safe) — all-NULL metrics would otherwise ride three-valued
     # logic into a NULL flagged verdict
     staged = docs.select(
-        F.col(doc_col).alias("doc_id"),
+        "doc_id",
         *kept,
-        F.coalesce(F.col(text_col), F.lit("")).alias("_eq_text"),
+        F.coalesce(F.col("text"), F.lit("")).alias("_eq_text"),
     )
     kept_names = [
         c if isinstance(c, str) else staged.columns[1 + i]

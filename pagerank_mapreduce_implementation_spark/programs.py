@@ -990,8 +990,6 @@ def pack_corpus(
     output_path: str,
     window: int = 64,
     stride: int = 48,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
     tokenizer: str = "whitespace",
     layout: str = "windows",
     budget: int = 512,
@@ -1042,19 +1040,11 @@ def pack_corpus(
         )
     if layout == "windows":
         chunker = chunk_documents if tokenizer == "whitespace" else chunk_documents_bpe
-        out = chunker(
-            spark.read.parquet(input_path),
-            window=window,
-            stride=stride,
-            text_col=text_col,
-            doc_col=doc_col,
-        )
+        out = chunker(spark.read.parquet(input_path), window=window, stride=stride)
     elif layout == "bins":
         out = pack_bins(
             spark.read.parquet(input_path),
             budget=budget,
-            text_col=text_col,
-            doc_col=doc_col,
             tokenizer="ws" if tokenizer == "whitespace" else "bpe",
             with_doc_spans=with_doc_spans,
         )

@@ -124,6 +124,9 @@ EVENTS = T.StructType(
     ]
 )
 
+# Text operators read ``doc_id`` and ``text`` by these names; they take
+# no column-name parameters. Rename another frame's columns to them
+# (``withColumnRenamed``) before the call.
 DOCUMENTS = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -134,6 +137,9 @@ DOCUMENTS = T.StructType(
     ]
 )
 
+# Embedding operators read ``vec_id`` and ``embedding`` by these names;
+# rename another frame's columns to them (``withColumnRenamed``) before
+# the call.
 EMBEDDINGS = T.StructType(
     [
         T.StructField("vec_id", T.LongType()),

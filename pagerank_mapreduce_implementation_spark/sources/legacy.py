@@ -15,10 +15,8 @@ expressions layered over the O2/O3 text scans in sources/catalog.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from pagerank_mapreduce_implementation_spark.sources.catalog import read_kv_text
 
 PR_DELIMITER = ","  * 5     # PageRank.java:35
 OUTLINK_LIST_DELIMITER = "#####"  # PageRank.java:36
@@ -90,9 +88,3 @@ def encode_pagerank_records(pages: DataFrame) -> DataFrame:
             .otherwise(F.lit("")),
         ).alias("value"),
     )
-
-
-def read_pagerank_state(spark: SparkSession, *paths: str) -> DataFrame:
-    """Load reference-format link-graph text files (the iter{i} outputs
-    a reference deployment already has on HDFS) as structured pages."""
-    return decode_pagerank_records(read_kv_text(spark, *paths))

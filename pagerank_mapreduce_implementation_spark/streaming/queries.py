@@ -152,20 +152,18 @@ def streaming_sliding_events(
     )
 
 
-def streaming_word_count(lines: DataFrame, text_col: str = "value") -> DataFrame:
-    """Running word count over an unbounded text column — the streaming
+def streaming_word_count(lines: DataFrame) -> DataFrame:
+    """Running word count over the ``text`` column of a stream — the streaming
     form of operators/text.word_count (same tokenize expression)."""
     return (
-        lines.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("word"))
+        lines.select(F.explode(F.split(F.col("text"), r"\s+")).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
-def streaming_exact_dedup(
-    docs: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def streaming_exact_dedup(docs: DataFrame) -> DataFrame:
     """Streaming ingestion dedup: the distinct content fingerprints of
     an unbounded document stream — ``dropDuplicates`` backed by the
     streaming state store, emitting each fingerprint the first time it
@@ -184,7 +182,7 @@ def streaming_exact_dedup(
     from pagerank_mapreduce_implementation_spark.operators.dedup import normalize_text
 
     return docs.select(
-        F.md5(normalize_text(F.col(text_col))).alias("fingerprint")
+        F.md5(normalize_text(F.col("text"))).alias("fingerprint")
     ).dropDuplicates(["fingerprint"])
 
 
@@ -277,8 +275,6 @@ def streaming_minhash_probe(
     ngram: int = 5,
     num_hashes: int = 16,
     bands: int = 4,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
 ) -> DataFrame:
     """Streaming cross-batch NEAR-dup detection: an unbounded document
     stream probed against a STATIC MinHash signature store — the
@@ -316,9 +312,7 @@ def streaming_minhash_probe(
 
     min_matches = math.ceil(num_hashes * threshold)
     r = num_hashes // bands
-    sig = rowwise_minhash_signatures(
-        docs, ngram, num_hashes, text_col=text_col, doc_col=doc_col
-    )
+    sig = rowwise_minhash_signatures(docs, ngram, num_hashes)
     band_structs = F.array(
         *[
             F.struct(
@@ -635,12 +629,7 @@ def streaming_changelog_compact(
     ).filter(F.col("event_type") != delete_type)
 
 
-def streaming_lm_probe(
-    doc_stream: DataFrame,
-    scored_bigrams: DataFrame,
-    text_col: str = "text",
-    doc_col: str = "doc_id",
-) -> DataFrame:
+def streaming_lm_probe(doc_stream: DataFrame, scored_bigrams: DataFrame) -> DataFrame:
     """Streaming LM-perplexity scoring → ``(doc_id, n_bigrams, nll)``:
     documents arriving on a stream scored under a bigram LM TRAINED ON
     A BATCH CORPUS (``textstats.bigram_surprisal_table``) — the
@@ -664,7 +653,7 @@ def streaming_lm_probe(
         doc_bigrams,
     )
 
-    bi = doc_bigrams(doc_stream, text_col=text_col, doc_col=doc_col)
+    bi = doc_bigrams(doc_stream)
     return _score_bigram_docs(bi, scored_bigrams)
 
 

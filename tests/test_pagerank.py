@@ -800,32 +800,3 @@ class TestKcore:
             graph.kcore(df, k=0)
         with pytest.raises(ValueError):
             graph.kcore(df, k=2, n_rounds=-1)
-
-
-@pytest.mark.slow  # r17 fast-tier split: >10 s sweep, see pytest.ini
-def test_pagerank_tol_early_exit_matches_fixed_point(spark):
-    """tol turns n_iters into a cap: a generous cap with tol lands on
-    the same ranks (within tol) as a long fixed run, and the exit
-    actually fires (far fewer jobs — asserted via wall-clock-free
-    proxy: result equality, plus guard)."""
-    import pytest as _pt
-
-    from pagerank_mapreduce_implementation_spark.operators.graph import pagerank
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c"), ("d", "a")],
-        "src string, dst string",
-    )
-    fixed = {
-        r["url"]: r["rank"]
-        for r in pagerank(edges, n_iters=60, mode="textbook").collect()
-    }
-    early = {
-        r["url"]: r["rank"]
-        for r in pagerank(edges, n_iters=60, mode="textbook", tol=1e-10).collect()
-    }
-    assert fixed.keys() == early.keys()
-    for u in fixed:
-        assert abs(fixed[u] - early[u]) < 1e-8
-    with _pt.raises(ValueError, match="tol"):
-        pagerank(edges, tol=0.0)

@@ -495,9 +495,7 @@ def test_substring_runs_window_keyed_by_pair_and_diagonal(spark, sf_dir):
     from pagerank_mapreduce_implementation_spark.operators import dedup
     from pagerank_mapreduce_implementation_spark.sources.catalog import Catalog
 
-    grams = dedup._gram_positions(
-        Catalog(spark, sf_dir).documents, 8, "text", "doc_id"
-    )
+    grams = dedup._gram_positions(Catalog(spark, sf_dir).documents, 8)
     p = plan_of(dedup._runs_from_grams(grams, k=8, min_len=12, max_gram_df=64))
     assert "CartesianProduct" not in p
     # every window spec opens with the pair columns
@@ -1054,3 +1052,35 @@ def test_margin_matches_no_cartesian(spark, sf_dir):
     final = plan_of(df).split("+- == Initial Plan ==")[0]
     assert "CartesianProduct" not in final
     assert "BroadcastNestedLoopJoin" not in final
+
+
+#: column-name parameters that a caller sets to a second value: the
+#: recall audits shingle and fingerprint a ``__text`` column
+COLUMN_PARAMS_IN_USE = {("shingles", "text_col"), ("simhash", "text_col")}
+
+
+def test_operators_read_schema_column_names():
+    """Operators read the corpus schema's column names (``doc_id``,
+    ``text``, ``vec_id``, ``embedding``; see ``schemas.py``) directly:
+    no package function takes a parameter that renames one, unless a
+    caller passes another value. ``oracles.py`` is the reference SQL
+    the tests compare against and keeps its own helpers."""
+    import ast
+    import pathlib
+
+    import pagerank_mapreduce_implementation_spark as pkg
+
+    names = {"text_col", "doc_col", "id_col", "vec_col"}
+    root = pathlib.Path(pkg.__file__).parent
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "oracles.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                continue
+            fn = getattr(node, "name", "<lambda>")
+            for arg in node.args.posonlyargs + node.args.args + node.args.kwonlyargs:
+                if arg.arg in names and (fn, arg.arg) not in COLUMN_PARAMS_IN_USE:
+                    found.append(f"{path.relative_to(root)}:{node.lineno} {fn}({arg.arg})")
+    assert not found, found

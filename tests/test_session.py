@@ -26,15 +26,20 @@ def compile_count(spark) -> int:
 
 def test_warm_graph_loops_compile_nothing(spark, sf_dir):
     qs = entrymod.queries()
-    compiled = []
+    # compiles per pass and query, so a failure names the query whose
+    # generated code changed between passes
+    passes = []
     for _ in range(3):
-        before = compile_count(spark)
+        per_query = {}
         for name in LOOP_QUERIES:
+            before = compile_count(spark)
             df = qs[name](spark, sf_dir)
             df.collect()
             util.release_result(df)
-        compiled.append(compile_count(spark) - before)
-    assert compiled[1:] == [0, 0], compiled
+            per_query[name] = compile_count(spark) - before
+        passes.append(per_query)
+    warm = [sum(p.values()) for p in passes[1:]]
+    assert warm == [0, 0], f"compiles per pass and query: {passes}"
 
 
 def test_session_sizes_the_codegen_cache(spark):

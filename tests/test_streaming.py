@@ -53,9 +53,7 @@ def test_streaming_word_count_matches_batch(spark, sf_dir):
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )
-    run_to_memory(
-        streaming_word_count(stream, text_col="text"), "stream_wc", "complete"
-    )
+    run_to_memory(streaming_word_count(stream), "stream_wc", "complete")
     got = {r["word"]: r["cnt"] for r in spark.table("stream_wc").collect()}
     want = {
         r["word"]: r["cnt"]
