@@ -56,8 +56,6 @@ def _scratch_dir(sub: str) -> str:
         import tempfile
 
         _SCRATCH = tempfile.TemporaryDirectory(prefix="spark_graft_scratch_")
-    import os
-
     path = os.path.join(_SCRATCH.name, sub)
     os.makedirs(path, exist_ok=True)
     return path
@@ -452,7 +450,7 @@ def _q_streaming_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pagerank_mapreduce_implementation_spark.operators import sketches
 
     ev = strm.read_events_stream(spark, sf_dir)
-    cells = strm.streaming_cms_cells(ev, "user_id", depth=4, width=256)
+    cells = strm.streaming_cms_cells(ev)
     name = f"_stream_cms_{next(_STREAM_SEQ)}"
     strm.run_to_memory(cells, name, output_mode="complete", state_partitions=8)
     est = sketches.count_min_estimates(
@@ -580,7 +578,7 @@ def _q_salted_brand_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = cat.part.select("p_partkey", "p_brand")
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     return (
-        salted_join(big, small, "p_partkey", salt_buckets=8)
+        salted_join(big, small, "p_partkey")
         .groupBy("p_brand")
         .agg(F.count(F.lit(1)).alias("n_items"), dsum(disc_price).alias("revenue"))
         .orderBy("p_brand")
@@ -1241,7 +1239,7 @@ def _q_streaming_phash_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(synth, schema=multimodal.BLOB_SCHEMA)
     )
     seen = multimodal.phash_images(store_blobs)
-    out = strm.streaming_phash_probe(stream_blobs, seen, max_hamming=10)
+    out = strm.streaming_phash_probe(stream_blobs, seen)
     name = f"_stream_ph_{next(_STREAM_SEQ)}"
     strm.run_to_memory(out, name, output_mode="complete", state_partitions=8)
     return spark.table(name)
@@ -1354,7 +1352,6 @@ def _q_temperature_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return temperature_mix(
         Catalog(spark, sf_dir).documents,
         total_budget=9000.0,
-        tau=2.0,
         return_alloc=True,
     )
 
@@ -1368,7 +1365,7 @@ def _q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return temperature_mix(
-        Catalog(spark, sf_dir).documents, total_budget=9000.0, tau=2.0
+        Catalog(spark, sf_dir).documents, total_budget=9000.0
     ).select("doc_id", "source", "n_chars")
 
 
@@ -1381,9 +1378,7 @@ def _q_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL with the PQ retrain chain."""
     emb = Catalog(spark, sf_dir).embeddings
     books = similarity.pq_train(emb, m=4, k=8, n_iters=2)
-    return similarity.ivf_pq_topk(
-        emb, 0, books, k=10, n_cells=8, n_probe=3
-    )
+    return similarity.ivf_pq_topk(emb, 0, books)
 
 
 def _q_unimax_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1562,7 +1557,7 @@ def _q_top_ngram_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-doc top-1 via a WindowGroupLimit-pruned row_number; the
     lexicographic tiebreak makes the winner deterministic, so the full
     row (gram included) sits behind the hash gate."""
-    return textstats.top_ngram_stats(Catalog(spark, sf_dir).documents, ngram=2)
+    return textstats.top_ngram_stats(Catalog(spark, sf_dir).documents)
 
 
 def _q_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1715,7 +1710,7 @@ def _q_streaming_bounded_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pagerank_mapreduce_implementation_spark import streaming as strm
 
     ev = strm.read_events_stream(spark, sf_dir)
-    deduped = strm.streaming_bounded_dedup(ev, horizon="30 days")
+    deduped = strm.streaming_bounded_dedup(ev)
     name = f"_stream_bdedup_{next(_STREAM_SEQ)}"
     strm.run_to_memory(deduped, name, output_mode="append", state_partitions=8)
     return spark.table(name)
@@ -1777,7 +1772,7 @@ _SESSIONS_SQL = (
 def _q_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pagerank_mapreduce_implementation_spark.operators import sessions
 
-    return sessions.user_sessions(Catalog(spark, sf_dir).events, gap="30 minutes")
+    return sessions.user_sessions(Catalog(spark, sf_dir).events)
 
 
 def _q_event_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2018,7 +2013,7 @@ def _q_asof_clicks(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     joined = asof_join(
-        purchases, clicks, on="user_id", left_ts="ts", right_ts="click_ts", suffix=""
+        purchases, clicks, on="user_id", right_ts="click_ts", suffix=""
     )
     return joined.select(
         "event_id",
@@ -2047,9 +2042,6 @@ def _q_signup_followups(spark: SparkSession, sf_dir: str) -> DataFrame:
         signups,
         right,
         on="user_id",
-        left_ts="ts",
-        right_ts="ts",
-        window_seconds=3600.0,
         aggs=[
             F.count(F.col("ts_r")).alias("n_follow"),
             F.round(
@@ -2115,9 +2107,7 @@ def _q_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     against corpus-wide chunk-hash occurrences — "how much of this doc
     does the corpus already store". Two key-bounded shuffles (chunk
     hash groupBy with map-side partials, then the doc rollup)."""
-    return dedup.cdc_dup_stats(
-        Catalog(spark, sf_dir).documents, window=3, divisor=16
-    )
+    return dedup.cdc_dup_stats(Catalog(spark, sf_dir).documents)
 
 
 def _q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2143,7 +2133,7 @@ def _q_streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pagerank_mapreduce_implementation_spark import streaming as strm
 
     ev = strm.read_events_stream(spark, sf_dir)
-    agg = strm.streaming_user_sessions(ev, gap="30 minutes", watermark="2 hours")
+    agg = strm.streaming_user_sessions(ev)
     name = f"_stream_sess_{next(_STREAM_SEQ)}"
     strm.run_to_memory(agg, name)
     return spark.table(name)
@@ -2197,9 +2187,9 @@ def _q_streaming_click_attribution(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("user_id").alias("click_user_id"),
         F.col("ts").alias("click_ts"),
     )
-    joined = strm.streaming_click_attribution(
-        purchases, clicks, window="1 hour", watermark="2 hours"
-    ).select("event_id", "user_id", "ts", "purchase_value", "click_event_id", "click_ts")
+    joined = strm.streaming_click_attribution(purchases, clicks).select(
+        "event_id", "user_id", "ts", "purchase_value", "click_event_id", "click_ts"
+    )
     name = f"_stream_attr_{next(_STREAM_SEQ)}"
     # 8 state partitions: a stream-stream join keeps 4 state stores per
     # partition per side — see run_to_memory's sizing note
@@ -2216,7 +2206,7 @@ def _q_streaming_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pagerank_mapreduce_implementation_spark import streaming as strm
 
     ev = strm.read_events_stream(spark, sf_dir)
-    agg = strm.streaming_windowed_events(ev, window="1 hour", watermark="2 hours")
+    agg = strm.streaming_windowed_events(ev)
     name = f"_stream_ev_{next(_STREAM_SEQ)}"
     strm.run_to_memory(agg, name)
     return spark.table(name)
@@ -2232,9 +2222,7 @@ def _q_streaming_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pagerank_mapreduce_implementation_spark import streaming as strm
 
     ev = strm.read_events_stream(spark, sf_dir)
-    agg = strm.streaming_sliding_events(
-        ev, size="2 hours", slide="1 hour", watermark="2 hours"
-    )
+    agg = strm.streaming_sliding_events(ev)
     name = f"_stream_slide_{next(_STREAM_SEQ)}"
     strm.run_to_memory(agg, name)
     return spark.table(name)
@@ -2628,7 +2616,7 @@ def _q_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep/drop doc and token mass per source — what a human reads
     after a dedup pass before trusting the drop."""
     return dedup.dedup_report(
-        Catalog(spark, sf_dir).documents, threshold=0.5, ngram=5
+        Catalog(spark, sf_dir).documents,
     )
 
 
@@ -2649,7 +2637,7 @@ def _q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = textstats.quality_scores(
         docs, score_only=True, keep_cols=("source",)
     )
-    return textstats.mad_outliers(staged, score_col="quality")
+    return textstats.mad_outliers(staged)
 
 
 def _q_classify_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2840,7 +2828,7 @@ def _q_streaming_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pagerank_mapreduce_implementation_spark import streaming as strm
 
     ev = strm.read_events_stream(spark, sf_dir)
-    out = strm.queries.streaming_value_histogram(ev, "value", 25.0)
+    out = strm.queries.streaming_value_histogram(ev, 25.0)
     name = f"_stream_vh_{next(_STREAM_SEQ)}"
     strm.run_to_memory(out, name, state_partitions=8)
     return spark.table(name)
@@ -2871,7 +2859,6 @@ def _q_cluster_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"{sf_dir}/embeddings.parquet",
         _scratch_dir("cluster_report"),
         n_cells=8,
-        n_iters=2,
         k_terms=5,
         weighting="ctfidf",
         exact=True,
@@ -2896,7 +2883,6 @@ def _q_shard_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the bench pays 3x per pass (4 bins/shard wrote ~680 dirs at
         # sf0.1 — measured 6.4 s, dominated by FS ops, not compute)
         bins_per_shard=16,
-        tokenizer="ws",
         shuffle_seed="torder",
     )
     return programs.shard_audit(spark, out)
@@ -2944,7 +2930,7 @@ def _q_pagerank_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     _wiki_lines(spark, sf_dir).withColumnRenamed("line", "value").write.mode(
         "overwrite"
     ).text(inp)
-    programs.run_pagerank(spark, inp, outp, n_iters=10)
+    programs.run_pagerank(spark, inp, outp)
     from pagerank_mapreduce_implementation_spark.sources.catalog import read_kv_text
 
     kv = read_kv_text(spark, outp)
@@ -3088,7 +3074,6 @@ def _q_margin_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") % 3 == 0),
         emb.filter(F.col("vec_id") % 3 == 1),
         k=4,
-        margin_threshold=1.0,
     )
 
 
@@ -3130,7 +3115,6 @@ def _q_minhash_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         drop_rate=0.15,
         sample_mod=10,
         threshold=0.3,
-        ngram=2,
     )
 
 
@@ -3226,7 +3210,7 @@ def _q_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev_stream = strm.read_events_stream(spark, sf_dir).filter(
         F.col("event_id") % 2 == 1
     )
-    live = strm.queries.streaming_value_histogram(ev_stream, "value", 25.0)
+    live = strm.queries.streaming_value_histogram(ev_stream, 25.0)
     name = f"_stream_ks_{next(_STREAM_SEQ)}"
     strm.run_to_memory(live, name, state_partitions=8)
     ref = relational.value_histogram(
@@ -3378,7 +3362,7 @@ def _q_streaming_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", fp.alias("item")
     )
     out = strm.streaming_bloom_probe(
-        stream, flt, "item", n_bits=1024, n_hashes=3
+        stream, flt, n_bits=1024, n_hashes=3
     ).select("doc_id", "maybe_member")
     name = f"_stream_bloom_{next(_STREAM_SEQ)}"
     strm.run_to_memory(out, name, output_mode="append", state_partitions=8)
@@ -3760,7 +3744,7 @@ def _q_winnow_matches(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints. Catches a copied PASSAGE whole-doc similarity
     dilutes away."""
     return dedup.winnow_matches(
-        Catalog(spark, sf_dir).documents, k=5, w=4, min_shared=3, max_fp_df=8
+        Catalog(spark, sf_dir).documents, min_shared=3, max_fp_df=8
     )
 
 
@@ -3850,7 +3834,6 @@ def _q_training_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         out,
         budget=512,
         bins_per_shard=64,
-        tokenizer="ws",
         shuffle_seed="torder",
     )
 

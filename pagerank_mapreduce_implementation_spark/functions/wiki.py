@@ -69,13 +69,13 @@ def page_outlinks(line: Column | str) -> Column:
     return F.transform(raw, strip_link_brackets)
 
 
-def parse_pages(lines, line_col: str = "line"):
+def parse_pages(lines):
     """O11 link-graph construction: page line -> (url, outlinks).
 
     Trims each line (PageRank.java:379), drops blank lines and pages
     without a title (PageRank.java:347,410).
     """
-    line = F.trim(F.col(line_col))
+    line = F.trim(F.col("line"))
     parsed = lines.filter(F.length(line) > 0).select(
         page_title(line).alias("url"),
         page_outlinks(line).alias("outlinks"),

@@ -121,7 +121,6 @@ def fuzzy_contamination(
     bench: DataFrame,
     threshold: float = 0.5,
     ngram: int = 5,
-    num_hashes: int = 16,
     bands: int = 4,
 ) -> DataFrame:
     """Paraphrase-robust contamination: training docs whose MinHash
@@ -141,8 +140,8 @@ def fuzzy_contamination(
     eval-set-sized, so the runtime broadcasts it from measured stats
     (the ``contamination_check`` policy — no forced hint); the exact
     verify touches only candidate pairs. Recall is band-limited, the
-    standard LSH tradeoff — tune (num_hashes, bands) to the target
-    threshold.
+    standard LSH tradeoff — tune ``bands`` (over ``dedup.NUM_HASHES``
+    hashes) to the target threshold.
     """
     from pagerank_mapreduce_implementation_spark.operators.dedup import (
         band_buckets,
@@ -152,12 +151,8 @@ def fuzzy_contamination(
 
     t_sh = shingles(train, ngram)
     b_sh = shingles(bench, ngram)
-    t_bk = band_buckets(
-        minhash_signatures(t_sh, num_hashes), num_hashes, bands
-    )
-    b_bk = band_buckets(
-        minhash_signatures(b_sh, num_hashes), num_hashes, bands
-    ).select(F.col("doc_id").alias("bench_id"), "band", "bucket")
+    t_bk = band_buckets(minhash_signatures(t_sh), bands)
+    b_bk = band_buckets(minhash_signatures(b_sh), bands).select(F.col("doc_id").alias("bench_id"), "band", "bucket")
     cand = (
         t_bk.join(b_bk, ["band", "bucket"])
         .select("doc_id", "bench_id")

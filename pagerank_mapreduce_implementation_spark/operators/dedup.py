@@ -30,6 +30,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 SIMHASH_BITS = 60  # 15 hex digits of md5 -> fits signed 64-bit exactly
+# Hamming banding splits a fingerprint into this many equal chunks
+# (pigeonhole: any pair within HAMMING_CHUNKS - 1 bits shares a chunk).
+HAMMING_CHUNKS = 4
 
 
 def normalize_text(col: Column) -> Column:
@@ -83,7 +86,6 @@ def incremental_exact_dedup(
     bloom_prefilter: DataFrame | None = None,
     bloom_n_bits: int = 1 << 16,
     bloom_n_hashes: int = 4,
-    bloom_salt: str = "bloom:",
 ) -> DataFrame:
     """Incremental ingestion dedup: survivors of a NEW batch against an
     existing corpus fingerprint store (``seen_fingerprints``: one
@@ -110,7 +112,8 @@ def incremental_exact_dedup(
     but on a mostly-novel ingest the store-sized join shrinks to the
     duplicate+false-positive fraction: a multi-billion-row store scan
     becomes a few-MB broadcast for ~99% of the batch. The filter's
-    ``n_bits``/``n_hashes``/``salt`` must match how it was built.
+    ``n_bits``/``n_hashes`` must match how it was built (both sides
+    hash with ``sketches.BLOOM_SALT``).
 
     Returns the caller's schema plus ``fingerprint`` (append it to the
     store for the next batch; OR the batch's bits into the Bloom store
@@ -143,7 +146,6 @@ def incremental_exact_dedup(
         "fingerprint",
         n_bits=bloom_n_bits,
         n_hashes=bloom_n_hashes,
-        salt=bloom_salt,
     )
     cleared = probed.filter(~F.col("maybe_member")).drop("maybe_member")
     sliver = (
@@ -211,6 +213,9 @@ def df_capped_shingles(sh: DataFrame, max_df: int) -> DataFrame:
 
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
+# Signature width of every banded MinHash path: the band index of a
+# store and the probe that reads it must agree on it.
+NUM_HASHES = 16
 
 
 def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
@@ -228,7 +233,7 @@ def _minhash_coeffs(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def minhash_signatures(sh: DataFrame, num_hashes: int = 16) -> DataFrame:
+def minhash_signatures(sh: DataFrame, num_hashes: int = NUM_HASHES) -> DataFrame:
     """MinHash signature per doc via universal hashing over ONE md5
     base hash: h_i(s) = (a_i * base(s) + b_i) mod P, base = first 15
     md5 hex digits mod P. One shuffle; one hash evaluation per shingle
@@ -250,11 +255,7 @@ def minhash_signatures(sh: DataFrame, num_hashes: int = 16) -> DataFrame:
     return staged.groupBy("doc_id").agg(*aggs)
 
 
-def rowwise_minhash_signatures(
-    docs: DataFrame,
-    ngram: int = 5,
-    num_hashes: int = 16,
-) -> DataFrame:
+def rowwise_minhash_signatures(docs: DataFrame, ngram: int = 5) -> DataFrame:
     """The SAME MinHash signature as ``minhash_signatures`` computed as
     PURE per-row column expressions — no explode, no groupBy, no
     shuffle: shingle array -> base-hash array -> ``array_min`` per
@@ -288,7 +289,7 @@ def rowwise_minhash_signatures(
         % F.lit(MINHASH_P),
     )
     # name the base array so the per-coefficient mins don't re-derive
-    # the md5s num_hashes times (no CSE across higher-order functions)
+    # the md5s NUM_HASHES times (no CSE across higher-order functions)
     staged = toks.select("doc_id", base.alias("__hb")).filter(
         F.size("__hb") > 0
     )
@@ -301,14 +302,12 @@ def rowwise_minhash_signatures(
                     lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P),
                 )
             ).alias(f"h{i}")
-            for i, (a, b) in enumerate(_minhash_coeffs(num_hashes))
+            for i, (a, b) in enumerate(_minhash_coeffs(NUM_HASHES))
         ],
     )
 
 
-def band_buckets(
-    sig: DataFrame, num_hashes: int = 16, bands: int = 4
-) -> DataFrame:
+def band_buckets(sig: DataFrame, bands: int = 4) -> DataFrame:
     """LSH band buckets of a signature table: ``(doc_id, band, bucket)``
     — one pass over the signatures via an inline (band, bucket) struct
     array explode (a bands-way union would recompute the signature
@@ -316,12 +315,12 @@ def band_buckets(
     string — equality is all a bucket needs, no re-hash. Shared by the
     corpus-wide candidate join AND the incremental batch-vs-store path.
     """
-    if bands <= 0 or num_hashes % bands != 0:
+    if bands <= 0 or NUM_HASHES % bands != 0:
         raise ValueError(
-            f"bands ({bands}) must evenly divide num_hashes ({num_hashes}); "
+            f"bands ({bands}) must evenly divide NUM_HASHES ({NUM_HASHES}); "
             "a remainder would silently drop signature rows from banding"
         )
-    r = num_hashes // bands
+    r = NUM_HASHES // bands
     band_structs = F.array(
         *[
             F.struct(
@@ -338,16 +337,14 @@ def band_buckets(
     )
 
 
-def lsh_bucket_candidates(
-    sig: DataFrame, num_hashes: int = 16, bands: int = 4
-) -> DataFrame:
+def lsh_bucket_candidates(sig: DataFrame, bands: int = 4) -> DataFrame:
     """Candidate pairs sharing >= 1 LSH band bucket: ``(doc_a, doc_b)``.
 
     With k=16, b=4 (r=4) the collision threshold is ~(1/4)^(1/4)=0.71.
     The self-join shuffles on the bucket md5 — only docs in the same
     bucket ever pair up.
     """
-    buckets = band_buckets(sig, num_hashes, bands)
+    buckets = band_buckets(sig, bands)
     other = buckets.select(
         F.col("doc_id").alias("doc_b"), "band", "bucket"
     )
@@ -395,14 +392,13 @@ def minhash_near_dups(
     docs: DataFrame,
     threshold: float = 0.5,
     ngram: int = 1,
-    num_hashes: int = 16,
     bands: int = 4,
 ) -> DataFrame:
     """MinHash+LSH near-duplicate pairs with exact Jaccard verification.
 
     Recall is band-limited (standard LSH tradeoff): pairs whose
     signatures never collide in any band are not candidates. Tune
-    (num_hashes, bands) to the target threshold.
+    ``bands`` (over ``NUM_HASHES`` hashes) to the target threshold.
 
     Returns an eager ``localCheckpoint`` — the shingle table is
     persisted for the build and released before returning, so repeated
@@ -413,8 +409,8 @@ def minhash_near_dups(
     """
     sh = shingles(docs, ngram).persist()
     try:
-        sig = minhash_signatures(sh, num_hashes)
-        cand = lsh_bucket_candidates(sig, num_hashes, bands)
+        sig = minhash_signatures(sh)
+        cand = lsh_bucket_candidates(sig, bands)
         return jaccard_verify(cand, sh, threshold).localCheckpoint(eager=True)
     finally:
         sh.unpersist()
@@ -611,14 +607,12 @@ def incremental_minhash_dedup(
     seen_sigs: DataFrame,
     threshold: float = 0.5,
     ngram: int = 5,
-    num_hashes: int = 16,
     bands: int = 4,
     seen_bands: DataFrame | None = None,
-    validate_bands: bool = True,
 ) -> DataFrame:
     """Incremental NEAR-dup ingestion: a new batch against a MinHash
     SIGNATURE store — the production shape at 100 TB, where the corpus
-    persists ``minhash_signatures`` output (num_hashes longs per doc),
+    persists ``minhash_signatures`` output (NUM_HASHES longs per doc),
     never shingle sets (unbounded strings per doc). The near-dup
     sibling of ``incremental_exact_dedup``. ``seen_bands`` optionally
     supplies the store's PRECOMPUTED band index (``band_buckets``
@@ -631,7 +625,7 @@ def incremental_minhash_dedup(
 
     Verification is the signature Jaccard ESTIMATE — the fraction of
     equal minhash components, compared as an integer count against
-    ``ceil(threshold * num_hashes)`` (pure integer logic: bit-exact in
+    ``ceil(threshold * NUM_HASHES)`` (pure integer logic: bit-exact in
     the SQL oracle, no float folds). Exact shingle Jaccard is
     impossible here by design: the store has no shingles, and that is
     the point — estimate-based verify is what signature stores buy.
@@ -651,9 +645,9 @@ def incremental_minhash_dedup(
     component-compare join per candidate set. The store side is never
     scanned beyond its band index + the candidate signatures.
 
-    ``validate_bands=True`` (default) guards the silent-miss failure
-    mode of a supplied ``seen_bands``: an index built under DIFFERENT
-    ``num_hashes``/``bands`` produces bucket strings that never equal
+    A supplied ``seen_bands`` is validated against the silent-miss
+    failure mode: an index built under a DIFFERENT signature width or
+    ``bands`` produces bucket strings that never equal
     this probe's, so every store candidate silently vanishes. The
     check samples ONE store doc, recomputes its ``band_buckets`` rows
     under this call's parameters (bucket = the comma-joined signature
@@ -671,17 +665,17 @@ def incremental_minhash_dedup(
     """
     import math
 
-    if validate_bands and seen_bands is not None:
-        if bands <= 0 or num_hashes % bands != 0:
+    if seen_bands is not None:
+        if bands <= 0 or NUM_HASHES % bands != 0:
             # the band_buckets divisibility error, raised HERE first:
             # a truncated r would build a wrong expected-bucket set and
             # report a misleading 'mismatched index' instead
             raise ValueError(
-                f"bands ({bands}) must evenly divide num_hashes "
-                f"({num_hashes}); a remainder would silently drop "
+                f"bands ({bands}) must evenly divide NUM_HASHES "
+                f"({NUM_HASHES}); a remainder would silently drop "
                 "signature rows from banding"
             )
-        r = num_hashes // bands
+        r = NUM_HASHES // bands
         sample = seen_sigs.limit(1).collect()
         if sample:
             srow = sample[0]
@@ -698,33 +692,33 @@ def incremental_minhash_dedup(
             if got != expected:
                 raise ValueError(
                     "seen_bands is not the band_buckets index of seen_sigs "
-                    f"under num_hashes={num_hashes}, bands={bands}: sampled "
+                    f"under NUM_HASHES={NUM_HASHES}, bands={bands}: sampled "
                     f"doc {srow['doc_id']!r} has index rows {sorted(got)} "
                     f"but its signature bands to {sorted(expected)}. A "
                     "mismatched index silently drops every store candidate; "
-                    "rebuild it with band_buckets(seen_sigs, num_hashes, "
-                    "bands) or pass seen_bands=None to derive it on the fly."
+                    "rebuild it with band_buckets(seen_sigs, bands) or "
+                    "pass seen_bands=None to derive it on the fly."
                 )
 
-    min_matches = math.ceil(num_hashes * threshold)
-    sig_b = minhash_signatures(shingles(new_docs, ngram), num_hashes).persist()
+    min_matches = math.ceil(NUM_HASHES * threshold)
+    sig_b = minhash_signatures(shingles(new_docs, ngram)).persist()
     try:
-        bb_batch = band_buckets(sig_b, num_hashes, bands)
+        bb_batch = band_buckets(sig_b, bands)
         bb_store = (
             seen_bands
             if seen_bands is not None
-            else band_buckets(seen_sigs, num_hashes, bands)
+            else band_buckets(seen_sigs, bands)
         )
         n_eq = sum(
             [
                 F.when(F.col(f"h{i}") == F.col(f"s{i}"), 1).otherwise(0)
-                for i in range(num_hashes)
+                for i in range(NUM_HASHES)
             ],
             F.lit(0),
         )
         store_sigs = seen_sigs.select(
             F.col("doc_id").alias("store_id"),
-            *[F.col(f"h{i}").alias(f"s{i}") for i in range(num_hashes)],
+            *[F.col(f"h{i}").alias(f"s{i}") for i in range(NUM_HASHES)],
         )
         cand_store = (
             bb_batch.join(
@@ -757,7 +751,7 @@ def incremental_minhash_dedup(
         )
         batch_sigs = sig_b.select(
             F.col("doc_id").alias("store_id"),
-            *[F.col(f"h{i}").alias(f"s{i}") for i in range(num_hashes)],
+            *[F.col(f"h{i}").alias(f"s{i}") for i in range(NUM_HASHES)],
         )
         dup_batch = (
             cand_batch.join(sig_b, "doc_id")
@@ -840,22 +834,22 @@ def hamming_band_pairs(
     fp: DataFrame,
     fp_col: str,
     max_hamming: int,
-    chunks: int = 4,
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
     """Hamming-banded near-dup pairs over ANY integer fingerprint
     column (SimHash text prints, perceptual image hashes, …):
     ``(doc_a, doc_b, hamming)`` for pairs at distance <= ``max_hamming``.
 
-    Candidates come from equal ``bits/chunks``-bit chunks (pigeonhole:
-    any pair with hamming <= chunks-1 shares a chunk; larger
+    Candidates come from equal ``bits/HAMMING_CHUNKS``-bit chunks
+    (pigeonhole: any pair with hamming <= HAMMING_CHUNKS-1 shares a
+    chunk; larger
     max_hamming trades recall, like all LSH — the SQL oracle mirrors
     the identical bucketing so parity is exact by design). Verified
     with ``bit_count(xor)``. The chunk self-join shuffles on
     (chunk, key) — never the all-pairs product; a hot bucket (many
     identical fingerprints) is AQE's skew-join case.
     """
-    bits_per = bits // chunks
+    bits_per = bits // HAMMING_CHUNKS
     chunk_structs = F.array(
         *[
             F.struct(
@@ -864,7 +858,7 @@ def hamming_band_pairs(
                 .bitwiseAND(F.lit((1 << bits_per) - 1))
                 .alias("key"),
             )
-            for c in range(chunks)
+            for c in range(HAMMING_CHUNKS)
         ]
     )
     buckets = fp.select(
@@ -900,25 +894,23 @@ def hamming_band_pairs(
 def hamming_store_probe(
     fp: DataFrame,
     store_fp: DataFrame,
-    fp_col: str = "phash",
     max_hamming: int = 10,
-    chunks: int = 4,
     bits: int = SIMHASH_BITS,
 ) -> DataFrame:
     """Cross-probe of a batch fingerprint table against a persisted
     STORE of fingerprints — the incremental/streaming twin of
     ``hamming_band_pairs``'s self-join, factored out so the streaming
     image probe and the batch media-store program share one
-    implementation. Both inputs carry ``(doc_id, <fp_col>)``; emits one
+    implementation. Both inputs carry ``(doc_id, phash)``; emits one
     row per batch doc with a verified match: ``(doc_id, dup_store_id,
     min_hamming)`` — the smallest matching store doc and the closest
     distance.
 
-    Candidates come from equal ``bits/chunks``-bit chunks on BOTH
-    sides (same pigeonhole recall as the self-join: any pair within
-    chunks-1 Hamming is guaranteed a shared chunk), verified with
+    Candidates come from equal ``bits/HAMMING_CHUNKS``-bit chunks on
+    BOTH sides (same pigeonhole recall as the self-join: any pair within
+    HAMMING_CHUNKS-1 Hamming is guaranteed a shared chunk), verified with
     ``bit_count(xor)``. The store's chunk index is broadcast. The store
-    is fingerprints-only (~8 bytes + ids per doc, ×``chunks``
+    is fingerprints-only (~8 bytes + ids per doc, ×``HAMMING_CHUNKS``
     exploded), so the broadcast holds to roughly the 100M-fingerprint
     mark under an 8 GB ``spark.sql.maxBroadcastTableSize``-era budget —
     comfortably every per-tenant or per-day store, but NOT a
@@ -926,23 +918,23 @@ def hamming_store_probe(
     which is what lets Structured Streaming run it per micro-batch
     with no state beyond the caller's final aggregation.
     """
-    bits_per = bits // chunks
+    bits_per = bits // HAMMING_CHUNKS
 
-    def chunked(frame: DataFrame, idc: str, fpc: str, out_id: str, out_fp: str):
+    def chunked(frame: DataFrame, out_id: str, out_fp: str):
         structs = F.array(
             *[
                 F.struct(
                     F.lit(c).alias("chunk"),
-                    F.expr(f"shiftright({fpc}, {c * bits_per})")
+                    F.expr(f"shiftright(phash, {c * bits_per})")
                     .bitwiseAND(F.lit((1 << bits_per) - 1))
                     .alias("key"),
                 )
-                for c in range(chunks)
+                for c in range(HAMMING_CHUNKS)
             ]
         )
         return frame.select(
-            F.col(idc).alias(out_id),
-            F.col(fpc).alias(out_fp),
+            F.col("doc_id").alias(out_id),
+            F.col("phash").alias(out_fp),
             F.explode(structs).alias("cc"),
         ).select(
             out_id,
@@ -951,10 +943,8 @@ def hamming_store_probe(
             F.col("cc.key").alias("key"),
         )
 
-    stream_chunks = chunked(fp, "doc_id", fp_col, "doc_id", "__fp")
-    store_chunks = F.broadcast(
-        chunked(store_fp, "doc_id", fp_col, "store_id", "fp_s")
-    )
+    stream_chunks = chunked(fp, "doc_id", "__fp")
+    store_chunks = F.broadcast(chunked(store_fp, "store_id", "fp_s"))
     hamming = F.bit_count(F.col("__fp").bitwiseXOR(F.col("fp_s")))
     return (
         stream_chunks.join(store_chunks, ["chunk", "key"])
@@ -968,15 +958,11 @@ def hamming_store_probe(
     )
 
 
-def simhash_near_dups(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    chunks: int = 4,
-) -> DataFrame:
+def simhash_near_dups(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs: ``(doc_a, doc_b, hamming)``.
 
     Candidates come from equal 15-bit chunks (pigeonhole: any pair with
-    hamming <= chunks-1 shares a chunk; larger max_hamming trades
+    hamming <= HAMMING_CHUNKS-1 shares a chunk; larger max_hamming trades
     recall, like all LSH). Verified with bit_count(xor) — the shared
     ``hamming_band_pairs`` machinery.
 
@@ -986,7 +972,7 @@ def simhash_near_dups(
     """
     fp = simhash(docs).persist()
     try:
-        out = hamming_band_pairs(fp, "simhash", max_hamming, chunks, SIMHASH_BITS)
+        out = hamming_band_pairs(fp, "simhash", max_hamming, SIMHASH_BITS)
         return out.localCheckpoint(eager=True)
     finally:
         fp.unpersist()
@@ -1195,7 +1181,6 @@ def strip_substring_runs(
     k: int = 8,
     min_len: int = 12,
     max_gram_df: int | None = None,
-    runs: DataFrame | None = None,
 ) -> DataFrame:
     """The REMOVAL step ``substring_runs`` reports for (Lee et al.
     2022 end their pipeline in deletion, not a report): cut every
@@ -1225,17 +1210,14 @@ def strip_substring_runs(
     aggregation keyed by victim doc (candidate-volume-sized) + a
     broadcast-or-shuffle join back to the corpus; the rebuild is pure
     column expressions (filter-with-index + array_join), zero Python.
-    Pass a precomputed ``runs`` frame to reuse a report you already
-    paid for; it must carry this function's (k, min_len) semantics.
 
-    Without ``runs``, the report comes from ``substring_runs``, whose
+    The report comes from ``substring_runs``, whose
     eager checkpoint the RETURNED frame references; release it with
     ``util.release_result`` on any consumer of this output, or with
     ``util.release_persistent_rdds_since`` as ``programs.clean_corpus``
     does.
     """
-    if runs is None:
-        runs = substring_runs(docs, k, min_len, max_gram_df)
+    runs = substring_runs(docs, k, min_len, max_gram_df)
     spans = (
         runs.select(
             F.col("doc_b").alias("doc_id"),
@@ -1624,7 +1606,7 @@ def cdc_chunks(docs: DataFrame, window: int = 3, divisor: int = 16) -> DataFrame
     ).select("doc_id", "c.chunk_idx", "c.chunk_hash", "c.n_tokens")
 
 
-def cdc_dup_stats(docs: DataFrame, window: int = 3, divisor: int = 16) -> DataFrame:
+def cdc_dup_stats(docs: DataFrame) -> DataFrame:
     """Per-document chunk-level duplication profile over the CDC
     split: ``(doc_id, n_chunks, n_tokens, dup_chunks, dup_tokens,
     dup_token_frac)`` — ``dup_*`` counting chunks whose content hash
@@ -1639,7 +1621,7 @@ def cdc_dup_stats(docs: DataFrame, window: int = 3, divisor: int = 16) -> DataFr
     occurrence counts join back candidate-bounded under AQE, then the
     per-doc rollup on ``doc_id``.
     """
-    ch = cdc_chunks(docs, window=window, divisor=divisor)
+    ch = cdc_chunks(docs)
     occ = ch.groupBy("chunk_hash").agg(F.count(F.lit(1)).alias("occ"))
     dup = F.col("occ") > 1
     return (
@@ -1981,8 +1963,6 @@ def winnow_fingerprints(docs: DataFrame, k: int = 5, w: int = 4) -> DataFrame:
 
 def winnow_matches(
     docs: DataFrame,
-    k: int = 5,
-    w: int = 4,
     min_shared: int = 2,
     max_fp_df: int | None = None,
     normalize: bool = False,
@@ -2007,7 +1987,7 @@ def winnow_matches(
     """
     if min_shared < 1:
         raise ValueError(f"min_shared ({min_shared}) must be >= 1")
-    fps = winnow_fingerprints(docs, k=k, w=w).select("doc_id", "fp").distinct()
+    fps = winnow_fingerprints(docs).select("doc_id", "fp").distinct()
     if max_fp_df is not None:
         if max_fp_df < 2:
             raise ValueError(f"max_fp_df ({max_fp_df}) must be >= 2")
@@ -2044,12 +2024,7 @@ def winnow_matches(
     )
 
 
-def dedup_report(
-    docs: DataFrame,
-    threshold: float = 0.5,
-    ngram: int = 5,
-    group_col: str = "source",
-) -> DataFrame:
+def dedup_report(docs: DataFrame) -> DataFrame:
     """Per-source mass accounting of the dedup DECISION —
     ``(source, n_docs, n_kept, tokens_total, tokens_kept, drop_rate)``:
     what ``cluster_survivors``' keep/drop verdict actually costs each
@@ -2066,14 +2041,14 @@ def dedup_report(
     integers and ``drop_rate`` a single rounded division, so the
     oracle composes the survivors SQL with a plain GROUP BY.
     """
-    verdict = cluster_survivors(docs, threshold, ngram).select(F.col("doc_id"), "keep")
+    verdict = cluster_survivors(docs, 0.5, 5).select(F.col("doc_id"), "keep")
     toks = F.size(
         F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != "")
     ).cast("long")
     staged = docs.select(
-        "doc_id", F.col(group_col), toks.alias("__nt")
+        "doc_id", F.col("source"), toks.alias("__nt")
     ).join(verdict, "doc_id")
-    agged = staged.groupBy(group_col).agg(
+    agged = staged.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.col("keep").cast("long")).cast("long").alias("n_kept"),
         F.sum("__nt").cast("long").alias("tokens_total"),
@@ -2082,7 +2057,7 @@ def dedup_report(
         .alias("tokens_kept"),
     )
     return agged.select(
-        group_col,
+        "source",
         "n_docs",
         "n_kept",
         "tokens_total",
@@ -2093,12 +2068,15 @@ def dedup_report(
     )
 
 
+# The recall audits' planted twins: ``minhash_recall_report`` and
+# ``lsh_expected_recall`` plant the SAME truth set (one salt), and every
+# audit shifts twin ids by the same offset.
+MHRECALL_SALT = "mhrecall:"
+TWIN_OFFSET = 1 << 40
+
+
 def _planted_twin_corpus(
-    docs: DataFrame,
-    drop_rate: float,
-    sample_mod: int,
-    salt: str,
-    twin_offset: int,
+    docs: DataFrame, drop_rate: float, sample_mod: int, salt: str
 ) -> tuple[DataFrame, DataFrame]:
     """Shared truth-planting stage of the recall audits
     (``minhash_recall_report`` / ``simhash_recall_report``): every
@@ -2107,13 +2085,11 @@ def _planted_twin_corpus(
     position) — the ``weighted_sample`` IEEE-exact construction).
     Returns ``(planted_ids, corpus)``: the sampled originals'
     ``doc_id`` frame, and corpus + twins as ``(doc_id, __text)`` with
-    twin ids shifted by ``twin_offset``."""
+    twin ids shifted by ``TWIN_OFFSET``."""
     if not (0.0 <= drop_rate < 1.0):
         raise ValueError(f"drop_rate ({drop_rate}) must be in [0, 1)")
     if sample_mod < 1:
         raise ValueError(f"sample_mod ({sample_mod}) must be >= 1")
-    if twin_offset < 1:
-        raise ValueError(f"twin_offset ({twin_offset}) must be positive")
     key = F.col("doc_id").cast("long")
     arr = F.filter(F.split(F.col("text"), r"\s+"), lambda w: w != "")
     staged = docs.filter(key % sample_mod == 0).select(
@@ -2153,7 +2129,7 @@ def _planted_twin_corpus(
     twins = staged.select(
         "doc_id", F.array_join(kept, " ").alias("__text")
     ).select(
-        (F.col("doc_id") + F.lit(int(twin_offset))).alias("doc_id"), "__text"
+        (F.col("doc_id") + F.lit(TWIN_OFFSET)).alias("doc_id"), "__text"
     )
     corpus = docs.select(key.alias("doc_id"), F.col("text").alias("__text")).unionAll(
         twins
@@ -2166,22 +2142,18 @@ def minhash_recall_report(
     drop_rate: float = 0.15,
     sample_mod: int = 10,
     threshold: float = 0.3,
-    ngram: int = 2,
-    num_hashes: int = 16,
-    bands: int = 4,
-    salt: str = "mhrecall:",
-    twin_offset: int = 1 << 40,
 ) -> DataFrame:
     """Recall audit of the MinHash+LSH banding — ONE row ``(n_planted,
     n_qualifying, hits, recall)`` — the ``ann_recall_report`` move for
     dedup: LSH recall is band-limited by construction, so a (bands,
-    num_hashes, threshold) configuration is UNAUDITED until something
+    NUM_HASHES, threshold) configuration is UNAUDITED until something
     measures how many true near-dups its bands actually surface.
     This plants the truth: every ``sample_mod``-th doc gets a
     deterministically perturbed twin (each word dropped on a 52-bit
     md5 coin at ``drop_rate`` — the ``weighted_sample`` IEEE-exact
-    construction keyed on (salt, doc, position)), the full corpus +
-    twins run through the EXACT registered minhash pipeline, and
+    construction keyed on (``MHRECALL_SALT``, doc, position)), the
+    2-gram shingles of the full corpus + twins run through the EXACT
+    registered minhash pipeline (``NUM_HASHES`` hashes, 4 bands), and
     recall = found qualifying planted pairs / all qualifying planted
     pairs, where "qualifying" = planted pairs whose exact shingle
     Jaccard clears ``threshold`` (the verify stage keeps them iff the
@@ -2190,8 +2162,8 @@ def minhash_recall_report(
     Determinism end to end (perturbation coins, universal-hash
     signatures, band buckets, round-6 Jaccard) means the DuckDB oracle
     replays the whole audit bit-for-bit. ``doc_id`` values must be
-    unique, non-negative and < ``twin_offset`` (twin ids are
-    ``doc_id + twin_offset``).
+    unique, non-negative and < ``TWIN_OFFSET`` (twin ids are
+    ``doc_id + TWIN_OFFSET``).
 
     Scale shape: an EVALUATION operator — run on a sampled plant set
     (``sample_mod``), cost = one extra minhash pass over corpus +
@@ -2201,17 +2173,17 @@ def minhash_recall_report(
     broadcast-crossed aggregates.
     """
     planted_ids, corpus = _planted_twin_corpus(
-        docs, drop_rate, sample_mod, salt, twin_offset
+        docs, drop_rate, sample_mod, MHRECALL_SALT
     )
-    sh = shingles(corpus, ngram, "__text").persist()
+    sh = shingles(corpus, 2, "__text").persist()
     try:
-        sig = minhash_signatures(sh, num_hashes)
+        sig = minhash_signatures(sh)
         found = jaccard_verify(
-            lsh_bucket_candidates(sig, num_hashes, bands), sh, threshold
+            lsh_bucket_candidates(sig), sh, threshold
         ).select("doc_a", "doc_b")
         planted = planted_ids.select(
             F.col("doc_id").alias("doc_a"),
-            (F.col("doc_id") + F.lit(int(twin_offset))).alias("doc_b"),
+            (F.col("doc_id") + F.lit(TWIN_OFFSET)).alias("doc_b"),
         )
         qual = jaccard_verify(planted, sh, threshold).select("doc_a", "doc_b")
         hits = qual.join(found, ["doc_a", "doc_b"])
@@ -2245,21 +2217,20 @@ def simhash_recall_report(
     drop_rate: float = 0.3,
     sample_mod: int = 10,
     max_hamming: int = 8,
-    chunks: int = 4,
-    salt: str = "shrecall:",
-    twin_offset: int = 1 << 40,
 ) -> DataFrame:
     """Recall audit of the SimHash chunk banding — ONE row
     ``(n_planted, n_qualifying, hits, recall)`` — the
     ``minhash_recall_report`` twin for the hamming side of the dedup
-    stack. The pigeonhole guarantee is exact only up to ``chunks - 1``
-    differing bits; every production run at ``max_hamming >= chunks``
+    stack. The pigeonhole guarantee is exact only up to
+    ``HAMMING_CHUNKS - 1`` differing bits; every production run at
+    ``max_hamming >= HAMMING_CHUNKS``
     (the documented "larger max_hamming trades recall" regime of
     ``simhash_near_dups``) is UNAUDITED until something measures how
     many true close pairs the equal-chunk candidates actually surface.
     This plants them: every ``sample_mod``-th doc gets the same
     deterministic word-drop twin as the minhash audit (shared
-    ``_planted_twin_corpus`` construction, its own salt), corpus +
+    ``_planted_twin_corpus`` construction, its own ``shrecall:``
+    salt), corpus +
     twins run through the EXACT registered fingerprint + banding
     pipeline, and recall = found qualifying planted pairs / all
     qualifying planted pairs, where "qualifying" = planted pairs whose
@@ -2280,16 +2251,16 @@ def simhash_recall_report(
     if max_hamming < 0:
         raise ValueError(f"max_hamming ({max_hamming}) must be >= 0")
     planted_ids, corpus = _planted_twin_corpus(
-        docs, drop_rate, sample_mod, salt, twin_offset
+        docs, drop_rate, sample_mod, "shrecall:"
     )
     fp = simhash(corpus, "__text").persist()
     try:
         found = hamming_band_pairs(
-            fp, "simhash", max_hamming, chunks, SIMHASH_BITS
+            fp, "simhash", max_hamming, SIMHASH_BITS
         ).select("doc_a", "doc_b")
         planted = planted_ids.select(
             F.col("doc_id").alias("doc_a"),
-            (F.col("doc_id") + F.lit(int(twin_offset))).alias("doc_b"),
+            (F.col("doc_id") + F.lit(TWIN_OFFSET)).alias("doc_b"),
         )
         qual = (
             planted.join(
@@ -2344,9 +2315,6 @@ def lsh_expected_recall(
     threshold: float = 0.3,
     drop_rate: float = 0.15,
     sample_mod: int = 10,
-    ngram: int = 2,
-    salt: str = "mhrecall:",
-    twin_offset: int = 1 << 40,
 ) -> DataFrame:
     """The LSH S-curve read BEFORE committing to a banding config —
     one row per ``(num_hashes, bands)`` candidate: ``(num_hashes,
@@ -2363,7 +2331,7 @@ def lsh_expected_recall(
     ``expected_recall`` = mean of that detection probability over the
     qualifying planted pairs (exact Jaccard >= ``threshold``; the same
     word-drop planting as the audits, shared ``_planted_twin_corpus``
-    with the minhash salt so predicted and realized numbers describe
+    with ``MHRECALL_SALT`` so predicted and realized numbers describe
     the SAME truth set). ``s50_similarity`` = ``(1/b)^(1/r)``, the
     config's S-curve midpoint — where detection crosses 50%.
 
@@ -2389,13 +2357,13 @@ def lsh_expected_recall(
                 "unrolled power chain is capped"
             )
     planted_ids, corpus = _planted_twin_corpus(
-        docs, drop_rate, sample_mod, salt, twin_offset
+        docs, drop_rate, sample_mod, MHRECALL_SALT
     )
-    sh = shingles(corpus, ngram, "__text").persist()
+    sh = shingles(corpus, 2, "__text").persist()
     try:
         planted = planted_ids.select(
             F.col("doc_id").alias("doc_a"),
-            (F.col("doc_id") + F.lit(int(twin_offset))).alias("doc_b"),
+            (F.col("doc_id") + F.lit(TWIN_OFFSET)).alias("doc_b"),
         )
         qual = jaccard_verify(planted, sh, threshold).persist()
         try:

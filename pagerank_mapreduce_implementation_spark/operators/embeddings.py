@@ -220,9 +220,7 @@ def embedding_gram(emb: DataFrame, exact: bool = False) -> DataFrame:
 
 
 def pca_components(
-    emb: DataFrame,
-    k: int = 8,
-    center: bool = True,
+    emb: DataFrame, k: int = 8
 ) -> tuple[list[float], list[list[float]], int, list[float]]:
     """Top-``k`` principal components of the embedding table:
     ``(eigenvalues desc, components[k][d], n_rows, means[d])`` — the
@@ -259,7 +257,7 @@ def pca_components(
     for r in cells:
         g[r["i"], r["j"]] = r["g"]
         g[r["j"], r["i"]] = r["g"]
-    cov = g / n - (np.outer(mu, mu) if center else 0.0)
+    cov = g / n - np.outer(mu, mu)
     vals, vecs = np.linalg.eigh(cov)  # ascending
     order = np.argsort(vals)[::-1][:k]
     comps = []
@@ -279,12 +277,9 @@ def pca_components(
 def pca_project(
     emb: DataFrame,
     k: int = 8,
-    center: bool = True,
     components: list[list[float]] | None = None,
     means: list[float] | None = None,
     whiten: bool = False,
-    eigenvalues: list[float] | None = None,
-    eps: float = 1e-12,
 ) -> DataFrame:
     """Project every vector onto the top-``k`` principal components —
     ``(vec_id, proj: array<double>[k])`` — the dimensionality-reduction
@@ -295,13 +290,14 @@ def pca_project(
     literals (k x d doubles — trivially under broadcast limits) and
     centering folds into a precomputed scalar per component
     (``(v - mu) . c = v . c - mu . c``), so each row pays k
-    sequential-fold dot products in codegen. Pass ``components`` (and
-    ``means`` when centering, ``eigenvalues`` when whitening) to reuse
-    a fit — e.g. project a new corpus snapshot onto last week's basis;
-    otherwise the basis is fit on ``emb`` via ``pca_components``.
+    sequential-fold dot products in codegen. Pass ``components`` and
+    ``means`` to reuse a fit — e.g. project a new corpus snapshot onto
+    last week's basis; otherwise the basis is fit on ``emb`` via
+    ``pca_components``.
 
-    ``whiten=True`` rescales each component's projection by
-    ``1/sqrt(eigenvalue)`` (components with eigenvalue <= ``eps`` —
+    ``whiten=True`` (only with a basis fit here, which knows its
+    eigenvalues) rescales each component's projection by
+    ``1/sqrt(eigenvalue)`` (components with eigenvalue <= 1e-12 —
     numerically dead directions — map to 0 rather than exploding), so
     the output coordinates have unit variance: the standard
     preconditioning before cosine/Euclidean clustering when the
@@ -311,24 +307,22 @@ def pca_project(
     """
     import numpy as np
 
+    eigenvalues = None
     if components is None:
-        eigenvalues, components, _, fit_means = pca_components(emb, k=k, center=center)
+        eigenvalues, components, _, fit_means = pca_components(emb, k=k)
         if means is None:
             means = fit_means
     k = len(components)
-    if center:
-        if means is None:
-            raise ValueError("pca_project: center=True needs means with components")
-        mu_dot = [float(np.dot(means, c)) for c in components]
-    else:
-        mu_dot = [0.0] * k
+    if means is None:
+        raise ValueError("pca_project: needs means with components")
+    mu_dot = [float(np.dot(means, c)) for c in components]
     if whiten:
-        if eigenvalues is None or len(eigenvalues) < k:
+        if eigenvalues is None:
             raise ValueError(
-                "pca_project: whiten=True needs eigenvalues with components"
+                "pca_project: whiten=True needs a basis fit on emb"
             )
         scales = [
-            (1.0 / float(np.sqrt(lam)) if lam > eps else 0.0)
+            (1.0 / float(np.sqrt(lam)) if lam > 1e-12 else 0.0)
             for lam in eigenvalues[:k]
         ]
     else:

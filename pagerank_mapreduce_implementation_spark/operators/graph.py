@@ -1243,7 +1243,6 @@ def sssp_weighted(
     edges: DataFrame,
     sources: list[str],
     n_rounds: int = 4,
-    weight_col: str = "w",
     reliable_dir: str | None = None,
 ) -> DataFrame:
     """Multi-source weighted shortest paths → ``(url, dist)`` =
@@ -1280,7 +1279,7 @@ def sssp_weighted(
     )
     with LoopScope(reliable_dir) as scope:
         e = scope.persist(
-            edges.select("src", "dst", F.col(weight_col).cast("double").alias("__w"))
+            edges.select("src", "dst", F.col("w").cast("double").alias("__w"))
             .repartition(_shuffle_width(spark), "src")
         )
 
@@ -1307,7 +1306,7 @@ def sssp_weighted(
         )
 
 
-def clustering_coefficients(edges: DataFrame, round_digits: int = 6) -> DataFrame:
+def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient per vertex → ``(url, degree,
     triangles, clustering)`` over the undirected simple graph:
     ``clustering = 2·T(v) / (deg(v)·(deg(v)-1))``, the fraction of a
@@ -1321,7 +1320,7 @@ def clustering_coefficients(edges: DataFrame, round_digits: int = 6) -> DataFram
     oriented out-degrees), canonical-edge degrees from one unioned
     aggregation, joined on the vertex — one extra vertex-bounded
     shuffle over the triangle plan. The division is IEEE double of
-    exact integers, rounded ``round_digits`` — cross-engine exact.
+    exact integers, rounded to 6 digits — cross-engine exact.
 
     The canonical simple edge set is built and persisted ONCE and
     shared by both consumers via ``triangle_counts(canon=...)``
@@ -1358,7 +1357,7 @@ def clustering_coefficients(edges: DataFrame, round_digits: int = 6) -> DataFram
                 * F.col("triangles")
                 / (F.col("degree") * (F.col("degree") - F.lit(1))),
             ).otherwise(F.lit(0.0)),
-            round_digits,
+            6,
         ).alias("clustering"),
     )
     canon.unpersist()

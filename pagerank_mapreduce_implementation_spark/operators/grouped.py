@@ -58,12 +58,11 @@ def grouped_theilsen(
     group_col: str,
     x_col: str,
     y_col: str,
-    ndigits: int = 9,
 ) -> DataFrame:
     """Per-group Theil-Sen slope of ``y_col`` over ``x_col``:
     ``(group_col, n, slope)`` with ``n`` the group's point count and
     ``slope`` rounded JVM-side (``F.round``, half-up — matching the
-    SQL oracle) to ``ndigits``; NULL when the group has no two points
+    SQL oracle) to 9 digits; NULL when the group has no two points
     with distinct x. Null-valued x/y rows are dropped first (both the
     kernel and the SQL oracle see the same point set). The group key
     passes through the groupBy, so any atomic key type works.
@@ -97,5 +96,5 @@ def grouped_theilsen(
     return packed.select(
         group_col,
         "n",
-        F.round(slope_udf("__pts"), ndigits).alias("slope"),
+        F.round(slope_udf("__pts"), 9).alias("slope"),
     )

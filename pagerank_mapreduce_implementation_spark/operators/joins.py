@@ -39,24 +39,23 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: str,
-    left_ts: str = "ts",
     right_ts: str = "ts",
-    right_cols: list[str] | None = None,
     direction: str = "backward",
     tolerance_seconds: float | None = None,
     suffix: str = "_right",
 ) -> DataFrame:
     """For every left row, attach the single right row with the
-    greatest ``right_ts`` <= ``left_ts`` (``direction="backward"``,
-    inclusive) or the smallest ``right_ts`` >= ``left_ts``
+    greatest ``right_ts`` <= the left row's ``ts``
+    (``direction="backward"``, inclusive) or the smallest
+    ``right_ts`` >= ``ts``
     (``"forward"``), matching on the equality key ``on``.
 
     Left rows with no match keep NULLs (left-outer semantics, like
     pandas ``merge_asof`` / DuckDB ``ASOF LEFT JOIN``).
 
-    ``right_cols`` limits which right columns are attached (default:
-    all but the key and timestamp); each arrives as ``<name><suffix>``
-    plus the matched timestamp as ``<right_ts><suffix>``.
+    Every right column but the key and timestamp is attached, each as
+    ``<name><suffix>``, plus the matched timestamp as
+    ``<right_ts><suffix>``.
 
     ``tolerance_seconds`` voids matches further than that from the left
     timestamp (the match columns become NULL, the left row is kept).
@@ -69,11 +68,7 @@ def asof_join(
     """
     if direction not in ("backward", "forward"):
         raise ValueError(f"unknown direction {direction!r}")
-    rcols = (
-        right_cols
-        if right_cols is not None
-        else [c for c in right.columns if c not in (on, right_ts)]
-    )
+    rcols = [c for c in right.columns if c not in (on, right_ts)]
     payload = F.struct(
         F.col(right_ts).alias(right_ts), *[F.col(c).alias(c) for c in rcols]
     )
@@ -97,7 +92,7 @@ def asof_join(
     )
     l_proj = left.select(
         F.col(on).alias(on),
-        F.col(left_ts).alias(_T),
+        F.col("ts").alias(_T),
         F.lit(1).alias(_SIDE),
         F.lit(0).cast("long").alias(_TB),
         F.lit(None).cast(payload_type).alias(_MATCH),
@@ -139,12 +134,9 @@ def interval_agg_join(
     right: DataFrame,
     on: str,
     aggs: list,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    window_seconds: float = 3600.0,
 ) -> DataFrame:
     """Per left row, aggregate the right rows of the same key with
-    ``left_ts < right_ts <= left_ts + window_seconds`` (a bounded
+    ``ts < right ts <= ts + 1 hour`` (a bounded
     interval/range join — "what happened in the hour after X").
 
     Left-outer: rows with an empty interval keep count 0 / NULL sums.
@@ -164,12 +156,12 @@ def interval_agg_join(
     )
     # integer-microsecond window bound: exact, and identical to SQL
     # engines' INTERVAL arithmetic (double epoch-seconds is not)
-    win_us = int(round(float(window_seconds) * 1_000_000))
+    win_us = 3600 * 1_000_000
     cond = (
-        (F.col(f"{right_ts}_r") > F.col(left_ts))
+        (F.col("ts_r") > F.col("ts"))
         & (
-            F.unix_micros(F.col(f"{right_ts}_r"))
-            <= F.unix_micros(F.col(left_ts)) + win_us
+            F.unix_micros(F.col("ts_r"))
+            <= F.unix_micros(F.col("ts")) + win_us
         )
     )
     joined = left.join(r, on=[left[on] == r[on], cond], how="left").drop(r[on])

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 BLOB_SCHEMA = "doc_id bigint, content binary"
-BLOB_META_SCHEMA = "doc_id bigint, n_bytes bigint, content_md5 string"
 IMAGE_META_SCHEMA = (
     "doc_id bigint, width int, height int, format string, n_bytes bigint"
 )
@@ -516,35 +515,34 @@ PHASH_BITS = 60  # matches SIMHASH_BITS so the band machinery is shared
 PHASH_GRID = 8  # 8x8 thumbnail; bits 0..59 come from cells 0..59
 
 
-def ppm_ahash(b: bytes, grid: int = PHASH_GRID, bits: int = PHASH_BITS) -> int:
+def ppm_ahash(b: bytes) -> int:
     """Average-hash over a P6 PPM payload: nearest-neighbor resample to
-    ``grid``x``grid`` (the exact integer index grid of ``ppm_resizer``),
-    per-pixel integer grayscale ``(r + g + b) // 3``, then bit ``j`` of
-    the hash is set iff cell ``j``'s gray >= the mean gray over ALL
-    ``grid*grid`` cells (row-major ``j = y*grid + x``, first ``bits``
-    cells only — 60 of 64 keeps the hash in a signed 64-bit long, the
+    ``PHASH_GRID``x``PHASH_GRID`` (the exact integer index grid of
+    ``ppm_resizer``), per-pixel integer grayscale ``(r + g + b) // 3``,
+    then bit ``j`` of the hash is set iff cell ``j``'s gray >= the mean
+    gray over ALL 64 cells (row-major ``j = y*PHASH_GRID + x``, first
+    ``PHASH_BITS`` cells only — 60 of 64 keeps the hash in a signed
+    64-bit long, the
     SimHash convention). Every step is integer (one double mean), so a
     SQL oracle can reproduce the hash analytically for a deterministic
     pixel generator."""
     import numpy as np
 
     w, h, px = _ppm_parse(b)
-    ys = (np.arange(grid) * h) // grid
-    xs = (np.arange(grid) * w) // grid
+    ys = (np.arange(PHASH_GRID) * h) // PHASH_GRID
+    xs = (np.arange(PHASH_GRID) * w) // PHASH_GRID
     thumb = px[ys][:, xs].astype(np.int64)  # grid x grid x 3
     gray = (thumb[:, :, 0] + thumb[:, :, 1] + thumb[:, :, 2]) // 3
     flat = gray.reshape(-1)
     mean = float(flat.sum()) / float(flat.size)
     out = 0
-    for j in range(bits):
+    for j in range(PHASH_BITS):
         if float(flat[j]) >= mean:
             out |= 1 << j
     return out
 
 
-def ppm_dcthash(
-    b: bytes, grid: int = 16, keep: int = 8, bits: int = PHASH_BITS
-) -> int:
+def ppm_dcthash(b: bytes, grid: int = 16, keep: int = 8) -> int:
     """DCT-based perceptual hash over a P6 PPM payload — the classic
     "pHash" construction, sitting beside ``ppm_ahash`` as an injectable
     ``hasher`` for ``phash_images``/``phash_near_dups`` (same 60-bit
@@ -565,7 +563,7 @@ def ppm_dcthash(
     resample to ``grid`` x ``grid`` integer grays (the ppm_ahash
     sampling), orthonormal 2-D DCT-II, row-major flatten of the
     low-frequency ``keep`` x ``keep`` corner minus the DC term, bit
-    ``j`` set iff coefficient ``j`` > the median of the first ``bits``
+    ``j`` set iff coefficient ``j`` > the median of the first ``PHASH_BITS``
     coefficients (median-balanced: ~half the bits set for ANY input,
     the standard pHash trick that maximizes Hamming discrimination).
     No SQL-oracle twin: cos() doubles are not portably reproducible
@@ -575,10 +573,10 @@ def ppm_dcthash(
     """
     import numpy as np
 
-    if keep * keep - 1 < bits:
+    if keep * keep - 1 < PHASH_BITS:
         raise ValueError(
             f"keep={keep} yields {keep * keep - 1} AC coefficients "
-            f"< bits={bits}"
+            f"< PHASH_BITS={PHASH_BITS}"
         )
     if keep > grid:
         # without this the [:keep, :keep] slice silently truncates to
@@ -599,10 +597,10 @@ def ppm_dcthash(
     D[0, :] *= np.sqrt(1.0 / grid)
     D[1:, :] *= np.sqrt(2.0 / grid)
     coeffs = D @ gray @ D.T
-    ac = coeffs[:keep, :keep].reshape(-1)[1:][:bits]
+    ac = coeffs[:keep, :keep].reshape(-1)[1:][:PHASH_BITS]
     med = float(np.median(ac))
     out = 0
-    for j in range(bits):
+    for j in range(PHASH_BITS):
         if float(ac[j]) > med:
             out |= 1 << j
     return out
@@ -633,7 +631,6 @@ def phash_images(
 def phash_near_dups(
     blobs: DataFrame,
     max_hamming: int = 10,
-    chunks: int = 4,
     hasher: Callable[[bytes], int] | None = None,
 ) -> DataFrame:
     """Image near-dup pairs by perceptual hash:
@@ -656,7 +653,7 @@ def phash_near_dups(
     # the persist the Python hashing pass would run once per side).
     fp = phash_images(blobs, hasher).persist()
     try:
-        out = hamming_band_pairs(fp, "phash", max_hamming, chunks, PHASH_BITS)
+        out = hamming_band_pairs(fp, "phash", max_hamming, PHASH_BITS)
         return out.localCheckpoint(eager=True)
     finally:
         fp.unpersist()
@@ -712,10 +709,10 @@ def dct_test_image(doc_id: int) -> bytes:
     return ppm_encode(np.stack([px16] * 3, axis=2))
 
 
-def wav_test_clip(doc_id: int, base: int = 256):
+def wav_test_clip(doc_id: int):
     """Deterministic int16 test clip for the audio near-dup driver
     query: docs in one GROUP ``g = doc_id // 4`` share the base signal
-    ``s_i = ((g*31 + i*17) % 256) - 128`` over ``n = base + g % base``
+    ``s_i = ((g*31 + i*17) % 256) - 128`` over ``n = 256 + g % 256``
     samples, and variant ``r = doc_id % 4`` plays it at GAIN ``r + 1``
     (pure integer scaling, max |s| = 512, well inside int16). Frame
     energies scale by ``(r+1)^2`` uniformly, so every energy-delta
@@ -725,12 +722,12 @@ def wav_test_clip(doc_id: int, base: int = 256):
     import numpy as np
 
     g, r = int(doc_id) // 4, int(doc_id) % 4
-    n = base + g % base
+    n = 256 + g % 256
     i = np.arange(n, dtype="int64")
     return (((g * 31 + i * 17) % 256 - 128) * (r + 1)).astype("<i2")
 
 
-def wav_spectral_test_clip(doc_id: int, base: int = 256):
+def wav_spectral_test_clip(doc_id: int):
     """Deterministic int16 clip for the SPECTRAL near-dup driver query
     (``audio_spectral_dups``) — ``wav_test_clip`` rebuilt around the
     two facts the FFT path adds:
@@ -749,26 +746,26 @@ def wav_spectral_test_clip(doc_id: int, base: int = 256):
        group-keyed QUADRATIC ``((g*31+7)(i+1)^2 + 17 i) mod 256`` keys
        the spectrum itself by the group.
 
-    The whole signal is a function of ``g % base`` alone (both the
-    coefficient mod 256 and ``n = base + g % base`` are), so the
+    The whole signal is a function of ``g % 256`` alone (both the
+    coefficient mod 256 and ``n = 256 + g % 256`` are), so the
     analytic truth for the hamming-0 pair query is exactly
-    ``(a//4) % base == (b//4) % base`` — and all ``base`` signal
+    ``(a//4) % 256 == (b//4) % 256`` — and all 256 signal
     classes are pinned pairwise-distinct (min cross-class hamming 11)
     by tests/test_phash.py's exhaustive class audit."""
     import numpy as np
 
     g, r = int(doc_id) // 4, int(doc_id) % 4
-    n = base + g % base
+    n = 256 + g % 256
     i = np.arange(n, dtype="int64")
     s = ((g * 31 + 7) * (i + 1) * (i + 1) + i * 17) % 256 - 128
     return (s * (1 << r)).astype("<i2")
 
 
-def wav_fingerprint(b: bytes, bits: int = PHASH_BITS) -> int:
+def wav_fingerprint(b: bytes) -> int:
     """Energy-delta audio fingerprint over a WAV PCM16 payload — the
     audio member of the shared 60-bit near-dup family (text SimHash,
     image pHash): bit ``j`` is set iff frame ``j+1`` carries MORE
-    energy than frame ``j``, over ``bits + 1`` equal time slices.
+    energy than frame ``j``, over ``PHASH_BITS + 1`` equal time slices.
     The classic robust-audio-hash shape (cf. Haitsma & Kalker 2002's
     band-energy-delta fingerprint, mono-band variant): amplitude
     scaling multiplies every frame energy by the same factor, so the
@@ -779,12 +776,12 @@ def wav_fingerprint(b: bytes, bits: int = PHASH_BITS) -> int:
     Frame energy is the INTEGER sum of squared samples (int64-exact:
     max 32768^2 * samples-per-frame, far below 2^63 for any real
     clip), so the fingerprint is bit-reproducible everywhere.
-    Clips shorter than ``bits + 1`` samples raise — a fingerprint of
+    Clips shorter than ``PHASH_BITS + 1`` samples raise — a fingerprint of
     mostly-empty frames would collide everything short.
     """
     _, samples = _wav_parse(b)
     n = len(samples)
-    frames = bits + 1
+    frames = PHASH_BITS + 1
     if n < frames:
         raise ValueError(
             f"clip has {n} samples < {frames} fingerprint frames; "
@@ -796,15 +793,13 @@ def wav_fingerprint(b: bytes, bits: int = PHASH_BITS) -> int:
         for f in range(frames)
     ]
     out = 0
-    for j in range(bits):
+    for j in range(PHASH_BITS):
         if energies[j + 1] > energies[j]:
             out |= 1 << j
     return out
 
 
-def wav_spectral_fingerprint(
-    b: bytes, bits: int = PHASH_BITS, frames: int = 11, bands: int = 7
-) -> int:
+def wav_spectral_fingerprint(b: bytes, frames: int = 11, bands: int = 7) -> int:
     """Spectral band-energy-delta audio fingerprint — the full
     Haitsma & Kalker (2002) construction, beside the mono-band
     ``wav_fingerprint`` as an injectable ``hasher`` for
@@ -833,10 +828,10 @@ def wav_spectral_fingerprint(
     """
     import numpy as np
 
-    if (frames - 1) * (bands - 1) < bits:
+    if (frames - 1) * (bands - 1) < PHASH_BITS:
         raise ValueError(
             f"frames={frames} x bands={bands} yields "
-            f"{(frames - 1) * (bands - 1)} bits < bits={bits}"
+            f"{(frames - 1) * (bands - 1)} bits < PHASH_BITS={PHASH_BITS}"
         )
     _, samples = _wav_parse(b)
     n = len(samples)
@@ -867,7 +862,7 @@ def wav_spectral_fingerprint(
     j = 0
     for f2 in range(1, frames):
         for m in range(bands - 1):
-            if j >= bits:
+            if j >= PHASH_BITS:
                 break
             d = (E[f2, m] - E[f2, m + 1]) - (E[f2 - 1, m] - E[f2 - 1, m + 1])
             if d > 0:
@@ -900,7 +895,6 @@ def audio_fingerprints(
 def audio_near_dups(
     blobs: DataFrame,
     max_hamming: int = 8,
-    chunks: int = 4,
     hasher: Callable[[bytes], int] | None = None,
 ) -> DataFrame:
     """Audio near-dup pairs by energy-delta fingerprint:
@@ -917,7 +911,7 @@ def audio_near_dups(
 
     fp = audio_fingerprints(blobs, hasher).persist()
     try:
-        out = hamming_band_pairs(fp, "afp", max_hamming, chunks, PHASH_BITS)
+        out = hamming_band_pairs(fp, "afp", max_hamming, PHASH_BITS)
         return out.localCheckpoint(eager=True)
     finally:
         fp.unpersist()
@@ -1099,7 +1093,6 @@ def video_shared_runs(
 def video_near_dups(
     blobs: DataFrame | None,
     min_shared: int = 2,
-    every_n: int = 1,
     max_frame_df: int | None = None,
     demuxer: Callable[[bytes], list[bytes]] | None = None,
     hasher: Callable[[bytes], int] | None = None,
@@ -1124,11 +1117,12 @@ def video_near_dups(
     ``max_frame_df`` videos are dropped before pairing, deterministic
     df-cap semantics as documented for shingles.
 
-    AT SCALE, DON'T RUN THE DEFAULTS: ``every_n=1`` hashes every frame
-    (decode is the dominant cost — a 30 fps corpus pays 30x what
-    ``every_n=30`` does for nearly the same pair recall, since near-dup
-    clips share long frame RUNS) and ``max_frame_df=None`` leaves the
-    quadratic stop-frame key uncapped. The 100 TB configuration is
+    AT SCALE, DON'T RUN THE DEFAULTS: ``blobs`` are hashed at every
+    frame (decode is the dominant cost — a 30 fps corpus pays 30x what
+    ``video_frame_hashes(every_n=30)`` does for nearly the same pair
+    recall, since near-dup clips share long frame RUNS) and
+    ``max_frame_df=None`` leaves the quadratic stop-frame key uncapped.
+    The 100 TB configuration passes ``frame_hashes`` sampled with
     ``every_n`` in the tens plus a ``max_frame_df`` around the
     expected copy count (the shingle-cap sizing rule); the exact
     defaults here stay recall-maximal so small-corpus results are
@@ -1150,7 +1144,7 @@ def video_near_dups(
     src = (
         frame_hashes
         if frame_hashes is not None
-        else video_frame_hashes(blobs, every_n, demuxer, hasher)
+        else video_frame_hashes(blobs, demuxer=demuxer, hasher=hasher)
     )
     fh = src.select("doc_id", "fhash").distinct()
     own = materialize and frame_hashes is None

@@ -25,12 +25,12 @@ from pyspark.sql import functions as F
 DEC = "decimal(18,6)"
 
 
-def dsum(expr: Column, digits: int = 2) -> Column:
+def dsum(expr: Column) -> Column:
     """Order-independent sum of a double expression (see module note)."""
-    return F.round(F.sum(expr.cast(DEC)).cast("double"), digits)
+    return F.round(F.sum(expr.cast(DEC)).cast("double"), 2)
 
 
-def pricing_summary(lineitem: DataFrame, ship_before: str = "1998-09-01") -> DataFrame:
+def pricing_summary(lineitem: DataFrame) -> DataFrame:
     """Filter → groupBy → multi-agg → sort (TPC-H Q1 shape).
 
     The shipdate predicate pushes down to the parquet scan; the groupBy
@@ -40,7 +40,7 @@ def pricing_summary(lineitem: DataFrame, ship_before: str = "1998-09-01") -> Dat
     charge = disc_price * (F.lit(1.0) + F.col("l_tax"))
     cnt = F.count(F.lit(1))
     return (
-        lineitem.filter(F.col("l_shipdate") < F.lit(ship_before).cast("timestamp"))
+        lineitem.filter(F.col("l_shipdate") < F.lit("1998-09-01").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
             dsum(F.col("l_quantity")).alias("sum_qty"),
@@ -66,10 +66,10 @@ def pricing_summary(lineitem: DataFrame, ship_before: str = "1998-09-01") -> Dat
 
 
 def top_customers_by_revenue(
-    customer: DataFrame, orders: DataFrame, lineitem: DataFrame, k: int = 10
+    customer: DataFrame, orders: DataFrame, lineitem: DataFrame
 ) -> DataFrame:
     """3-way join → agg → top-k. lineitem⋈orders shuffles on orderkey;
-    the customer dim joins broadcast (small side). ``limit k`` after the
+    the customer dim joins broadcast (small side). ``limit 10`` after the
     sort plans TakeOrderedAndProject — no full global sort."""
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))
     revenue = (
@@ -81,7 +81,7 @@ def top_customers_by_revenue(
         revenue.join(F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"))
         .select("c_custkey", "c_name", "revenue")
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -190,14 +190,12 @@ def supplier_nation_revenue(
     )
 
 
-def order_priority_counts(
-    orders: DataFrame, lineitem: DataFrame, min_discount: float = 0.05
-) -> DataFrame:
+def order_priority_counts(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Semi-join (EXISTS) → agg → sort: orders with at least one
     deeply-discounted lineitem, counted by priority. left_semi avoids
     materializing the join product (TPC-H Q4 shape); the discount
     predicate pushes into the lineitem scan."""
-    discounted = lineitem.filter(F.col("l_discount") > min_discount).select("l_orderkey")
+    discounted = lineitem.filter(F.col("l_discount") > 0.05).select("l_orderkey")
     return (
         orders.join(discounted, F.col("o_orderkey") == F.col("l_orderkey"), "left_semi")
         .groupBy("o_orderpriority")
@@ -206,16 +204,14 @@ def order_priority_counts(
     )
 
 
-def order_priority_clean_counts(
-    orders: DataFrame, lineitem: DataFrame, min_discount: float = 0.05
-) -> DataFrame:
+def order_priority_clean_counts(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
     """Anti-join (NOT EXISTS) → agg → sort: orders with NO
     deeply-discounted lineitem, counted by priority — the complement of
     ``order_priority_counts`` and the anti-join planning surface
     (left_anti streams the probe side against the discounted-key build
     side; no join product, the discount predicate pushes into the
     lineitem scan)."""
-    discounted = lineitem.filter(F.col("l_discount") > min_discount).select("l_orderkey")
+    discounted = lineitem.filter(F.col("l_discount") > 0.05).select("l_orderkey")
     return (
         orders.join(discounted, F.col("o_orderkey") == F.col("l_orderkey"), "left_anti")
         .groupBy("o_orderpriority")
@@ -273,10 +269,10 @@ def window_shoppers(events: DataFrame) -> DataFrame:
     return pairs("view").subtract(pairs("purchase"))
 
 
-def retention_cohorts(events: DataFrame, week_days: int = 7) -> DataFrame:
+def retention_cohorts(events: DataFrame) -> DataFrame:
     """Cohort retention matrix → ``(cohort_day, week_offset,
     n_users)``: users bucketed by the day of their FIRST event,
-    counted once per ``week_days``-wide offset bucket they return in
+    counted once per 7-day offset bucket they return in
     — the standard activation/retention read over an event log.
 
     Plan: one user-keyed aggregate for first-touch (map-side
@@ -294,7 +290,7 @@ def retention_cohorts(events: DataFrame, week_days: int = 7) -> DataFrame:
         .select(
             "user_id",
             "cohort_day",
-            (F.datediff("day", "cohort_day") / week_days)
+            (F.datediff("day", "cohort_day") / 7)
             .cast("int")
             .alias("week_offset"),
         )
@@ -440,7 +436,6 @@ def profile_drift(
     old: DataFrame,
     new: DataFrame,
     columns: list[str] | None = None,
-    exact: bool = True,
 ) -> DataFrame:
     """Snapshot-to-snapshot drift report — one row per profiled column:
     ``(col_name, n_rows_old, n_rows_new, n_nulls_old, n_nulls_new,
@@ -449,8 +444,8 @@ def profile_drift(
     week's (nulls creeping in, cardinality collapse, value range
     drift) before any downstream job trusts it.
 
-    Two ``profile_table`` passes (one agg scan each; ``exact`` as
-    there) joined on the column name — a ~column-count-sized join, so
+    Two exact ``profile_table`` passes (one agg scan each) joined on
+    the column name — a ~column-count-sized join, so
     the comparison itself is free at any table size.
     ``null_rate_delta`` is rounded 6 (cross-engine-exact);
     ``range_changed`` flags any min/max string change.
@@ -459,8 +454,8 @@ def profile_drift(
     missing = [c for c in cols if c not in new.columns]
     if missing:
         raise ValueError(f"profile_drift: columns missing from new: {missing}")
-    po = profile_table(old, cols, exact=exact)
-    pn = profile_table(new, cols, exact=exact)
+    po = profile_table(old, cols)
+    pn = profile_table(new, cols)
     o = po.select(
         "col_name",
         F.col("n_rows").alias("n_rows_old"),
@@ -507,7 +502,6 @@ def profile_drift_where(
     df: DataFrame,
     old_where: Column,
     columns: list[str] | None = None,
-    exact: bool = True,
 ) -> DataFrame:
     """ONE-SCAN ``profile_drift`` for the snapshot shape where OLD is
     a predicate-slice of NEW's own table (append-only feed, partition
@@ -515,7 +509,7 @@ def profile_drift_where(
     aggregation — old-side statistics aggregate ``CASE WHEN old_where
     THEN col END`` alongside the new-side expressions — so the table
     is scanned ONCE. Output rows, names, and types are IDENTICAL to
-    ``profile_drift(df.filter(old_where), df, columns, exact)``.
+    ``profile_drift(df.filter(old_where), df, columns)``.
 
     THE TRADE (measured, sf0.1 lineitem, 4 columns, exact): fusing
     doubles the per-scan expand width — ONE x9 Expand (8 distinct aggs
@@ -532,11 +526,6 @@ def profile_drift_where(
         raise ValueError(f"profile_drift_where: unknown columns {missing}")
     if not cols:
         raise ValueError("profile_drift_where: no columns to profile")
-    distinct = (
-        (lambda c: F.count_distinct(c))
-        if exact
-        else (lambda c: F.approx_count_distinct(c))
-    )
     gated = lambda c: F.when(old_where, F.col(c))  # noqa: E731
     aggs = [
         F.count(F.lit(1)).alias("__n_new"),
@@ -545,11 +534,11 @@ def profile_drift_where(
     for i, c in enumerate(cols):
         aggs += [
             F.count(F.col(c)).alias(f"__nn_new{i}"),
-            distinct(F.col(c)).alias(f"__d_new{i}"),
+            F.count_distinct(F.col(c)).alias(f"__d_new{i}"),
             F.min(F.col(c)).cast("string").alias(f"__mn_new{i}"),
             F.max(F.col(c)).cast("string").alias(f"__mx_new{i}"),
             F.count(gated(c)).alias(f"__nn_old{i}"),
-            distinct(gated(c)).alias(f"__d_old{i}"),
+            F.count_distinct(gated(c)).alias(f"__d_old{i}"),
             F.min(gated(c)).cast("string").alias(f"__mn_old{i}"),
             F.max(gated(c)).cast("string").alias(f"__mx_old{i}"),
         ]
@@ -854,12 +843,7 @@ def ks_drift(
     return out
 
 
-def ks_from_histograms(
-    old_h: DataFrame,
-    new_h: DataFrame,
-    bucket_col: str = "bucket_start",
-    n_col: str = "n",
-) -> DataFrame:
+def ks_from_histograms(old_h: DataFrame, new_h: DataFrame) -> DataFrame:
     """Two-sample KS over two PRE-BINNED histograms sharing a binning
     (``value_histogram`` / ``streaming_value_histogram`` output):
     ``(n_old, n_new, n_buckets, d_stat)`` with the sup taken at bucket
@@ -880,11 +864,11 @@ def ks_from_histograms(
     from pyspark.sql.window import Window
 
     side = lambda df, one_old: df.filter(  # noqa: E731
-        F.col(bucket_col).isNotNull()
+        F.col("bucket_start").isNotNull()
     ).select(
-        F.col(bucket_col).cast("double").alias("__b"),
-        (F.col(n_col).cast("long") * (1 if one_old else 0)).alias("__c1"),
-        (F.col(n_col).cast("long") * (0 if one_old else 1)).alias("__c2"),
+        F.col("bucket_start").cast("double").alias("__b"),
+        (F.col("n").cast("long") * (1 if one_old else 0)).alias("__c1"),
+        (F.col("n").cast("long") * (0 if one_old else 1)).alias("__c2"),
     )
     g = (
         side(old_h, True)

@@ -46,17 +46,16 @@ def hash_split(
     df: DataFrame,
     key_col: str,
     splits: dict[str, int] | None = None,
-    salt: str = "split:",
 ) -> DataFrame:
     """Deterministic named split assignment: adds ``bucket`` (0..99)
     and ``split`` columns; every other column passes through.
 
     ``splits`` maps split name -> percentage (must sum to 100); ranges
     are assigned in the dict's insertion order (e.g. the default
-    train=[0,90), val=[90,95), test=[95,100)). ``salt`` namespaces the
-    hash so independent splits of the same corpus decorrelate.
+    train=[0,90), val=[90,95), test=[95,100)). The ``split:`` salt
+    namespaces the hash so other hash-keyed samplers decorrelate.
 
-    The assignment depends only on (salt, key) — re-partitioning,
+    The assignment depends only on the key — re-partitioning,
     re-ordering, appending data, or re-running on a different engine
     never moves a row between splits. That stability is the entire
     point: eval rows stay eval rows across every pipeline version.
@@ -69,7 +68,7 @@ def hash_split(
         # negative/zero entries can still sum to 100 while shadowing a
         # later range into permanent emptiness (review finding)
         raise ValueError(f"split percentages must be positive, got {splits}")
-    bucket = _hash_bucket(F.col(key_col), salt, 100)
+    bucket = _hash_bucket(F.col(key_col), "split:", 100)
     lo = 0
     cases: list[tuple[int, int, str]] = []
     for name, pct in splits.items():
@@ -111,14 +110,14 @@ def weighted_sample(
     weight_col: str,
     scale: float,
     key_col: str,
-    salt: str = "wsample:",
 ) -> DataFrame:
     """Deterministic importance (Bernoulli) sampling: keep each row
     with probability ``min(1, weight/scale)``, decided by a 52-bit
     content-hash uniform — the curation pass "sample docs in
     proportion to quality/length/score" with hash_split's stability
     guarantees (re-partitioning, re-ordering, appends and re-runs
-    never flip a row's fate; pure function of (salt, key)).
+    never flip a row's fate; pure function of the key, salted
+    ``wsample:``).
 
     Exactness across engines: the keep test is ``u * scale <
     weight`` where ``u = md5_52bits / 2^52`` — only IEEE-exact ops
@@ -133,7 +132,7 @@ def weighted_sample(
     aggregates, pushdown-friendly. Pick ``scale`` ~= mean(weight) /
     target_rate from a stats pass.
     """
-    u = _hash_uniform(F.col(key_col), salt)
+    u = _hash_uniform(F.col(key_col), "wsample:")
     return df.filter(u * F.lit(float(scale)) < F.col(weight_col).cast("double"))
 
 
@@ -143,7 +142,6 @@ def stratified_weighted_sample(
     group_col: str,
     rate: float,
     key_col: str,
-    salt: str = "swsample:",
 ) -> DataFrame:
     """Per-group importance sampling: within each ``group_col`` stratum,
     keep each row with probability ``rate * weight / max(weight over
@@ -164,7 +162,7 @@ def stratified_weighted_sample(
     fingerprint math never shuffles the corpus.
     """
     mx = df.groupBy(group_col).agg(F.max(F.col(weight_col).cast("double")).alias("__mxw"))
-    u = _hash_uniform(F.col(key_col), salt)
+    u = _hash_uniform(F.col(key_col), "swsample:")
     return (
         df.join(mx, group_col)
         .filter(u * F.col("__mxw") < F.lit(float(rate)) * F.col(weight_col).cast("double"))
@@ -199,10 +197,9 @@ def quota_sample(
     order_col: str,
     k: int,
     key_col: str,
-    descending: bool = True,
 ) -> DataFrame:
-    """Top-``k`` rows per ``group_col`` ordered by ``order_col`` (desc
-    by default) with ``key_col`` as the deterministic tiebreak; adds
+    """Top-``k`` rows per ``group_col`` ordered by ``order_col``
+    descending with ``key_col`` as the deterministic tiebreak; adds
     ``rn`` (1-based rank within the group).
 
     The per-source quality quota of a data recipe: "keep at most k
@@ -211,23 +208,14 @@ def quota_sample(
     the window shuffle, so the exchange carries O(groups x k), not the
     corpus.
     """
-    order = [
-        F.desc(order_col) if descending else F.asc(order_col),
-        F.asc(key_col),
-    ]
-    w = Window.partitionBy(group_col).orderBy(*order)
+    w = Window.partitionBy(group_col).orderBy(F.desc(order_col), F.asc(key_col))
     return (
         df.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
     )
 
 
-def mix_sources(
-    docs: DataFrame,
-    target_props: dict[str, float],
-    source_col: str = "source",
-    salt: str = "mix:",
-) -> DataFrame:
+def mix_sources(docs: DataFrame, target_props: dict[str, float]) -> DataFrame:
     """Deterministic DATA MIXING: subsample each source so the
     surviving TOKEN mass matches ``target_props`` proportions, keeping
     as much data as possible — the pretraining mixture-shaping stage
@@ -267,7 +255,7 @@ def mix_sources(
         raise ValueError("target proportions must be positive")
     toks = F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != ""))
     staged = docs.withColumn("__nt", toks.cast("long"))
-    totals = _source_token_totals(staged, source_col)
+    totals = _source_token_totals(staged, "source")
     missing = sorted(set(target_props) - set(totals))
     if missing:
         raise ValueError(
@@ -282,12 +270,12 @@ def mix_sources(
             (s, float(t), float(target_props[s]), k)
             for s, t in sorted(tmap.items())
         ],
-        f"{source_col} string, __T double, __p double, __k double",
+        "source string, __T double, __p double, __k double",
     )
     return (
-        staged.join(F.broadcast(rates), source_col)
+        staged.join(F.broadcast(rates), "source")
         .filter(
-            _hash_uniform(F.col("doc_id"), salt) * F.col("__T")
+            _hash_uniform(F.col("doc_id"), "mix:") * F.col("__T")
             < F.col("__p") * F.col("__k")
         )
         .drop("__nt", "__T", "__p", "__k")
@@ -339,7 +327,6 @@ def dsir_weights(
     n_buckets: int = 1024,
     ngram_ns: tuple = (1, 2),
     smoothing: float = 1.0,
-    salt: str = "dsir:",
 ) -> DataFrame:
     """DSIR importance weights (Xie et al. 2023, "Data Selection for
     Language Models via Importance Resampling"): score every ``raw``
@@ -371,8 +358,8 @@ def dsir_weights(
         raise ValueError(f"smoothing must be > 0, got {smoothing}")
     if not ngram_ns or any(int(n) < 1 for n in ngram_ns):
         raise ValueError(f"ngram_ns must be ints >= 1, got {ngram_ns!r}")
-    raw_bc = _hashed_gram_counts(raw, n_buckets, ngram_ns, salt)
-    tgt_bc = _hashed_gram_counts(target, n_buckets, ngram_ns, salt)
+    raw_bc = _hashed_gram_counts(raw, n_buckets, ngram_ns, "dsir:")
+    tgt_bc = _hashed_gram_counts(target, n_buckets, ngram_ns, "dsir:")
     raw_dist = raw_bc.groupBy("bucket").agg(F.sum("cnt").alias("__r"))
     tgt_dist = tgt_bc.groupBy("bucket").agg(F.sum("cnt").alias("__t"))
     dist = (
@@ -425,10 +412,6 @@ def dsir_select(
     target: DataFrame,
     k: int,
     n_buckets: int = 1024,
-    ngram_ns: tuple = (1, 2),
-    smoothing: float = 1.0,
-    salt: str = "dsir:",
-    gumbel_salt: str = "dsir-gumbel:",
 ) -> DataFrame:
     """DSIR's selection step: Gumbel top-k resampling over
     ``dsir_weights`` — equivalent to sampling ``k`` docs WITHOUT
@@ -445,8 +428,8 @@ def dsir_select(
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
-    w = dsir_weights(raw, target, n_buckets, ngram_ns, smoothing, salt)
-    u = _hash_uniform(F.col("doc_id"), gumbel_salt)
+    w = dsir_weights(raw, target, n_buckets)
+    u = _hash_uniform(F.col("doc_id"), "dsir-gumbel:")
     score = F.round(
         F.col("log_weight") * F.lit(_LN10) - F.log(-F.log(u)), 6
     )
@@ -462,7 +445,6 @@ def top_fraction_per_group(
     frac: float,
     score_col: str,
     group_col: str,
-    key_col: str = "doc_id",
 ) -> DataFrame:
     """Keep the top ``frac`` of rows per group by score — the
     PROPORTIONAL curation quota (``quota_sample`` keeps an absolute
@@ -470,7 +452,7 @@ def top_fraction_per_group(
     ones, while "best 30% of every source" scales with the source).
     Keeps ``ceil(frac * group_size)`` rows per group — every non-empty
     group retains at least one row — ranked by ``(score DESC,
-    key ASC)``; the unique-key tiebreak makes the cut boundary
+    doc_id ASC)``; the unique-key tiebreak makes the cut boundary
     deterministic (the pagerank_top20 convention), so re-runs and
     engines agree on the exact row SET. The cut count is
     ``ceil(frac * group_size)`` EVALUATED IN IEEE DOUBLE — a ``frac``
@@ -490,7 +472,7 @@ def top_fraction_per_group(
     ranked = df.withColumn(
         "__rk",
         F.row_number().over(
-            w.orderBy(F.desc(score_col), F.asc(key_col))
+            w.orderBy(F.desc(score_col), F.asc("doc_id"))
         ),
     ).withColumn("__gn", F.count(F.lit(1)).over(w))
     return ranked.filter(
@@ -523,7 +505,6 @@ def unimax_mix(
     total_budget: float,
     epoch_cap: float = 1.0,
     source_col: str = "source",
-    salt: str = "unimax:",
     return_alloc: bool = False,
 ) -> DataFrame:
     """UniMax mixture sampling (Chung et al. 2023): allocate a total
@@ -574,7 +555,7 @@ def unimax_mix(
     return (
         staged.join(F.broadcast(rates), source_col)
         .filter(
-            _hash_uniform(F.col("doc_id"), salt) * F.col("__T") < F.col("__b")
+            _hash_uniform(F.col("doc_id"), "unimax:") * F.col("__T") < F.col("__b")
         )
         .drop("__nt", "__T", "__b")
     )
@@ -583,26 +564,20 @@ def unimax_mix(
 def temperature_mix(
     docs: DataFrame,
     total_budget: float,
-    tau: float = 2.0,
-    source_col: str = "source",
-    salt: str = "temp:",
     return_alloc: bool = False,
 ) -> DataFrame:
     """Temperature-scaled mixture sampling — the multilingual-sampling
     baseline UniMax is measured against (and mT5/XLM-R's actual
-    recipe): source ``s`` gets budget ``B_s = N * T_s^(1/tau) /
-    sum_t T_t^(1/tau)``, flattening the source distribution as ``tau``
-    grows; docs survive the shared md5 coin against ``B_s`` (the
+    recipe) at temperature 2: source ``s`` gets budget ``B_s = N *
+    sqrt(T_s) / sum_t sqrt(T_t)``, flattening the source distribution;
+    docs survive the shared md5 coin against ``B_s`` (the
     subsample-only contract of ``unimax_mix``; budgets above ``T_s``
     keep the source whole).
 
-    Cross-engine exactness holds for the ``tau`` values whose power is
-    an exactly-specified IEEE op — ``tau=2`` (sqrt, correctly rounded
-    everywhere) and ``tau=1`` (identity; proportional mixing) — which
-    is why the oracle-gated registry query pins ``tau=2``. Other
-    ``tau`` go through libm ``pow``, whose final-bit rounding varies
-    across engines (the `_hash_uniform` hazard note); they work, but
-    land outside the hash gate. The weight sum folds over sources in
+    Cross-engine exactness holds because sqrt is an exactly-specified
+    IEEE op (correctly rounded everywhere); other temperatures would go
+    through libm ``pow``, whose final-bit rounding varies across
+    engines (the `_hash_uniform` hazard note). The weight sum folds over sources in
     ascending name order so the SQL oracle's ``list_sum(list(w ORDER
     BY source))`` replays the identical addition sequence.
 
@@ -613,20 +588,14 @@ def temperature_mix(
     spark = docs.sparkSession
     if total_budget <= 0:
         raise ValueError(f"total_budget ({total_budget}) must be positive")
-    if tau <= 0:
-        raise ValueError(f"tau ({tau}) must be positive")
     toks = F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != ""))
     staged = docs.withColumn("__nt", toks.cast("long"))
-    totals = _source_token_totals(staged, source_col)
+    totals = _source_token_totals(staged, "source")
 
     import math as _math
 
     def weight(t: int) -> float:
-        if tau == 2.0:
-            return _math.sqrt(float(t))
-        if tau == 1.0:
-            return float(t)
-        return float(t) ** (1.0 / tau)
+        return _math.sqrt(float(t))
 
     ordered = sorted(totals.items())
     sw = 0.0
@@ -642,15 +611,13 @@ def temperature_mix(
                 (s, int(t), round(b, 6), round(min(b / t, 1.0) if t else 0.0, 6))
                 for s, t, b in alloc
             ],
-            f"{source_col} string, n_tokens long, budget double, keep_rate double",
+            "source string, n_tokens long, budget double, keep_rate double",
         )
-    rates = spark.createDataFrame(
-        alloc, f"{source_col} string, __T double, __b double"
-    )
+    rates = spark.createDataFrame(alloc, "source string, __T double, __b double")
     return (
-        staged.join(F.broadcast(rates), source_col)
+        staged.join(F.broadcast(rates), "source")
         .filter(
-            _hash_uniform(F.col("doc_id"), salt) * F.col("__T") < F.col("__b")
+            _hash_uniform(F.col("doc_id"), "temp:") * F.col("__T") < F.col("__b")
         )
         .drop("__nt", "__T", "__b")
     )
@@ -729,7 +696,6 @@ def curriculum_order(
     docs: DataFrame,
     score_col: str,
     boundaries: list[float],
-    seed: str = "curriculum",
     n_buckets: int = 1024,
     descending: bool = True,
 ) -> DataFrame:
@@ -751,8 +717,8 @@ def curriculum_order(
     the composite bucket ``stage * n_buckets + coin_bucket`` — monotone
     in (stage, u), so per-bucket parallel windows + the broadcast
     bucket-counts prefix give the exact global rank with no global
-    sort. Within-stage order is the same independent md5 shuffle per
-    ``seed``.
+    sort. Within-stage order is the same independent md5 shuffle,
+    seeded ``curriculum``.
     """
     if n_buckets < 1:
         raise ValueError(f"n_buckets ({n_buckets}) must be >= 1")
@@ -771,7 +737,7 @@ def curriculum_order(
         F.when(F.col(score_col) >= F.lit(b), 1).otherwise(0) for b in bs
     )
     stage = (F.lit(n_stages - 1) - raw) if descending else raw
-    salt = f"{seed}:"
+    salt = "curriculum:"
     staged = docs.select(
         "doc_id",
         stage.cast("int").alias("stage"),
@@ -784,16 +750,10 @@ def curriculum_order(
     return _bucketed_rank(staged)
 
 
-def token_budget_mix(
-    docs: DataFrame,
-    budgets: "dict[str, int]",
-    score_col: str = "n_chars",
-    group_col: str = "source",
-    key_col: str = "doc_id",
-) -> DataFrame:
+def token_budget_mix(docs: DataFrame, budgets: "dict[str, int]") -> DataFrame:
     """Fill per-source TOKEN budgets greedily by score —
     ``(doc_id, source, n_tokens)``: within each source, docs are taken
-    in ``(score DESC, key ASC)`` order while the running token total
+    in ``(n_chars DESC, doc_id ASC)`` order while the running token total
     of the docs BEFORE them is still under the source's budget, so the
     straddling doc (the first one to cross the line) is included and
     every budgeted source lands within one doc of its target. This is
@@ -828,33 +788,28 @@ def token_budget_mix(
         *[x for s, b in sorted(budgets.items()) for x in (F.lit(s), F.lit(int(b)))]
     )
     w = (
-        Window.partitionBy(group_col)
-        .orderBy(F.desc(score_col), F.asc(key_col))
+        Window.partitionBy("source")
+        .orderBy(F.desc("n_chars"), F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     staged = docs.withColumn("__nt", toks).withColumn(
         "__cb", F.coalesce(F.sum("__nt").over(w), F.lit(0))
     )
     return (
-        staged.withColumn("__b", F.element_at(bmap, F.col(group_col)))
+        staged.withColumn("__b", F.element_at(bmap, F.col("source")))
         .filter(F.col("__b").isNotNull() & (F.col("__cb") < F.col("__b")))
         .select(
-            F.col(key_col),
-            F.col(group_col),
+            F.col("doc_id"),
+            F.col("source"),
             F.col("__nt").alias("n_tokens"),
         )
     )
 
 
-def calibrate_scores(
-    df: DataFrame,
-    score_col: str,
-    group_col: str = "source",
-    key_col: str = "doc_id",
-    n_buckets: int = 1024,
-) -> DataFrame:
-    """Cross-group score calibration: ``(key, group, score, calibrated)``
-    with ``calibrated`` = the score's percent-rank WITHIN its group
+def calibrate_scores(df: DataFrame, score_col: str, n_buckets: int = 1024) -> DataFrame:
+    """Cross-group score calibration: ``(doc_id, source, score,
+    calibrated)`` with ``calibrated`` = the score's percent-rank WITHIN
+    its ``source``
     (0 = group minimum, 1 = group maximum, ties share a rank) — the
     normalization a mixer needs before comparing quality-classifier
     scores across sources: each source's classifier has its own scale,
@@ -868,7 +823,7 @@ def calibrate_scores(
     percent_rank replays it bit-for-bit. NOTE the echoed ``score_col``
     column is likewise ROUND-6 NORMALIZED (it sits under the same
     cross-engine hash gate, and a raw double's last bits are not a
-    portable rendering) — join back on ``key_col`` if a downstream
+    portable rendering) — join back on ``doc_id`` if a downstream
     consumer needs the raw score bits, not on the score value
     (round-13 advisory: the silent mutation was undocumented).
 
@@ -892,8 +847,8 @@ def calibrate_scores(
         raise ValueError(f"n_buckets ({n_buckets}) must be >= 1")
     s = F.col(score_col).cast("double")
     staged = df.select(
-        F.col(key_col).alias("__k"),
-        F.col(group_col).alias("__g"),
+        F.col("doc_id").alias("__k"),
+        F.col("source").alias("__g"),
         s.alias("__s"),
     )
     bounds = staged.groupBy("__g").agg(
@@ -932,8 +887,8 @@ def calibrate_scores(
         ranked.join(F.broadcast(cprefix), ["__g", "__b"])
         .withColumn("__grank", F.col("__off") + F.col("__r"))
         .select(
-            F.col("__k").alias(key_col),
-            F.col("__g").alias(group_col),
+            F.col("__k").alias("doc_id"),
+            F.col("__g").alias("source"),
             F.round(F.col("__s"), 6).alias(score_col),
             F.when(
                 (F.col("__n") > 1) & (F.col("__hi") > F.col("__lo")),

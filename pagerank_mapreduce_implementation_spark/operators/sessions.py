@@ -26,31 +26,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def user_sessions(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Gap-based sessions per user:
+def user_sessions(events: DataFrame) -> DataFrame:
+    """Gap-based sessions per user (30-minute gap):
     ``(user_id, session_start, session_end, n_events, value_sum)``.
 
     ``session_end`` is last event + gap (Spark session_window
     semantics). ``value_sum`` goes through decimal(18,6) so the sum is
     order-independent and oracle-exact (same policy as events_hourly).
     """
-    w = F.session_window(F.col(ts_col), gap)
+    w = F.session_window(F.col("ts"), "30 minutes")
     return (
-        events.groupBy(F.col(user_col), w.alias("w"))
+        events.groupBy(F.col("user_id"), w.alias("w"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
-                F.sum(F.col(value_col).cast("decimal(18,6)")).cast("double"), 2
+                F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 2
             ).alias("value_sum"),
         )
         .select(
-            user_col,
+            "user_id",
             F.col("w.start").alias("session_start"),
             F.col("w.end").alias("session_end"),
             "n_events",
@@ -59,14 +53,7 @@ def user_sessions(
     )
 
 
-def event_funnel(
-    events,
-    steps: list[str],
-    within_hours: int = 24,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-):
+def event_funnel(events, steps: list[str], within_hours: int = 24):
     """FIRST-TOUCH funnel analysis: for each user, the funnel anchored
     at their EARLIEST ``steps[0]`` event — every later step must happen
     strictly after the previous one and inside ``within_hours`` of the
@@ -91,15 +78,15 @@ def event_funnel(
     if not steps:
         raise ValueError("steps must be non-empty")
     out = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(user_col)
-        .agg(F.min(ts_col).alias("t1"))
+        events.filter(F.col("event_type") == steps[0])
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t1"))
     )
     for i, step in enumerate(steps[1:], start=2):
         nxt = (
-            events.filter(F.col(type_col) == step)
-            .select(user_col, F.col(ts_col).alias("__ts"))
-            .join(out, user_col)
+            events.filter(F.col("event_type") == step)
+            .select("user_id", F.col("ts").alias("__ts"))
+            .join(out, "user_id")
             .filter(
                 (F.col("__ts") > F.col(f"t{i - 1}"))
                 & (
@@ -107,10 +94,10 @@ def event_funnel(
                     <= F.col("t1") + F.expr(f"INTERVAL {int(within_hours)} HOURS")
                 )
             )
-            .groupBy(user_col)
+            .groupBy("user_id")
             .agg(F.min("__ts").alias(f"t{i}"))
         )
-        out = out.join(nxt, user_col, "left")
+        out = out.join(nxt, "user_id", "left")
     reached = sum(
         [
             F.when(F.col(f"t{i}").isNotNull(), 1).otherwise(0)
@@ -119,7 +106,7 @@ def event_funnel(
         F.lit(0),
     )
     return out.select(
-        user_col,
+        "user_id",
         *[F.col(f"t{i}") for i in range(1, len(steps) + 1)],
         reached.cast("int").alias("reached"),
     )

@@ -189,14 +189,14 @@ def _vec_dims(emb: DataFrame) -> int | None:
     return None if first is None else first["d"]
 
 
-def hyperplane_sketch(emb: DataFrame, num_planes: int = 8) -> DataFrame:
-    """Full sign sketch against deterministic ±1 hyperplanes:
+def hyperplane_sketch(emb: DataFrame) -> DataFrame:
+    """Full sign sketch against 8 deterministic ±1 hyperplanes:
     ``(vec_id, sketch)`` with sketch bit p = (v·plane_p >= 0).
 
     This is the single-integer sketch (useful as a compact signature
     column); candidate generation for pair search goes through
     ``hyperplane_band_buckets`` instead — equality on the FULL sketch
-    is a single band of ``num_planes`` planes, whose recall collapses
+    is a single band of all the planes, whose recall collapses
     as planes grow.
     """
     dims = _vec_dims(emb)
@@ -205,7 +205,7 @@ def hyperplane_sketch(emb: DataFrame, num_planes: int = 8) -> DataFrame:
     sketch = sum(
         [
             F.when(_plane_dot(p, dims) >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-            for p in range(num_planes)
+            for p in range(8)
         ],
         F.lit(0),
     )
@@ -350,8 +350,6 @@ def cosine_matches_ab(
     emb_a: DataFrame,
     emb_b: DataFrame,
     threshold: float,
-    num_planes: int = 8,
-    bands: int = 2,
 ) -> DataFrame:
     """CROSS-corpus cosine matches: ``(id_a, id_b, cos)`` with cos >=
     threshold between two DIFFERENT embedding tables — the
@@ -363,14 +361,14 @@ def cosine_matches_ab(
     (md5-derived, no RNG state — the property that makes cross-table
     bucket keys comparable), so candidates are exactly the pairs that
     collide in some band; the exact cosine verifies survivors once per
-    distinct pair. Same (bands, planes) recall knobs as
-    cosine_pairs_lsh; no ``a < b`` ordering filter because the id
+    distinct pair, banded as ``hyperplane_band_buckets``' defaults (8
+    planes, 2 bands); no ``a < b`` ordering filter because the id
     spaces are unrelated.
     """
-    ba = hyperplane_band_buckets(emb_a, num_planes, bands).select(
+    ba = hyperplane_band_buckets(emb_a).select(
         F.col("vec_id").alias("id_a"), "band", "key"
     )
-    bb = hyperplane_band_buckets(emb_b, num_planes, bands).select(
+    bb = hyperplane_band_buckets(emb_b).select(
         F.col("vec_id").alias("id_b"), "band", "key"
     )
     cand = ba.join(bb, ["band", "key"]).select("id_a", "id_b").distinct()
@@ -735,7 +733,6 @@ def ivf_topk_batch(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVF ANN top-k for MANY stored query vectors in ONE pass over the
     index: ``(query_id, vec_id, cos)`` — the batch-serving shape
@@ -754,7 +751,7 @@ def ivf_topk_batch(
     """
     from pyspark.sql.window import Window
 
-    cents, assign = ivf_assign(emb, n_cells, centroids=centroids)
+    cents, assign = ivf_assign(emb, n_cells)
     qs = emb.filter(F.col("vec_id").isin(list(query_vec_ids))).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
@@ -1061,23 +1058,20 @@ def ivf_pq_topk(
     emb: DataFrame,
     query_vec_id: int,
     codebooks: list[list[list[float]]],
-    k: int = 10,
-    n_cells: int = 8,
-    n_probe: int = 3,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """IVFADC (Jegou et al. 2011, the FAISS `IVFx,PQy` serving path):
-    the IVF coarse quantizer prunes the scan to ``n_probe`` cells,
-    then candidates are scored by PQ asymmetric distance — codes and
-    a literal ``m x k`` table, never their floats. ``(vec_id, adist)``
-    ascending, ties to the lower id.
+    the IVF coarse quantizer (8 cells) prunes the scan to the 3
+    nearest cells, then candidates are scored by PQ asymmetric
+    distance — codes and a literal ``m x k`` table, never their
+    floats. The top 10 ``(vec_id, adist)`` ascending, ties to the lower
+    id.
 
     Scale shape: both prunings compose — the scan touches
-    ``n_probe/n_cells`` of the corpus (cell-partitioned at scale) and
+    3/8 of the corpus (cell-partitioned at scale) and
     reads ``m`` bytes per surviving candidate; plan = the ivf_topk
     probe (two broadcast dims, no corpus shuffle) + pq_topk's literal
     fold scoring + TakeOrderedAndProject."""
-    cents, assign = ivf_assign(emb, n_cells, centroids=centroids)
+    cents, assign = ivf_assign(emb, 8)
     q = emb.filter(F.col("vec_id") == query_vec_id).select(
         F.col("embedding").alias("qvec"), _norm(F.col("embedding")).alias("qnorm")
     )
@@ -1091,7 +1085,7 @@ def ivf_pq_topk(
             ).alias("qcos"),
         )
         .orderBy(F.desc("qcos"), F.asc("cell_id"))
-        .limit(n_probe)
+        .limit(3)
         .select("cell_id")
     )
     qrow = (
@@ -1124,7 +1118,7 @@ def ivf_pq_topk(
         .filter(F.col("vec_id") != query_vec_id)
         .select("vec_id", F.round(score, 6).alias("adist"))
         .orderBy(F.col("adist").asc(), F.col("vec_id").asc())
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -1134,7 +1128,6 @@ def ann_recall_report(
     k: int = 10,
     n_cells: int = 16,
     n_probe: int = 4,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Recall@k of the IVF index against the exact brute-force ground
     truth, per query — ``(query_id, n_truth, hits, recall)``: the ANN
@@ -1163,7 +1156,7 @@ def ann_recall_report(
         raise ValueError(f"k ({k}) must be >= 1")
     if not query_vec_ids:
         raise ValueError("query_vec_ids must be non-empty")
-    ann = ivf_topk_batch(emb, query_vec_ids, k, n_cells, n_probe, centroids)
+    ann = ivf_topk_batch(emb, query_vec_ids, k, n_cells, n_probe)
     qs = emb.filter(F.col("vec_id").isin(list(query_vec_ids))).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
@@ -1205,18 +1198,11 @@ def ann_recall_report(
     )
 
 
-def margin_matches_ab(
-    emb_a: DataFrame,
-    emb_b: DataFrame,
-    k: int = 4,
-    margin_threshold: float = 1.0,
-    num_planes: int = 8,
-    bands: int = 2,
-) -> DataFrame:
+def margin_matches_ab(emb_a: DataFrame, emb_b: DataFrame, k: int = 4) -> DataFrame:
     """Margin-criterion cross-corpus mining (Artetxe & Schwenk 2019,
     the CCMatrix/LASER bitext scorer): ``(id_a, id_b, cos, margin)``
     with ``margin = cos(x,y) / ((avg_kNN_cos(x) + avg_kNN_cos(y)) /
-    2)`` kept when ``>= margin_threshold`` — an absolute cosine cutoff
+    2)`` kept when ``>= 1`` — an absolute cosine cutoff
     can't separate "genuinely matched pair" from "x is close to
     EVERYTHING" (hubness), so the score is RELATIVE to each side's own
     neighborhood density; ratio margin > 1 means the pair stands out
@@ -1240,18 +1226,18 @@ def margin_matches_ab(
     ``cosine_matches_ab`` (never |A|x|B|); the two row_number windows
     partition by one vector's id over its HIT-SIZED candidate list;
     the denominator tables are id-keyed aggregates joined back on the
-    candidate set. Raise ``bands`` for recall, ``k`` for neighborhood
-    smoothing; both knobs are mirrored in the oracle. The result is an
+    candidate set. Raise ``k`` for neighborhood smoothing (mirrored in
+    the oracle). The result is an
     eager checkpoint; release it with ``util.release_result`` when done.
     """
     if k < 1:
         raise ValueError(f"k ({k}) must be >= 1")
     from pyspark.sql.window import Window
 
-    ba = hyperplane_band_buckets(emb_a, num_planes, bands).select(
+    ba = hyperplane_band_buckets(emb_a).select(
         F.col("vec_id").alias("id_a"), "band", "key"
     )
-    bb = hyperplane_band_buckets(emb_b, num_planes, bands).select(
+    bb = hyperplane_band_buckets(emb_b).select(
         F.col("vec_id").alias("id_b"), "band", "key"
     )
     cand = ba.join(bb, ["band", "key"]).select("id_a", "id_b").distinct()
@@ -1323,7 +1309,7 @@ def margin_matches_ab(
                     "margin"
                 ),
             )
-            .filter(F.col("margin") >= margin_threshold)
+            .filter(F.col("margin") >= 1.0)
         )
         return out.localCheckpoint(eager=True)
     finally:

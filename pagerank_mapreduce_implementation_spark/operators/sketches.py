@@ -41,8 +41,8 @@ def approx_uniques(
     )
 
 
-def _pctl(col: str, p: float, digits: int = 6) -> Column:
-    return F.round(F.percentile(F.col(col), F.lit(p)), digits)
+def _pctl(col: str, p: float) -> Column:
+    return F.round(F.percentile(F.col(col), F.lit(p)), 6)
 
 
 def approx_value_percentiles(
@@ -66,45 +66,36 @@ def approx_value_percentiles(
     return df.groupBy(group_col).agg(*aggs)
 
 
-def value_percentiles(
-    df: DataFrame,
-    group_col: str,
-    value_col: str,
-    percentiles: tuple[float, ...] = (0.5, 0.9, 0.99),
-) -> DataFrame:
+def value_percentiles(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """Exact interpolated percentiles of ``value_col`` per group —
-    ``(group_col, p50, p90, p99, ...)``. Exact percentile sorts the
+    ``(group_col, p50, p90, p99)``. Exact percentile sorts the
     per-group multiset (fine for bounded groups); swap ``F.percentile``
     for ``F.percentile_approx`` when group cardinality is unbounded."""
     aggs = [
-        _pctl(value_col, p).alias(f"p{int(p * 100)}") for p in percentiles
+        _pctl(value_col, p).alias(f"p{int(p * 100)}") for p in (0.5, 0.9, 0.99)
     ]
     return df.groupBy(group_col).agg(*aggs)
 
 
-def hll_daily_sketches(
-    df: DataFrame, ts_col: str, key_col: str, lg_k: int = 12
-) -> DataFrame:
+def hll_daily_sketches(df: DataFrame, ts_col: str, key_col: str) -> DataFrame:
     """Per-day REUSABLE HLL sketches: ``(d, sketch: binary)`` via
     Apache DataSketches (``hll_sketch_agg``). The point vs
     approx_uniques: the sketch itself is the stored artifact — at
     100 TB you materialize these per (day, dimension) cell once, then
     answer any coarser rollup by UNIONING sketches (hll_union_agg)
     without ever re-scanning the fact table. Relative error
-    ~1.04/sqrt(2^lg_k) (~1.6% at the default lg_k=12)."""
+    ~1.04/sqrt(2^lg_k) (~1.6% at lg_k=12)."""
     return df.groupBy(F.to_date(ts_col).alias("d")).agg(
-        F.hll_sketch_agg(key_col, F.lit(lg_k)).alias("sketch")
+        F.hll_sketch_agg(key_col, F.lit(12)).alias("sketch")
     )
 
 
-def hll_rollup_estimate(
-    sketches: DataFrame, sketch_col: str = "sketch"
-) -> DataFrame:
-    """Union a sketch column to ONE total-cardinality estimate:
+def hll_rollup_estimate(sketches: DataFrame) -> DataFrame:
+    """Union the ``sketch`` column to ONE total-cardinality estimate:
     ``(total_estimate,)`` — the merge-not-rescan half of the
     pre-aggregated sketch pattern."""
     return sketches.agg(
-        F.hll_sketch_estimate(F.hll_union_agg(F.col(sketch_col))).alias(
+        F.hll_sketch_estimate(F.hll_union_agg(F.col("sketch"))).alias(
             "total_estimate"
         )
     )
@@ -193,14 +184,18 @@ def count_min_estimates(
     )
 
 
-def _bloom_pos(item: Column, h: int, n_bits: int, salt: str) -> Column:
+# Bloom hash salt: a filter table and every probe of it must hash alike.
+BLOOM_SALT = "bloom:"
+
+
+def _bloom_pos(item: Column, h: int, n_bits: int) -> Column:
     """Bit position of hash function ``h`` for an item: the shared
     15-hex md5 -> 60-bit long construction (identical in DuckDB),
     namespaced per hash index so the k functions are independent."""
     return (
         F.conv(
             F.substring(
-                F.md5(F.concat(F.lit(f"{salt}{h}:"), item.cast("string"))),
+                F.md5(F.concat(F.lit(f"{BLOOM_SALT}{h}:"), item.cast("string"))),
                 1,
                 15,
             ),
@@ -216,7 +211,6 @@ def bloom_filter_table(
     item_col: str,
     n_bits: int = 1 << 16,
     n_hashes: int = 4,
-    salt: str = "bloom:",
 ) -> DataFrame:
     """Bloom filter over an item column as a sparse ``(word, bits)``
     table — at most ``n_bits/32`` rows of state TOTAL, independent of
@@ -255,7 +249,7 @@ def bloom_filter_table(
         F.explode(
             F.array(
                 *[
-                    _bloom_pos(F.col(item_col), h, n_bits, salt).alias("p")
+                    _bloom_pos(F.col(item_col), h, n_bits).alias("p")
                     for h in range(n_hashes)
                 ]
             )
@@ -280,14 +274,14 @@ def bloom_filter_probe(
     item_col: str,
     n_bits: int = 1 << 16,
     n_hashes: int = 4,
-    salt: str = "bloom:",
 ) -> DataFrame:
     """Membership probe of DISTINCT items against a
     ``bloom_filter_table``: ``(item, maybe_member)`` — ``false`` is
     definitive (no false negatives), ``true`` means "verify with the
-    exact path". ``n_bits``/``n_hashes``/``salt`` must match the build
-    (they define the hash family; a mismatch silently probes garbage,
-    so pass them from one shared config). The filter is broadcast
+    exact path". ``n_bits``/``n_hashes`` must match the build
+    (with ``BLOOM_SALT`` they define the hash family; a mismatch
+    silently probes garbage, so pass them from one shared config).
+    The filter is broadcast
     (<= ``n_bits/32`` rows — a 2^30-bit filter is 4 MB of words).
     Probe cost: ``n_hashes`` cells per item through one join + one
     all-bits-present groupBy."""
@@ -302,7 +296,7 @@ def bloom_filter_probe(
         F.explode(
             F.array(
                 *[
-                    _bloom_pos(F.col("item"), h, n_bits, salt).alias("p")
+                    _bloom_pos(F.col("item"), h, n_bits).alias("p")
                     for h in range(n_hashes)
                 ]
             )
@@ -334,7 +328,6 @@ def bloom_membership_rowwise(
     item_col: str,
     n_bits: int = 1 << 16,
     n_hashes: int = 4,
-    salt: str = "bloom:",
 ) -> DataFrame:
     """Per-ROW Bloom membership verdict — adds ``maybe_member`` to
     ``df`` with every input column preserved, via ``n_hashes``
@@ -344,8 +337,8 @@ def bloom_membership_rowwise(
     on an unbounded stream each micro-batch probes through plain
     stream-static broadcast joins with zero streaming state — the
     membership twin of ``streaming_minhash_probe``'s contract. Same
-    hash family as the build (``n_bits``/``n_hashes``/``salt`` must
-    match); no false negatives, ``maybe_member = false`` is
+    hash family as the build (``n_bits``/``n_hashes`` must match); no
+    false negatives, ``maybe_member = false`` is
     definitive."""
     if n_bits < 32 or n_bits % 32 != 0:
         raise ValueError(
@@ -358,7 +351,7 @@ def bloom_membership_rowwise(
     verdict = F.lit(True)
     for h in range(n_hashes):
         out = out.withColumn(
-            f"__bm_p{h}", _bloom_pos(F.col(item_col), h, n_bits, salt)
+            f"__bm_p{h}", _bloom_pos(F.col(item_col), h, n_bits)
         )
         out = out.withColumn(
             f"__bm_m{h}",

@@ -44,19 +44,17 @@ def salted_sum(
     value_col: str,
     salt_buckets: int = 16,
     agg: Callable[[Column], Column] = F.sum,
-    combine: Callable[[Column], Column] | None = None,
 ) -> DataFrame:
     """Two-phase skew-safe aggregation: ``agg(value) GROUP BY keys``.
 
     Phase 1 groups by (keys, salt) — the hot key spreads over
     ``salt_buckets`` reducers; phase 2 combines the per-salt partials
-    with ``combine``. For self-decomposable aggregates (sum, min, max)
-    the combiner IS the aggregate and may be left None; ``F.count``
-    partials combine by SUMMING (count-of-counts would return the
-    number of salt buckets), so count defaults to ``F.sum`` too.
+    with the combiner. For self-decomposable aggregates (sum, min, max)
+    the combiner IS the aggregate; ``F.count`` partials combine by
+    SUMMING (count-of-counts would return the number of salt buckets),
+    so count combines with ``F.sum``.
     """
-    if combine is None:
-        combine = F.sum if agg is F.count else agg
+    combine = F.sum if agg is F.count else agg
     salt = _row_salt(df, salt_buckets).alias("_salt")
     phase1 = (
         df.select(*df.columns, salt)
@@ -68,21 +66,15 @@ def salted_sum(
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-) -> DataFrame:
+def salted_join(big: DataFrame, small: DataFrame, key: str) -> DataFrame:
     """Inner join where ``big`` has hot values of ``key``: salt the big
     side, replicate the small side per salt value, join on (key, salt).
 
-    The replication factor is ``salt_buckets`` — size it to the skew,
-    not the cluster. Output columns = big's + small's (minus the
+    The replication factor is 8 salt buckets. Output columns = big's + small's (minus the
     duplicate key), like a plain ``join(small, key)``.
     """
-    salted_big = big.withColumn("_salt", _row_salt(big, salt_buckets))
-    salts = F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))).alias("_salt")
+    salted_big = big.withColumn("_salt", _row_salt(big, 8))
+    salts = F.explode(F.sequence(F.lit(0), F.lit(7))).alias("_salt")
     replicated = small.select("*", salts)
     out = salted_big.join(replicated, [key, "_salt"]).drop("_salt")
     return out

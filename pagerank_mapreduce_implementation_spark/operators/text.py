@@ -157,42 +157,32 @@ def search(tfidf_df: DataFrame, terms: list[str]) -> DataFrame:
     )
 
 
-def ranked(scored: DataFrame, k: int | None = None, score_col: str = "score") -> DataFrame:
+def ranked(scored: DataFrame) -> DataFrame:
     """O30: global descending score sort; deterministic ``doc_id`` tiebreak
     (the jar's Rank is only totally ordered with 1 reducer — Spark
-    range-partitions instead; with ``k`` this is TakeOrderedAndProject)."""
-    out = scored.orderBy(F.desc(score_col), F.asc("doc_id"))
-    if k is not None:
-        out = out.limit(k)
-    return out
+    range-partitions instead)."""
+    return scored.orderBy(F.desc("score"), F.asc("doc_id"))
 
 
 def search_ranked(
     docs: DataFrame,
     terms: list[str],
-    k: int | None = None,
     total_docs: int | None = None,
     **tok_kwargs,
 ) -> DataFrame:
     """O28 job-chain composition: TF → TF-IDF → search → rank as one
     lazy lineage (the jar materializes text files between each job;
     the engine materializes nothing)."""
-    return ranked(search(tf_idf(docs, total_docs, **tok_kwargs), terms), k)
+    return ranked(search(tf_idf(docs, total_docs, **tok_kwargs), terms))
 
 
-def bm25_search(
-    docs: DataFrame,
-    terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    total_docs: int | None = None,
-    **tok_kwargs,
-) -> DataFrame:
+def bm25_search(docs: DataFrame, terms: list[str], **tok_kwargs) -> DataFrame:
     """BM25 retrieval scoring (Robertson et al., Okapi at TREC-3) —
     what a real retrieval user reaches for where ``search`` reproduces
     the jar's plain tf-idf sum (Search$Map @89): raw-count term
-    frequency saturated by ``k1`` and normalized by document length
-    against the corpus mean (``b``), summed over matched query terms:
+    frequency saturated by ``k1 = 1.2`` and normalized by document
+    length against the corpus mean (``b = 0.75``), summed over matched
+    query terms, with ``N`` the corpus document count:
 
         score(d) = sum_t idf(t) * tf*(k1+1) / (tf + k1*(1-b+b*|d|/avgdl))
         idf(t)   = log10(1 + (N - df + 0.5)/(df + 0.5))   (Lucene form,
@@ -225,8 +215,7 @@ def bm25_search(
     oracle exactly, so the remaining cross-engine risk is log10/divide
     ulp only.
     """
-    if total_docs is None:
-        total_docs = docs.count()
+    total_docs = docs.count()
     tok_kwargs.setdefault("lowercase", True)
     # dedupe while preserving order: a repeated query term must not
     # double-count its part
@@ -254,12 +243,10 @@ def bm25_search(
         dfq = F.col(f"__df{i}")
         tf = F.col(f"__tf{i}")
         idf = F.log10(F.lit(1.0) + (n - dfq + F.lit(0.5)) / (dfq + F.lit(0.5)))
-        denom = tf + F.lit(k1) * (
-            F.lit(1.0) - F.lit(b) + F.lit(b) * F.col("dl") / F.col("__avgdl")
+        denom = tf + F.lit(1.2) * (
+            F.lit(1.0) - F.lit(0.75) + F.lit(0.75) * F.col("dl") / F.col("__avgdl")
         )
-        return F.when(
-            tf > 0, idf * (tf * F.lit(k1 + 1.0)) / denom
-        ).otherwise(F.lit(0.0))
+        return F.when(tf > 0, idf * (tf * F.lit(2.2)) / denom).otherwise(F.lit(0.0))
 
     score = part(0)
     for i in range(1, len(terms)):
@@ -639,12 +626,7 @@ def chunk_documents_bpe(
     return _window_token_arrays(staged, window, stride)
 
 
-def bpe_train(
-    docs: DataFrame,
-    num_merges: int = 16,
-    pattern: str = TOKEN_WS_RE,
-    lowercase: bool = False,
-) -> DataFrame:
+def bpe_train(docs: DataFrame, num_merges: int = 16) -> DataFrame:
     """Learn a BPE merge table from the corpus (Sennrich et al. 2016)
     → ``(rank, lhs, rhs, merged)``, one row per learned merge in
     order.
@@ -684,10 +666,8 @@ def bpe_train(
     if num_merges <= 0:
         raise ValueError(f"num_merges ({num_merges}) must be positive")
     spark = docs.sparkSession
-    word = F.explode(F.split(F.col("text"), pattern)).alias("word")
+    word = F.explode(F.split(F.col("text"), TOKEN_WS_RE)).alias("word")
     words = docs.select(word).filter(F.col("word") != "")
-    if lowercase:
-        words = words.select(F.lower("word").alias("word"))
     vocab = (
         words.groupBy("word")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -804,11 +784,7 @@ def bpe_train(
     )
 
 
-def build_inverted_index(
-    docs: DataFrame,
-    pattern: str = TOKEN_WS_RE,
-    shard_size: int | None = None,
-) -> DataFrame:
+def build_inverted_index(docs: DataFrame, shard_size: int | None = None) -> DataFrame:
     """Positional inverted index → ``(word, df, shard, postings)`` —
     the materialized artifact behind O29's search and bm25 (the
     reference greps a tf-idf text dump per query; a real IR stack
@@ -834,7 +810,7 @@ def build_inverted_index(
     ``shard_size=None`` keeps one shard per word (shard column 0)."""
     toks = docs.select(
         "doc_id",
-        F.posexplode(F.split(F.col("text"), pattern)).alias("pos", "word"),
+        F.posexplode(F.split(F.col("text"), TOKEN_WS_RE)).alias("pos", "word"),
     ).filter(F.col("word") != "")
     per_doc = toks.groupBy("word", "doc_id").agg(
         F.array_join(F.array_sort(F.collect_list("pos")), ",").alias("pl")
@@ -879,8 +855,6 @@ def tfidf_doc_pairs(
     docs: DataFrame,
     max_df: int = 64,
     threshold: float = 0.3,
-    total_docs: int | None = None,
-    round_digits: int = 6,
     **tok_kwargs,
 ) -> DataFrame:
     """Sparse-vector document similarity → ``(doc_a, doc_b, cosine)``
@@ -905,13 +879,13 @@ def tfidf_doc_pairs(
     are computed in IEEE double from identical inputs, then cast to
     ``decimal(18,6)`` so the SUMS are order-independent (the
     ``relational.dsum`` convention); only the final cosine divides as
-    double, rounded ``round_digits``.
+    double, rounded to 6 digits.
     """
     if max_df < 2:
         raise ValueError(f"max_df ({max_df}) must be >= 2 to form any pair")
     dec = "decimal(18,6)"
     kept = (
-        _tf_idf_with_df(docs, total_docs, **tok_kwargs)
+        _tf_idf_with_df(docs, **tok_kwargs)
         .filter(F.col("df") <= max_df)
         .select("doc_id", "word", "tfidf")
     )
@@ -941,18 +915,14 @@ def tfidf_doc_pairs(
             "doc_a",
             "doc_b",
             F.round(
-                F.col("dot") / (F.col("norm_a") * F.col("norm_b")), round_digits
+                F.col("dot") / (F.col("norm_a") * F.col("norm_b")), 6
             ).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
 
 
-def bpe_fertility(
-    docs: DataFrame,
-    group_col: str = "source",
-    round_digits: int = 6,
-) -> DataFrame:
+def bpe_fertility(docs: DataFrame) -> DataFrame:
     """Tokenizer fertility report per source → ``(source, n_docs,
     n_words, n_pieces, n_chars, fertility, chars_per_piece)``:
     ``fertility`` = BPE pieces per whitespace word — THE
@@ -962,7 +932,7 @@ def bpe_fertility(
     domain fragments into byte-crumbs and its EFFECTIVE token budget
     silently shrinks by that factor) — and ``chars_per_piece``, the
     compression read of the same story. Ratios of exact integer sums,
-    computed in IEEE double and rounded ``round_digits`` — cross-
+    computed in IEEE double and rounded to 6 digits — cross-
     engine exact.
 
     Scale shape: ONE Arrow-batched pass for per-doc piece counts (the
@@ -974,7 +944,7 @@ def bpe_fertility(
 
     words = F.size(F.filter(F.split(F.col("text"), TOKEN_WS_RE), lambda x: x != ""))
     staged = docs.select(
-        F.col(group_col).alias("source"),
+        "source",
         words.cast("long").alias("__w"),
         F.size(bpe_pieces_udf()(F.col("text"))).cast("long").alias("__p"),
         F.length("text").cast("long").alias("__c"),
@@ -998,14 +968,14 @@ def bpe_fertility(
                     F.col("n_words") > 0,
                     F.col("n_pieces").cast("double") / F.col("n_words"),
                 ).otherwise(F.lit(0.0)),
-                round_digits,
+                6,
             ).alias("fertility"),
             F.round(
                 F.when(
                     F.col("n_pieces") > 0,
                     F.col("n_chars").cast("double") / F.col("n_pieces"),
                 ).otherwise(F.lit(0.0)),
-                round_digits,
+                6,
             ).alias("chars_per_piece"),
         )
     )
@@ -1042,12 +1012,7 @@ def chunk_sentences(docs: DataFrame, window: int = 5, stride: int = 4) -> DataFr
     )
 
 
-def packing_report(
-    docs: DataFrame,
-    budget: int,
-    bucket_size: int = 4096,
-    tokenizer: str = "ws",
-) -> DataFrame:
+def packing_report(docs: DataFrame, budget: int) -> DataFrame:
     """The "should we pack at this sequence length" audit — ONE row
     comparing the two batching modes a trainer chooses between at a
     given token ``budget``:
@@ -1069,7 +1034,7 @@ def packing_report(
     map-side-partial aggregate: scan-bound at 100 TB.
     """
     b = int(budget)
-    layout = pack_sequences(docs, b, bucket_size, tokenizer)
+    layout = pack_sequences(docs, b)
     nz = F.col("n_tokens") > 0
     last_bin = F.expr(f"(global_start + n_tokens - 1) div {b}")
     segs = F.when(nz, last_bin - F.col("bin_id") + 1).otherwise(F.lit(0))

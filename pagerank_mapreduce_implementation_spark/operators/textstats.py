@@ -264,12 +264,12 @@ def repetition_ratio(
     )
 
 
-def top_ngram_stats(docs: DataFrame, ngram: int = 2) -> DataFrame:
+def top_ngram_stats(docs: DataFrame) -> DataFrame:
     """The Gopher-style TOP-n-gram coverage rule (repetition_ratio's
     sibling: that one scores how much of the doc repeats at all, this
     one scores how much ONE phrase dominates — boilerplate headers and
-    generated loops concentrate mass on a single n-gram): per doc, the
-    most frequent n-gram (duplicates kept, ties to the lexicographically
+    generated loops concentrate mass on a single bigram): per doc, the
+    most frequent word bigram (duplicates kept, ties to the lexicographically
     smallest gram) and the fraction of the doc's n-grams it accounts
     for: ``(doc_id, top_gram, top_cnt, n_ngrams, top_frac)``. Docs too
     short to form an n-gram emit no row.
@@ -281,10 +281,10 @@ def top_ngram_stats(docs: DataFrame, ngram: int = 2) -> DataFrame:
     """
     staged = docs.select("doc_id", _tokens().alias("_toks"))
     grams = F.when(
-        F.size("_toks") >= ngram,
+        F.size("_toks") >= 2,
         F.transform(
-            F.sequence(F.lit(1), F.size("_toks") - ngram + 1),
-            lambda i: F.array_join(F.slice("_toks", i, ngram), " "),
+            F.sequence(F.lit(1), F.size("_toks") - 2 + 1),
+            lambda i: F.array_join(F.slice("_toks", i, 2), " "),
         ),
     ).otherwise(F.array().cast("array<string>"))
     counts = (
@@ -1431,12 +1431,7 @@ def novelty_scores(docs: DataFrame, n: int = 5) -> DataFrame:
     )
 
 
-def perplexity_buckets(
-    docs: DataFrame,
-    n_buckets: int = 3,
-    group_col: str = "source",
-    add_k: float = 1.0,
-) -> DataFrame:
+def perplexity_buckets(docs: DataFrame, n_buckets: int = 3) -> DataFrame:
     """CCNet-style per-source perplexity bucketing → ``(doc_id,
     source, nll, bucket, bucket_name)``: every document is scored
     under the corpus-self-trained bigram LM (``bigram_lm_scores``) and
@@ -1463,8 +1458,8 @@ def perplexity_buckets(
 
     if n_buckets < 1:
         raise ValueError(f"n_buckets ({n_buckets}) must be >= 1")
-    scores = bigram_lm_scores(docs, add_k=add_k)
-    dims = docs.select("doc_id", F.col(group_col).alias("source"))
+    scores = bigram_lm_scores(docs)
+    dims = docs.select("doc_id", "source")
     scored = scores.join(dims, "doc_id").select("doc_id", "source", "nll")
     w = Window.partitionBy("source").orderBy(F.asc("nll"), F.asc("doc_id"))
     out = scored.select(
@@ -1553,12 +1548,11 @@ def trigram_lm_scores(docs: DataFrame, add_k: float = 1.0) -> DataFrame:
 
 def mad_outliers(
     docs: DataFrame,
-    score_col: str = "quality",
     group_col: str = "source",
     cutoff: float = 3.0,
     side: str = "both",
 ) -> DataFrame:
-    """Robust per-source outlier flags over a score column →
+    """Robust per-source outlier flags over the ``quality`` column →
     ``(doc_id, source, score, dev, is_outlier)``: ``dev`` =
     ``|score - median(source scores)|`` rounded 6, ``is_outlier`` =
     ``dev > cutoff * MAD`` where MAD is the median absolute deviation
@@ -1588,7 +1582,7 @@ def mad_outliers(
     scores = docs.select(
         "doc_id",
         F.col(group_col).alias("source"),
-        F.col(score_col).alias("score"),
+        F.col("quality").alias("score"),
     )
     med = scores.groupBy("source").agg(
         F.percentile("score", F.lit(0.5)).alias("__med")
@@ -1666,8 +1660,6 @@ def bigram_pmi(docs: DataFrame, min_count: int = 2) -> DataFrame:
 def normalize_text(
     docs: DataFrame,
     form: str = "NFC",
-    strip_controls: bool = True,
-    collapse_ws: bool = True,
     keep_cols: tuple = (),
 ) -> DataFrame:
     """Canonical text normalization — ``(doc_id, clean_text, changed)``
@@ -1681,10 +1673,10 @@ def normalize_text(
        has no built-in normalizer, so this is ONE Arrow-batched
        ``mapInPandas`` pass (the justified-Python case); pure-ASCII
        strings are NFC/NFD-invariant and skip the per-string call.
-    2. ``strip_controls``: drop C0 controls (except tab/newline/CR),
+    2. Drop C0 controls (except tab/newline/CR),
        DEL, and the zero-width set (ZWSP/ZWNJ/ZWJ/BOM) — a JVM-side
        ``regexp_replace``.
-    3. ``collapse_ws``: runs of non-newline whitespace fold to one
+    3. Runs of non-newline whitespace fold to one
        space, spaces around newlines drop, outer whitespace trims —
        three JVM-side replaces, newline structure preserved (the C4 /
        line-dedup ops key on lines).
@@ -1736,18 +1728,15 @@ def normalize_text(
         _normalize,
         f"doc_id {id_type}{keep_schema}, __t string, __n string",
     )
-    clean = F.col("__n")
-    if strip_controls:
-        clean = F.regexp_replace(
-            clean,
-            "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F"
-            "\\u200B\\u200C\\u200D\\uFEFF]",
-            "",
-        )
-    if collapse_ws:
-        clean = F.regexp_replace(clean, "[^\\S\\n]+", " ")
-        clean = F.regexp_replace(clean, " *\\n *", "\n")
-        clean = F.trim(clean)
+    clean = F.regexp_replace(
+        F.col("__n"),
+        "[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F\\x7F"
+        "\\u200B\\u200C\\u200D\\uFEFF]",
+        "",
+    )
+    clean = F.regexp_replace(clean, "[^\\S\\n]+", " ")
+    clean = F.regexp_replace(clean, " *\\n *", "\n")
+    clean = F.trim(clean)
     return out.select(
         "doc_id",
         *keep,

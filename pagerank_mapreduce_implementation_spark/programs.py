@@ -165,7 +165,6 @@ def run_pagerank(
     spark: SparkSession,
     input_path: str,
     output_path: str,
-    n_iters: int = 10,
     single_file: bool = False,
 ) -> DataFrame:
     """The reference's main pipeline, end to end (PageRank.java:53-327).
@@ -199,7 +198,7 @@ def run_pagerank(
         edges = graph.edges_from_pages(pages)
         ranks = graph.pagerank(
             edges,
-            n_iters=n_iters,
+            n_iters=10,
             mode="reference",
             vertices=pages.select("url"),
             seed_count=n_lines,
@@ -218,8 +217,6 @@ def tfidf_search_rank(
     input_path: str,
     output_path: str,
     terms: list[str],
-    k: int | None = None,
-    tokenizer_pattern: str = text.TOKEN_BOUNDARY_RE,
     single_file: bool = False,
 ) -> DataFrame:
     """The jar's document pipeline, end to end: ``TermFrequency`` ->
@@ -228,7 +225,7 @@ def tfidf_search_rank(
     One document per input FILE (the jar keys tokens by the input
     split's file name, DocWordCount$Map.class @59-98, and sets
     ``totalDocuments`` to the input file count, TFIDF.class run()
-    @37-55). The default tokenizer is the jar's exact ``\\s*\\b\\s*``
+    @37-55). The tokenizer is the jar's exact ``\\s*\\b\\s*``
     word-boundary split (WordCount$Map.class @11) — punctuation runs
     survive as tokens, unlike the engine's whitespace default.
 
@@ -247,11 +244,7 @@ def tfidf_search_rank(
     # IDF denominator, so the two must count identically.
     total_docs = len(lines.inputFiles())
     scored = text.search_ranked(
-        lines,
-        terms,
-        k=k,
-        total_docs=total_docs,
-        pattern=tokenizer_pattern,
+        lines, terms, total_docs=total_docs, pattern=text.TOKEN_BOUNDARY_RE
     )
     out = scored
     if single_file:
@@ -736,7 +729,6 @@ def _clean_corpus_body(
         )
         flagged = textstats.mad_outliers(
             scored,
-            score_col="quality",
             group_col=source_col,
             cutoff=mad_cutoff,
             side="low",
@@ -1060,15 +1052,10 @@ def dedup_media(
     output_path: str,
     modality: str = "image",
     max_hamming: int = 10,
-    min_shared: int = 2,
     min_run: int | None = None,
-    every_n: int = 1,
-    max_frame_df: int | None = None,
     hasher=None,
     demuxer=None,
-    cc_max_iters: int = 20,
     fingerprint_store: str | None = None,
-    chunks: int = 4,
 ) -> DataFrame:
     """Media-corpus near-dup removal end to end (the modality twin of
     ``clean_corpus``'s dedup stages, wiring round-8/9's operators into
@@ -1082,10 +1069,10 @@ def dedup_media(
     - ``modality="audio"``: the gain-invariant energy-delta
       fingerprint (same ``max_hamming`` knob; ``wav_fingerprint``
       default, injectable for compressed formats),
-    - ``modality="video"``: shared frame hashes (``min_shared``) or,
-      when ``min_run`` is set, contiguous shared runs (trimmed-copy
-      precision); both honor ``every_n``/``max_frame_df``, the knobs
-      a 100 TB run MUST set (see video_near_dups),
+    - ``modality="video"``: shared frame hashes (at least 2 per pair)
+      or, when ``min_run`` is set, contiguous shared runs
+      (trimmed-copy precision); every frame is hashed and no stop-frame
+      cap applies (see video_near_dups for the knobs a 100 TB run sets),
 
     then cluster the pair graph with large/small-star connected
     components and keep each cluster's LOWEST doc_id (the keep-first
@@ -1101,8 +1088,8 @@ def dedup_media(
     probed via the shared ``hamming_store_probe`` broadcast chunk
     index), ``(doc_id, frame_idx, fhash)`` for video (probed by
     shared-count, or by cross-batch RUNS when ``min_run`` is set —
-    positions persist, so run semantics survive the batch boundary;
-    store and probe must use the same ``every_n``). Cross-batch duplicates are dropped, then the batch
+    positions persist, so run semantics survive the batch boundary).
+    Cross-batch duplicates are dropped, then the batch
     survivors' fingerprints are APPENDED for batch N+1. First run
     against a missing store just seeds it. Doc ids must be globally
     unique across batches (the clean_corpus store contract).
@@ -1142,7 +1129,7 @@ def dedup_media(
     try:
         if modality == "video":
             fh = multimodal.video_frame_hashes(
-                docs, every_n, demuxer, hasher
+                docs, demuxer=demuxer, hasher=hasher
             ).persist()
             fh_kept = fh
             if store is not None:
@@ -1153,13 +1140,12 @@ def dedup_media(
                     F.col("doc_id").alias("store_id"), "frame_idx", "fhash"
                 ).distinct()
                 if min_run is not None:
-                    pos = F.floor(F.col("frame_idx") / every_n).cast("int")
                     hits = (
-                        fh.select("doc_id", pos.alias("ia"), "fhash")
+                        fh.select("doc_id", F.col("frame_idx").alias("ia"), "fhash")
                         .distinct()
                         .join(
                             s.select(
-                                "store_id", pos.alias("ib"), "fhash"
+                                "store_id", F.col("frame_idx").alias("ib"), "fhash"
                             ),
                             "fhash",
                         )
@@ -1179,7 +1165,7 @@ def dedup_media(
                         .join(s.select("store_id", "fhash").distinct(), "fhash")
                         .groupBy("doc_id", "store_id")
                         .agg(F.count(F.lit(1)).alias("__n"))
-                        .filter(F.col("__n") >= min_shared)
+                        .filter(F.col("__n") >= 2)
                         .select("doc_id")
                         .distinct()
                     )
@@ -1189,19 +1175,12 @@ def dedup_media(
                 pairs = multimodal.video_shared_runs(
                     None,
                     min_run=min_run,
-                    every_n=every_n,
-                    max_frame_df=max_frame_df,
                     materialize=False,
                     frame_hashes=fh_kept,
                 )
             else:
                 pairs = multimodal.video_near_dups(
-                    None,
-                    min_shared=min_shared,
-                    every_n=every_n,
-                    max_frame_df=max_frame_df,
-                    materialize=False,
-                    frame_hashes=fh_kept,
+                    None, materialize=False, frame_hashes=fh_kept
                 )
             fp = None
         else:
@@ -1216,22 +1195,19 @@ def dedup_media(
                 matched = hamming_store_probe(
                     fp,
                     store.select("doc_id", "phash").distinct(),
-                    "phash",
                     max_hamming,
-                    chunks,
                     multimodal.PHASH_BITS,
                 ).select("doc_id")
                 docs = docs.join(matched, "doc_id", "left_anti")
                 fp_kept = fp.join(matched, "doc_id", "left_anti")
             pairs = hamming_band_pairs(
-                fp_kept, "phash", max_hamming, chunks, multimodal.PHASH_BITS
+                fp_kept, "phash", max_hamming, multimodal.PHASH_BITS
             )
             fh = None
         comps = connected_components(
             pairs.select("doc_a", "doc_b"),
             "doc_a",
             "doc_b",
-            max_iters=cc_max_iters,
         )
         drop = comps.filter(F.col("vertex") != F.col("component")).select(
             F.col("vertex").alias("doc_id")
@@ -1259,8 +1235,6 @@ def build_training_shards(
     output_path: str,
     budget: int = 512,
     bins_per_shard: int = 64,
-    tokenizer: str = "ws",
-    with_doc_spans: bool = True,
     clean: dict | None = None,
     shuffle_seed: str | None = None,
 ) -> DataFrame:
@@ -1329,9 +1303,7 @@ def build_training_shards(
         docs = docs.join(pos, "doc_id").select(
             F.col("position").alias("doc_id"), "text"
         )
-    bins = text.pack_bins(
-        docs, budget=budget, tokenizer=tokenizer, with_doc_spans=with_doc_spans
-    )
+    bins = text.pack_bins(docs, budget=budget, with_doc_spans=True)
     sharded = bins.withColumn(
         "shard", F.expr(f"bin_id div {int(bins_per_shard)}").cast("int")
     )
@@ -1356,30 +1328,20 @@ def build_training_shards(
     return spark.read.parquet(manifest_path)
 
 
-def corpus_health(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    profile_columns: list[str] | None = None,
-    rules: dict[str, str] | None = None,
-    exact_profile: bool = False,
-    skew_key: str = "source",
-    skew_top_n: int = 20,
-) -> DataFrame:
+def corpus_health(spark: SparkSession, input_path: str, output_path: str) -> DataFrame:
     """The observability pass a pipeline runs on every corpus DROP,
     before anything downstream trusts it — one program bundling the
     profiling/expectation/skew tools over a single input:
 
     - ``<out>/profile.parquet`` — per-column rows/nulls/distinct/
-      min/max (``relational.profile_table``; ``exact_profile=False``
-      by default: HLL distinct counts, the 100 TB posture — flip it
-      for audit runs).
+      min/max (``relational.profile_table`` with HLL distinct counts,
+      the 100 TB posture).
     - ``<out>/expectations.parquet`` — named rule violations
-      (``relational.validate_table``). Defaults cover the documents
+      (``relational.validate_table``). The rules cover the documents
       contract when those columns exist: doc_id present, text
       non-empty, ``n_chars`` consistent with the text.
-    - ``<out>/skew.parquet`` — the ``skew_key`` heavy-key table
-      (``relational.key_skew_report``), the pre-join/groupBy read.
+    - ``<out>/skew.parquet`` — the ``source`` heavy-key table (top
+      20, ``relational.key_skew_report``), the pre-join/groupBy read.
     - ``<out>/length_hist.parquet`` — the ``n_chars`` distribution in
       100-char buckets (``relational.value_histogram``) when the
       column exists; NULL lengths get their own row.
@@ -1393,27 +1355,26 @@ def corpus_health(
     from pagerank_mapreduce_implementation_spark.operators import relational
 
     docs = spark.read.parquet(input_path)
-    if rules is None:
-        rules = {}
-        if "doc_id" in docs.columns:
-            rules["doc_id_present"] = "doc_id IS NOT NULL"
-        if "text" in docs.columns:
-            rules["text_nonempty"] = "length(text) > 0"
-        if "n_chars" in docs.columns and "text" in docs.columns:
-            rules["n_chars_consistent"] = "n_chars = length(text)"
-        if not rules:
-            raise ValueError(
-                "corpus_health: no default rules apply to this schema — "
-                "pass rules= explicitly"
-            )
-    relational.profile_table(
-        docs, profile_columns, exact=exact_profile
-    ).write.mode("overwrite").parquet(f"{output_path}/profile.parquet")
+    rules = {}
+    if "doc_id" in docs.columns:
+        rules["doc_id_present"] = "doc_id IS NOT NULL"
+    if "text" in docs.columns:
+        rules["text_nonempty"] = "length(text) > 0"
+    if "n_chars" in docs.columns and "text" in docs.columns:
+        rules["n_chars_consistent"] = "n_chars = length(text)"
+    if not rules:
+        raise ValueError(
+            "corpus_health: no default rules apply to this schema (it "
+            "has none of doc_id, text, n_chars)"
+        )
+    relational.profile_table(docs, exact=False).write.mode("overwrite").parquet(
+        f"{output_path}/profile.parquet"
+    )
     relational.validate_table(docs, rules).write.mode("overwrite").parquet(
         f"{output_path}/expectations.parquet"
     )
-    if skew_key in docs.columns:
-        relational.key_skew_report(docs, skew_key, top_n=skew_top_n).write.mode(
+    if "source" in docs.columns:
+        relational.key_skew_report(docs, "source").write.mode(
             "overwrite"
         ).parquet(f"{output_path}/skew.parquet")
     if "n_chars" in docs.columns:
@@ -1429,7 +1390,6 @@ def cluster_report(
     emb_path: str,
     output_path: str,
     n_cells: int = 8,
-    n_iters: int = 2,
     k_terms: int = 5,
     weighting: str = "count",
     exact: bool = False,
@@ -1465,7 +1425,7 @@ def cluster_report(
 
     docs = spark.read.parquet(docs_path)
     emb = spark.read.parquet(emb_path)
-    cents = lloyd_centroids(emb, n_cells, n_iters, exact_mean=True)
+    cents = lloyd_centroids(emb, n_cells, 2, exact_mean=True)
     _, assign = ivf_assign(emb, n_cells, centroids=cents)
     compact = emb_ops.group_compactness(
         assign.select(
@@ -1559,7 +1519,6 @@ def bucketed_revenue(
     orders_path: str,
     lineitem_path: str,
     table_prefix: str | None = None,
-    num_buckets: int = 16,
 ) -> DataFrame:
     """The co-located fact-to-fact join, end to end: bucket-materialize
     ``orders`` and ``lineitem`` on the join key (``write_bucketed`` —
@@ -1592,13 +1551,13 @@ def bucketed_revenue(
     )
     t_orders, t_lineitem = f"{prefix}_orders", f"{prefix}_lineitem"
     write_bucketed(
-        orders, t_orders, ["o_orderkey"], num_buckets, sort_cols=["o_orderkey"]
+        orders, t_orders, ["o_orderkey"], 16, sort_cols=["o_orderkey"]
     )
     write_bucketed(
         lineitem,
         t_lineitem,
         ["l_orderkey"],
-        num_buckets,
+        16,
         sort_cols=["l_orderkey"],
     )
     disc_price = F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))

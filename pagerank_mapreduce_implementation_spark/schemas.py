@@ -12,16 +12,6 @@ from pyspark.sql import types as T
 
 # --- engine-native logical types -------------------------------------------
 
-# Page { url, rank, outlinks } — the reference's core record
-# (PageRank.java:396-411 packs this into one string; we keep it structured).
-PAGE = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("rank", T.DoubleType(), False),
-        T.StructField("outlinks", T.ArrayType(T.StringType()), True),
-    ]
-)
-
 # Edge list — the engine's preferred graph encoding (one row per directed
 # edge, duplicates allowed: the reference emits one contribution per
 # outlink occurrence, PageRank.java:454-468).

@@ -85,12 +85,8 @@ def read_events_stream(
     return df
 
 
-def streaming_windowed_events(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Tumbling-window event counts/sums with late-data handling:
+def streaming_windowed_events(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event counts/sums with late-data handling:
     ``(window_start, window_end, event_type, cnt, value_sum)``.
 
     The watermark bounds aggregation state AND admits late rows up to
@@ -98,8 +94,8 @@ def streaming_windowed_events(
     batch events_hourly query.
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.round(F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 2).alias(
@@ -116,13 +112,9 @@ def streaming_windowed_events(
     )
 
 
-def streaming_sliding_events(
-    events: DataFrame,
-    size: str = "2 hours",
-    slide: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """SLIDING-window event counts/sums — the overlapping-window mode
+def streaming_sliding_events(events: DataFrame) -> DataFrame:
+    """SLIDING-window event counts/sums (2-hour windows every hour) —
+    the overlapping-window mode
     (every event lands in size/slide windows simultaneously), the
     rolling-rate view tumbling windows can't express:
     ``(window_start, window_end, event_type, cnt, value_sum)``.
@@ -134,8 +126,8 @@ def streaming_sliding_events(
     multiplies shuffle volume by exactly size/slide).
     """
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", size, slide).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "2 hours", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("cnt"),
             F.round(
@@ -204,15 +196,10 @@ def streaming_approx_uniques(
     )
 
 
-def streaming_cms_cells(
-    events: DataFrame,
-    item_col: str = "user_id",
-    depth: int = 4,
-    width: int = 256,
-) -> DataFrame:
-    """Count-min sketch cells over an unbounded stream — the streaming
-    twin of sketches.count_min_sketch_table: state is EXACTLY the
-    ``depth * width`` counter cells regardless of item cardinality
+def streaming_cms_cells(events: DataFrame) -> DataFrame:
+    """Count-min sketch cells of ``user_id`` over an unbounded stream —
+    the streaming twin of sketches.count_min_sketch_table: state is
+    EXACTLY the 4 x 256 counter cells regardless of item cardinality
     (a streaming exact per-item count would grow state with the
     universe forever; CMS is the bounded-state answer for streaming
     heavy-hitter / frequency monitoring). Counter updates are
@@ -229,10 +216,10 @@ def streaming_cms_cells(
                     F.struct(
                         F.lit(d).alias("d"),
                         _cms_bucket(
-                            F.col(item_col).cast("string"), d, width
+                            F.col("user_id").cast("string"), d, 256
                         ).alias("bucket"),
                     )
-                    for d in range(depth)
+                    for d in range(4)
                 ]
             )
         ).alias("c")
@@ -240,31 +227,27 @@ def streaming_cms_cells(
     return cells.groupBy("d", "bucket").agg(F.count(F.lit(1)).alias("cnt"))
 
 
-def streaming_bounded_dedup(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    horizon: str = "30 days",
-) -> DataFrame:
-    """First-seen emission per key with state BOUNDED to the dedup
-    horizon: ``dropDuplicatesWithinWatermark`` — the production form of
-    streaming_exact_dedup's unbounded ``dropDuplicates`` (whose
-    docstring points here). A duplicate arriving within ``horizon`` of
+def streaming_bounded_dedup(events: DataFrame) -> DataFrame:
+    """First-seen emission per ``user_id`` with state BOUNDED to the
+    30-day dedup horizon: ``dropDuplicatesWithinWatermark`` — the
+    production form of streaming_exact_dedup's unbounded
+    ``dropDuplicates`` (whose docstring points here). A duplicate
+    arriving within the horizon of
     the first sighting is dropped; state older than the watermark is
     evicted, so at 100 TB/day the store holds one row per key per
     horizon instead of forever.
 
     Emits the key alone: which physical duplicate is "first" is
-    arrival-order-dependent, the key set is not. With ``horizon``
-    exceeding the input's event-time span (as the driver query
-    chooses), no state can expire and the output is exactly DISTINCT
+    arrival-order-dependent, the key set is not. With the horizon
+    exceeding the input's event-time span (as in the registered
+    query's data), no state can expire and the output is exactly DISTINCT
     keys — what the batch oracle checks.
     """
     return (
-        events.select(F.col(key_col).alias("key"), F.col(ts_col))
-        .withWatermark(ts_col, horizon)
+        events.select(F.col("user_id").alias("key"), F.col("ts"))
+        .withWatermark("ts", "30 days")
         .dropDuplicatesWithinWatermark(["key"])
-        .select(F.col("key").alias(key_col))
+        .select(F.col("key").alias("user_id"))
     )
 
 
@@ -273,8 +256,6 @@ def streaming_minhash_probe(
     seen_sigs: DataFrame,
     threshold: float = 0.5,
     ngram: int = 5,
-    num_hashes: int = 16,
-    bands: int = 4,
 ) -> DataFrame:
     """Streaming cross-batch NEAR-dup detection: an unbounded document
     stream probed against a STATIC MinHash signature store — the
@@ -297,7 +278,8 @@ def streaming_minhash_probe(
 
     Emits ``(doc_id, dup_store_id)`` for stream docs whose equal-
     component estimate against some store signature clears
-    ``ceil(threshold * num_hashes)`` — ``dup_store_id`` is the smallest
+    ``ceil(threshold * NUM_HASHES)`` over 4 bands — ``dup_store_id``
+    is the smallest
     matching store doc. Within-stream duplicates are out of scope here
     (pair with streaming_exact_dedup / streaming_bounded_dedup);
     batch-vs-store semantics are bit-identical to the batch operator,
@@ -306,13 +288,14 @@ def streaming_minhash_probe(
     import math
 
     from pagerank_mapreduce_implementation_spark.operators.dedup import (
+        NUM_HASHES,
         band_buckets,
         rowwise_minhash_signatures,
     )
 
-    min_matches = math.ceil(num_hashes * threshold)
-    r = num_hashes // bands
-    sig = rowwise_minhash_signatures(docs, ngram, num_hashes)
+    min_matches = math.ceil(NUM_HASHES * threshold)
+    r = NUM_HASHES // 4
+    sig = rowwise_minhash_signatures(docs, ngram)
     band_structs = F.array(
         *[
             F.struct(
@@ -321,34 +304,34 @@ def streaming_minhash_probe(
                     ",", *[F.col(f"h{b * r + j}") for j in range(r)]
                 ).alias("bucket"),
             )
-            for b in range(bands)
+            for b in range(4)
         ]
     )
     bb = sig.select(
         "doc_id",
-        *[f"h{i}" for i in range(num_hashes)],
+        *[f"h{i}" for i in range(NUM_HASHES)],
         F.explode(band_structs).alias("bb"),
     ).select(
         "doc_id",
-        *[f"h{i}" for i in range(num_hashes)],
+        *[f"h{i}" for i in range(NUM_HASHES)],
         F.col("bb.band").alias("band"),
         F.col("bb.bucket").alias("bucket"),
     )
     store_bands = F.broadcast(
-        band_buckets(seen_sigs, num_hashes, bands).select(
+        band_buckets(seen_sigs).select(
             F.col("doc_id").alias("store_id"), "band", "bucket"
         )
     )
     store_sigs = F.broadcast(
         seen_sigs.select(
             F.col("doc_id").alias("store_id"),
-            *[F.col(f"h{i}").alias(f"s{i}") for i in range(num_hashes)],
+            *[F.col(f"h{i}").alias(f"s{i}") for i in range(NUM_HASHES)],
         )
     )
     n_eq = sum(
         [
             F.when(F.col(f"h{i}") == F.col(f"s{i}"), 1).otherwise(0)
-            for i in range(num_hashes)
+            for i in range(NUM_HASHES)
         ],
         F.lit(0),
     )
@@ -374,30 +357,21 @@ def streaming_search(
     )
 
 
-def streaming_user_sessions(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_user_sessions(events: DataFrame) -> DataFrame:
     """Streaming sessionization: the SAME session_window expression as
     the batch operators/sessions.py:user_sessions, over an unbounded
-    source. The watermark closes sessions whose last event is older
+    source. The 2-hour watermark closes sessions whose last event is older
     than the watermark, bounding state (late events past it are
     dropped)."""
     from pagerank_mapreduce_implementation_spark.operators.sessions import user_sessions
 
-    return user_sessions(events.withWatermark("ts", watermark), gap=gap)
+    return user_sessions(events.withWatermark("ts", "2 hours"))
 
 
-def streaming_click_attribution(
-    purchases: DataFrame,
-    clicks: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_click_attribution(purchases: DataFrame, clicks: DataFrame) -> DataFrame:
     """Watermarked STREAM-STREAM interval join: each purchase event
-    joined to the same user's click events in the preceding ``window``
-    (inner join, append mode).
+    joined to the same user's click events in the preceding hour
+    (inner join, append mode, 2-hour watermarks).
 
     Both sides carry event-time watermarks and the join condition
     bounds click time relative to purchase time — together these let
@@ -410,13 +384,13 @@ def streaming_click_attribution(
     At 100 TB/day the state store holds only ~window+watermark of both
     streams, hash-partitioned by user_id — one shuffle per side.
     """
-    p = purchases.withWatermark("ts", watermark)
-    c = clicks.withWatermark("click_ts", watermark)
+    p = purchases.withWatermark("ts", "2 hours")
+    c = clicks.withWatermark("click_ts", "2 hours")
     return p.join(
         c,
         F.expr(
             "user_id = click_user_id "
-            f"AND click_ts >= ts - INTERVAL {window} "
+            "AND click_ts >= ts - INTERVAL 1 hour "
             "AND click_ts < ts"
         ),
         "inner",
@@ -526,8 +500,6 @@ def run_to_memory(
 def streaming_phash_probe(
     blobs: DataFrame,
     seen_fp: DataFrame,
-    max_hamming: int = 10,
-    chunks: int = 4,
     hasher=None,
 ) -> DataFrame:
     """Streaming IMAGE near-dup probe: an unbounded blob stream checked
@@ -545,7 +517,8 @@ def streaming_phash_probe(
     store doc and the closest distance. The final per-doc aggregation
     is the ONLY stateful operator, bounded by the number of MATCHED
     stream docs, exactly the minhash probe's contract. Recall is the
-    batch operator's (chunks-1 Hamming guaranteed, banded above), so
+    batch operator's (``HAMMING_CHUNKS - 1`` Hamming guaranteed,
+    banded above; matches within 10 bits), so
     the batch composition is the oracle.
     """
     from pagerank_mapreduce_implementation_spark.operators.dedup import (
@@ -557,22 +530,15 @@ def streaming_phash_probe(
     )
 
     return hamming_store_probe(
-        phash_images(blobs, hasher),
-        seen_fp,
-        "phash",
-        max_hamming,
-        chunks,
-        PHASH_BITS,
+        phash_images(blobs, hasher), seen_fp, bits=PHASH_BITS
     )
 
 
 def streaming_bloom_probe(
     items: DataFrame,
     filter_df: DataFrame,
-    item_col: str = "item",
     n_bits: int = 1 << 16,
     n_hashes: int = 4,
-    salt: str = "bloom:",
 ) -> DataFrame:
     """Streaming Bloom MEMBERSHIP probe: an unbounded item stream
     checked per-row against a static ``bloom_filter_table`` — the
@@ -587,22 +553,16 @@ def streaming_bloom_probe(
         bloom_membership_rowwise,
     )
 
-    return bloom_membership_rowwise(
-        items, filter_df, item_col, n_bits, n_hashes, salt
-    )
+    return bloom_membership_rowwise(items, filter_df, "item", n_bits, n_hashes)
 
 
-def streaming_changelog_compact(
-    events: DataFrame,
-    key_col: str = "user_id",
-    seq_cols: tuple[str, str] = ("ts", "event_id"),
-    delete_type: str = "error",
-) -> DataFrame:
+def streaming_changelog_compact(events: DataFrame) -> DataFrame:
     """Streaming latest-wins changelog compaction: the live snapshot
     of per-key state over an unbounded change stream — the streaming
     twin of ``operators.changelog.compact_changelog``, same winner
-    rule (max lexicographic ``seq_cols`` struct) and same tombstone
-    semantics (a key whose CURRENT winner is a ``delete_type`` row is
+    rule per ``user_id`` (max lexicographic ``(ts, event_id)`` struct)
+    and same tombstone semantics (a key whose CURRENT winner is an
+    ``event_type = 'error'`` row is
     absent from the emitted snapshot, and REAPPEARS if a later upsert
     overtakes the tombstone — state keeps the tombstone winner, the
     post-aggregation filter hides it).
@@ -614,19 +574,19 @@ def streaming_changelog_compact(
     exactly how the driver oracle gates it (stream/batch parity: one
     shared SQL oracle with the batch twin).
     """
-    payload = [c for c in events.columns if c != key_col]
-    win = events.groupBy(key_col).agg(
+    payload = [c for c in events.columns if c != "user_id"]
+    win = events.groupBy("user_id").agg(
         F.max_by(
             F.struct(*[F.col(c) for c in payload]),
-            F.struct(*[F.col(c) for c in seq_cols]),
+            F.struct(*[F.col(c) for c in ("ts", "event_id")]),
         ).alias("__w")
     )
     return win.select(
         *[
-            F.col(c) if c == key_col else F.col(f"__w.{c}").alias(c)
+            F.col(c) if c == "user_id" else F.col(f"__w.{c}").alias(c)
             for c in events.columns
         ]
-    ).filter(F.col("event_type") != delete_type)
+    ).filter(F.col("event_type") != "error")
 
 
 def streaming_lm_probe(doc_stream: DataFrame, scored_bigrams: DataFrame) -> DataFrame:
@@ -657,12 +617,7 @@ def streaming_lm_probe(doc_stream: DataFrame, scored_bigrams: DataFrame) -> Data
     return _score_bigram_docs(bi, scored_bigrams)
 
 
-def streaming_rule_violations(
-    events: DataFrame,
-    rules: dict[str, str],
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def streaming_rule_violations(events: DataFrame, rules: dict[str, str]) -> DataFrame:
     """Per-window expectation monitoring — the streaming twin of
     ``relational.validate_table``: for each tumbling event-time window
     and each named boolean rule, ``(window_start, window_end, rule,
@@ -686,8 +641,8 @@ def streaming_rule_violations(
             F.sum(F.when(F.expr(rules[name]), 0).otherwise(1)).alias(f"__v{i}")
         )
     agged = (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(*aggs)
     )
     rows = F.array(
@@ -717,12 +672,11 @@ def streaming_rule_violations(
 
 def streaming_value_histogram(
     events: DataFrame,
-    value_col: str = "value",
     bucket_width: float = 100.0,
 ) -> DataFrame:
     """Live value distribution — the streaming twin of
     ``relational.value_histogram``: running ``(bucket_start, n)``
-    counts of ``value_col`` in fixed-width buckets, NULLs as their own
+    counts of ``value`` in fixed-width buckets, NULLs as their own
     bucket row. The ingest-monitoring shape read (is today's value
     distribution the same one yesterday's batch profile recorded?)
     that pairs with ``streaming_rule_violations``' pass/fail view.
@@ -738,11 +692,11 @@ def streaming_value_histogram(
     w = float(bucket_width)
     if w == int(w):
         bucket = (
-            F.floor(F.col(value_col).cast("decimal(38,6)") / F.lit(int(w)))
+            F.floor(F.col("value").cast("decimal(38,6)") / F.lit(int(w)))
             * F.lit(int(w))
         ).cast("double")
     else:
-        bucket = F.floor(F.col(value_col).cast("double") / F.lit(w)) * F.lit(w)
+        bucket = F.floor(F.col("value").cast("double") / F.lit(w)) * F.lit(w)
     return (
         events.select(bucket.alias("bucket_start"))
         .groupBy("bucket_start")

@@ -5,7 +5,7 @@ Usage:
         [--reps N] [--plans-dir DIR]
 
 No QUERY means every registered one. Each query is warmed once on the
-``sf0.001`` tables beside ``--sf-dir``, then ``--reps`` passes run them
+``--sf-dir`` tables it is timed on, then ``--reps`` passes run them
 in turn into the noop sink with ``bench.py``'s hygiene: persisted
 blocks, checkpoints and memory-sink views are released after each run,
 and a query that fails is recorded as null. The session is ``get_spark``
@@ -86,10 +86,9 @@ def release(spark, util) -> None:
 def timed_runs(spark, util, queries: dict, args) -> list[tuple[str, float | None]]:
     """Warm every query, then run ``args.reps`` passes over them; returns
     ``(query, wall seconds or None)`` per run, in span order."""
-    warm_dir = str(Path(args.sf_dir).with_name("sf0.001"))
     for name, fn in queries.items():
         try:
-            fn(spark, warm_dir).write.mode("overwrite").format("noop").save()
+            fn(spark, args.sf_dir).write.mode("overwrite").format("noop").save()
         except Exception as exc:
             print(f"warmup {name} failed: {exc!r}", file=sys.stderr)
         release(spark, util)

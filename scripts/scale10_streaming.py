@@ -248,7 +248,7 @@ def main() -> None:
         # per-copy-disjoint keys
         r = run_stream(
             spark,
-            sq.streaming_bounded_dedup(src("long10x_dkeys"), horizon="30 days"),
+            sq.streaming_bounded_dedup(src("long10x_dkeys")),
             "dedup_bounded",
             "append",
         )

@@ -92,7 +92,7 @@ def test_error_and_empty_paths(spark):
     assert dedup.simhash_near_dups(empty).count() == 0
     # bands that don't divide num_hashes would silently drop rows
     with pytest.raises(ValueError, match="evenly divide"):
-        dedup.minhash_near_dups(empty, 0.5, num_hashes=16, bands=3)
+        dedup.minhash_near_dups(empty, 0.5, bands=3)
 
 
 def test_pagerank_error_and_empty_paths(spark):
@@ -331,7 +331,7 @@ def test_rowwise_signatures_equal_shuffle_path(spark):
         )
         rowwise = sorted(
             map(tuple, dedup.rowwise_minhash_signatures(
-                docs, ngram, 16
+                docs, ngram
             ).collect())
         )
         assert rowwise == shuffle, f"ngram={ngram}"
@@ -495,11 +495,11 @@ def test_ks_drift_leaves_no_pinned_cache(spark):
 
 def test_incremental_minhash_band_validation_divisibility(spark, planted):
     """Round-8 advice: when bands does not divide num_hashes, the
-    validate_bands path must raise band_buckets' clear divisibility
+    band validation path must raise band_buckets' clear divisibility
     error up front — not build a truncated expected set and report a
     misleading 'mismatched index'."""
     sigs = dedup.minhash_signatures(dedup.shingles(planted, 3))
-    some_bands = dedup.band_buckets(sigs, num_hashes=16, bands=4)
+    some_bands = dedup.band_buckets(sigs, bands=4)
     with pytest.raises(ValueError, match="evenly divide"):
         dedup.incremental_minhash_dedup(
             planted, sigs, ngram=3, bands=3, seen_bands=some_bands
@@ -511,13 +511,13 @@ def test_incremental_minhash_rejects_mismatched_band_index(spark, planted):
     banding parameters never matches the probe's bucket strings — every
     store candidate silently vanishes. The probe must refuse it."""
     sigs = dedup.minhash_signatures(dedup.shingles(planted, 3))
-    wrong_bands = dedup.band_buckets(sigs, num_hashes=16, bands=2)
+    wrong_bands = dedup.band_buckets(sigs, bands=2)
     with pytest.raises(ValueError, match="band_buckets index"):
         dedup.incremental_minhash_dedup(
             planted, sigs, ngram=3, bands=4, seen_bands=wrong_bands
         )
     # the matching index is accepted and probes identically to on-the-fly
-    right_bands = dedup.band_buckets(sigs, num_hashes=16, bands=4)
+    right_bands = dedup.band_buckets(sigs, bands=4)
     from pagerank_mapreduce_implementation_spark.util import release_result
 
     with_idx = dedup.incremental_minhash_dedup(

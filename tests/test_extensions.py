@@ -49,7 +49,7 @@ def test_banded_lsh_band_keys_reslice_full_sketch(spark):
     """Band keys are exactly the full sketch's bit slices: band b key ==
     (sketch >> b*r) & (2^r - 1) — tuning bands re-slices, never re-hashes."""
     emb = _rand_embeddings(spark)
-    sk = {r["vec_id"]: r["sketch"] for r in similarity.hyperplane_sketch(emb, 8).collect()}
+    sk = {r["vec_id"]: r["sketch"] for r in similarity.hyperplane_sketch(emb).collect()}
     bks = similarity.hyperplane_band_buckets(emb, num_planes=8, bands=2).collect()
     assert len(bks) == 2 * len(sk)
     for r in bks:

@@ -129,7 +129,6 @@ def test_interval_agg_join_counts_window(spark):
             left,
             right,
             on="k",
-            window_seconds=3600.0,
             aggs=[
                 F.count(F.col("ts_r")).alias("n"),
                 F.sum("v_r").alias("vs"),

@@ -499,11 +499,11 @@ def test_hamming_store_probe_empty_store_and_no_match(spark):
         [(1, 0b1111), (2, 0b1111 << 30)], "doc_id long, phash long"
     )
     empty = spark.createDataFrame([], "doc_id long, phash long")
-    assert dedup.hamming_store_probe(fp, empty, "phash", 10).count() == 0
+    assert dedup.hamming_store_probe(fp, empty, 10).count() == 0
     far = spark.createDataFrame(
         [(9, (1 << 60) - 1 - 0b1111)], "doc_id long, phash long"
     )
-    assert dedup.hamming_store_probe(fp, far, "phash", 2).count() == 0
+    assert dedup.hamming_store_probe(fp, far, 2).count() == 0
 
 
 def test_wav_spectral_fingerprint_invariances():

@@ -522,7 +522,7 @@ def test_phash_images_one_arrow_pass_no_shuffle(spark):
     # the band join over the fingerprints (the body phash_near_dups
     # checkpoints): equi-join on (chunk, key), never the all-pairs product
     p2 = plan_of(
-        dedup.hamming_band_pairs(mm.phash_images(blobs), "phash", 10, 4, mm.PHASH_BITS)
+        dedup.hamming_band_pairs(mm.phash_images(blobs), "phash", 10, mm.PHASH_BITS)
     )
     assert "CartesianProduct" not in p2 and "BroadcastNestedLoopJoin" not in p2
 
@@ -564,7 +564,7 @@ def test_hamming_store_probe_broadcasts_store_chunk_index(spark):
     store = spark.createDataFrame(
         [(100 + i, i * 37) for i in range(20)], "doc_id long, phash long"
     )
-    p = plan_of(dedup.hamming_store_probe(fp, store, "phash", 10))
+    p = plan_of(dedup.hamming_store_probe(fp, store, 10))
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p and "CartesianProduct" not in p
 
@@ -1084,3 +1084,206 @@ def test_operators_read_schema_column_names():
                 if arg.arg in names and (fn, arg.arg) not in COLUMN_PARAMS_IN_USE:
                     found.append(f"{path.relative_to(root)}:{node.lineno} {fn}({arg.arg})")
     assert not found, found
+
+
+#: parameters with a default that no caller sets to another value, kept
+#: on purpose: a recovery path, the documented codec injection points,
+#: a wait bound, and deployment / file-format settings of the I/O layer
+ONE_VALUE_PARAMS_KEPT = {
+    ("label_propagation", "reliable_dir"),
+    ("bfs_distances", "reliable_dir"),
+    ("kcore", "reliable_dir"),
+    ("sssp_weighted", "reliable_dir"),
+    ("video_frame_hashes", "demuxer"),
+    ("video_shared_runs", "demuxer"),
+    ("video_near_dups", "demuxer"),
+    ("dedup_media", "demuxer"),
+    ("video_shared_runs", "hasher"),
+    ("video_near_dups", "hasher"),
+    ("streaming_phash_probe", "hasher"),
+    ("run_to_memory", "timeout_s"),
+    ("get_spark", "master"),
+    ("load_merge_ranks", "path"),
+    ("write_clustered_parquet", "partition_by"),
+    ("write_zorder_parquet", "partition_by"),
+    ("read_csv", "header"),
+    ("write_csv", "header"),
+}
+
+
+def _one_value_params(repo):
+    """Package parameters (``oracles.py`` aside) whose every call site
+    in the package, ``__spark_entry__.py``, ``bench.py``, ``scripts/``,
+    ``perfbench/`` and ``tests/`` passes the default, leaves it out, or
+    forwards a parameter of the calling function that is itself only
+    ever its default. Calls resolve by name (``f(...)`` to a def of the
+    same file first, ``x.f(...)`` to every package ``f``); a call that
+    splats an unknown ``*args``/``**kwargs`` counts as a second value
+    for every parameter it might reach, and keywords a function
+    ``setdefault``s on its ``**kwargs`` reach the callees it forwards
+    them to."""
+    import ast
+
+    pkg = repo / "pagerank_mapreduce_implementation_spark"
+    pkg_files = [p for p in sorted(pkg.rglob("*.py")) if p.name != "oracles.py"]
+    files = pkg_files + [repo / "__spark_entry__.py", repo / "bench.py"]
+    for d in ("scripts", "perfbench", "tests"):
+        files += sorted((repo / d).rglob("*.py"))
+    trees = {p: ast.parse(p.read_text()) for p in files}
+    parent = {c: n for t in trees.values() for n in ast.walk(t) for c in ast.iter_child_nodes(n)}
+    fn_types = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+    def value(expr):
+        try:
+            return repr(ast.literal_eval(expr))
+        except ValueError:
+            return ast.dump(expr)
+
+    defs, by_name = {}, {}
+    for p in pkg_files:
+        for node in ast.walk(trees[p]):
+            if isinstance(node, fn_types):
+                a = node.args
+                pos = [x.arg for x in a.posonlyargs + a.args]
+                if isinstance(parent.get(node), ast.ClassDef) and pos[:1] in (["self"], ["cls"]):
+                    pos = pos[1:]
+                dflt = dict(zip(pos[len(pos) - len(a.defaults):], a.defaults))
+                dflt.update((x.arg, d) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d)
+                defs[node] = dict(path=p, name=node.name, pos=pos, defaults=dflt,
+                                  names=set(pos) | {x.arg for x in a.kwonlyargs},
+                                  kwarg=a.kwarg.arg if a.kwarg else None)
+                by_name.setdefault(node.name, []).append(node)
+                if node.name == "__init__" and isinstance(parent[node], ast.ClassDef):
+                    by_name.setdefault(parent[node].name, []).append(node)
+    local = {p: {n.name for n in ast.walk(t) if isinstance(n, (*fn_types, ast.ClassDef))}
+             for p, t in trees.items()}
+    values = {(d, prm): set() for d, info in defs.items() for prm in info["names"]}
+    forwards = {}  # (callee, param) -> {(caller, param)}
+    extra_kw = {d: [] for d in defs}  # keywords that land in a def's **kwargs
+    kw_forwards = []  # (callee, caller): the caller splats its **kwargs
+
+    def enclosing(node):
+        node = parent.get(node)
+        while node is not None and not isinstance(node, (*fn_types, ast.Lambda)):
+            node = parent.get(node)
+        return node
+
+    def forwarded(arg, caller):
+        """``(caller, name)`` if ``arg`` is an unreassigned parameter."""
+        if not (isinstance(arg, ast.Name) and caller in defs and arg.id in defs[caller]["names"]):
+            return None
+        stores = (n for n in ast.walk(caller) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store))
+        return None if any(n.id == arg.id for n in stores) else (caller, arg.id)
+
+    def bind(callee, prm, arg, caller):
+        src = forwarded(arg, caller)
+        if src is not None:
+            forwards.setdefault((callee, prm), set()).add(src)
+        else:
+            values[(callee, prm)].add(value(arg))
+
+    for d, info in defs.items():  # kwargs.setdefault("k", v) / kwargs["k"] = v
+        for n in ast.walk(d):
+            if (isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "setdefault" and isinstance(n.func.value, ast.Name)
+                    and n.func.value.id == info["kwarg"] and len(n.args) == 2
+                    and isinstance(n.args[0], ast.Constant)):
+                extra_kw[d].append((n.args[0].value, n.args[1], d))
+            if (isinstance(n, ast.Assign) and isinstance(n.targets[0], ast.Subscript)
+                    and isinstance(n.targets[0].value, ast.Name)
+                    and n.targets[0].value.id == info["kwarg"]
+                    and isinstance(n.targets[0].slice, ast.Constant)):
+                extra_kw[d].append((n.targets[0].slice.value, n.value, d))
+
+    for p, tree in trees.items():
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            callees = by_name.get(name, [])
+            if isinstance(f, ast.Name):
+                same_file = [c for c in callees if defs[c]["path"] == p]
+                callees = same_file or ([] if name in local[p] else callees)
+            caller = enclosing(call)
+            for callee in callees:
+                info = defs[callee]
+                bound = {}
+                for i, arg in enumerate(call.args):
+                    if isinstance(arg, ast.Starred):
+                        bound.update({prm: None for prm in info["pos"][i:]})
+                        break
+                    if i < len(info["pos"]):
+                        bound[info["pos"][i]] = arg
+                for kw in call.keywords:
+                    if kw.arg in info["names"]:
+                        bound[kw.arg] = kw.value
+                    elif kw.arg is not None and info["kwarg"]:
+                        extra_kw[callee].append((kw.arg, kw.value, caller))
+                    elif kw.arg is None and caller in defs and isinstance(kw.value, ast.Name) \
+                            and kw.value.id == defs[caller]["kwarg"]:
+                        kw_forwards.append((callee, caller))
+                    elif kw.arg is None:
+                        bound.update({prm: None for prm in info["names"] if prm not in bound})
+                for prm in info["names"]:
+                    if prm in bound:
+                        if bound[prm] is None:
+                            values[(callee, prm)].add("<unknown>")
+                        else:
+                            bind(callee, prm, bound[prm], caller)
+                    elif prm in info["defaults"]:
+                        values[(callee, prm)].add(value(info["defaults"][prm]))
+
+    seen = set()
+    grew = True
+    while grew:  # keywords flowing on through **kwargs splats
+        grew = False
+        for callee, caller in kw_forwards:
+            for kwname, arg, site in list(extra_kw[caller]):
+                if (callee, kwname, id(arg)) in seen:
+                    continue
+                seen.add((callee, kwname, id(arg)))
+                grew = True
+                if kwname in defs[callee]["names"]:
+                    bind(callee, kwname, arg, site)
+                elif defs[callee]["kwarg"]:
+                    extra_kw[callee].append((kwname, arg, site))
+
+    def spread():  # a forward carries every value its source receives
+        grew = True
+        while grew:
+            grew = False
+            for key, srcs in forwards.items():
+                for src in srcs:
+                    if not values[src] <= values[key]:
+                        values[key] |= values[src]
+                        grew = True
+
+    spread()
+    for src in {s for srcs in forwards.values() for s in srcs if not values[s]}:
+        values[src].add("<unknown>")  # a parameter no call site reaches
+    spread()
+    return sorted(
+        (info["path"].relative_to(pkg).as_posix(), info["name"], prm)
+        for d, info in defs.items()
+        for prm, dflt in info["defaults"].items()
+        if values[(d, prm)] <= {value(dflt)}
+    )
+
+
+def test_parameters_take_more_than_one_value():
+    """A parameter exists only where some caller sets a second value:
+    one that every call site leaves at its default (or forwards
+    unchanged) is a constant, so the body reads the literal (or a
+    module constant several functions share, e.g.
+    ``sketches.BLOOM_SALT``, ``dedup.NUM_HASHES``) instead.
+    ``ONE_VALUE_PARAMS_KEPT`` names the deliberate exceptions."""
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parent.parent
+    found = [
+        f"{path} {fn}({prm})"
+        for path, fn, prm in _one_value_params(repo)
+        if (fn, prm) not in ONE_VALUE_PARAMS_KEPT
+    ]
+    assert not found, f"{len(found)} one-value parameters: {found}"

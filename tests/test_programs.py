@@ -1751,7 +1751,7 @@ def test_cluster_report_end_to_end(spark, tmp_path):
     rep = {
         r["cell_id"]: r
         for r in cluster_report(
-            spark, dp, ep, out, n_cells=2, n_iters=2, k_terms=2
+            spark, dp, ep, out, n_cells=2, k_terms=2
         ).collect()
     }
     # cell 1 seeded by vec 1 (the apple region), cell 2 by vec 2

@@ -95,7 +95,7 @@ def test_mad_outliers_parity(spark, sf_dir, duck):
     docs = Catalog(spark, sf_dir).documents
     q = textstats.quality_scores(docs, score_only=True)
     staged = q.join(docs.select("doc_id", "source"), "doc_id")
-    got = textstats.mad_outliers(staged, score_col="quality")
+    got = textstats.mad_outliers(staged)
     quality_sql = (
         "WITH t AS (SELECT doc_id, text, "
         r"list_filter(regexp_split_to_array(text, '\s+'), w -> w <> '') AS toks "

@@ -427,7 +427,7 @@ def test_pca_project_whiten_unit_variance(spark, sf_dir):
             for r in emb_ops.pca_project(emb, k=4, whiten=True).collect()
         ]
     )
-    var = proj.var(axis=0)  # biased, matching center=True's /n covariance
+    var = proj.var(axis=0)  # biased, matching the centered /n covariance
     assert np.allclose(var, 1.0, atol=1e-6)
     with pytest.raises(ValueError):
         emb_ops.pca_project(
@@ -807,7 +807,7 @@ def test_winnow_matches_parity(spark, sf_dir, duck):
     from pagerank_mapreduce_implementation_spark.operators import dedup
 
     out = dedup.winnow_matches(
-        Catalog(spark, sf_dir).documents, k=5, w=4, min_shared=3, max_fp_df=8
+        Catalog(spark, sf_dir).documents, min_shared=3, max_fp_df=8
     )
     check(out, duck, oracles.winnow_matches_sql(k=5, w=4, min_shared=3, max_fp_df=8))
 
@@ -867,7 +867,7 @@ def test_winnow_matches_pure_python_and_guarantee(spark):
     # shared fingerprints -> (1,2) match; doc 3 pairs with nobody
     pairs = {
         (r["doc_a"], r["doc_b"])
-        for r in dedup.winnow_matches(docs, k=5, w=4, min_shared=2).collect()
+        for r in dedup.winnow_matches(docs, min_shared=2).collect()
     }
     assert (1, 2) in pairs
     assert not any(3 in p for p in pairs)
@@ -1074,13 +1074,13 @@ def test_streaming_value_histogram_matches_batch(spark, sf_dir, duck):
     )
 
     out = streaming_value_histogram(
-        read_events_stream(spark, sf_dir), "value", 25.0
+        read_events_stream(spark, sf_dir), 25.0
     )
     run_to_memory(out, "value_hist_probe", state_partitions=8)
     got = spark.table("value_hist_probe")
     check(got, duck, oracles.value_histogram_sql("events", "value", 25.0))
     with pytest.raises(ValueError):
-        streaming_value_histogram(read_events_stream(spark, sf_dir), "value", 0)
+        streaming_value_histogram(read_events_stream(spark, sf_dir), 0)
 
 
 def test_cohort2_plan_shapes(spark, sf_dir):
@@ -1121,7 +1121,7 @@ def test_winnow_matches_normalized_parity(spark, sf_dir, duck):
 
     out = dedup.winnow_matches(
         Catalog(spark, sf_dir).documents,
-        k=5, w=4, min_shared=3, max_fp_df=8, normalize=True,
+min_shared=3, max_fp_df=8, normalize=True,
     )
     check(
         out,

@@ -175,9 +175,7 @@ def test_dedup_report_parity(spark, sf_dir, duck):
     import __spark_entry__ as entry
     from pagerank_mapreduce_implementation_spark.operators import dedup
 
-    got = dedup.dedup_report(
-        Catalog(spark, sf_dir).documents, threshold=0.5, ngram=5
-    )
+    got = dedup.dedup_report(Catalog(spark, sf_dir).documents)
     cs = entry.oracle_sql()["cluster_survivors"]
     oracle = (
         f"WITH cs AS ({cs}), "
@@ -214,7 +212,7 @@ def test_dedup_report_mass_conservation(spark):
     )
     rep = {
         r["source"]: r
-        for r in dedup.dedup_report(docs, threshold=0.5, ngram=5).collect()
+        for r in dedup.dedup_report(docs).collect()
     }
     a, b = rep["a"], rep["b"]
     assert a["n_docs"] == 2 and a["n_kept"] == 1 and a["drop_rate"] == 0.5
@@ -311,13 +309,13 @@ def test_fuzzy_contamination_catches_paraphrase(spark):
     exact2 = contamination.contamination_check(t2, b2, ngram=8).collect()[0]
     assert exact2["n_contaminated"] == 0  # every 8-gram spans the edit
     fuzzy2 = contamination.fuzzy_contamination(
-        t2, b2, threshold=0.2, ngram=2, num_hashes=16, bands=8
+        t2, b2, threshold=0.2, ngram=2, bands=8
     ).collect()
     assert [(r["doc_id"], r["bench_id"]) for r in fuzzy2] == [(1, 100)]
     # and the long-doc case: fuzzy flags the paraphrase, not the
     # unrelated doc
     fuzzy = contamination.fuzzy_contamination(
-        train, bench, threshold=0.5, ngram=3, num_hashes=16, bands=8
+        train, bench, threshold=0.5, ngram=3, bands=8
     ).collect()
     assert [(r["doc_id"], r["bench_id"]) for r in fuzzy] == [(1, 100)]
     assert fuzzy[0]["jaccard"] > 0.7
@@ -1019,7 +1017,6 @@ def test_margin_matches_ab_parity(spark, sf_dir, duck):
         emb.filter(F.col("vec_id") % 3 == 0),
         emb.filter(F.col("vec_id") % 3 == 1),
         k=4,
-        margin_threshold=1.0,
     )
     assert got.count() > 0, "vacuous: no pair clears margin 1.0"
     check(
@@ -1059,7 +1056,7 @@ def test_margin_matches_python_replay(spark, sf_dir):
     got = {
         (r["id_a"], r["id_b"]): r["margin"]
         for r in similarity.margin_matches_ab(
-            a, b, k=k, margin_threshold=1.0
+            a, b, k=k
         ).collect()
     }
     assert set(got) == set(want)
@@ -1168,7 +1165,7 @@ def test_streaming_ks_drift_composition_parity(spark, sf_dir, duck):
     ev_stream = strm.read_events_stream(spark, sf_dir).filter(
         F.col("event_id") % 2 == 1
     )
-    live = strm.queries.streaming_value_histogram(ev_stream, "value", 25.0)
+    live = strm.queries.streaming_value_histogram(ev_stream, 25.0)
     strm.run_to_memory(live, "_test_ks_live", state_partitions=8)
     ref = relational.value_histogram(
         Catalog(spark, sf_dir).events.filter(F.col("event_id") % 2 == 0),
@@ -1232,7 +1229,7 @@ def test_streaming_ks_drift_equals_batch_twin(spark, sf_dir):
     live_pred = F.col("event_id") % 2 == 1
     ev_stream = strm.read_events_stream(spark, sf_dir).filter(live_pred)
     strm.run_to_memory(
-        strm.queries.streaming_value_histogram(ev_stream, "value", 25.0),
+        strm.queries.streaming_value_histogram(ev_stream, 25.0),
         "_test_ks_twin",
         state_partitions=8,
     )
@@ -1260,7 +1257,6 @@ def test_minhash_recall_report_parity(spark, sf_dir, duck):
         drop_rate=0.15,
         sample_mod=10,
         threshold=0.3,
-        ngram=2,
     )
     row = got.collect()[0]
     assert row["n_planted"] > 0 and row["n_qualifying"] > 0
@@ -1288,14 +1284,14 @@ def test_minhash_recall_extremes(spark):
         "doc_id long, text string",
     )
     r = dedup.minhash_recall_report(
-        docs, drop_rate=0.0, sample_mod=2, threshold=0.5, ngram=2
+        docs, drop_rate=0.0, sample_mod=2, threshold=0.5
     ).collect()[0]
     assert r["n_planted"] == 4 and r["n_qualifying"] == 4
     assert r["hits"] == 4 and r["recall"] == 1.0
     # drop everything: twins are empty -> no shingles -> nothing
     # qualifies -> recall is NULL, not a fake 1.0
     r2 = dedup.minhash_recall_report(
-        docs, drop_rate=0.999999999, sample_mod=2, threshold=0.5, ngram=2
+        docs, drop_rate=0.999999999, sample_mod=2, threshold=0.5
     ).collect()[0]
     assert r2["n_planted"] == 4 and r2["n_qualifying"] == 0
     assert r2["recall"] is None

@@ -315,7 +315,7 @@ def test_simhash_recall_extremes(spark):
     assert r["n_planted"] == 4 and r["n_qualifying"] == 4
     assert r["hits"] == 4 and r["recall"] == 1.0
     r2 = dedup.simhash_recall_report(
-        docs, drop_rate=0.4, sample_mod=2, max_hamming=3, chunks=4
+        docs, drop_rate=0.4, sample_mod=2, max_hamming=3
     ).collect()[0]
     # pigeonhole: any pair within hamming 3 shares one of 4 chunks
     assert r2["n_planted"] == 4
@@ -376,7 +376,7 @@ def test_lsh_expected_recall_validates_against_realized_audit(spark, sf_dir):
 
     docs = Catalog(spark, sf_dir).documents
     realized = dedup.minhash_recall_report(
-        docs, drop_rate=0.15, sample_mod=10, threshold=0.3, ngram=2
+        docs, drop_rate=0.15, sample_mod=10, threshold=0.3
     ).collect()[0]
     pred = {
         (r["num_hashes"], r["bands"]): r["expected_recall"]

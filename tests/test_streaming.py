@@ -73,11 +73,11 @@ def test_streaming_sessions_match_batch(spark, sf_dir):
 
     stream = read_events_stream(spark, sf_dir)
     run_to_memory(
-        streaming_user_sessions(stream, gap="30 minutes"), "stream_sess", "complete"
+        streaming_user_sessions(stream), "stream_sess", "complete"
     )
     got = sorted(map(tuple, spark.table("stream_sess").collect()))
     want = sorted(
-        map(tuple, user_sessions(Catalog(spark, sf_dir).events, gap="30 minutes").collect())
+        map(tuple, user_sessions(Catalog(spark, sf_dir).events).collect())
     )
     assert got == want
     assert len(got) > 0
@@ -146,7 +146,7 @@ def test_stream_stream_join_matches_batch_twin(spark, sf_dir):
         F.col("user_id").alias("click_user_id"),
         F.col("ts").alias("click_ts"),
     )
-    joined = strm.streaming_click_attribution(p_s, c_s, window="1 hour")
+    joined = strm.streaming_click_attribution(p_s, c_s)
     strm.run_to_memory(joined, "attr_twin_test", output_mode="append")
     got = {
         (r.event_id, r.click_event_id)
@@ -331,7 +331,7 @@ def test_streaming_bloom_probe_end_to_end(spark, tmp_path):
 
     stream = spark.readStream.schema("doc_id long, item string").parquet(src)
     out = strm.streaming_bloom_probe(
-        stream, flt, "item", n_bits=3200, n_hashes=4
+        stream, flt, n_bits=3200, n_hashes=4
     )
     assert out.isStreaming
     strm.run_to_memory(
