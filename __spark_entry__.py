@@ -2689,16 +2689,13 @@ def _q_mean_pool_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The d x d gram matrix — the DEFAULT scale path (one Arrow
-    ``mapInPandas`` pass of per-batch numpy partials, shuffle volume =
-    partitions x d^2, independent of row count). Round-13 verdict: the
-    previously registered ``exact=True`` audit mode explodes rows x
-    d(d+1)/2 cells and folds a row-count-sized ``collect_list`` per
-    cell — unbounded group state at 100x — so the driver now certifies
-    the plan users would actually run; ``round(g, 6)`` absorbs the
-    ~1e-12 cross-partition partial-sum noise against the oracle's
-    bit-exact sequential fold. ``exact=True`` stays the pytest audit
-    twin (tests/test_staged_ops2.py)."""
+    """The d x d gram matrix: one Arrow ``mapInPandas`` pass of
+    per-batch numpy partials, shuffle volume = partitions x d^2,
+    independent of row count (an exact per-cell fold would explode
+    rows x d(d+1)/2 cells into row-count-sized group state at 100x).
+    ``round(g, 6)`` absorbs the ~1e-12 cross-partition partial-sum
+    noise against the oracle's bit-exact sequential fold; a numpy
+    reference in tests/test_staged_ops2.py checks every cell."""
     out = emb_ops.embedding_gram(Catalog(spark, sf_dir).embeddings)
     return out.select("i", "j", F.round("g", 6).alias("g"))
 
@@ -3849,7 +3846,7 @@ def _q_semdedup_truncated(spark: SparkSession, sf_dir: str) -> DataFrame:
     space. Threshold 0.6 sits 1.1e-4 from the nearest pair cosine at
     sf0.01 (6.6e-5 at sf0.001) — no boundary jitter."""
     cat = Catalog(spark, sf_dir)
-    trunc = emb_ops.truncate_embeddings(cat.embeddings, dims=16, renorm=True)
+    trunc = emb_ops.truncate_embeddings(cat.embeddings, dims=16)
     return dedup.semdedup(
         cat.documents.select("doc_id", "lang", "source", "n_chars"),
         trunc,

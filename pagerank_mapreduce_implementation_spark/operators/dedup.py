@@ -81,11 +81,7 @@ def exact_dedup(docs: DataFrame) -> DataFrame:
 
 
 def incremental_exact_dedup(
-    new_docs: DataFrame,
-    seen_fingerprints: DataFrame,
-    bloom_prefilter: DataFrame | None = None,
-    bloom_n_bits: int = 1 << 16,
-    bloom_n_hashes: int = 4,
+    new_docs: DataFrame, seen_fingerprints: DataFrame
 ) -> DataFrame:
     """Incremental ingestion dedup: survivors of a NEW batch against an
     existing corpus fingerprint store (``seen_fingerprints``: one
@@ -102,23 +98,8 @@ def incremental_exact_dedup(
        by fingerprint so the anti-join co-locates without a shuffle of
        the store.
 
-    ``bloom_prefilter`` (a ``sketches.bloom_filter_table`` built over
-    the SAME store's fingerprints, persisted alongside it) splits
-    stage 2: docs the filter clears (``maybe_member = false``, which a
-    Bloom filter guarantees correct) skip the anti-join entirely via a
-    stateless broadcast probe, and only the maybe_member sliver pays
-    the store join. Results are IDENTICAL with or without the
-    prefilter — it is purely a physical rewrite (property-tested) —
-    but on a mostly-novel ingest the store-sized join shrinks to the
-    duplicate+false-positive fraction: a multi-billion-row store scan
-    becomes a few-MB broadcast for ~99% of the batch. The filter's
-    ``n_bits``/``n_hashes`` must match how it was built (both sides
-    hash with ``sketches.BLOOM_SALT``).
-
     Returns the caller's schema plus ``fingerprint`` (append it to the
-    store for the next batch; OR the batch's bits into the Bloom store
-    cell-wise — ``bloom_filter_table`` outputs merge by
-    ``groupBy(word).bit_or(bits)``). The corpus-wide pass stays
+    store for the next batch). The corpus-wide pass stays
     ``exact_dedup``; this is the per-increment path that avoids
     re-reading the whole corpus every ingest.
     """
@@ -132,30 +113,9 @@ def incremental_exact_dedup(
         .filter(F.col("doc_id") == F.col("__keeper"))
         .drop("__keeper")
     )
-    if bloom_prefilter is None:
-        return in_batch.join(
-            seen_fingerprints.select("fingerprint"), "fingerprint", "left_anti"
-        )
-    from pagerank_mapreduce_implementation_spark.operators.sketches import (
-        bloom_membership_rowwise,
+    return in_batch.join(
+        seen_fingerprints.select("fingerprint"), "fingerprint", "left_anti"
     )
-
-    probed = bloom_membership_rowwise(
-        in_batch,
-        bloom_prefilter,
-        "fingerprint",
-        n_bits=bloom_n_bits,
-        n_hashes=bloom_n_hashes,
-    )
-    cleared = probed.filter(~F.col("maybe_member")).drop("maybe_member")
-    sliver = (
-        probed.filter(F.col("maybe_member"))
-        .drop("maybe_member")
-        .join(
-            seen_fingerprints.select("fingerprint"), "fingerprint", "left_anti"
-        )
-    )
-    return cleared.unionByName(sliver)
 
 
 def shingles(docs: DataFrame, n: int = 1, text_col: str = "text") -> DataFrame:
@@ -1250,30 +1210,25 @@ def strip_substring_runs(
     return staged.select(*out_cols, n_stripped.alias("n_stripped"))
 
 
-def line_dedup(
-    docs: DataFrame,
-    sep: str = "\n",
-    min_line_chars: int = 1,
-    key: "Callable[[Column], Column] | None" = None,
-) -> DataFrame:
+def line_dedup(docs: DataFrame, min_line_chars: int = 1) -> DataFrame:
     """Corpus-wide repeated-LINE removal, keep-first (the CCNet /
     MassiveText boilerplate pass — Wenzek et al. 2020 deduplicate
     normalized paragraph hashes across shards to strip cookie
     banners, nav bars, and license boilerplate that whole-document
     dedup can never see).
 
-    Splits ``text`` on the LITERAL separator ``sep``, keys each
-    line (default: ``md5(lower(trim(line)))`` — CCNet's
-    case-insensitive normalization without its digit-stripping,
-    documented deviation), and keeps only the FIRST occurrence of
-    each key corpus-wide, ordered by ``(doc_id, line_idx)``. Lines
-    whose trimmed length is < ``min_line_chars`` are exempt: blank
-    separators never collapse across the corpus. Duplicates WITHIN
+    Splits ``text`` on newlines, keys each line by
+    ``md5(lower(trim(line)))`` (CCNet's case-insensitive normalization
+    without its digit-stripping, documented deviation), and keeps
+    only the FIRST occurrence of each key corpus-wide, ordered by
+    ``(doc_id, line_idx)``. Lines whose trimmed length is <
+    ``min_line_chars`` are exempt: blank separators never collapse
+    across the corpus. Duplicates WITHIN
     one document count too (second copy drops), matching CCNet's
     shard-global behavior.
 
     Returns ``docs`` with ``text`` rebuilt (surviving lines
-    re-joined with ``sep``, original order) plus ``n_dropped_lines``.
+    re-joined with newlines, original order) plus ``n_dropped_lines``.
     Documents losing no lines pass through BYTE-identical — the
     rebuild only touches victims.
 
@@ -1294,14 +1249,15 @@ def line_dedup(
         # line in the corpus collapses into one, silently rewriting
         # documents that share no content
         raise ValueError(f"min_line_chars ({min_line_chars}) must be >= 1")
-    keyfn = key or (lambda c: F.md5(F.lower(F.trim(c))))
-    pat = _re.escape(sep)
+    pat = _re.escape("\n")
 
     lines = docs.select(
         "doc_id",
         F.posexplode(F.split(F.col("text"), pat)).alias("idx", "line"),
     ).filter(F.length(F.trim("line")) >= min_line_chars)
-    keyed = lines.select("doc_id", "idx", keyfn(F.col("line")).alias("k"))
+    keyed = lines.select(
+        "doc_id", "idx", F.md5(F.lower(F.trim(F.col("line")))).alias("k")
+    )
     # one shuffle: (df, first-owner) per key — min(struct) orders by
     # (doc_id, idx) lexicographically = the keep-first rule
     stats = keyed.groupBy("k").agg(
@@ -1325,7 +1281,7 @@ def line_dedup(
         lambda ln, i: ~F.array_contains(F.col("__drops"), i),
     )
     new_text = F.when(F.col("__drops").isNull(), F.col("text")).otherwise(
-        F.array_join(kept, sep)
+        F.array_join(kept, "\n")
     )
     n_dropped = F.when(F.col("__drops").isNull(), F.lit(0)).otherwise(
         F.size("__drops")
@@ -1341,7 +1297,6 @@ def intra_doc_line_dedup(
     docs: DataFrame,
     sep: str = "\n",
     min_line_chars: int = 1,
-    key: "Callable[[Column], Column] | None" = None,
 ) -> DataFrame:
     """WITHIN-document repeated-line removal, keep-first —
     ``line_dedup``'s intra-doc sibling (the RefinedWeb / C4 pass that
@@ -1369,7 +1324,6 @@ def intra_doc_line_dedup(
         # 0 would admit the empty string as a dedup key: every run of
         # consecutive blank lines would silently collapse to one
         raise ValueError(f"min_line_chars ({min_line_chars}) must be >= 1")
-    keyfn = key or (lambda c: F.md5(F.lower(F.trim(c))))
     pat = _re.escape(sep)
 
     lines = F.split(F.col("text"), pat, -1)
@@ -1378,7 +1332,8 @@ def intra_doc_line_dedup(
         F.transform(
             F.col("__lines"),
             lambda ln: F.when(
-                F.length(F.trim(ln)) >= min_line_chars, keyfn(ln)
+                F.length(F.trim(ln)) >= min_line_chars,
+                F.md5(F.lower(F.trim(ln))),
             ),
         ),
     )
@@ -1965,7 +1920,6 @@ def winnow_matches(
     docs: DataFrame,
     min_shared: int = 2,
     max_fp_df: int | None = None,
-    normalize: bool = False,
 ) -> DataFrame:
     """Document pairs sharing winnowing fingerprints —
     ``(doc_a, doc_b, shared)`` with ``shared >= min_shared`` distinct
@@ -1980,10 +1934,7 @@ def winnow_matches(
     video frame silhouette) — fingerprint inventory is zero-shuffle,
     the self-join is keyed on ``fp`` with per-fp candidates bounded by
     C(df_cap, 2), and the pair count is one groupBy with map-side
-    partials. ``normalize=True`` adds the MOSS report's percent
-    overlap per side — ``sim_x = shared / |fingerprints(doc_x)|``
-    (rounded 6) over the same df-capped sets the join used — via two
-    doc-bounded total joins.
+    partials.
     """
     if min_shared < 1:
         raise ValueError(f"min_shared ({min_shared}) must be >= 1")
@@ -1997,30 +1948,12 @@ def winnow_matches(
         )
     a = fps.select(F.col("doc_id").alias("doc_a"), "fp")
     b = fps.select(F.col("doc_id").alias("doc_b"), "fp")
-    pairs = (
+    return (
         a.join(b, "fp")
         .filter(F.col("doc_a") < F.col("doc_b"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)
-    )
-    if not normalize:
-        return pairs
-    # MOSS-style percent overlap: shared / |fingerprints(doc)| per
-    # side, over the SAME (possibly df-capped) fingerprint sets the
-    # join used — doc-bounded totals, one broadcastable join per side
-    tot = fps.groupBy("doc_id").agg(F.count(F.lit(1)).alias("__tot"))
-    return (
-        pairs.join(tot.withColumnRenamed("doc_id", "doc_a"), "doc_a")
-        .withColumnRenamed("__tot", "__ta")
-        .join(tot.withColumnRenamed("doc_id", "doc_b"), "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "shared",
-            F.round(F.col("shared") / F.col("__ta"), 6).alias("sim_a"),
-            F.round(F.col("shared") / F.col("__tot"), 6).alias("sim_b"),
-        )
     )
 
 

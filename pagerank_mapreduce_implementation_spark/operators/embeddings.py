@@ -44,10 +44,10 @@ def _uniform_dims(emb: DataFrame) -> int | None:
     return int(row["hi"])
 
 
-def truncate_embeddings(emb: DataFrame, dims: int, renorm: bool = True) -> DataFrame:
+def truncate_embeddings(emb: DataFrame, dims: int) -> DataFrame:
     """Matryoshka truncation: keep the first ``dims`` coordinates of
-    each vector — ``(vec_id, embedding: array<double>[dims])`` — and by
-    default re-L2-normalize the prefix (the serving contract of
+    each vector — ``(vec_id, embedding: array<double>[dims])`` — and
+    re-L2-normalize the prefix (the serving contract of
     matryoshka-trained embedders: the prefix IS the low-cost embedding
     once renormalized; Kusupati et al. 2022, public).
 
@@ -63,8 +63,6 @@ def truncate_embeddings(emb: DataFrame, dims: int, renorm: bool = True) -> DataF
         raise ValueError(f"dims ({dims}) must be >= 1")
     sl = F.transform(F.slice(F.col("embedding"), 1, dims), lambda x: x.cast("double"))
     staged = emb.select("vec_id", sl.alias("__v"))
-    if not renorm:
-        return staged.select("vec_id", F.col("__v").alias("embedding"))
     # the norm becomes an ATTRIBUTE before the per-element lambda reads
     # it (same shape as quantize_embeddings' __mx): referenced twice and
     # non-cheap, so CollapseProject keeps it materialized — inlining the
@@ -149,57 +147,24 @@ def mean_pool_embeddings(
     )
 
 
-def embedding_gram(emb: DataFrame, exact: bool = False) -> DataFrame:
+def embedding_gram(emb: DataFrame) -> DataFrame:
     """The gram matrix G = X^T X of the embedding table as its upper
     triangle — ``(i, j, g)`` with 0-based ``i <= j`` — the one-pass
     sufficient statistic behind PCA/whitening/covariance (d^2 numbers
     summarize any number of rows).
 
-    Default path (scale): ONE Arrow-batched ``mapInPandas`` pass
-    computes a partial ``X^T X`` per batch in numpy and emits only its
-    d(d+1)/2 upper-triangle cells; a groupBy(i, j) sums the partials.
-    Shuffle volume = partitions x d^2 — independent of row count; the
-    classic distributed gram. Cross-partition float summation order is
-    not fixed, so results carry ~1e-12 relative noise (irrelevant to
-    PCA).
-
-    ``exact=True`` is the audit/oracle configuration: per-row products
-    (exact in double: float32 mantissas multiply losslessly into
-    float64) are exploded to ``(i, j, id, p)`` and each cell is summed
-    as a sequential fold over ``id``-sorted products — bit-deterministic
-    and mirrored by the DuckDB oracle — at the cost of a row-count x
-    d^2/2 explode. Audit scale only.
+    ONE Arrow-batched ``mapInPandas`` pass computes a partial
+    ``X^T X`` per batch in numpy and emits only its d(d+1)/2
+    upper-triangle cells; a groupBy(i, j) sums the partials. Shuffle
+    volume = partitions x d^2 — independent of row count; the classic
+    distributed gram. Cross-partition float summation order is not
+    fixed, so results carry ~1e-12 relative noise (irrelevant to PCA;
+    the registered query rounds to 6 digits against the oracle's
+    sequential fold).
     """
     dims = _uniform_dims(emb)
     if dims is None:
         return emb.sparkSession.createDataFrame([], "i int, j int, g double")
-    if exact:
-        tri = F.expr(
-            f"flatten(transform(sequence(0, {dims - 1}), i -> "
-            f"transform(sequence(i, {dims - 1}), j -> named_struct("
-            "'i', i, 'j', j, "
-            "'p', cast(__v[i] as double) * cast(__v[j] as double)))))"
-        )
-        cells = (
-            emb.select(F.col("vec_id").alias("__id"), F.col("embedding").alias("__v"))
-            .select("__id", F.explode(tri).alias("c"))
-            .select("__id", "c.i", "c.j", "c.p")
-        )
-        return (
-            cells.groupBy("i", "j")
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("__id").alias("_id"), "p"))
-                ).alias("ps")
-            )
-            .select(
-                "i",
-                "j",
-                F.aggregate(
-                    F.col("ps"), F.lit(0.0), lambda acc, s: acc + s["p"]
-                ).alias("g"),
-            )
-        )
 
     def _partial(batches):
         import numpy as np
@@ -279,7 +244,6 @@ def pca_project(
     k: int = 8,
     components: list[list[float]] | None = None,
     means: list[float] | None = None,
-    whiten: bool = False,
 ) -> DataFrame:
     """Project every vector onto the top-``k`` principal components —
     ``(vec_id, proj: array<double>[k])`` — the dimensionality-reduction
@@ -294,47 +258,22 @@ def pca_project(
     ``means`` to reuse a fit — e.g. project a new corpus snapshot onto
     last week's basis; otherwise the basis is fit on ``emb`` via
     ``pca_components``.
-
-    ``whiten=True`` (only with a basis fit here, which knows its
-    eigenvalues) rescales each component's projection by
-    ``1/sqrt(eigenvalue)`` (components with eigenvalue <= 1e-12 —
-    numerically dead directions — map to 0 rather than exploding), so
-    the output coordinates have unit variance: the standard
-    preconditioning before cosine/Euclidean clustering when the
-    leading components would otherwise dominate every distance. The
-    scale folds into the SAME plan-time literal vector, so the plan
-    shape is unchanged.
     """
     import numpy as np
 
-    eigenvalues = None
     if components is None:
-        eigenvalues, components, _, fit_means = pca_components(emb, k=k)
+        _, components, _, fit_means = pca_components(emb, k=k)
         if means is None:
             means = fit_means
     k = len(components)
     if means is None:
         raise ValueError("pca_project: needs means with components")
     mu_dot = [float(np.dot(means, c)) for c in components]
-    if whiten:
-        if eigenvalues is None:
-            raise ValueError(
-                "pca_project: whiten=True needs a basis fit on emb"
-            )
-        scales = [
-            (1.0 / float(np.sqrt(lam)) if lam > 1e-12 else 0.0)
-            for lam in eigenvalues[:k]
-        ]
-    else:
-        scales = [1.0] * k
     v = F.col("__v")
     projs = [
         (
-            (
-                _dot(v, F.array(*[F.lit(float(x)) for x in comp]))
-                - F.lit(mu_dot[ci])
-            )
-            * F.lit(scales[ci])
+            _dot(v, F.array(*[F.lit(float(x)) for x in comp]))
+            - F.lit(mu_dot[ci])
         ).alias(f"__p{ci}")
         for ci, comp in enumerate(components)
     ]

@@ -96,16 +96,13 @@ def _plan_size_bytes(df: DataFrame) -> int | None:
         return None
 
 
-def degree_histogram(edges: DataFrame, direction: str = "out") -> DataFrame:
-    """Degree DISTRIBUTION of a link graph — the skew profile you
-    read BEFORE running PageRank at scale: ``(out_degree, n_vertices)``
-    (or ``in_degree`` with ``direction="in"``), duplicate edges
-    counted exactly as the scatter does, degree-0 vertices (dangling
-    sinks for "out"; sources nothing links to for "in") reported as
-    the zero row. ``"out"``'s fat tail is what makes the scatter
-    EMIT-side expensive (one row per outlink); ``"in"``'s fat tail is
-    the gather-side hot key the contribution aggregation shuffles
-    into — the one that motivates salting.
+def degree_histogram(edges: DataFrame) -> DataFrame:
+    """Out-degree DISTRIBUTION of a link graph — the skew profile you
+    read BEFORE running PageRank at scale: ``(out_degree, n_vertices)``,
+    duplicate edges counted exactly as the scatter does, degree-0
+    vertices (dangling sinks) reported as the zero row. The fat tail
+    is what makes the scatter EMIT-side expensive (one row per
+    outlink).
 
     Shape: degree agg -> tiny histogram agg; the zero row comes from
     two SCALAR counts (distinct vertices minus scoring keys)
@@ -113,13 +110,8 @@ def degree_histogram(edges: DataFrame, direction: str = "out") -> DataFrame:
     edge-quadratic; both aggregations are keys the PageRank loop
     shuffles on anyway.
     """
-    if direction not in ("out", "in"):
-        raise ValueError(f"direction must be 'out' or 'in', got {direction!r}")
-    key, deg_name = (
-        ("src", "out_degree") if direction == "out" else ("dst", "in_degree")
-    )
-    od = edges.groupBy(key).agg(F.count(F.lit(1)).alias(deg_name))
-    hist = od.groupBy(deg_name).agg(F.count(F.lit(1)).alias("n_vertices"))
+    od = edges.groupBy("src").agg(F.count(F.lit(1)).alias("out_degree"))
+    hist = od.groupBy("out_degree").agg(F.count(F.lit(1)).alias("n_vertices"))
     verts = (
         edges.select(F.col("src").alias("v"))
         .unionByName(edges.select(F.col("dst").alias("v")))
@@ -130,7 +122,7 @@ def degree_histogram(edges: DataFrame, direction: str = "out") -> DataFrame:
     zero = (
         nv.crossJoin(F.broadcast(ns))
         .select(
-            F.lit(0).cast("long").alias(deg_name),
+            F.lit(0).cast("long").alias("out_degree"),
             (F.col("__nv") - F.col("__ns")).alias("n_vertices"),
         )
         .filter(F.col("n_vertices") > 0)

@@ -40,15 +40,12 @@ def asof_join(
     right: DataFrame,
     on: str,
     right_ts: str = "ts",
-    direction: str = "backward",
     tolerance_seconds: float | None = None,
     suffix: str = "_right",
 ) -> DataFrame:
     """For every left row, attach the single right row with the
-    greatest ``right_ts`` <= the left row's ``ts``
-    (``direction="backward"``, inclusive) or the smallest
-    ``right_ts`` >= ``ts``
-    (``"forward"``), matching on the equality key ``on``.
+    greatest ``right_ts`` <= the left row's ``ts`` (inclusive),
+    matching on the equality key ``on``.
 
     Left rows with no match keep NULLs (left-outer semantics, like
     pandas ``merge_asof`` / DuckDB ``ASOF LEFT JOIN``).
@@ -66,8 +63,6 @@ def asof_join(
     needing a specific tie rule should pre-reduce the right side to one
     row per (key, ts).
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"unknown direction {direction!r}")
     rcols = [c for c in right.columns if c not in (on, right_ts)]
     payload = F.struct(
         F.col(right_ts).alias(right_ts), *[F.col(c).alias(c) for c in rcols]
@@ -98,15 +93,9 @@ def asof_join(
         F.lit(None).cast(payload_type).alias(_MATCH),
         *[F.col(c).alias(f"__l_{c}") for c in left.columns],
     )
-    asc = direction == "backward"
-    order = [
-        F.col(_T).asc() if asc else F.col(_T).desc(),
-        F.col(_SIDE).asc(),
-        F.col(_TB).asc(),
-    ]
     w = (
         Window.partitionBy(on)
-        .orderBy(*order)
+        .orderBy(F.col(_T).asc(), F.col(_SIDE).asc(), F.col(_TB).asc())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     matched = (

@@ -1006,7 +1006,6 @@ def video_shared_runs(
     max_frame_df: int | None = None,
     demuxer: Callable[[bytes], list[bytes]] | None = None,
     hasher: Callable[[bytes], int] | None = None,
-    materialize: bool = True,
     frame_hashes: DataFrame | None = None,
 ) -> DataFrame:
     """Maximal CONTIGUOUS runs of identical perceptual frame hashes
@@ -1029,11 +1028,10 @@ def video_shared_runs(
     maximal run; a hash repeated WITHIN a clip (static scenes) yields
     one diagonal per alignment, exactly like repeated k-grams.
 
-    ``materialize=True`` (default): the frame-hash table is persisted
-    so decode+hash runs once for both join sides, and the (small) run
-    set returns as a releasable eager checkpoint
-    (``util.release_result``); ``False`` returns the lazy plan.
-    ``frame_hashes`` supplies a PRECOMPUTED ``video_frame_hashes``
+    The frame-hash table is persisted so decode+hash runs once for
+    both join sides, and the (small) run set returns as a releasable
+    eager checkpoint (``util.release_result``). ``frame_hashes``
+    supplies a PRECOMPUTED ``video_frame_hashes``
     table (same ``every_n``!), skipping the decode pass entirely —
     lifecycle of that table (persist/release) then belongs to the
     caller, so the internal persist is skipped.
@@ -1050,7 +1048,7 @@ def video_shared_runs(
         F.floor(F.col("frame_idx") / every_n).cast("int").alias("pos"),
         "fhash",
     )
-    own = materialize and frame_hashes is None
+    own = frame_hashes is None
     if own:
         fh = fh.persist()
     try:
@@ -1084,7 +1082,7 @@ def video_shared_runs(
             .select("doc_a", "doc_b", "ia", "ib")
         )
         runs = _island_runs(hits, "doc_a", "doc_b", min_run)
-        return runs.localCheckpoint(eager=True) if materialize else runs
+        return runs.localCheckpoint(eager=True)
     finally:
         if own:
             fh.unpersist()
@@ -1096,7 +1094,6 @@ def video_near_dups(
     max_frame_df: int | None = None,
     demuxer: Callable[[bytes], list[bytes]] | None = None,
     hasher: Callable[[bytes], int] | None = None,
-    materialize: bool = True,
     frame_hashes: DataFrame | None = None,
 ) -> DataFrame:
     """Video near-dup pairs by SHARED FRAME HASHES:
@@ -1128,16 +1125,14 @@ def video_near_dups(
     defaults here stay recall-maximal so small-corpus results are
     complete.
 
-    ``materialize=True`` (default — the phash cadence, and here it
-    matters most: video DECODE is the dominant cost, and the self-join
-    reads the hash table twice, so lazily it would demux+hash every
-    clip once PER SIDE): the distinct frame-hash table is persisted
-    for the join and the (small) pair set returns as a releasable
-    eager checkpoint (``util.release_result``). ``materialize=False``
-    returns the lazy plan — nothing pinned, double decode per action.
-    ``frame_hashes`` supplies a precomputed ``video_frame_hashes``
-    table, skipping the decode pass; its lifecycle then belongs to
-    the caller, so the internal persist is skipped.
+    The distinct frame-hash table is persisted for the join (video
+    DECODE is the dominant cost, and the self-join reads the hash
+    table twice, so lazily it would demux+hash every clip once PER
+    SIDE) and the (small) pair set returns as a releasable eager
+    checkpoint (``util.release_result``). ``frame_hashes`` supplies a
+    precomputed ``video_frame_hashes`` table, skipping the decode
+    pass; its lifecycle then belongs to the caller, so the internal
+    persist is skipped.
     """
     if min_shared < 1:
         raise ValueError(f"min_shared ({min_shared}) must be >= 1")
@@ -1147,7 +1142,7 @@ def video_near_dups(
         else video_frame_hashes(blobs, demuxer=demuxer, hasher=hasher)
     )
     fh = src.select("doc_id", "fhash").distinct()
-    own = materialize and frame_hashes is None
+    own = frame_hashes is None
     if own:
         fh = fh.persist()
     try:
@@ -1172,7 +1167,7 @@ def video_near_dups(
             .agg(F.count(F.lit(1)).alias("shared_frames"))
             .filter(F.col("shared_frames") >= min_shared)
         )
-        return out.localCheckpoint(eager=True) if materialize else out
+        return out.localCheckpoint(eager=True)
     finally:
         if own:
             fh.unpersist()

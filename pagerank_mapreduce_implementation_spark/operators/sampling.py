@@ -170,16 +170,16 @@ def stratified_weighted_sample(
     )
 
 
-def _source_token_totals(staged: DataFrame, source_col: str) -> "dict[str, int]":
+def _source_token_totals(staged: DataFrame) -> "dict[str, int]":
     """Collect per-source whitespace-token totals for the mixers,
     FAIL-LOUD on the two inputs that used to crash deep inside the
     allocation math (review finding): a NULL source key (None cannot
     sort against str and cannot take a budget) and a source whose
     every doc has NULL text (its token sum is NULL -> int(None))."""
-    trows = staged.groupBy(source_col).agg(F.sum("__nt").alias("__T")).collect()
+    trows = staged.groupBy("source").agg(F.sum("__nt").alias("__T")).collect()
     if any(r[0] is None for r in trows):
         raise ValueError(
-            f"{source_col} contains NULL — filter or impute source keys "
+            "source contains NULL — filter or impute source keys "
             "before mixing (a NULL source cannot take a budget)"
         )
     no_text = sorted(r[0] for r in trows if r["__T"] is None)
@@ -255,7 +255,7 @@ def mix_sources(docs: DataFrame, target_props: dict[str, float]) -> DataFrame:
         raise ValueError("target proportions must be positive")
     toks = F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != ""))
     staged = docs.withColumn("__nt", toks.cast("long"))
-    totals = _source_token_totals(staged, "source")
+    totals = _source_token_totals(staged)
     missing = sorted(set(target_props) - set(totals))
     if missing:
         raise ValueError(
@@ -504,7 +504,6 @@ def unimax_mix(
     docs: DataFrame,
     total_budget: float,
     epoch_cap: float = 1.0,
-    source_col: str = "source",
     return_alloc: bool = False,
 ) -> DataFrame:
     """UniMax mixture sampling (Chung et al. 2023): allocate a total
@@ -538,7 +537,7 @@ def unimax_mix(
         raise ValueError(f"epoch_cap ({epoch_cap}) must be positive")
     toks = F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != ""))
     staged = docs.withColumn("__nt", toks.cast("long"))
-    totals = _source_token_totals(staged, source_col)
+    totals = _source_token_totals(staged)
     alloc = _unimax_waterfall(totals, total_budget, epoch_cap)
     if return_alloc:
         return spark.createDataFrame(
@@ -546,14 +545,14 @@ def unimax_mix(
                 (s, int(t), round(b, 6), round(min(b / t, 1.0) if t else 0.0, 6))
                 for s, t, b in alloc
             ],
-            f"{source_col} string, n_tokens long, budget double, keep_rate double",
+            "source string, n_tokens long, budget double, keep_rate double",
         )
     rates = spark.createDataFrame(
         [(s, t, b) for s, t, b in alloc],
-        f"{source_col} string, __T double, __b double",
+        "source string, __T double, __b double",
     )
     return (
-        staged.join(F.broadcast(rates), source_col)
+        staged.join(F.broadcast(rates), "source")
         .filter(
             _hash_uniform(F.col("doc_id"), "unimax:") * F.col("__T") < F.col("__b")
         )
@@ -590,7 +589,7 @@ def temperature_mix(
         raise ValueError(f"total_budget ({total_budget}) must be positive")
     toks = F.size(F.filter(F.split(F.col("text"), r"\s+"), lambda x: x != ""))
     staged = docs.withColumn("__nt", toks.cast("long"))
-    totals = _source_token_totals(staged, "source")
+    totals = _source_token_totals(staged)
 
     import math as _math
 
@@ -697,7 +696,6 @@ def curriculum_order(
     score_col: str,
     boundaries: list[float],
     n_buckets: int = 1024,
-    descending: bool = True,
 ) -> DataFrame:
     """Curriculum training order: ``(doc_id, stage, position)`` —
     docs are staged by explicit ``score_col`` thresholds and seeded-
@@ -705,8 +703,8 @@ def curriculum_order(
     by stage), so a loader reading positions 1..N sees the curriculum:
     all of stage 0 in random order, then stage 1, ... The staging rule
     is ``stage = #{b in boundaries : score >= b}`` re-indexed so stage
-    0 trains first — ``descending=True`` (default) puts the HIGHEST
-    scores first (quality-descending curricula); thresholds are plain
+    0 holds the HIGHEST scores and trains first (quality-descending
+    curricula); thresholds are plain
     IEEE comparisons, so the assignment is cross-engine exact with no
     quantile sort (a global ntile would cost exactly the corpus-wide
     sort this operator exists to avoid — callers wanting quantile
@@ -736,7 +734,7 @@ def curriculum_order(
     raw = sum(
         F.when(F.col(score_col) >= F.lit(b), 1).otherwise(0) for b in bs
     )
-    stage = (F.lit(n_stages - 1) - raw) if descending else raw
+    stage = F.lit(n_stages - 1) - raw
     salt = "curriculum:"
     staged = docs.select(
         "doc_id",

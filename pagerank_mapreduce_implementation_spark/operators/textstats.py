@@ -707,35 +707,23 @@ def oov_stats(docs: DataFrame, top_k: int = 1000) -> DataFrame:
 GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 
-def gopher_rules(
-    docs: DataFrame,
-    keep_cols: tuple = (),
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_ratio: float = 0.9,
-    max_ellipsis_ratio: float = 0.3,
-    min_alpha_word_ratio: float = 0.8,
-    min_stopword_hits: int = 2,
-) -> DataFrame:
+def gopher_rules(docs: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """The Gopher document-quality rule set (Rae et al. 2021,
     Appendix A — the published filter battery most large text
     pipelines start from), as ONE zero-shuffle pass of pure column
     expressions: ``(doc_id, [keep_cols...], n_words, mean_word_len,
     symbol_ratio, bullet_ratio, ellipsis_ratio, alpha_word_ratio,
-    stopword_hits, keep)`` with ``keep`` the conjunction of all
-    bounds (defaults = the paper's):
+    stopword_hits, keep)`` with ``keep`` the conjunction of the
+    paper's bounds:
 
-    - ``min_words <= n_words <= max_words``
-    - mean word length in ``[min_mean_word_len, max_mean_word_len]``
-    - symbol-to-word ratio (``#`` and ``...``) ``<= max_symbol_ratio``
-    - ``<= max_bullet_ratio`` of lines starting with a bullet
+    - ``50 <= n_words <= 100,000``
+    - mean word length in ``[3, 10]``
+    - symbol-to-word ratio (``#`` and ``...``) ``<= 0.1``
+    - ``<= 0.9`` of lines starting with a bullet
       (``-``, ``*``, or the bullet glyph)
-    - ``<= max_ellipsis_ratio`` of lines ending with ``...``
-    - ``>= min_alpha_word_ratio`` of words containing a letter
-    - ``>= min_stopword_hits`` DISTINCT GOPHER_STOPWORDS present
+    - ``<= 0.3`` of lines ending with ``...``
+    - ``>= 0.8`` of words containing a letter
+    - ``>= 2`` DISTINCT GOPHER_STOPWORDS present
       (the paper's "at least two of the following words" — a doc
       repeating one stopword counts it once)
 
@@ -830,15 +818,15 @@ def gopher_rules(
         stop_hits.alias("stopword_hits"),
     )
     keep = (
-        (F.col("n_words") >= min_words)
-        & (F.col("n_words") <= max_words)
-        & (F.col("mean_word_len") >= min_mean_word_len)
-        & (F.col("mean_word_len") <= max_mean_word_len)
-        & (F.col("symbol_ratio") <= max_symbol_ratio)
-        & (F.col("bullet_ratio") <= max_bullet_ratio)
-        & (F.col("ellipsis_ratio") <= max_ellipsis_ratio)
-        & (F.col("alpha_word_ratio") >= min_alpha_word_ratio)
-        & (F.col("stopword_hits") >= min_stopword_hits)
+        (F.col("n_words") >= 50)
+        & (F.col("n_words") <= 100_000)
+        & (F.col("mean_word_len") >= 3.0)
+        & (F.col("mean_word_len") <= 10.0)
+        & (F.col("symbol_ratio") <= 0.1)
+        & (F.col("bullet_ratio") <= 0.9)
+        & (F.col("ellipsis_ratio") <= 0.3)
+        & (F.col("alpha_word_ratio") >= 0.8)
+        & (F.col("stopword_hits") >= 2)
     )
     return out.withColumn("keep", keep)
 
@@ -847,10 +835,7 @@ def c4_rules(
     docs: DataFrame,
     keep_cols: tuple = (),
     min_words_per_line: int = 3,
-    min_sentences: int = 5,
     bad_words: tuple = (),
-    drop_needles: tuple = ("lorem ipsum", "{"),
-    line_drop_needle: str = "javascript",
 ) -> DataFrame:
     """The C4 cleaning heuristics (Raffel et al. 2020 §2.2 — the
     line-level half of the published-filter canon; ``gopher_rules`` is
@@ -862,18 +847,17 @@ def c4_rules(
     - ends in a terminal punctuation mark (``.``, ``!``, ``?``, or a
       closing quote after one) — trailing whitespace ignored;
     - has >= ``min_words_per_line`` whitespace words;
-    - does not contain ``line_drop_needle`` (paper: the word
-      "Javascript" — matched case-insensitively as a substring, the
-      common public reading).
+    - does not contain the word "javascript" (the paper's rule,
+      matched case-insensitively as a substring, the common public
+      reading).
 
     Page level (``keep``):
-    - >= ``min_sentences`` surviving lines (each surviving line ends
-      in terminal punctuation, so surviving-line count is this
-      implementation's sentence count — documented proxy; the paper
-      counts sentences, splitting on the same marks);
-    - none of ``drop_needles`` occur in the ORIGINAL text, matched
-      case-insensitively ("lorem ipsum" and the curly brace per the
-      paper);
+    - >= 5 surviving lines (each surviving line ends in terminal
+      punctuation, so surviving-line count is this implementation's
+      sentence count — documented proxy; the paper counts sentences,
+      splitting on the same marks);
+    - neither "lorem ipsum" nor the curly brace occurs in the ORIGINAL
+      text, matched case-insensitively (the paper's page rules);
     - no word of ``bad_words`` occurs (case-insensitive whole-word).
       The paper uses an external blocklist; none ships here, so the
       default is empty — pass your own.
@@ -891,8 +875,6 @@ def c4_rules(
         raise ValueError(
             f"min_words_per_line ({min_words_per_line}) must be >= 1"
         )
-    if min_sentences < 0:
-        raise ValueError(f"min_sentences ({min_sentences}) must be >= 0")
     kept_cols = [F.col(c) if isinstance(c, str) else c for c in keep_cols]
 
     term = r'[.!?]["’”]?\s*$'
@@ -903,13 +885,13 @@ def c4_rules(
     survives = lambda ln: (  # noqa: E731
         ln.rlike(term)
         & (n_words(ln) >= min_words_per_line)
-        & ~F.contains(F.lower(ln), F.lit(line_drop_needle.lower()))
+        & ~F.contains(F.lower(ln), F.lit("javascript"))
     )
     kept_lines = F.filter(lines, survives)
     lowered = F.lower(F.col("text"))
-    page_ok = F.size(kept_lines) >= min_sentences
-    for needle in drop_needles:
-        page_ok = page_ok & ~F.contains(lowered, F.lit(needle.lower()))
+    page_ok = F.size(kept_lines) >= 5
+    for needle in ("lorem ipsum", "{"):
+        page_ok = page_ok & ~F.contains(lowered, F.lit(needle))
     if bad_words:
         words = F.transform(
             F.filter(F.split(lowered, r"\s+"), lambda w: w != ""),
@@ -938,14 +920,7 @@ GOPHER_DUP_NGRAM_CAPS: tuple = (
 )
 
 
-def gopher_repetition(
-    docs: DataFrame,
-    keep_cols: tuple = (),
-    max_dup_line_frac: float = 0.30,
-    max_dup_line_char_frac: float = 0.20,
-    top_ngram_caps: tuple = GOPHER_TOP_NGRAM_CAPS,
-    dup_ngram_caps: tuple = GOPHER_DUP_NGRAM_CAPS,
-) -> DataFrame:
+def gopher_repetition(docs: DataFrame, keep_cols: tuple = ()) -> DataFrame:
     """The Gopher REPETITION rule set (Rae et al. 2021, Table A1 —
     the within-doc half of the published battery; ``gopher_rules``
     covers the quality half): per doc,
@@ -954,20 +929,22 @@ def gopher_repetition(
       (trimmed, nonblank) line / total such lines;
     - ``dup_line_char_frac``: characters of those beyond-first line
       occurrences / characters of all such lines;
-    - ``top_{n}gram_char_frac`` (n per ``top_ngram_caps``): the most
-      frequent n-gram's ``count * length(gram)`` over ``length(text)``
+    - ``top_{n}gram_char_frac`` (n per ``GOPHER_TOP_NGRAM_CAPS``): the
+      most frequent n-gram's ``count * length(gram)`` over ``length(text)``
       — 0.0 when the top count is 1 (a gram seen once is not
       repetition); ties break to the lexicographically smallest gram.
       Self-overlapping grams ("spam spam spam...") can push this
       above 1.0 — the standard public count×len formula, kept as-is
       so thresholds mean what the paper's do;
-    - ``dup_{n}gram_char_frac`` (n per ``dup_ngram_caps``): characters
-      of tokens covered by ANY occurrence of an n-gram appearing >= 2
-      times, counted once per token (overlap-safe position marking,
-      the standard public reading), over total token characters;
-    - ``keep``: every fraction <= its cap (int 0/1), fractions
-      rounded-6 BEFORE comparison (the cross-engine-exact verdict
-      convention of ``gopher_rules``).
+    - ``dup_{n}gram_char_frac`` (n per ``GOPHER_DUP_NGRAM_CAPS``):
+      characters of tokens covered by ANY occurrence of an n-gram
+      appearing >= 2 times, counted once per token (overlap-safe
+      position marking, the standard public reading), over total
+      token characters;
+    - ``keep``: every fraction <= its cap (0.30 and 0.20 for the two
+      line fractions, the ``GOPHER_*_NGRAM_CAPS`` entry for a gram
+      fraction; int 0/1), fractions rounded-6 BEFORE comparison (the
+      cross-engine-exact verdict convention of ``gopher_rules``).
 
     Empty docs report zeros and keep=1 — absence of text is the
     quality battery's business, not repetition's.
@@ -981,8 +958,8 @@ def gopher_repetition(
     is null-safe ``get`` — no ANSI out-of-bounds paths on short docs.
     """
     metrics = ["dup_line_frac", "dup_line_char_frac"]
-    metrics += [f"top_{n}gram_char_frac" for n, _ in top_ngram_caps]
-    metrics += [f"dup_{n}gram_char_frac" for n, _ in dup_ngram_caps]
+    metrics += [f"top_{n}gram_char_frac" for n, _ in GOPHER_TOP_NGRAM_CAPS]
+    metrics += [f"dup_{n}gram_char_frac" for n, _ in GOPHER_DUP_NGRAM_CAPS]
     _check_keep_cols(
         [c for c in keep_cols if isinstance(c, str)],
         set(metrics) | {"keep"},
@@ -1055,7 +1032,7 @@ def gopher_repetition(
             lambda i: F.array_join(F.slice("__toks", i, n), " "),
         )
 
-    for n, _cap in top_ngram_caps:
+    for n, _cap in GOPHER_TOP_NGRAM_CAPS:
         gs = F.array_sort(grams_of(n))
         # left fold over the sorted grams; strict > keeps the FIRST
         # (lexicographically smallest) maximal run on ties
@@ -1092,7 +1069,7 @@ def gopher_repetition(
         out_cols.append(r6(frac).alias(f"top_{n}gram_char_frac"))
 
     tok_chars = isum(F.transform("__toks", F.length))
-    for n, _cap in dup_ngram_caps:
+    for n, _cap in GOPHER_DUP_NGRAM_CAPS:
         gname, sgname, dpname = f"__g{n}", f"__sg{n}", f"__dp{n}"
         # Every intermediate lands in its OWN column: an expression
         # referenced inside a higher-order-function lambda is
@@ -1167,14 +1144,9 @@ def gopher_repetition(
             r6(safe_div(covered, tok_chars)).alias(f"dup_{n}gram_char_frac")
         )
 
-    caps = dict(
-        [
-            ("dup_line_frac", max_dup_line_frac),
-            ("dup_line_char_frac", max_dup_line_char_frac),
-        ]
-        + [(f"top_{n}gram_char_frac", cap) for n, cap in top_ngram_caps]
-        + [(f"dup_{n}gram_char_frac", cap) for n, cap in dup_ngram_caps]
-    )
+    caps = {"dup_line_frac": 0.30, "dup_line_char_frac": 0.20}
+    caps.update((f"top_{n}gram_char_frac", c) for n, c in GOPHER_TOP_NGRAM_CAPS)
+    caps.update((f"dup_{n}gram_char_frac", c) for n, c in GOPHER_DUP_NGRAM_CAPS)
     res = staged.select("doc_id", *[F.col(c) if isinstance(c, str) else c for c in keep_cols], *out_cols)
     keep_expr = F.lit(True)
     for m, cap in caps.items():
@@ -1548,7 +1520,6 @@ def trigram_lm_scores(docs: DataFrame, add_k: float = 1.0) -> DataFrame:
 
 def mad_outliers(
     docs: DataFrame,
-    group_col: str = "source",
     cutoff: float = 3.0,
     side: str = "both",
 ) -> DataFrame:
@@ -1579,11 +1550,7 @@ def mad_outliers(
     """
     if side not in ("both", "low", "high"):
         raise ValueError(f"side must be 'both', 'low' or 'high', got {side!r}")
-    scores = docs.select(
-        "doc_id",
-        F.col(group_col).alias("source"),
-        F.col("quality").alias("score"),
-    )
+    scores = docs.select("doc_id", "source", F.col("quality").alias("score"))
     med = scores.groupBy("source").agg(
         F.percentile("score", F.lit(0.5)).alias("__med")
     )
@@ -1755,10 +1722,10 @@ DEFAULT_TAXONOMY: dict = {
 }
 
 
-def classify_domains(docs: DataFrame, taxonomy: dict | None = None) -> DataFrame:
+def classify_domains(docs: DataFrame) -> DataFrame:
     """Rule-based topical classification — one row per doc:
     ``(doc_id, domain, hits, total_hits, confidence)`` — the
-    keyword-taxonomy bucketing a mixture pipeline uses when sources
+    ``DEFAULT_TAXONOMY`` keyword bucketing a mixture pipeline uses when sources
     don't align with topics (curated mixtures re-balance by DOMAIN —
     code/web/reference/dialog — not by crawl source; a keyword pass is
     the classic cheap first cut before a trained classifier exists).
@@ -1778,12 +1745,7 @@ def classify_domains(docs: DataFrame, taxonomy: dict | None = None) -> DataFrame
     big enough to blow plan size belong in a broadcast-joined keyword
     table instead; at the tens-of-domains scale this form wins.
     """
-    tax = taxonomy if taxonomy is not None else DEFAULT_TAXONOMY
-    if not tax:
-        raise ValueError("classify_domains: taxonomy must be non-empty")
-    for d, kws in tax.items():
-        if not kws:
-            raise ValueError(f"classify_domains: domain {d!r} has no keywords")
+    tax = DEFAULT_TAXONOMY
     toks = F.transform(_tokens(), lambda w: F.lower(w))
     staged = docs.select("doc_id", toks.alias("__t"))
     hit = lambda kws: F.size(  # noqa: E731
@@ -1844,9 +1806,9 @@ def classify_domains(docs: DataFrame, taxonomy: dict | None = None) -> DataFrame
     )
 
 
-def zipf_fit(docs: DataFrame, top_k: int = 100, group_col: str = "source") -> DataFrame:
-    """Rank-frequency (Zipf) audit per group — one row per ``group_col``
-    value: ``(<group_col>, n_tokens, n_types, hapax_ratio, zipf_slope,
+def zipf_fit(docs: DataFrame, top_k: int = 100) -> DataFrame:
+    """Rank-frequency (Zipf) audit per source — one row per ``source``
+    value: ``(source, n_tokens, n_types, hapax_ratio, zipf_slope,
     zipf_intercept, zipf_r2)``. Natural text follows Zipf's law with a
     log-log rank-frequency slope near -1 (Zipf 1949; Piantadosi 2014
     for the modern survey); corpus-QA uses the fitted slope and r² as a
@@ -1887,7 +1849,7 @@ def zipf_fit(docs: DataFrame, top_k: int = 100, group_col: str = "source") -> Da
     if top_k < 2:
         raise ValueError(f"top_k ({top_k}) must be >= 2 to fit a line")
     tok = docs.select(
-        F.col(group_col).alias("__g"),
+        F.col("source").alias("__g"),
         F.explode(F.split(F.col("text"), r"\s+")).alias("word"),
     ).filter(F.col("word") != "")
     wc = tok.groupBy("__g", "word").agg(F.count(F.lit(1)).alias("cnt"))
@@ -1940,7 +1902,7 @@ def zipf_fit(docs: DataFrame, top_k: int = 100, group_col: str = "source") -> Da
     return (
         stats.join(fitted, "__g")
         .select(
-            F.col("__g").alias(group_col),
+            F.col("__g").alias("source"),
             "n_tokens",
             "n_types",
             "hapax_ratio",
@@ -1955,7 +1917,6 @@ def blocklist_hits(
     docs: DataFrame,
     blocklist: list,
     max_hit_ratio: float = 0.0,
-    lowercase: bool = True,
     keep_cols: tuple = (),
     flag_only: bool = False,
 ) -> DataFrame:
@@ -1972,7 +1933,7 @@ def blocklist_hits(
     keep_cols without an ambiguous-reference collision.
 
     Matching is exact whole-token equality over the whitespace
-    tokenizer (the doc-pipeline convention), lowercased by default —
+    tokenizer (the doc-pipeline convention), lowercased on both sides —
     NOT substring search, which is the classic Scunthorpe false-positive
     trap. Obfuscation-resistant variants belong in the blocklist
     itself (the curation knob), not in a looser matcher.
@@ -1989,16 +1950,13 @@ def blocklist_hits(
         raise ValueError("blocklist_hits needs a non-empty blocklist")
     if not 0.0 <= max_hit_ratio <= 1.0:
         raise ValueError(f"max_hit_ratio ({max_hit_ratio}) must be in [0, 1]")
-    words = [w.lower() for w in blocklist] if lowercase else list(blocklist)
-    words = list(dict.fromkeys(words))
+    words = list(dict.fromkeys(w.lower() for w in blocklist))
     blk = F.array(*[F.lit(w) for w in words])
     from pagerank_mapreduce_implementation_spark.operators.dedup import (
         tokens_null_safe,
     )
 
-    toks = tokens_null_safe(F.col("text"))
-    if lowercase:
-        toks = F.transform(toks, lambda w: F.lower(w))
+    toks = F.transform(tokens_null_safe(F.col("text")), lambda w: F.lower(w))
     feature_out = () if flag_only else (
         "n_tokens", "n_hits", "n_distinct_hits", "hit_ratio"
     )

@@ -165,7 +165,6 @@ def run_pagerank(
     spark: SparkSession,
     input_path: str,
     output_path: str,
-    single_file: bool = False,
 ) -> DataFrame:
     """The reference's main pipeline, end to end (PageRank.java:53-327).
 
@@ -178,10 +177,9 @@ def run_pagerank(
        ``url \\t rank`` text (pageRankSortJob, :252-306)
 
     Returns the sorted rank DataFrame (also written to
-    ``output_path``). ``single_file=True`` mirrors the reference's
-    1-reducer sort output exactly (one part file) — fine for a rank
-    vector, but leave False at scale and rely on range-partitioned
-    part files, which concatenate in global order.
+    ``output_path``). Where the reference sorts in one reducer (one
+    part file), the output here is range-partitioned part files, which
+    concatenate in global order.
     """
     lines = read_text_lines(spark, input_path)
     # O5 count-all: the reference tests the RAW line for emptiness (no
@@ -206,8 +204,6 @@ def run_pagerank(
     finally:
         pages.unpersist()
     out = graph.rank_descending(ranks)
-    if single_file:
-        out = out.coalesce(1)
     write_text_kv(out, output_path, "url", "rank")
     return out
 
@@ -217,7 +213,6 @@ def tfidf_search_rank(
     input_path: str,
     output_path: str,
     terms: list[str],
-    single_file: bool = False,
 ) -> DataFrame:
     """The jar's document pipeline, end to end: ``TermFrequency`` ->
     ``TFIDF`` -> ``Search <terms>`` -> ``Rank``.
@@ -246,10 +241,7 @@ def tfidf_search_rank(
     scored = text.search_ranked(
         lines, terms, total_docs=total_docs, pattern=text.TOKEN_BOUNDARY_RE
     )
-    out = scored
-    if single_file:
-        out = out.coalesce(1)
-    write_text_kv(out, output_path, "doc_id", "score")
+    write_text_kv(scored, output_path, "doc_id", "score")
     return scored
 
 
@@ -266,36 +258,30 @@ def clean_corpus(
     ngram: int = 5,
     contamination_ngram: int = 8,
     contamination_threshold: float = 0.01,
-    cc_max_iters: int = 20,
     sample_scale: float | None = None,
     signature_store: str | None = None,
     substring_k: int | None = None,
     substring_min_len: int = 20,
-    substring_max_gram_df: int | None = None,
-    gopher: bool | dict = False,
-    gopher_rep: bool | dict = False,
-    c4: bool | dict = False,
-    encoding_gate: bool | dict = False,
-    blocklist: "list | dict | None" = None,
-    intra_line_dedup: bool | dict = False,
-    line_dedup: bool | dict = False,
+    gopher: bool = False,
+    gopher_rep: bool = False,
+    c4: bool = False,
+    encoding_gate: bool = False,
+    blocklist: list | None = None,
+    intra_line_dedup: bool = False,
+    line_dedup: bool = False,
     embeddings: DataFrame | None = None,
     semantic_threshold: float = 0.95,
     semantic_cells: int = 16,
     semantic_iters: int = 2,
-    semantic_keep: str = "centroid_far",
     min_char_entropy: float | None = None,
     max_char_entropy: float | None = None,
     source_top_frac: float | None = None,
-    source_col: str = "source",
     dsir_target: DataFrame | None = None,
     dsir_k: int | None = None,
-    dsir_buckets: int = 1024,
     unimax_budget: float | None = None,
     unimax_epoch_cap: float = 1.0,
     mad_cutoff: float | None = None,
     min_flesch: float | None = None,
-    max_fk_grade: float | None = None,
     max_oov_ratio: float | None = None,
     oov_top_k: int = 1000,
     zipf_bands: dict | None = None,
@@ -317,26 +303,22 @@ def clean_corpus(
     1b. Gopher rule battery (textstats.gopher_rules, Rae et al. 2021)
        when ``gopher`` is truthy — drops docs failing the published
        word-count / word-length / symbol / bullet / ellipsis / alpha /
-       stopword bounds in one zero-shuffle pass; pass a dict to
-       override individual thresholds (forwarded as kwargs)
+       stopword bounds in one zero-shuffle pass
     0b. encoding-health gate (textstats.encoding_qa) when
        ``encoding_gate`` is truthy — drops docs carrying U+FFFD
        replacement chars, C0 controls, UTF-8-as-Latin-1 mojibake
        digraphs, or a sub-threshold ascii ratio in one zero-shuffle
-       pass BEFORE any tokenizer-dependent stage sees the bytes; dict
-       form forwards kwargs (``min_ascii_ratio``)
+       pass BEFORE any tokenizer-dependent stage sees the bytes
     1c. C4 heuristics (textstats.c4_rules, Raffel et al. 2020) when
        ``c4`` is truthy — pages failing the C4 verdict drop AND kept
        pages are REWRITTEN to their surviving lines (terminal-punct /
        min-words / javascript line rules), so every later stage sees
-       the cleaned text; dict form forwards kwargs
+       the cleaned text
     1d. blocklist policy filter (textstats.blocklist_hits, the C4
        bad-words stage) when ``blocklist`` is set — a word LIST flags
        any doc whose round(6) token hit-ratio exceeds 0 (exact
-       whole-token matching, lowercased); a dict form forwards kwargs
-       (``{"blocklist": [...], "max_hit_ratio": 0.05}``). Runs after
-       the C4 line rewrite so the policy sees the text that will
-       actually survive
+       whole-token matching, lowercased). Runs after the C4 line
+       rewrite so the policy sees the text that will actually survive
     2. quality floor (textstats.quality_scores composite)
     3. repetition cap (textstats.repetition_ratio) when
        ``max_repetition`` set — drops boilerplate/generated spam
@@ -345,7 +327,7 @@ def clean_corpus(
        drops docs failing the published dup-line / top-gram /
        dup-gram caps in one zero-shuffle pass (the within-doc
        repetition rules; ``max_repetition`` stays as the single-knob
-       alternative); dict form forwards kwargs
+       alternative)
     3b. unigram-LM surprisal cap (textstats.lm_scores) when ``max_nll``
        set — drops off-distribution outliers the stopword/length
        heuristics miss (the perplexity-style filter; scored against the
@@ -362,17 +344,17 @@ def clean_corpus(
        where a global floor (``min_quality``) cannot adapt to
        per-source score distributions, and median/MAD hold still
        under the very contamination being removed
-    3c3. readability band (textstats.readability_scores, Flesch 1948 /
-       Kincaid et al. 1975) when ``min_flesch`` / ``max_fk_grade``
-       set — drops the complexity extremes the length/punct composite
-       cannot see, zero-shuffle; wordless docs fail any bound
+    3c3. readability floor (textstats.readability_scores, Flesch 1948)
+       when ``min_flesch`` set — drops docs whose Flesch reading ease
+       falls below it, the complexity extreme the length/punct
+       composite cannot see, zero-shuffle; wordless docs fail it
     3c4. out-of-vocabulary cap (textstats.oov_stats) when
        ``max_oov_ratio`` set — drops docs whose fraction of tokens
        outside the surviving corpus' own ``oov_top_k`` head
        vocabulary exceeds the cap (gibberish / code-in-prose /
        wrong-language spikes)
     3c5. WHOLE-SOURCE Zipf health gate (textstats.zipf_fit) when
-       ``zipf_bands`` set — drops every doc of a ``source_col`` group
+       ``zipf_bands`` set — drops every doc of a ``source`` group
        whose rank-frequency curve over the surviving corpus fails the
        bands (dict keys: ``min_slope``/``max_slope``/``min_r2``/
        ``min_hapax``/``max_hapax``, plus ``top_k`` for the fit head).
@@ -382,7 +364,7 @@ def clean_corpus(
        band. One word-count shuffle + a groups-sized left_semi
     3d. PROPORTIONAL per-source quota (sampling.top_fraction_per_group)
        when ``source_top_frac`` set — keeps the best
-       ceil(frac·group_size) docs of EVERY ``source_col`` group by the
+       ceil(frac·group_size) docs of EVERY ``source`` group by the
        quality_scores composite, scaling with the source where an
        absolute k would not; one group-key shuffle, deterministic cut
     4. benchmark decontamination (contamination.decontaminate) when
@@ -391,12 +373,11 @@ def clean_corpus(
        the RefinedWeb intra-document pass) when ``intra_line_dedup``
        is truthy — zero-shuffle, runs before the corpus-global pass
        (a page's own chorus lines vanish without spending corpus-wide
-       key cardinality on them); dict forwards kwargs
+       key cardinality on them)
     4b. corpus-wide repeated-LINE removal (dedup.line_dedup, the
        CCNet keep-first boilerplate pass) when ``line_dedup`` is
        truthy — runs BEFORE document-level dedup so fingerprints and
-       signatures describe content, not shared nav-bars/banners; pass
-       a dict to forward kwargs (``sep``, ``min_line_chars``). Docs
+       signatures describe content, not shared nav-bars/banners. Docs
        losing no lines pass through byte-identical
     5. exact dedup — drop non-keepers by content fingerprint
     5a. exact-substring STRIP (dedup.strip_substring_runs, Lee et al.
@@ -444,8 +425,8 @@ def clean_corpus(
        ``embeddings`` frame is supplied (ids in ``vec_id`` naming
        ``doc_id``) — k-means-cluster-bounded cosine pairs over the
        SURVIVORS' embeddings (restricted first, so already-dropped
-       docs can't evict a live one), victims per ``semantic_keep``
-       (the paper's ``centroid_far`` default or ``min_id``). Catches
+       docs can't evict a live one), victims by the paper's
+       ``centroid_far`` rule. Catches
        paraphrase-level redundancy no lexical stage sees
     7. deterministic importance downsampling (sampling.weighted_sample,
        weight = byte length, p = min(1, bytes/sample_scale)) when
@@ -468,8 +449,8 @@ def clean_corpus(
     8. survivors written to ``output_path`` (parquet, overwrite)
 
     Returns the surviving docs read back from ``output_path``.
-    ``cc_max_iters`` bounds the cluster label propagation (raised
-    loudly on non-convergence — deep dup chains need a higher value).
+    The cluster label propagation runs at most ``connected_components``'
+    default 20 rounds (raised loudly on non-convergence).
     Each stage is lazy;
     the only materializations are the two dedup passes' internal
     checkpoints. At 100 TB every stage is a narrow transform or a
@@ -495,485 +476,344 @@ def clean_corpus(
     # every RDD the pipeline pinned once the writes land
     rdds_before = persistent_rdd_ids(spark)
     try:
-        return _clean_corpus_body(
-            spark=spark,
-            input_path=input_path,
-            output_path=output_path,
-            lang=lang,
-            min_quality=min_quality,
-            max_repetition=max_repetition,
-            max_nll=max_nll,
-            bench_docs=bench_docs,
-            near_dup_threshold=near_dup_threshold,
-            ngram=ngram,
-            contamination_ngram=contamination_ngram,
-            contamination_threshold=contamination_threshold,
-            cc_max_iters=cc_max_iters,
-            sample_scale=sample_scale,
-            signature_store=signature_store,
-            substring_k=substring_k,
-            substring_min_len=substring_min_len,
-            substring_max_gram_df=substring_max_gram_df,
-            gopher=gopher,
-            gopher_rep=gopher_rep,
-            c4=c4,
-            encoding_gate=encoding_gate,
-            blocklist=blocklist,
-            intra_line_dedup=intra_line_dedup,
-            line_dedup=line_dedup,
-            embeddings=embeddings,
-            semantic_threshold=semantic_threshold,
-            semantic_cells=semantic_cells,
-            semantic_iters=semantic_iters,
-            semantic_keep=semantic_keep,
-            min_char_entropy=min_char_entropy,
-            max_char_entropy=max_char_entropy,
-            source_top_frac=source_top_frac,
-            source_col=source_col,
-            dsir_target=dsir_target,
-            dsir_k=dsir_k,
-            dsir_buckets=dsir_buckets,
-            unimax_budget=unimax_budget,
-            unimax_epoch_cap=unimax_epoch_cap,
-            mad_cutoff=mad_cutoff,
-            min_flesch=min_flesch,
-            max_fk_grade=max_fk_grade,
-            max_oov_ratio=max_oov_ratio,
-            oov_top_k=oov_top_k,
-            zipf_bands=zipf_bands,
-            survivor_policy=survivor_policy,
-            normalize=normalize,
-            dedup=dedup,
-            textstats=textstats,
-            decontaminate=decontaminate,
-            connected_components=connected_components,
-        )
+        if survivor_policy not in ("min_id", "quality"):
+            raise ValueError(
+                f"survivor_policy must be 'min_id' or 'quality', got "
+                f"{survivor_policy!r}"
+            )
+        if (dsir_target is None) != (dsir_k is None):
+            raise ValueError(
+                "dsir_target and dsir_k must be set together — a target "
+                "with no budget (or a budget with no target) has no "
+                "defined selection"
+            )
+        docs = spark.read.parquet(input_path)
+        if normalize:
+            form = normalize if isinstance(normalize, str) else "NFC"
+            carry = [c for c in docs.columns if c not in ("doc_id", "text")]
+            docs = textstats.normalize_text(
+                docs, form=form, keep_cols=tuple(carry)
+            ).select("doc_id", F.col("clean_text").alias("text"), *carry)
+        # Stages 1-3 score PER-ROW features; keep_cols rides the full row
+        # through each scoring pass so the verdict never needs a
+        # corpus-vs-corpus doc_id join back (three joins saved — at 100 TB
+        # those were the most expensive non-dedup steps in the program)
+        passthru = tuple(c for c in docs.columns if c != "doc_id")
+        if encoding_gate:
+            # stage 0b: encoding-health gate — zero-shuffle, BEFORE any
+            # tokenizer-dependent stage sees the bytes
+            docs = (
+                textstats.encoding_qa(docs, keep_cols=passthru, flag_only=True)
+                .filter(~F.col("flagged"))
+                .select("doc_id", *passthru)
+            )
+        if lang is not None:
+            docs = (
+                textstats.lang_id(docs, keep_cols=passthru)
+                .filter(F.col("pred_lang") == lang)
+                .select("doc_id", *passthru)
+            )
+        if gopher:
+            docs = (
+                textstats.gopher_rules(docs, keep_cols=passthru)
+                .filter(F.col("keep"))
+                .select("doc_id", *passthru)
+            )
+        if c4:
+            docs = (
+                textstats.c4_rules(docs, keep_cols=passthru)
+                .filter(F.col("keep") == 1)
+                .select(
+                    "doc_id",
+                    *[
+                        F.col("clean_text").alias(c) if c == "text" else F.col(c)
+                        for c in passthru
+                    ],
+                )
+            )
+        if blocklist is not None:
+            # stage 1d: wordlist policy drop — zero-shuffle, after the C4
+            # rewrite so the policy sees the surviving text
+            docs = (
+                textstats.blocklist_hits(
+                    docs, list(blocklist), keep_cols=passthru, flag_only=True
+                )
+                .filter(~F.col("flagged"))
+                .select("doc_id", *passthru)
+            )
+        if min_quality > 0.0:
+            docs = (
+                textstats.quality_scores(docs, keep_cols=passthru, score_only=True)
+                .filter(F.col("quality") >= min_quality)
+                .select("doc_id", *passthru)
+            )
+        if max_repetition is not None:
+            docs = (
+                textstats.repetition_ratio(docs, keep_cols=passthru)
+                .filter(F.col("repetition_ratio") <= max_repetition)
+                .select("doc_id", *passthru)
+            )
+        if gopher_rep:
+            docs = (
+                textstats.gopher_repetition(docs, keep_cols=passthru)
+                .filter(F.col("keep") == 1)
+                .select("doc_id", *passthru)
+            )
+        if max_nll is not None:
+            nll = textstats.lm_scores(spark.read.parquet(input_path)).select(
+                "doc_id", "nll"
+            )
+            docs = docs.join(nll, "doc_id").filter(F.col("nll") <= max_nll).drop("nll")
+        if min_char_entropy is not None or max_char_entropy is not None:
+            # stage 3c: compressibility band — zero-shuffle per-row fold
+            ent = textstats.entropy_stats(docs, keep_cols=passthru)
+            if min_char_entropy is not None:
+                ent = ent.filter(F.col("char_entropy") >= min_char_entropy)
+            if max_char_entropy is not None:
+                ent = ent.filter(F.col("char_entropy") <= max_char_entropy)
+            docs = ent.select("doc_id", *passthru)
+        if mad_cutoff is not None:
+            # stage 3c2: per-source low-side MAD outlier drop on the
+            # quality composite — two source-keyed median aggs + broadcast
+            # flag joins (exact medians; at few-huge-sources scale the
+            # operator docstring's percentile_approx swap keeps the shape)
+            if "source" not in docs.columns:
+                raise ValueError(
+                    "mad_cutoff needs a 'source' column in the corpus "
+                    f"(have: {docs.columns})"
+                )
+            scored = textstats.quality_scores(
+                docs, keep_cols=passthru, score_only=True
+            )
+            flagged = textstats.mad_outliers(scored, cutoff=mad_cutoff, side="low")
+            keep_ids = flagged.filter(~F.col("is_outlier")).select("doc_id")
+            docs = docs.join(keep_ids, "doc_id", "left_semi")
+        if min_flesch is not None:
+            # stage 3c3: readability floor (textstats.readability_scores)
+            # — zero-shuffle per-row regexp counts; docs with no words
+            # score NULL and fail it (no prose, no grade)
+            docs = (
+                textstats.readability_scores(docs, keep_cols=passthru)
+                .filter(F.col("flesch_reading_ease") >= min_flesch)
+                .select("doc_id", *passthru)
+            )
+        if max_oov_ratio is not None:
+            # stage 3c4: out-of-vocabulary cap (textstats.oov_stats) — the
+            # head vocabulary comes from the CURRENT surviving corpus; one
+            # corpus shuffle + broadcast vocab join, then the id-list
+            # left_semi (the mad_cutoff shape)
+            keep_ids = (
+                textstats.oov_stats(docs, top_k=oov_top_k)
+                .filter(F.col("oov_ratio") <= max_oov_ratio)
+                .select("doc_id")
+            )
+            docs = docs.join(keep_ids, "doc_id", "left_semi")
+        if zipf_bands:
+            # stage 3c5: whole-source Zipf health gate (textstats.zipf_fit)
+            # — the one SOURCE-level drop: template farms / synthetic dumps
+            # flunk as a whole source. One word-count shuffle over the
+            # surviving corpus + a groups-sized left_semi back.
+            allowed = {
+                "min_slope", "max_slope", "min_r2",
+                "min_hapax", "max_hapax", "top_k",
+            }
+            unknown = set(zipf_bands) - allowed
+            if unknown:
+                raise ValueError(
+                    f"zipf_bands: unknown keys {sorted(unknown)} "
+                    f"(allowed: {sorted(allowed)})"
+                )
+            if "source" not in docs.columns:
+                raise ValueError(
+                    "zipf_bands needs a 'source' column in the corpus "
+                    f"(have: {docs.columns})"
+                )
+            zf = textstats.zipf_fit(docs, top_k=zipf_bands.get("top_k", 100))
+            # NULL slope/r2 (a source too degenerate to fit) fails any
+            # slope/r2 band — SQL NULL comparison semantics, deliberate
+            import operator as _op
+
+            for key, col, cmp in (
+                ("min_slope", "zipf_slope", _op.ge),
+                ("max_slope", "zipf_slope", _op.le),
+                ("min_r2", "zipf_r2", _op.ge),
+                ("min_hapax", "hapax_ratio", _op.ge),
+                ("max_hapax", "hapax_ratio", _op.le),
+            ):
+                if key in zipf_bands:
+                    # native Column comparison (not SQL-string interp):
+                    # keeps NULL-fails semantics and survives inf/nan
+                    zf = zf.filter(cmp(F.col(col), F.lit(float(zipf_bands[key]))))
+            docs = docs.join(zf.select("source"), "source", "left_semi")
+        if source_top_frac is not None:
+            # stage 3d: proportional per-source quota on the composite
+            # quality score — one group-key shuffle, no join back
+            from pagerank_mapreduce_implementation_spark.operators.sampling import (
+                top_fraction_per_group,
+            )
+
+            if "source" not in docs.columns:
+                raise ValueError(
+                    "source_top_frac needs a 'source' column in the corpus "
+                    f"(have: {docs.columns})"
+                )
+            scored = textstats.quality_scores(
+                docs, keep_cols=passthru, score_only=True
+            )
+            docs = top_fraction_per_group(
+                scored, source_top_frac, "quality", "source"
+            ).select("doc_id", *passthru)
+        if bench_docs is not None:
+            docs = decontaminate(
+                docs,
+                bench_docs,
+                ngram=contamination_ngram,
+                threshold=contamination_threshold,
+            )
+
+        if intra_line_dedup:
+            docs = dedup.intra_doc_line_dedup(docs).drop("n_dropped_lines")
+
+        if line_dedup:
+            docs = dedup.line_dedup(docs).drop("n_dropped_lines")
+
+        exact = dedup.exact_dedup(docs).filter(F.col("is_dup") == 0).select("doc_id")
+        docs = docs.join(exact, "doc_id", "left_semi")
+
+        if substring_k is not None:
+            # stage 5a: cut shared verbatim passages out of the higher-id
+            # doc BEFORE the signature stages, so the minhash signatures
+            # (and the persisted store) describe the stripped text
+            docs = dedup.strip_substring_runs(
+                docs,
+                k=substring_k,
+                min_len=substring_min_len,
+            ).drop("n_stripped")
+
+        if signature_store is not None:
+            store_sigs = _read_parquet_or_none(spark, f"{signature_store}/sigs")
+            if store_sigs is not None:
+                store_sigs, store_bands = _validated_band_index(
+                    spark,
+                    signature_store,
+                    store_sigs,
+                    _read_parquet_or_none(spark, f"{signature_store}/bands"),
+                )
+                probe = dedup.incremental_minhash_dedup(
+                    docs,
+                    store_sigs,
+                    threshold=near_dup_threshold,
+                    ngram=ngram,
+                    seen_bands=store_bands,
+                )
+                # within-batch handling stays with the exact-verify cluster
+                # stage below; here only the cross-batch verdict applies
+                store_dups = probe.filter(F.col("dup_of_store") == 1).select("doc_id")
+                docs = docs.join(store_dups, "doc_id", "left_anti")
+
+        pairs = dedup.minhash_near_dups(
+            docs, threshold=near_dup_threshold, ngram=ngram
+        ).select("doc_a", "doc_b")
+        comps = connected_components(pairs, "doc_a", "doc_b")
+        # every clustered doc except its component's keeper is dropped;
+        # docs in no cluster survive untouched
+        if survivor_policy == "quality":
+            # the cluster_survivors policy, via the ONE shared argmax
+            # definition (dedup.cluster_winners)
+            member_q = comps.select(
+                F.col("vertex").alias("doc_id"),
+                F.col("component").alias("cluster_id"),
+            ).join(textstats.quality_scores(docs, score_only=True), "doc_id")
+            winners = dedup.cluster_winners(member_q)
+            drop = (
+                member_q.join(winners, "cluster_id")
+                .filter(F.col("doc_id") != F.col("__keeper"))
+                .select("doc_id")
+            )
+        else:
+            drop = comps.filter(F.col("vertex") != F.col("component")).select(
+                F.col("vertex").alias("doc_id")
+            )
+        survivors = docs.join(drop, "doc_id", "left_anti")
+        if embeddings is not None:
+            emb_live = embeddings.join(
+                survivors.select(F.col("doc_id").alias("vec_id")),
+                "vec_id",
+                "left_semi",
+            )
+            survivors = dedup.semdedup(
+                survivors,
+                emb_live,
+                n_cells=semantic_cells,
+                threshold=semantic_threshold,
+                n_iters=semantic_iters,
+                keep_rule="centroid_far",
+            )
+        if sample_scale is not None:
+            from pagerank_mapreduce_implementation_spark.operators.sampling import (
+                weighted_sample,
+            )
+
+            survivors = weighted_sample(
+                survivors.withColumn("__w", F.octet_length("text")),
+                "__w",
+                sample_scale,
+                "doc_id",
+            ).drop("__w")
+        if dsir_target is not None:
+            # stage 7b: target-aware DSIR budget — the selected-id set is
+            # k rows, a left_semi join back keeps the survivors' schema.
+            # The stage consumes survivors twice (gram counts + the join
+            # back), so cut the lineage first — otherwise every upstream
+            # filter stage re-runs per consumer; the caller's RDD-layer
+            # release frees the checkpoint after the write lands.
+            from pagerank_mapreduce_implementation_spark.operators.sampling import (
+                dsir_select,
+            )
+
+            survivors = survivors.localCheckpoint(eager=True)
+            chosen = dsir_select(
+                survivors, dsir_target, k=dsir_k
+            ).select("doc_id")
+            survivors = survivors.join(chosen, "doc_id", "left_semi")
+        if unimax_budget is not None:
+            # stage 7c: UniMax mixture shaping — runs on the final clean
+            # pool; one sources-sized agg collect + broadcast-join filter
+            # (the mix_sources shape), corpus never shuffles
+            from pagerank_mapreduce_implementation_spark.operators.sampling import (
+                unimax_mix,
+            )
+
+            survivors = unimax_mix(
+                survivors,
+                total_budget=unimax_budget,
+                epoch_cap=unimax_epoch_cap,
+            )
+        survivors.write.mode("overwrite").parquet(output_path)
+        # hand back the WRITTEN table, not the lazy plan: a consumer action
+        # on the plan would re-run lang-id + quality + both dedup passes —
+        # a second full corpus pass at scale — instead of one footer read
+        written = spark.read.parquet(output_path)
+        if signature_store is not None:
+            # append the batch survivors' signatures + band index, computed
+            # from the WRITTEN table (one footer read, no pipeline re-run);
+            # checkpoint so the signature aggregation runs once for both
+            # writes (the caller's RDD-layer release frees it). The two
+            # appends are NOT atomic together — sigs lands before bands, so
+            # a failure between them leaves signed-but-unbanded docs. That
+            # torn state is caught (and the index rebuilt from the sigs) by
+            # _validated_band_index before the NEXT batch's probe, so it
+            # can never silently pass a cross-batch duplicate.
+            new_sigs = dedup.minhash_signatures(
+                dedup.shingles(written, ngram)
+            ).localCheckpoint(eager=True)
+            new_sigs.write.mode("append").parquet(f"{signature_store}/sigs")
+            dedup.band_buckets(new_sigs).write.mode("append").parquet(
+                f"{signature_store}/bands"
+            )
+        return written
     finally:
         release_persistent_rdds_since(spark, rdds_before)
-
-
-def _clean_corpus_body(
-    *,
-    spark,
-    input_path,
-    output_path,
-    lang,
-    min_quality,
-    max_repetition,
-    max_nll,
-    bench_docs,
-    near_dup_threshold,
-    ngram,
-    contamination_ngram,
-    contamination_threshold,
-    cc_max_iters,
-    sample_scale,
-    signature_store,
-    substring_k,
-    substring_min_len,
-    substring_max_gram_df,
-    gopher,
-    gopher_rep,
-    c4,
-    encoding_gate,
-    blocklist,
-    intra_line_dedup,
-    line_dedup,
-    embeddings,
-    semantic_threshold,
-    semantic_cells,
-    semantic_iters,
-    semantic_keep,
-    min_char_entropy,
-    max_char_entropy,
-    source_top_frac,
-    source_col,
-    dsir_target,
-    dsir_k,
-    dsir_buckets,
-    unimax_budget,
-    unimax_epoch_cap,
-    mad_cutoff,
-    min_flesch,
-    max_fk_grade,
-    max_oov_ratio,
-    oov_top_k,
-    zipf_bands,
-    survivor_policy,
-    normalize,
-    dedup,
-    textstats,
-    decontaminate,
-    connected_components,
-) -> DataFrame:
-    if survivor_policy not in ("min_id", "quality"):
-        raise ValueError(
-            f"survivor_policy must be 'min_id' or 'quality', got "
-            f"{survivor_policy!r}"
-        )
-    if (dsir_target is None) != (dsir_k is None):
-        raise ValueError(
-            "dsir_target and dsir_k must be set together — a target "
-            "with no budget (or a budget with no target) has no "
-            "defined selection"
-        )
-    docs = spark.read.parquet(input_path)
-    if normalize:
-        form = normalize if isinstance(normalize, str) else "NFC"
-        carry = [c for c in docs.columns if c not in ("doc_id", "text")]
-        docs = textstats.normalize_text(
-            docs, form=form, keep_cols=tuple(carry)
-        ).select("doc_id", F.col("clean_text").alias("text"), *carry)
-    # Stages 1-3 score PER-ROW features; keep_cols rides the full row
-    # through each scoring pass so the verdict never needs a
-    # corpus-vs-corpus doc_id join back (three joins saved — at 100 TB
-    # those were the most expensive non-dedup steps in the program)
-    passthru = tuple(c for c in docs.columns if c != "doc_id")
-    if encoding_gate:
-        # stage 0b: encoding-health gate — zero-shuffle, BEFORE any
-        # tokenizer-dependent stage sees the bytes
-        eq_kwargs = encoding_gate if isinstance(encoding_gate, dict) else {}
-        docs = (
-            textstats.encoding_qa(
-                docs, keep_cols=passthru, flag_only=True, **eq_kwargs
-            )
-            .filter(~F.col("flagged"))
-            .select("doc_id", *passthru)
-        )
-    if lang is not None:
-        docs = (
-            textstats.lang_id(docs, keep_cols=passthru)
-            .filter(F.col("pred_lang") == lang)
-            .select("doc_id", *passthru)
-        )
-    if gopher:
-        kwargs = gopher if isinstance(gopher, dict) else {}
-        docs = (
-            textstats.gopher_rules(docs, keep_cols=passthru, **kwargs)
-            .filter(F.col("keep"))
-            .select("doc_id", *passthru)
-        )
-    if c4:
-        c4_kwargs = c4 if isinstance(c4, dict) else {}
-        docs = (
-            textstats.c4_rules(docs, keep_cols=passthru, **c4_kwargs)
-            .filter(F.col("keep") == 1)
-            .select(
-                "doc_id",
-                *[
-                    F.col("clean_text").alias(c) if c == "text" else F.col(c)
-                    for c in passthru
-                ],
-            )
-        )
-    if blocklist is not None:
-        # stage 1d: wordlist policy drop — zero-shuffle, after the C4
-        # rewrite so the policy sees the surviving text
-        bl_kwargs = (
-            dict(blocklist)
-            if isinstance(blocklist, dict)
-            else {"blocklist": list(blocklist)}
-        )
-        docs = (
-            textstats.blocklist_hits(
-                docs, keep_cols=passthru, flag_only=True, **bl_kwargs
-            )
-            .filter(~F.col("flagged"))
-            .select("doc_id", *passthru)
-        )
-    if min_quality > 0.0:
-        docs = (
-            textstats.quality_scores(docs, keep_cols=passthru, score_only=True)
-            .filter(F.col("quality") >= min_quality)
-            .select("doc_id", *passthru)
-        )
-    if max_repetition is not None:
-        docs = (
-            textstats.repetition_ratio(docs, keep_cols=passthru)
-            .filter(F.col("repetition_ratio") <= max_repetition)
-            .select("doc_id", *passthru)
-        )
-    if gopher_rep:
-        gr_kwargs = gopher_rep if isinstance(gopher_rep, dict) else {}
-        docs = (
-            textstats.gopher_repetition(docs, keep_cols=passthru, **gr_kwargs)
-            .filter(F.col("keep") == 1)
-            .select("doc_id", *passthru)
-        )
-    if max_nll is not None:
-        nll = textstats.lm_scores(spark.read.parquet(input_path)).select(
-            "doc_id", "nll"
-        )
-        docs = docs.join(nll, "doc_id").filter(F.col("nll") <= max_nll).drop("nll")
-    if min_char_entropy is not None or max_char_entropy is not None:
-        # stage 3c: compressibility band — zero-shuffle per-row fold
-        ent = textstats.entropy_stats(docs, keep_cols=passthru)
-        if min_char_entropy is not None:
-            ent = ent.filter(F.col("char_entropy") >= min_char_entropy)
-        if max_char_entropy is not None:
-            ent = ent.filter(F.col("char_entropy") <= max_char_entropy)
-        docs = ent.select("doc_id", *passthru)
-    if mad_cutoff is not None:
-        # stage 3c2: per-source low-side MAD outlier drop on the
-        # quality composite — two source-keyed median aggs + broadcast
-        # flag joins (exact medians; at few-huge-sources scale the
-        # operator docstring's percentile_approx swap keeps the shape)
-        if source_col not in docs.columns:
-            raise ValueError(
-                f"mad_cutoff needs a {source_col!r} column in the "
-                f"corpus (have: {docs.columns}) — pass source_col= for "
-                "a differently-named grouping column"
-            )
-        scored = textstats.quality_scores(
-            docs, keep_cols=passthru, score_only=True
-        )
-        flagged = textstats.mad_outliers(
-            scored,
-            group_col=source_col,
-            cutoff=mad_cutoff,
-            side="low",
-        )
-        keep_ids = flagged.filter(~F.col("is_outlier")).select("doc_id")
-        docs = docs.join(keep_ids, "doc_id", "left_semi")
-    if min_flesch is not None or max_fk_grade is not None:
-        # stage 3c3: readability band (textstats.readability_scores) —
-        # zero-shuffle per-row regexp counts; docs with no words score
-        # NULL and fail any bound (no prose, no grade)
-        rd = textstats.readability_scores(docs, keep_cols=passthru)
-        if min_flesch is not None:
-            rd = rd.filter(F.col("flesch_reading_ease") >= min_flesch)
-        if max_fk_grade is not None:
-            rd = rd.filter(F.col("fk_grade") <= max_fk_grade)
-        docs = rd.select("doc_id", *passthru)
-    if max_oov_ratio is not None:
-        # stage 3c4: out-of-vocabulary cap (textstats.oov_stats) — the
-        # head vocabulary comes from the CURRENT surviving corpus; one
-        # corpus shuffle + broadcast vocab join, then the id-list
-        # left_semi (the mad_cutoff shape)
-        keep_ids = (
-            textstats.oov_stats(docs, top_k=oov_top_k)
-            .filter(F.col("oov_ratio") <= max_oov_ratio)
-            .select("doc_id")
-        )
-        docs = docs.join(keep_ids, "doc_id", "left_semi")
-    if zipf_bands:
-        # stage 3c5: whole-source Zipf health gate (textstats.zipf_fit)
-        # — the one SOURCE-level drop: template farms / synthetic dumps
-        # flunk as a whole source. One word-count shuffle over the
-        # surviving corpus + a groups-sized left_semi back.
-        allowed = {
-            "min_slope", "max_slope", "min_r2",
-            "min_hapax", "max_hapax", "top_k",
-        }
-        unknown = set(zipf_bands) - allowed
-        if unknown:
-            raise ValueError(
-                f"zipf_bands: unknown keys {sorted(unknown)} "
-                f"(allowed: {sorted(allowed)})"
-            )
-        if source_col not in docs.columns:
-            raise ValueError(
-                f"zipf_bands needs a {source_col!r} column in the "
-                f"corpus (have: {docs.columns}) — pass source_col= for "
-                "a differently-named grouping column"
-            )
-        zf = textstats.zipf_fit(
-            docs,
-            top_k=zipf_bands.get("top_k", 100),
-            group_col=source_col,
-        )
-        # NULL slope/r2 (a source too degenerate to fit) fails any
-        # slope/r2 band — SQL NULL comparison semantics, deliberate
-        import operator as _op
-
-        for key, col, cmp in (
-            ("min_slope", "zipf_slope", _op.ge),
-            ("max_slope", "zipf_slope", _op.le),
-            ("min_r2", "zipf_r2", _op.ge),
-            ("min_hapax", "hapax_ratio", _op.ge),
-            ("max_hapax", "hapax_ratio", _op.le),
-        ):
-            if key in zipf_bands:
-                # native Column comparison (not SQL-string interp):
-                # keeps NULL-fails semantics and survives inf/nan
-                zf = zf.filter(cmp(F.col(col), F.lit(float(zipf_bands[key]))))
-        docs = docs.join(
-            zf.select(source_col), source_col, "left_semi"
-        )
-    if source_top_frac is not None:
-        # stage 3d: proportional per-source quota on the composite
-        # quality score — one group-key shuffle, no join back
-        from pagerank_mapreduce_implementation_spark.operators.sampling import (
-            top_fraction_per_group,
-        )
-
-        if source_col not in docs.columns:
-            raise ValueError(
-                f"source_top_frac needs a {source_col!r} column in the "
-                f"corpus (have: {docs.columns}) — pass source_col= for "
-                "a differently-named grouping column"
-            )
-        scored = textstats.quality_scores(
-            docs, keep_cols=passthru, score_only=True
-        )
-        docs = top_fraction_per_group(
-            scored, source_top_frac, "quality", source_col
-        ).select("doc_id", *passthru)
-    if bench_docs is not None:
-        docs = decontaminate(
-            docs,
-            bench_docs,
-            ngram=contamination_ngram,
-            threshold=contamination_threshold,
-        )
-
-    if intra_line_dedup:
-        il_kwargs = intra_line_dedup if isinstance(intra_line_dedup, dict) else {}
-        docs = dedup.intra_doc_line_dedup(docs, **il_kwargs).drop(
-            "n_dropped_lines"
-        )
-
-    if line_dedup:
-        ld_kwargs = line_dedup if isinstance(line_dedup, dict) else {}
-        docs = dedup.line_dedup(docs, **ld_kwargs).drop("n_dropped_lines")
-
-    exact = dedup.exact_dedup(docs).filter(F.col("is_dup") == 0).select("doc_id")
-    docs = docs.join(exact, "doc_id", "left_semi")
-
-    if substring_k is not None:
-        # stage 5a: cut shared verbatim passages out of the higher-id
-        # doc BEFORE the signature stages, so the minhash signatures
-        # (and the persisted store) describe the stripped text
-        docs = dedup.strip_substring_runs(
-            docs,
-            k=substring_k,
-            min_len=substring_min_len,
-            max_gram_df=substring_max_gram_df,
-        ).drop("n_stripped")
-
-    if signature_store is not None:
-        store_sigs = _read_parquet_or_none(spark, f"{signature_store}/sigs")
-        if store_sigs is not None:
-            store_sigs, store_bands = _validated_band_index(
-                spark,
-                signature_store,
-                store_sigs,
-                _read_parquet_or_none(spark, f"{signature_store}/bands"),
-            )
-            probe = dedup.incremental_minhash_dedup(
-                docs,
-                store_sigs,
-                threshold=near_dup_threshold,
-                ngram=ngram,
-                seen_bands=store_bands,
-            )
-            # within-batch handling stays with the exact-verify cluster
-            # stage below; here only the cross-batch verdict applies
-            store_dups = probe.filter(F.col("dup_of_store") == 1).select("doc_id")
-            docs = docs.join(store_dups, "doc_id", "left_anti")
-
-    pairs = dedup.minhash_near_dups(
-        docs, threshold=near_dup_threshold, ngram=ngram
-    ).select("doc_a", "doc_b")
-    comps = connected_components(pairs, "doc_a", "doc_b", max_iters=cc_max_iters)
-    # every clustered doc except its component's keeper is dropped;
-    # docs in no cluster survive untouched
-    if survivor_policy == "quality":
-        # the cluster_survivors policy, via the ONE shared argmax
-        # definition (dedup.cluster_winners)
-        member_q = comps.select(
-            F.col("vertex").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-        ).join(textstats.quality_scores(docs, score_only=True), "doc_id")
-        winners = dedup.cluster_winners(member_q)
-        drop = (
-            member_q.join(winners, "cluster_id")
-            .filter(F.col("doc_id") != F.col("__keeper"))
-            .select("doc_id")
-        )
-    else:
-        drop = comps.filter(F.col("vertex") != F.col("component")).select(
-            F.col("vertex").alias("doc_id")
-        )
-    survivors = docs.join(drop, "doc_id", "left_anti")
-    if embeddings is not None:
-        emb_live = embeddings.join(
-            survivors.select(F.col("doc_id").alias("vec_id")),
-            "vec_id",
-            "left_semi",
-        )
-        survivors = dedup.semdedup(
-            survivors,
-            emb_live,
-            n_cells=semantic_cells,
-            threshold=semantic_threshold,
-            n_iters=semantic_iters,
-            keep_rule=semantic_keep,
-        )
-    if sample_scale is not None:
-        from pagerank_mapreduce_implementation_spark.operators.sampling import (
-            weighted_sample,
-        )
-
-        survivors = weighted_sample(
-            survivors.withColumn("__w", F.octet_length("text")),
-            "__w",
-            sample_scale,
-            "doc_id",
-        ).drop("__w")
-    if dsir_target is not None:
-        # stage 7b: target-aware DSIR budget — the selected-id set is
-        # k rows, a left_semi join back keeps the survivors' schema.
-        # The stage consumes survivors twice (gram counts + the join
-        # back), so cut the lineage first — otherwise every upstream
-        # filter stage re-runs per consumer; the caller's RDD-layer
-        # release frees the checkpoint after the write lands.
-        from pagerank_mapreduce_implementation_spark.operators.sampling import (
-            dsir_select,
-        )
-
-        survivors = survivors.localCheckpoint(eager=True)
-        chosen = dsir_select(
-            survivors, dsir_target, k=dsir_k, n_buckets=dsir_buckets
-        ).select("doc_id")
-        survivors = survivors.join(chosen, "doc_id", "left_semi")
-    if unimax_budget is not None:
-        # stage 7c: UniMax mixture shaping — runs on the final clean
-        # pool; one sources-sized agg collect + broadcast-join filter
-        # (the mix_sources shape), corpus never shuffles
-        from pagerank_mapreduce_implementation_spark.operators.sampling import (
-            unimax_mix,
-        )
-
-        survivors = unimax_mix(
-            survivors,
-            total_budget=unimax_budget,
-            epoch_cap=unimax_epoch_cap,
-            source_col=source_col,
-        )
-    survivors.write.mode("overwrite").parquet(output_path)
-    # hand back the WRITTEN table, not the lazy plan: a consumer action
-    # on the plan would re-run lang-id + quality + both dedup passes —
-    # a second full corpus pass at scale — instead of one footer read
-    written = spark.read.parquet(output_path)
-    if signature_store is not None:
-        # append the batch survivors' signatures + band index, computed
-        # from the WRITTEN table (one footer read, no pipeline re-run);
-        # checkpoint so the signature aggregation runs once for both
-        # writes (the caller's RDD-layer release frees it). The two
-        # appends are NOT atomic together — sigs lands before bands, so
-        # a failure between them leaves signed-but-unbanded docs. That
-        # torn state is caught (and the index rebuilt from the sigs) by
-        # _validated_band_index before the NEXT batch's probe, so it
-        # can never silently pass a cross-batch duplicate.
-        new_sigs = dedup.minhash_signatures(
-            dedup.shingles(written, ngram)
-        ).localCheckpoint(eager=True)
-        new_sigs.write.mode("append").parquet(f"{signature_store}/sigs")
-        dedup.band_buckets(new_sigs).write.mode("append").parquet(
-            f"{signature_store}/bands"
-        )
-    return written
 
 
 def pack_corpus(
@@ -1173,15 +1013,10 @@ def dedup_media(
                 fh_kept = fh.join(matched, "doc_id", "left_anti")
             if min_run is not None:
                 pairs = multimodal.video_shared_runs(
-                    None,
-                    min_run=min_run,
-                    materialize=False,
-                    frame_hashes=fh_kept,
+                    None, min_run=min_run, frame_hashes=fh_kept
                 )
             else:
-                pairs = multimodal.video_near_dups(
-                    None, materialize=False, frame_hashes=fh_kept
-                )
+                pairs = multimodal.video_near_dups(None, frame_hashes=fh_kept)
             fp = None
         else:
             h = hasher or (
@@ -1235,27 +1070,22 @@ def build_training_shards(
     output_path: str,
     budget: int = 512,
     bins_per_shard: int = 64,
-    clean: dict | None = None,
     shuffle_seed: str | None = None,
 ) -> DataFrame:
-    """The full corpus-to-trainer recipe as ONE program: (optionally)
-    clean -> pack into ``budget``-token bins -> lay the bins out as
-    contiguous SHARDS a data loader streams — parquet-in, a sharded
-    parquet layout + manifest out. This is what the engine is FOR at
-    100 TB: everything upstream (dedup, filters, mixing) exists to
-    feed this write.
+    """The corpus-to-trainer tail as ONE program: pack a cleaned corpus
+    (``clean_corpus``' output) into ``budget``-token bins -> lay the
+    bins out as contiguous SHARDS a data loader streams — parquet-in, a
+    sharded parquet layout + manifest out. This is what the engine is
+    FOR at 100 TB: everything upstream (dedup, filters, mixing) exists
+    to feed this write.
 
     Stages:
 
-    1. ``clean`` (optional): the full ``clean_corpus`` battery,
-       forwarded as kwargs; survivors land at ``<out>/clean.parquet``
-       and feed packing, so the shard layout only ever sees the final
-       pool.
-    2. ``text.pack_bins``: GPT-style packed ``budget``-token bins
+    1. ``text.pack_bins``: GPT-style packed ``budget``-token bins
        (docs straddle boundaries, no padding waste), ``doc_spans``
        boundary maps on by default — a trainer without them cannot
        build block-diagonal attention over packed sequences.
-    3. Shard assignment ``shard = bin_id div bins_per_shard`` —
+    2. Shard assignment ``shard = bin_id div bins_per_shard`` —
        CONTIGUOUS bin ranges, not a hash: a loader reading shard k
        streams the bins in stream order, and skipping shards skips
        contiguous token ranges (resume/partition semantics fall out
@@ -1266,13 +1096,13 @@ def build_training_shards(
        ``bins_per_shard`` so a shard is a sane object size (~1 GB)
        and swap the repartition for repartitionByRange on bin_id —
        the layout contract is unchanged.
-    4. Manifest: ``(shard, n_bins, n_tokens, doc_segments)`` written
+    3. Manifest: ``(shard, n_bins, n_tokens, doc_segments)`` written
        beside the shards — the loader's index (epoch size, per-shard
        token budgets) without touching shard data. ``doc_segments``
        sums per-bin document segments; a straddling doc counts once
        per bin it touches (the attention-mask view of "document").
 
-    ``shuffle_seed`` inserts the corpus SHUFFLE between clean and pack
+    ``shuffle_seed`` inserts the corpus SHUFFLE before packing
     (``sampling.training_order``): docs are renumbered by their seeded
     position — the position becomes the packing key, so the token
     stream (and hence every bin and shard) is laid out in reproducible
@@ -1287,11 +1117,7 @@ def build_training_shards(
     """
     if bins_per_shard < 1:
         raise ValueError(f"bins_per_shard ({bins_per_shard}) must be >= 1")
-    src = input_path
-    if clean is not None:
-        clean_corpus(spark, input_path, f"{output_path}/clean.parquet", **clean)
-        src = f"{output_path}/clean.parquet"
-    docs = spark.read.parquet(src)
+    docs = spark.read.parquet(input_path)
     if shuffle_seed is not None:
         from pagerank_mapreduce_implementation_spark.operators import sampling
 

@@ -1693,18 +1693,13 @@ def test_quality_classifier_learns_separable_labels(spark):
         textstats.train_quality_classifier(empty, F.lit(True))
 
 
-def test_incremental_exact_dedup_bloom_prefilter_is_pure_rewrite(spark):
-    """bloom_prefilter is a PHYSICAL rewrite: with a filter built over
-    the store's fingerprints, the survivor set is identical to the
-    plain anti-join path — including when false positives force docs
-    through the sliver join — and novel docs cleared by the filter
-    skip the store entirely."""
+def test_incremental_exact_dedup_drops_stored_and_in_batch_dups(spark):
+    """A batch against a fingerprint store: docs whose fingerprint the
+    store holds drop, an in-batch duplicate keeps its lower doc_id, and
+    novel docs survive."""
     from pyspark.sql import functions as F
 
     from pagerank_mapreduce_implementation_spark.operators import dedup
-    from pagerank_mapreduce_implementation_spark.operators.sketches import (
-        bloom_filter_table,
-    )
 
     seen_docs = spark.createDataFrame(
         [(i, f"stored document body number {i}") for i in range(200)],
@@ -1724,22 +1719,6 @@ def test_incremental_exact_dedup_bloom_prefilter_is_pure_rewrite(spark):
         r.doc_id
         for r in dedup.incremental_exact_dedup(batch, store).collect()
     }
-    # tiny filter (512 bits for 200 items) forces a real FP sliver
-    for n_bits in (512, 64 * 1024):
-        flt = bloom_filter_table(
-            store, "fingerprint", n_bits=n_bits, n_hashes=3
-        )
-        with_bloom = {
-            r.doc_id
-            for r in dedup.incremental_exact_dedup(
-                batch,
-                store,
-                bloom_prefilter=flt,
-                bloom_n_bits=n_bits,
-                bloom_n_hashes=3,
-            ).collect()
-        }
-        assert with_bloom == plain
     assert all(d >= 2000 for d in plain) and len(plain) == 70
 
 

@@ -50,21 +50,6 @@ def test_asof_backward_inclusive(spark):
     assert out[0].ts_r == _ts(10) and out[1].ts_r == _ts(20)
 
 
-def test_asof_forward(spark):
-    left, right = _frames(spark)
-    out = (
-        asof_join(left, right, on="k", direction="forward", suffix="_r")
-        .orderBy("id")
-        .collect()
-    )
-    assert [(r.id, r.px_r) for r in out] == [
-        (1, 110.0),  # inclusive at equal ts
-        (2, None),  # nothing at-or-after ts(30)
-        (3, 200.0),  # ts(9) is the next k2 row after ts(5)
-        (4, None),
-    ]
-
-
 def test_asof_tolerance_voids_stale_matches(spark):
     left, right = _frames(spark)
     out = (
@@ -100,15 +85,6 @@ def test_asof_equal_ts_ties_resolve_deterministically(spark):
         for _ in range(3)
     }
     assert len(picks) == 1  # same winner every run (content-hash tiebreak)
-
-
-def test_asof_rejects_bad_direction(spark):
-    left, right = _frames(spark)
-    try:
-        asof_join(left, right, on="k", direction="sideways")
-        raise AssertionError("expected ValueError")
-    except ValueError:
-        pass
 
 
 def test_interval_agg_join_counts_window(spark):

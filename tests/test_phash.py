@@ -294,9 +294,8 @@ def test_video_near_dups_stop_frame_cap(spark):
 
 
 def test_video_near_dups_materialize_contract(spark):
-    """Default materializes (ONE demux+hash pass for both join sides —
-    decode dominates for video) and releases; lazy mode pins nothing
-    and returns identical rows."""
+    """The result materializes (ONE demux+hash pass for both join sides
+    — decode dominates for video) and releases."""
     def cached():
         return {
             int(i.id())
@@ -308,13 +307,8 @@ def test_video_near_dups_materialize_contract(spark):
         "doc_id long, content binary",
     )
     before = cached()
-    lazy = sorted(
-        tuple(r)
-        for r in mm.video_near_dups(blobs, min_shared=1, materialize=False).collect()
-    )
-    assert not cached() - before
     out = mm.video_near_dups(blobs, min_shared=1)
-    assert sorted(tuple(r) for r in out.collect()) == lazy and lazy
+    assert (1, 2) in {(r.doc_a, r.doc_b) for r in out.collect()}
     assert cached() - before
     release_result(out)
     assert not cached() - before
@@ -368,7 +362,7 @@ def test_video_near_dups_matches_duckdb_oracle(spark):
     )
     got = sorted(
         tuple(r)
-        for r in mm.video_near_dups(blobs, min_shared=2, materialize=False).collect()
+        for r in mm.video_near_dups(blobs, min_shared=2).collect()
     )
     sql = f"""
     WITH docs AS (SELECT doc_id FROM range(0, {n_docs}) t(doc_id)),
@@ -414,16 +408,12 @@ def test_video_shared_runs_precision_over_shared_count(spark):
     )
     counts = {
         (r.doc_a, r.doc_b): r.shared_frames
-        for r in mm.video_near_dups(
-            blobs, min_shared=3, materialize=False
-        ).collect()
+        for r in mm.video_near_dups(blobs, min_shared=3).collect()
     }
     assert counts.get((1, 2)) == 3 and counts.get((1, 3)) == 3  # blind
     runs = {
         (r.doc_a, r.doc_b): (r.a_start, r.b_start, r.run_len)
-        for r in mm.video_shared_runs(
-            blobs, min_run=3, materialize=False
-        ).collect()
+        for r in mm.video_shared_runs(blobs, min_run=3).collect()
     }
     assert runs == {(1, 2): (1, 0, 3)}  # trim kept, scatter rejected
 
@@ -442,9 +432,7 @@ def test_video_shared_runs_sampling_and_cap(spark):
     )
     runs = {
         (r.doc_a, r.doc_b): (r.a_start, r.b_start, r.run_len)
-        for r in mm.video_shared_runs(
-            blobs, min_run=3, every_n=2, materialize=False
-        ).collect()
+        for r in mm.video_shared_runs(blobs, min_run=3, every_n=2).collect()
     }
     assert runs == {(1, 2): (0, 0, 3)}  # kept frames 20,21,22 contiguous
     # a stop frame (here 21, shared by both docs + a third) capped at
@@ -457,15 +445,11 @@ def test_video_shared_runs_sampling_and_cap(spark):
         ],
         "doc_id long, content binary",
     )
-    capped = mm.video_shared_runs(
-        blobs3, min_run=3, max_frame_df=2, materialize=False
-    ).collect()
+    capped = mm.video_shared_runs(blobs3, min_run=3, max_frame_df=2).collect()
     assert capped == []  # frame 21 in 3 docs > cap -> run split at pos 1
     uncapped = {
         (r.doc_a, r.doc_b): r.run_len
-        for r in mm.video_shared_runs(
-            blobs3, min_run=3, materialize=False
-        ).collect()
+        for r in mm.video_shared_runs(blobs3, min_run=3).collect()
     }
     assert uncapped == {(1, 2): 3}
 
@@ -478,14 +462,12 @@ def test_video_shared_runs_empty_and_disjoint_inputs(spark):
     lone = spark.createDataFrame(
         [(1, _video([70, 71, 72]))], "doc_id long, content binary"
     )
-    assert mm.video_shared_runs(lone, min_run=2, materialize=False).count() == 0
+    assert mm.video_shared_runs(lone, min_run=2).count() == 0
     disjoint = spark.createDataFrame(
         [(1, _video([70, 71, 72])), (2, _video([80, 81, 82]))],
         "doc_id long, content binary",
     )
-    assert (
-        mm.video_shared_runs(disjoint, min_run=1, materialize=False).count() == 0
-    )
+    assert mm.video_shared_runs(disjoint, min_run=1).count() == 0
     with pytest.raises(ValueError, match="min_run"):
         mm.video_shared_runs(lone, min_run=0)
 

@@ -1287,3 +1287,40 @@ def test_parameters_take_more_than_one_value():
         if (fn, prm) not in ONE_VALUE_PARAMS_KEPT
     ]
     assert not found, f"{len(found)} one-value parameters: {found}"
+
+
+def test_package_splats_only_its_own_kwargs():
+    """A call that splats a mapping the caller built (``f(**opts)``)
+    hides every parameter of ``f`` from
+    ``test_parameters_take_more_than_one_value``: the scan cannot know
+    which keys the mapping holds, so it counts each parameter as set to
+    a second value. Package code (``oracles.py`` aside) therefore
+    splats only the calling function's own ``**kwargs``, whose keys the
+    scan follows to the callee."""
+    import ast
+    import pathlib
+
+    import pagerank_mapreduce_implementation_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    fn_types = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+    found = []
+    for path in sorted(root.rglob("*.py")):
+        if path.name == "oracles.py":
+            continue
+        tree = ast.parse(path.read_text())
+        parent = {c: n for n in ast.walk(tree) for c in ast.iter_child_nodes(n)}
+        for call in ast.walk(tree):
+            if not isinstance(call, ast.Call):
+                continue
+            fn = parent.get(call)
+            while fn is not None and not isinstance(fn, fn_types):
+                fn = parent.get(fn)
+            own = fn.args.kwarg.arg if fn is not None and fn.args.kwarg else None
+            for kw in call.keywords:
+                if kw.arg is None and not (
+                    isinstance(kw.value, ast.Name) and kw.value.id == own
+                ):
+                    site = f"{path.relative_to(root)}:{call.lineno}"
+                    found.append(f"{site} **{ast.unparse(kw.value)}")
+    assert not found, f"{len(found)} splats of a caller-built mapping: {found}"

@@ -71,7 +71,7 @@ def test_run_pagerank_end_to_end(spark, tmp_path):
     inp, outp = tmp_path / "in", tmp_path / "out"
     inp.mkdir()
     (inp / "corpus.txt").write_text("\n".join(WIKI_LINES))
-    run_pagerank(spark, str(inp), str(outp), single_file=True)
+    run_pagerank(spark, str(inp), str(outp))
 
     got = [(k, float(v)) for k, v in _read_kv_dir(outp)]
     want = py_reference_pagerank(WIKI_LINES)
@@ -87,7 +87,7 @@ def test_run_pagerank_multi_part_output_globally_sorted(spark, tmp_path):
     inp, outp = tmp_path / "in", tmp_path / "out"
     inp.mkdir()
     (inp / "corpus.txt").write_text("\n".join(WIKI_LINES))
-    run_pagerank(spark, str(inp), str(outp), single_file=False)
+    run_pagerank(spark, str(inp), str(outp))
     vals = [float(v) for _, v in _read_kv_dir(outp)]
     assert vals == sorted(vals, reverse=True)  # part files concat in order
 
@@ -129,7 +129,7 @@ def test_tfidf_search_rank_end_to_end(spark, tmp_path):
         (inp / name).write_text(body)
 
     terms = ["spark", "fast"]
-    tfidf_search_rank(spark, str(inp), str(outp), terms, single_file=True)
+    tfidf_search_rank(spark, str(inp), str(outp), terms)
     got = {k: float(v) for k, v in _read_kv_dir(outp)}
     want = py_tfidf_search(docs, terms)
     assert got.keys() == want.keys()
@@ -156,7 +156,7 @@ def test_tfidf_search_rank_counts_empty_files(spark, tmp_path):
     (inp / "empty.txt").write_text("")  # the jar counts this file
 
     terms = ["spark"]
-    tfidf_search_rank(spark, str(inp), str(outp), terms, single_file=True)
+    tfidf_search_rank(spark, str(inp), str(outp), terms)
     got = {k: float(v) for k, v in _read_kv_dir(outp)}
     want = py_tfidf_search(docs, terms, total_docs=4)
     assert got.keys() == want.keys()
@@ -1036,8 +1036,7 @@ def test_dedup_media_fingerprint_store_video_runs_roundtrip(spark, tmp_path):
 
 def test_clean_corpus_gopher_stage(spark, tmp_path):
     """Stage 1b (round 9): gopher=True drops docs failing the Gopher
-    rule battery before the dedup stages; a dict overrides individual
-    thresholds; columns survive the pass."""
+    rule battery before the dedup stages; columns survive the pass."""
     from pagerank_mapreduce_implementation_spark.programs import clean_corpus
 
     good = " ".join(
@@ -1055,11 +1054,6 @@ def test_clean_corpus_gopher_stage(spark, tmp_path):
     kept = clean_corpus(spark, src, out, gopher=True)
     assert [r.doc_id for r in kept.select("doc_id").collect()] == [1]
     assert set(kept.columns) == {"doc_id", "text", "lang", "source", "n_chars"}
-    # threshold override: min_words=3 lets the short doc through
-    kept2 = clean_corpus(
-        spark, src, str(tmp_path / "out2"), gopher={"min_words": 3}
-    )
-    assert sorted(r.doc_id for r in kept2.select("doc_id").collect()) == [1, 2]
 
 
 def test_clean_corpus_line_dedup_stage(spark, tmp_path):
@@ -1086,15 +1080,6 @@ def test_clean_corpus_line_dedup_stage(spark, tmp_path):
     assert kept[1] == f"{banner}\nunique body alpha"  # keeper keeps line
     assert kept[2] == "unique body beta"  # boilerplate stripped
     assert kept[3] == "no  boilerplate   here"  # BYTE-identical
-    # dict form forwards kwargs: min_line_chars above the banner
-    # length exempts every line -> nothing stripped
-    kept2 = {
-        r.doc_id: r.text
-        for r in clean_corpus(
-            spark, src, str(tmp_path / "out2"), line_dedup={"min_line_chars": 99}
-        ).collect()
-    }
-    assert kept2[2] == f"{banner}\nunique body beta"
 
 
 def test_clean_corpus_semantic_stage(spark, tmp_path):
@@ -1149,7 +1134,7 @@ def test_clean_corpus_semantic_stage(spark, tmp_path):
 def test_clean_corpus_c4_stage(spark, tmp_path):
     """Stage 1c (round 9): c4=True drops pages failing the C4 verdict
     and REWRITES kept pages to their surviving lines before any other
-    stage; dict form forwards kwargs."""
+    stage."""
     from pagerank_mapreduce_implementation_spark.programs import clean_corpus
 
     good = "\n".join(f"a proper sentence number {i}." for i in range(6))
@@ -1165,18 +1150,11 @@ def test_clean_corpus_c4_stage(spark, tmp_path):
     kept = {r.doc_id: r.text for r in clean_corpus(spark, src, out, c4=True).collect()}
     assert sorted(kept) == [1]
     assert kept[1] == good  # noise line rewritten away
-    kept2 = {
-        r.doc_id
-        for r in clean_corpus(
-            spark, src, str(tmp_path / "out2"), c4={"min_sentences": 1}
-        ).collect()
-    }
-    assert kept2 == {1, 3}
 
 
 def test_clean_corpus_gopher_repetition_stage(spark, tmp_path):
     """Stage 3a2 (round 9): gopher_rep=True drops docs failing the
-    repetition caps; dict form forwards kwargs."""
+    repetition caps."""
     from pagerank_mapreduce_implementation_spark.programs import clean_corpus
 
     spammy = "buy now " * 30 + "limited offer"
@@ -1188,17 +1166,6 @@ def test_clean_corpus_gopher_repetition_stage(spark, tmp_path):
     ).parquet(src)
     kept = clean_corpus(spark, src, out, gopher_rep=True)
     assert [r.doc_id for r in kept.select("doc_id").collect()] == [1]
-    # loosened caps keep both
-    kept2 = clean_corpus(
-        spark,
-        src,
-        str(tmp_path / "out2"),
-        gopher_rep={
-            "top_ngram_caps": ((2, 9.9),),
-            "dup_ngram_caps": ((5, 1.0),),
-        },
-    )
-    assert sorted(r.doc_id for r in kept2.select("doc_id").collect()) == [1, 2]
 
 
 def test_clean_corpus_entropy_band_stage(spark, tmp_path):
@@ -1495,7 +1462,10 @@ def test_build_training_shards_end_to_end(spark, tmp_path):
     present, and the clean stage actually dropping the planted dup."""
     import glob
 
-    from pagerank_mapreduce_implementation_spark.programs import build_training_shards
+    from pagerank_mapreduce_implementation_spark.programs import (
+        build_training_shards,
+        clean_corpus,
+    )
 
     base = "the quick brown fox jumps over the lazy dog keeps running onward"
     rows = [
@@ -1510,14 +1480,9 @@ def test_build_training_shards_end_to_end(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(src)
 
-    manifest = build_training_shards(
-        spark,
-        src,
-        out,
-        budget=8,
-        bins_per_shard=2,
-        clean=dict(near_dup_threshold=0.3, ngram=3),
-    )
+    cleaned = str(tmp_path / "clean.parquet")
+    clean_corpus(spark, src, cleaned, near_dup_threshold=0.3, ngram=3)
+    manifest = build_training_shards(spark, cleaned, out, budget=8, bins_per_shard=2)
     rows_m = sorted((r.shard, r.n_bins, r.n_tokens) for r in manifest.collect())
     # cleaned pool = docs 1,3,4 -> 12+7+7 = 26 ws tokens -> 4 bins of
     # 8,8,8,2 -> shards (0: bins 0,1) (1: bins 2,3)
@@ -1603,7 +1568,10 @@ def test_build_training_shards_clean_then_shuffle(spark, tmp_path):
     """clean + shuffle_seed compose: positions are a permutation of the
     SURVIVOR count (the dup never gets one) and the doc_map covers
     exactly the cleaned pool."""
-    from pagerank_mapreduce_implementation_spark.programs import build_training_shards
+    from pagerank_mapreduce_implementation_spark.programs import (
+        build_training_shards,
+        clean_corpus,
+    )
 
     base = "the quick brown fox jumps over the lazy dog keeps running onward"
     rows = [
@@ -1617,9 +1585,10 @@ def test_build_training_shards_clean_then_shuffle(spark, tmp_path):
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     ).write.mode("overwrite").parquet(src)
 
+    cleaned = str(tmp_path / "clean.parquet")
+    clean_corpus(spark, src, cleaned, near_dup_threshold=0.3, ngram=3)
     manifest = build_training_shards(
-        spark, src, out, budget=8, bins_per_shard=2,
-        clean=dict(near_dup_threshold=0.3, ngram=3), shuffle_seed="cs",
+        spark, cleaned, out, budget=8, bins_per_shard=2, shuffle_seed="cs"
     )
     assert sum(r.n_tokens for r in manifest.collect()) == 19  # 12 + 7
     dm = spark.read.parquet(f"{out}/doc_map.parquet").collect()

@@ -505,17 +505,6 @@ def test_degree_histogram_invariants(spark, n_edges, n_nodes, data):
     want = Counter(out.values())
     for d, n in want.items():
         assert hist[d] == n, (d, hist.get(d), n)
-    # the "in" direction mirrors everything on dst
-    hist_in = {
-        r["in_degree"]: r["n_vertices"]
-        for r in degree_histogram(df, direction="in").collect()
-    }
-    assert sum(d * n for d, n in hist_in.items()) == len(edges)
-    assert sum(hist_in.values()) == len(verts)
-    ind = Counter(d for _, d in edges)
-    assert hist_in.get(0, 0) == len(verts) - len(set(ind))
-    for d, n in Counter(ind.values()).items():
-        assert hist_in[d] == n
 
 
 def _py_substring_runs(token_lists: list[list[str]], k: int, min_len: int):
@@ -1315,7 +1304,7 @@ def test_luhn_scan_matches_python_regex(spark, parts):
 @settings(**PROP_SETTINGS)
 @given(
     words=st.lists(
-        st.sampled_from(["cat", "dog", "fish", "bird", "CAT", "Fish", "rock"]),
+        st.sampled_from(["join", "scan", "stream", "bird", "JOIN", "Table", "rock"]),
         min_size=0,
         max_size=20,
     )
@@ -1326,10 +1315,10 @@ def test_classify_domains_matches_python_argmax(spark, words):
     random case-folded keyword streams."""
     from pagerank_mapreduce_implementation_spark.operators import textstats
 
-    tax = {"alpha": ["cat", "dog"], "beta": ["fish"], "gamma": ["rock"]}
+    tax = textstats.DEFAULT_TAXONOMY
     text = " ".join(words)
     row = textstats.classify_domains(
-        spark.createDataFrame([(1, text)], "doc_id long, text string"), tax
+        spark.createDataFrame([(1, text)], "doc_id long, text string")
     ).collect()[0]
     low = [w.lower() for w in words]
     hits = {d: sum(1 for w in low if w in kws) for d, kws in

@@ -1316,21 +1316,20 @@ def test_classify_domains_semantics(spark):
     count, and a no-hit doc reports NULL/0/NULL."""
     from pagerank_mapreduce_implementation_spark.operators import textstats
 
-    tax = {"alpha": ["cat", "dog"], "beta": ["fish"]}
     docs = spark.createDataFrame(
         [
-            (1, "cat dog cat bird"),     # alpha 3, beta 0
-            (2, "cat fish"),             # tie 1-1 -> beta (lex-largest)
-            (3, "bird rock tree"),       # no hits
-            (4, "FISH Fish fish dog"),   # case-folds: beta 3, alpha 1
+            (1, "join filter join bird"),   # query 3, others 0
+            (2, "join stream"),             # tie 1-1 -> stream (lex-largest)
+            (3, "bird rock tree"),          # no hits
+            (4, "TABLE Table table join"),  # case-folds: storage 3, query 1
         ],
         "doc_id long, text string",
     )
     rows = {
         r["doc_id"]: (r["domain"], r["hits"], r["total_hits"], r["confidence"])
-        for r in textstats.classify_domains(docs, tax).collect()
+        for r in textstats.classify_domains(docs).collect()
     }
-    assert rows[1] == ("alpha", 3, 3, 1.0)
-    assert rows[2] == ("beta", 1, 2, 0.5)
+    assert rows[1] == ("query", 3, 3, 1.0)
+    assert rows[2] == ("stream", 1, 2, 0.5)
     assert rows[3] == (None, 0, 0, None)
-    assert rows[4] == ("beta", 3, 4, 0.75)
+    assert rows[4] == ("storage", 3, 4, 0.75)

@@ -557,7 +557,7 @@ def test_intra_doc_line_dedup_zero_shuffle_plan(spark, sf_dir):
 
 
 def test_clean_corpus_intra_line_dedup_stage(spark, tmp_path):
-    """clean_corpus(intra_line_dedup=...): the within-doc pass strips a
+    """clean_corpus(intra_line_dedup=True): the within-doc pass strips a
     doc's OWN repeated line before anything corpus-global runs — doc 1
     loses its duplicate chorus but survives; doc 2's single copy of the
     same line is untouched (intra-doc scope); the rebuilt text is what
@@ -573,10 +573,7 @@ def test_clean_corpus_intra_line_dedup_stage(spark, tmp_path):
     )
     src = str(tmp_path / "in.parquet")
     docs.write.parquet(src)
-    surv = clean_corpus(
-        spark, src, str(tmp_path / "out"),
-        intra_line_dedup={"sep": "\n"},
-    )
+    surv = clean_corpus(spark, src, str(tmp_path / "out"), intra_line_dedup=True)
     out = {r["doc_id"]: r["text"] for r in surv.collect()}
     assert out[1] == "chorus line\nverse one\nverse two"
     assert out[2] == "chorus line\nits own verse"
